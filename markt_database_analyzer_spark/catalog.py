@@ -66,16 +66,15 @@ SQL_DAVG = (
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    headline: bool = False  # included in bench.py
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None, headline: bool = False, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None, tags: tuple[str, ...] = ()):
     def deco(fn):
-        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, headline=headline, tags=tags)
+        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags)
         return fn
 
     return deco
@@ -175,7 +174,6 @@ SELECT s.bin AS bin, a.rate AS rate,
 FROM spine s LEFT JOIN agg a ON s.bin = a.bin
 ORDER BY bin
 """,
-    headline=True,
     tags=("analysis-a", "W1", "B1-bin", "W2", "J4"),
 )
 def a_lifetime_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,7 +217,6 @@ SELECT s.time_bin AS time_bin, COALESCE(c.n_events, 0) AS n_events
 FROM slots s LEFT JOIN counted c ON s.time_bin = c.time_bin
 ORDER BY time_bin
 """,
-    headline=True,
     tags=("analysis-b1", "B2-bin", "J4", "A2"),
 )
 def b1_events_per_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,7 +279,6 @@ SELECT s.posting_month AS posting_month,
 FROM spine s LEFT JOIN monthly m ON s.posting_month = m.posting_month
 ORDER BY posting_month
 """,
-    headline=True,
     tags=("analysis-b2", "A4", "A5", "A7", "W3", "J4"),
 )
 def b2_initial_rate_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,7 +362,6 @@ SELECT n_name AS nation, {SQL_DAVG.format(x='views_gained')} AS avg_gain,
 FROM gained GROUP BY n_name
 ORDER BY avg_gain DESC, nation
 """,
-    headline=True,
     tags=("analysis-c", "A4", "A6", "J3", "F10"),
 )
 def c_gain_by_nation(spark: SparkSession, sf_dir: str, min_customers: int = 50) -> DataFrame:
@@ -746,10 +741,6 @@ def set_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     return f.intersect(o).sortWithinPartitions("o_custkey")
-
-
-def headline_queries() -> dict[str, QuerySpec]:
-    return {k: v for k, v in REGISTRY.items() if v.headline}
 
 
 # Extension operators (dedup / similarity / text / multimodal / streaming)

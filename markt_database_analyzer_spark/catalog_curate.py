@@ -60,7 +60,6 @@ ORDER BY doc_id
 @register(
     "dedup_cluster_resolve",
     oracle=_sql_cluster_resolve(),
-    headline=True,
     tags=("dedup", "clustering", "connected-components"),
 )
 def dedup_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,7 +432,6 @@ WHERE l_shipdate <= TIMESTAMP '2001-09-01'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """,
-    headline=True,
     tags=("tpch", "aggregate"),
 )
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1010,7 +1008,6 @@ FROM verdict GROUP BY lang ORDER BY lang
 @register(
     "pipeline_curate_full",
     oracle=_sql_pipeline_curate(),
-    headline=True,
     tags=("pipeline", "curation", "clustering"),
 )
 def pipeline_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1434,7 +1431,6 @@ ORDER BY lang
 @register(
     "pipeline_quality_curate",
     oracle=_sql_pipeline_quality(),
-    headline=True,
     tags=("pipeline", "curation", "lm", "quality"),
 )
 def pipeline_quality_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1464,7 +1460,8 @@ def pipeline_quality_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly once — the minhash_neardup_pairs shingle-projection
     # discipline; at 100 TB the same barrier is a parquet checkpoint.
     # Cache lifetime (ADVICE r13): pins are released by the harness
-    # (bench.py unpersists all blocks between entries; tests clearCache)
+    # (tools/check_oracle.py unpersists all blocks between entries; tests
+    # clearCache)
     # — a long-lived library session composing many entries should wrap
     # calls in its own unpersist scope, as with MLlib model frames.
     g1 = (

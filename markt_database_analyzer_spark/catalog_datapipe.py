@@ -983,7 +983,6 @@ _SRP_SIZED_N_SF001 = 500  # embeddings rows at sf0.01 — the oracle's corpus
         bits=sim.srp_sizing(_SRP_SIZED_N_SF001)[0] * sim.srp_sizing(_SRP_SIZED_N_SF001)[1],
         bands=sim.srp_sizing(_SRP_SIZED_N_SF001)[1],
     ),
-    headline=True,  # the 100x-safe SRP geometry is what the published number should measure (VERDICT r4 item 3)
     tags=("similarity", "lsh", "srp", "scale", "oracle-sf0.01"),
 )
 def similarity_srp_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:

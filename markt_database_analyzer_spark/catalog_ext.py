@@ -106,7 +106,6 @@ ORDER BY id_a, id_b
 @register(
     "dedup_minhash_lsh",
     oracle=_sql_minhash_lsh(),
-    headline=True,
     tags=("dedup", "minhash", "lsh"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,7 +236,6 @@ SELECT query_id, neighbor_id, cos, rank FROM (
   FROM scored
 ) WHERE rank <= 10 ORDER BY query_id, rank
 """,
-    headline=True,
     tags=("similarity", "ann", "brute-force"),
 )
 def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1172,7 +1170,6 @@ ORDER BY doc_id
 @register(
     "pipeline_clean_corpus",
     oracle=_sql_clean_corpus(),
-    headline=True,
     tags=("pipeline", "dedup", "text", "quality"),
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -211,7 +211,6 @@ FROM scored ORDER BY custkey
 @register(
     "segment_rfm_customers_cuts",
     oracle=_RFM_CUT_SQL,
-    headline=True,  # _cuts family representative in the published number (VERDICT r4 item 3)
     tags=("rfm", "segmentation", "equidepth", "scale"),
 )
 def segment_rfm_customers_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -81,34 +81,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def minhash_signature(sh: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature (array<bigint> of length num_hashes) computed
-    entirely row-local: min over the shingle set of k seeded hashes.
-
-    Expression form: one seeded md5 per (shingle, hash) — k md5 calls per
-    shingle. The hot path is the Kirsch-Mitzenmacher family in
-    :func:`minhash_signatures_km` (one md5 per shingle, k derived
-    cheaply); this form is kept for callers that need k genuinely
-    independent md5 families."""
-    def seeded(i: int):
-        return lambda s: hash60(s, seed=i)
-
-    sigs = [F.array_min(F.transform(sh, seeded(i))) for i in range(num_hashes)]
-    return F.array(*sigs)
-
-
-def km_hash_arrays(sh: Column) -> tuple[Column, Column]:
-    """The two base 56-bit hash arrays of the Kirsch-Mitzenmacher family:
-    h1 = first 14 hex digits of md5, h2 = next 14. Derived members are
-    ``h1 + i*h2`` (max 2^56 + 15·2^56 = 2^60 — no int64 overflow in any
-    engine). K-M is the standard construction for deriving k hash
-    functions from two with no loss for LSH-style sketches."""
-    digests = F.transform(sh, lambda s: F.md5(s))
-    h1 = F.transform(digests, lambda d: F.conv(F.substring(d, 1, 14), 16, 10).cast("bigint"))
-    h2 = F.transform(digests, lambda d: F.conv(F.substring(d, 15, 14), 16, 10).cast("bigint"))
-    return h1, h2
-
-
 def sql_km_hash(expr: str, i: int) -> str:
     """DuckDB rendering of the i-th K-M family member of a string expr."""
     h1 = f"(('0x' || substring(md5({expr}), 1, 14))::BIGINT)"

@@ -225,64 +225,6 @@ def assign_cells(corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str)
     )
 
 
-def assign_cells_local_arrow(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Arrow-kernel variant of :func:`assign_cells_local` — TRIED AND
-    NOT ADOPTED as the default (r14): identical math vectorized
-    (squared-distance terms accumulated in array order — the
-    srp_codes_arrow pattern, bit-identical to the sequential
-    ``F.aggregate`` fold; ``np.argmin`` = first-min, the
-    ``array_position``/``array_min`` tie-break), bit-equality pinned in
-    tests/test_r14_optimization.py. Same-session A/B at sf0.1
-    (k=10 cells, 64 dims, 2k vectors): Arrow 0.50-0.59 s vs expression
-    0.32-0.48 s — the Python-worker round trip exceeds the interpreted
-    fold cost at this cell count, so the expression form stays the
-    default (contrast :func:`pq_encode_reconstruct`, where 128 folds per
-    row make the same kernel a measured 2x win). Revisit if k·dims
-    grows an order of magnitude."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    ordered = sorted(cents)
-    cmat = np.array([v for _, v in ordered], dtype=np.float64)
-    cell_ids = np.array([int(c) for c, _ in ordered], dtype=np.int32)
-    k, dim = cmat.shape
-    out = fan_out(corpus)
-    vec_pos = out.columns.index(vec_col)
-    schema = T.StructType(out.schema.fields + [T.StructField("cell", T.IntegerType())])
-
-    def assign(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            m = batch.num_rows
-            if m == 0:
-                cell = np.zeros(0, dtype=np.int32)
-            else:
-                arr = batch.column(vec_pos)
-                flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-                vecs = flat.reshape(m, dim)
-                dmat = np.empty((m, k), dtype=np.float64)
-                for ci in range(k):
-                    acc = np.zeros(m, dtype=np.float64)
-                    for i in range(dim):
-                        d = vecs[:, i] - cmat[ci, i]
-                        acc = acc + d * d
-                    dmat[:, ci] = acc
-                cell = cell_ids[np.argmin(dmat, axis=1)]
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [pa.array(cell, type=pa.int32())],
-                names=list(batch.schema.names) + ["cell"],
-            )
-
-    return out.mapInArrow(assign, schema)
-
-
 def assign_cells_local(
     corpus: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -305,8 +247,8 @@ def assign_cells_local(
     double literals via ``F.lit`` would be k·dims py4j round trips of
     driver time per pass (measured ~0.8 s for 10×64); ``repr(float)`` is
     shortest-round-trip decimal, so the parsed doubles are bit-identical.
-    An Arrow-kernel variant exists (:func:`assign_cells_local_arrow`) —
-    measured SLOWER at this model size, kept for the record."""
+    An Arrow-kernel form was measured slower at this model size: the
+    Python-worker round trip costs more than the interpreted fold."""
     ordered = sorted(cents)
 
     def sqdist_sql(cvec: list[float]) -> str:

@@ -307,19 +307,6 @@ def sql_ngrams_all(expr: str, k: int = 3) -> str:
     )
 
 
-def repetition_score(col: Column | str, k: int = 3) -> Column:
-    """Duplicate k-gram fraction: 1 − distinct/total (0 for docs with no
-    k-grams). High values flag boilerplate/looped text — a standard
-    pretraining quality gate alongside ``quality_score``. Pure row-local
-    array math; no shuffle."""
-    grams = ngrams_all(col, k)
-    total = F.size(grams)
-    distinct = F.size(F.array_distinct(grams))
-    return F.when(total > 0, 1.0 - distinct.cast("double") / total.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
 def sql_repetition_score(expr: str, k: int = 3) -> str:
     grams = sql_ngrams_all(expr, k)
     return (

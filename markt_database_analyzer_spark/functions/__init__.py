@@ -2,7 +2,6 @@ from .cleaning import (  # noqa: F401
     blank_to_null,
     coerce_numeric,
     coerce_timestamp,
-    drop_null,
     not_null_or_empty,
 )
 from .binning import (  # noqa: F401
@@ -16,7 +15,6 @@ from .scalars import (  # noqa: F401
     age_group,
     categorize_by_contains,
     clip_at_zero,
-    composite_key,
     contains_ci,
     hhmm_label,
     rate_per_hour,

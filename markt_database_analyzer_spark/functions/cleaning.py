@@ -16,7 +16,7 @@ of the engine.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -44,8 +44,3 @@ def not_null_or_empty(col: Column | str) -> Column:
     """Predicate for ``notnull() & (x != '')`` (P3, analyse.py:28)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.isNotNull() & (c != F.lit(""))
-
-
-def drop_null(df: DataFrame, *cols: str) -> DataFrame:
-    """``dropna(subset=[...])`` (P5, analyse.py:71,179-180,392)."""
-    return df.na.drop(subset=list(cols))

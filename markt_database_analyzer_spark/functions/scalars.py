@@ -44,12 +44,6 @@ def age_group(age: Column | str) -> Column:
     )
 
 
-def composite_key(*cols: Column | str, sep: str = "_") -> Column:
-    """``ad_unique_id + "_" + push_counter.astype(str)`` (F4, analyse.py:67)."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.concat_ws(sep, *cs)
-
-
 def clip_at_zero(col: Column | str) -> Column:
     """``.clip(lower=0)`` / ``max(0, x)`` (F10, analyse.py:74,270,471)."""
     c = F.col(col) if isinstance(col, str) else col

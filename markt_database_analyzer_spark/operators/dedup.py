@@ -4,23 +4,15 @@ The reference dedups profile rows on the composite push key, keeping the
 *first physical row*'s other attributes (``drop_duplicates(subset=...)``,
 analyse.py:194,237,408,419). Spark's ``dropDuplicates`` keeps an *arbitrary*
 row — fine when the survivors' non-key attributes are identical or unused,
-wrong when they feed results. Two flavors:
-
-- ``dedup_arbitrary``: plain ``dropDuplicates`` — one hash-agg shuffle,
-  cheapest; use when any survivor is acceptable.
-- ``dedup_keep_first``: deterministic ``row_number() == 1`` under an explicit
-  tiebreak ordering — one window shuffle; use when the kept row matters.
-  At scale both are a single shuffle on the key; AQE handles skewed keys.
+wrong when they feed results. ``dedup_keep_first`` is the deterministic
+form: ``row_number() == 1`` under an explicit tiebreak ordering — one window
+shuffle on the key; AQE handles skewed keys.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_arbitrary(df: DataFrame, keys: list[str]) -> DataFrame:
-    return df.dropDuplicates(keys)
 
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list[Column | str]) -> DataFrame:

@@ -14,23 +14,8 @@ Two fill flavors, both needed (SURVEY.md §7 "what's hard" #4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def numeric_spine(
-    spark: SparkSession,
-    n: int,
-    col: str,
-    scale: float = 1.0,
-    offset: float = 0.0,
-    as_type: str = "double",
-) -> DataFrame:
-    """Spine of ``n`` values: offset, offset+scale, ... (e.g. bin centers:
-    scale=5, offset=2.5; hours: scale=1, offset=0)."""
-    return spark.range(n).select(
-        ((F.col("id").cast("double") * F.lit(scale)) + F.lit(offset)).cast(as_type).alias(col)
-    )
 
 
 def join_spine(

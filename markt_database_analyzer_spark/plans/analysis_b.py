@@ -19,29 +19,14 @@ from pyspark.sql import functions as F
 from ..functions import (
     bin_left_closed_label,
     clip_at_zero,
-    coerce_numeric,
     coerce_timestamp,
     davg,
     hhmm_label,
     minute_of_day,
     rate_per_hour,
 )
-from ..operators import (
-    centered_rolling_mean,
-    dedup_keep_first,
-    first_last_by_order,
-    join_spine,
-)
-
-KEY = ["ad_unique_id", "push_counter"]
-
-
-def _clean_profiles(profiles: DataFrame) -> DataFrame:
-    """analyse.py:176,180 — parse posting_time, drop unparseable/missing."""
-    return (
-        profiles.withColumn("posting_ts", coerce_timestamp("posting_time"))
-        .na.drop(subset=["posting_ts", "ad_unique_id", "push_counter"])
-    )
+from ..operators import centered_rolling_mean, first_last_by_order, join_spine
+from .clean import KEY, clean_monitor, unique_pushes
 
 
 def pushes_per_time_bin(profiles: DataFrame, bin_minutes: int = 10) -> DataFrame:
@@ -51,11 +36,9 @@ def pushes_per_time_bin(profiles: DataFrame, bin_minutes: int = 10) -> DataFrame
     duplicate scrapes are collapsed with a deterministic keep-first dedup.
     """
     spark = profiles.sparkSession
-    pushes = dedup_keep_first(
-        _clean_profiles(profiles), KEY, order_by=[F.col("posting_ts")]
-    )
     counted = (
-        pushes.withColumn("minute_of_day", minute_of_day("posting_ts"))
+        unique_pushes(profiles)
+        .withColumn("minute_of_day", minute_of_day("posting_ts"))
         .withColumn("time_bin", bin_left_closed_label("minute_of_day", width=bin_minutes))
         .groupBy("time_bin")
         .agg(F.count(F.lit(1)).alias("n_pushes"))
@@ -79,20 +62,10 @@ def initial_rate_by_posting_hour(
     ``smoothed_rate`` (centered 3h rolling mean)."""
     spark = monitor.sparkSession
 
-    mon = (
-        monitor.withColumn("track_ts", coerce_timestamp("track_time"))
-        .na.drop(subset=["track_ts"])  # analyse.py:179
-        .withColumn("ad_age_num", coerce_numeric("ad_age_in_minutes"))
-        .withColumn("views_num", coerce_numeric("views"))
-        .na.drop(subset=["ad_age_num", "views_num"])  # analyse.py:183-185
+    mon = clean_monitor(
+        monitor.filter(coerce_timestamp("track_time").isNotNull())  # analyse.py:179
     )
-    prof = dedup_keep_first(
-        _clean_profiles(profiles).select(*KEY, "posting_ts"),
-        KEY,
-        order_by=[F.col("posting_ts")],
-    )
-
-    merged = mon.join(prof, on=KEY, how="inner")  # analyse.py:235-240
+    merged = mon.join(unique_pushes(profiles), on=KEY, how="inner")  # analyse.py:235-240
     initial = merged.filter(F.col("ad_age_num") <= max_age_minutes)  # analyse.py:245
 
     per_push = first_last_by_order(

@@ -15,14 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import blank_to_null, clip_at_zero, coerce_numeric, davg
+from ..functions import blank_to_null, clip_at_zero, davg
 from ..operators import (
     dedup_keep_first,
     first_last_by_order,
     restrict_to_groups_with_min_count,
 )
-
-KEY = ["ad_unique_id", "push_counter"]
+from .clean import KEY, clean_monitor
 
 
 def views_gained_by_city(
@@ -33,11 +32,6 @@ def views_gained_by_city(
     analysis_max_age: float = 400.0,
 ) -> DataFrame:
     """Return (city, avg_views_gained, n_pushes) ordered by avg desc."""
-    mon = (
-        monitor.withColumn("ad_age_num", coerce_numeric("ad_age_in_minutes"))
-        .withColumn("views_num", coerce_numeric("views"))
-        .na.drop(subset=["ad_unique_id", "push_counter", "ad_age_num", "views_num"])
-    )  # analyse.py:386-388
     prof = (
         profiles.withColumn("city", blank_to_null("city"))  # F5/F6 analyse.py:390-391
         .na.drop(subset=["ad_unique_id", "push_counter", "city"])
@@ -45,7 +39,9 @@ def views_gained_by_city(
     )
     prof_unique = dedup_keep_first(prof, KEY, order_by=[F.col("city")])
 
-    merged = mon.join(prof_unique, on=KEY, how="inner")  # analyse.py:406-411
+    # null keys never match in the inner join, which stands in for the
+    # reference's dropna on them (analyse.py:386-388)
+    merged = clean_monitor(monitor).join(prof_unique, on=KEY, how="inner")  # analyse.py:406-411
 
     # HAVING on the PRE-join profiles: pushes without monitor rows still
     # count toward the city threshold (deliberate, analyse.py:417-419).

@@ -12,9 +12,11 @@ Design decisions (SURVEY.md §7 Phase 0):
   runtime re-plan is what keeps one hot key from stalling a stage.
 - **Session timezone pinned to UTC** so timestamp semantics agree with
   columnar at-rest data and with external oracles (DuckDB is UTC-naive).
-- **shuffle.partitions** defaults to the local core count; on a real cluster
-  AQE coalescing makes the static number far less load-bearing, and callers
-  can override via ``extra_conf``.
+- **Core count**: ``local[N]`` and ``shuffle.partitions`` both come from one
+  read of ``$SPARK_GRAFT_CPUS`` at call time, defaulting to the cores this
+  process may run on (``os.sched_getaffinity``). On a real cluster AQE
+  coalescing makes the static partition count far less load-bearing, and
+  callers can override via ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -22,8 +24,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def get_spark(
@@ -37,10 +37,10 @@ def get_spark(
     configured; on a real deployment the master comes from spark-submit and
     this argument is left None.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -2,7 +2,6 @@ from .readers import (  # noqa: F401
     MONITOR_RECORDS_SCHEMA,
     PROFILES_SCHEMA,
     TESTDATA_TABLES,
-    load_tables,
     read_csv,
     read_jsonl,
     read_table,

@@ -131,12 +131,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for the SQL API."""
     for name in TESTDATA_TABLES:

@@ -6,6 +6,5 @@ from .jobs import (  # noqa: F401
     session_counts,
     sliding_hourly_avg,
     stateful_per_key_deltas,
-    stateful_per_key_deltas_tws,
     tumbling_counts,
 )

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor, StatefulProcessorHandle
 
 # The at-rest events schema. ``ts`` has shipped in two generations of the
 # testdata — TIMESTAMP(NANOS) (readable only as long nanoseconds) and
@@ -219,89 +218,6 @@ def stateful_per_key_deltas(events: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class _DeltaProcessor(StatefulProcessor):
-    """``StatefulProcessor`` for :func:`stateful_per_key_deltas_tws` —
-    the Spark 4 ``transformWithState`` form of :func:`_delta_fn`. Same
-    vectorized per-batch lag with the carried (last µs, last value)
-    spliced in; state lives in a named ValueState (RocksDB-backed in
-    production) instead of the applyInPandasWithState tuple."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._last = handle.getValueState("last", _STATE_SCHEMA)
-
-    def handleInputRows(self, key: tuple, rows, timerValues):
-        (user_id,) = key
-        if self._last.exists():
-            last_us, last_value = self._last.get()
-        else:
-            last_us, last_value = None, None
-        for pdf in rows:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(["us", "event_id"], kind="mergesort")
-            us = pdf["us"].to_numpy("int64")
-            value = pdf["value"].to_numpy("float64")
-            prev_us = pd.Series(us).shift()
-            prev_value = pd.Series(value).shift()
-            if last_us is not None:
-                prev_us.iloc[0] = last_us
-                prev_value.iloc[0] = last_value
-            keep = prev_us.notna().to_numpy()
-            out = pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "event_id": pdf["event_id"].to_numpy("int64"),
-                    "delta_value": value - prev_value.to_numpy("float64"),
-                    "delta_minutes": (us - prev_us.to_numpy("float64")) / 60_000_000.0,
-                }
-            )[keep]
-            last_us, last_value = int(us[-1]), float(value[-1])
-            if len(out):
-                yield out
-        if last_us is not None:
-            self._last.update((last_us, last_value))
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` runs a protobuf-based state-server
-    protocol between the JVM and a Python driver worker; the ``protobuf``
-    package is not in this image (and installs are off), so the TWS path
-    is gated the same way matplotlib is. On any normal Spark 4 deployment
-    (where pyspark[connect]/protobuf is present) this returns True and the
-    differential test exercises the path."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_per_key_deltas_tws(events: DataFrame) -> DataFrame:
-    """W1's streaming analog via Spark 4's ``transformWithStateInPandas``
-    — the modern replacement for ``applyInPandasWithState``: named state
-    variables (value/list/map), timers, TTL, and the RocksDB state-store
-    provider. Output is identical to :func:`stateful_per_key_deltas`;
-    the batch-differential test pins both paths against the batch lag()
-    (skipped when :func:`tws_available` is False — see its docstring)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs the protobuf package, which is "
-            "not installed; use stateful_per_key_deltas (applyInPandasWithState) "
-            "— identical output contract"
-        )
-    prepared = events.select("user_id", "event_id", F.unix_micros("ts").alias("us"), "value")
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        _DeltaProcessor(),
-        outputStructType=_DELTA_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 

@@ -13,6 +13,7 @@ from markt_database_analyzer_spark.plans import (
     pushes_per_time_bin,
     views_gained_by_city,
 )
+from markt_database_analyzer_spark.sources import MONITOR_RECORDS_SCHEMA, PROFILES_SCHEMA
 from markt_database_analyzer_spark.sources.fixtures import generate_rows
 
 from . import pandas_semantics as ref
@@ -69,3 +70,57 @@ def test_analysis_c_parity(fixtures, rows):
     got = views_gained_by_city(mon, prof).toPandas()
     want = ref.analysis_c(*rows)
     assert_frames_close(got, want, keys=["city"], float_cols=["avg_views_gained", "n_pushes"])
+
+
+def _curve_parity(spark, monitor, profiles):
+    """Run analysis A on hand-written rows; assert pandas parity and
+    return the Spark result."""
+    mon = spark.createDataFrame(monitor, MONITOR_RECORDS_SCHEMA)
+    prof = spark.createDataFrame(profiles, PROFILES_SCHEMA)
+    got = lifetime_view_rate_curve(mon, prof).toPandas()
+    assert_frames_close(
+        got,
+        ref.analysis_a(monitor, profiles),
+        keys=["category", "age_group", "bin"],
+        float_cols=["rate", "smoothed_rate", "time_hours"],
+    )
+    return got
+
+
+def _snapshots(*pushes):
+    """Monitor rows from (ad, [(age_minutes, views), ...]) pairs."""
+    rows = [(ad, age, views) for ad, snaps in pushes for age, views in snaps]
+    return [(i, ad, 1, "t", f"{age:.1f}", str(views)) for i, (ad, age, views) in enumerate(rows)]
+
+
+def _profile(ad, age, category):
+    return (ad, 1, age, f"https://x.test/{category}/{ad}", "t", "Kiel")
+
+
+def test_analysis_a_drops_nan_age(spark):
+    # pandas' notnull() drops an age of 'nan' (it coerces to NaN); Spark's
+    # try_cast also gives NaN, which isNotNull keeps and which sorts above
+    # 26, so without the NaN drop the ad lands in a phantom 26+ segment.
+    monitor = _snapshots(("ad_a", [(0, 0), (10, 20)]), ("ad_b", [(0, 5), (12, 30)]))
+    profiles = [_profile("ad_a", "30", "sexbilder-sexvideos"), _profile("ad_b", "nan", "sexchat")]
+    got = _curve_parity(spark, monitor, profiles)
+    assert set(zip(got["category"], got["age_group"])) == {("sexbilder-sexvideos", "26+")}
+
+
+def test_analysis_a_rescrapes_in_two_segments_take_deltas_apart(spark):
+    # Two scrapes of one push disagree on age and URL, so its snapshots
+    # join into two segments. Each segment takes its own deltas; lag()
+    # over the push alone paired snapshots across the segments.
+    monitor = _snapshots(("ad_a", [(0, 10), (30, 40), (90, 100)]))
+    profiles = [_profile("ad_a", "19", "sexchat"), _profile("ad_a", "22", "sexbilder-sexvideos")]
+    got = _curve_parity(spark, monitor, profiles)
+    assert got["rate"].notna().sum() == 4  # two deltas in each segment
+
+
+def test_analysis_a_keeps_a_segment_without_rates(spark):
+    # A segment whose pushes have one snapshot each has no rate, but
+    # pandas still draws its all-empty curve.
+    monitor = _snapshots(("ad_a", [(0, 10), (30, 40)]), ("ad_b", [(5, 3)]))
+    profiles = [_profile("ad_a", "30", "sexchat"), _profile("ad_b", "19", "sexchat")]
+    got = _curve_parity(spark, monitor, profiles)
+    assert set(got["age_group"]) == {"18-19", "26+"}

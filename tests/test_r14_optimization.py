@@ -207,29 +207,6 @@ def test_simhash_arrow_kernel_matches_agg_form(spark):
     assert a[1] == 0 and a[2] == 0 and a[3] == 0  # empty/ws/null → sig 0
 
 
-def test_assign_cells_arrow_kernel_matches_exprs(spark):
-    # the Arrow Lloyd-assignment kernel must be bit-identical to the
-    # literal-expression argmin (same accumulation order, same
-    # first-min tie-break) — including deliberately tied centroids.
-    import markt_database_analyzer_spark.datapipe.similarity as sim
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    seed_rows = (
-        emb.orderBy("vec_id").limit(4).select("embedding").collect()
-    )
-    cents = [(i, [float(v) for v in r["embedding"]]) for i, r in enumerate(seed_rows)]
-    cents.append((4, cents[0][1]))  # duplicate centroid: exercises the tie-break
-    a = {
-        r["vec_id"]: r["cell"]
-        for r in sim.assign_cells_local_arrow(emb, cents, "vec_id", "embedding").collect()
-    }
-    b = {
-        r["vec_id"]: r["cell"]
-        for r in sim.assign_cells_local(emb, cents, "vec_id", "embedding").collect()
-    }
-    assert a == b
-
-
 def test_pq_encode_arrow_kernel_matches_exprs(spark):
     import markt_database_analyzer_spark.datapipe.similarity as sim
 

@@ -11,7 +11,6 @@ from markt_database_analyzer_spark.streaming import (
     run_stream_to_memory,
     sliding_hourly_avg,
     stateful_per_key_deltas,
-    stateful_per_key_deltas_tws,
     tumbling_counts,
 )
 
@@ -66,41 +65,6 @@ def test_stateful_deltas_match_batch_lag(spark):
     want = {
         r["event_id"]: (r["delta_value"], r["delta_minutes"])
         for r in batch.select("event_id", "delta_value", "delta_minutes").collect()
-    }
-    assert set(got) == set(want) and len(got) > 0
-    for k in got:
-        assert abs(got[k][0] - want[k][0]) < 1e-9
-        assert abs(got[k][1] - want[k][1]) < 1e-9
-
-
-def test_tws_deltas_match_applyinpandaswithstate(spark):
-    """The Spark 4 ``transformWithStateInPandas`` path must produce the
-    exact rows of the ``applyInPandasWithState`` path (both differential
-    against batch lag() via the test above). Skips where the protobuf
-    package (TWS's state-server protocol dependency) is absent — as in
-    this image; the gate itself is asserted so the path fails loudly,
-    not silently, when unavailable."""
-    import pytest
-
-    from markt_database_analyzer_spark.streaming.jobs import tws_available
-
-    if not tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            stateful_per_key_deltas_tws(read_events_stream(spark, SF_DIR))
-        pytest.skip("protobuf not installed: transformWithStateInPandas unavailable")
-    got = {
-        r["event_id"]: (r["delta_value"], r["delta_minutes"])
-        for r in run_stream_to_memory(
-            stateful_per_key_deltas_tws(read_events_stream(spark, SF_DIR)),
-            output_mode="append",
-        ).collect()
-    }
-    want = {
-        r["event_id"]: (r["delta_value"], r["delta_minutes"])
-        for r in run_stream_to_memory(
-            stateful_per_key_deltas(read_events_stream(spark, SF_DIR)),
-            output_mode="append",
-        ).collect()
     }
     assert set(got) == set(want) and len(got) > 0
     for k in got:

@@ -126,8 +126,8 @@ def main() -> int:
     sf_pinned = {n for n, s in _REG.items() if "oracle-sf0.01" in s.tags}
 
     def release_blocks() -> None:
-        # Same cleanup as bench.py: entries that persist/localCheckpoint
-        # shared subtrees leave blocks in the block manager; over 387
+        # Release blocks between entries: entries that persist/localCheckpoint
+        # shared subtrees leave blocks in the block manager; over 400
         # entries in ONE JVM that accumulates into storage-memory
         # pressure that skews late-entry `secs` (ADVICE r10). The
         # getPersistentRDDs sweep uses a private py4j surface absent

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local gate: unit + parity tests, then the DuckDB differential
-# suite at all three scale factors, then the bench line.
+# suite at all three scale factors, then the benchmark smoke run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -9,4 +9,4 @@ for sf in sf0.001 sf0.01 sf0.1; do
   echo "== differential gate @ $sf =="
   python tools/check_oracle.py "/root/testdata/$sf" 2>/dev/null | tail -1
 done
-python bench.py 2>/dev/null | tail -1
+python3 perfbench/run.py --smoke

@@ -4,14 +4,15 @@ Usage:
     python tools/profile_entries.py [--plans-dir plans/r13] [--suffix before] \
         [--runs 3] name1 name2 ...
 
-For each named catalog entry (default: the 13 headline entries), this
+For each named catalog entry (at least one name is required), this
   1. captures ``df.explain("formatted")`` to <plans-dir>/<name>_<suffix>.txt
-  2. times the noop-sink force (bench.py methodology: N runs, min + median,
-     unpersist-all between runs)
+  2. times the noop-sink force (N runs, min + median, unpersist-all
+     between runs)
 and prints one JSON line with the per-entry numbers, so before/after
-comparisons in OPTIMIZATION_r*.md come from one reproducible command.
+comparisons of single entries come from one reproducible command.
 
-Not part of the driver contract; bench.py remains the canonical bench.
+Not part of the driver contract; ``perfbench/run.py`` is the benchmark of
+record.
 """
 
 from __future__ import annotations
@@ -24,32 +25,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "a_lifetime_rate_curve",
-    "b1_events_per_slot",
-    "b2_initial_rate_by_month",
-    "c_gain_by_nation",
-    "dedup_minhash_lsh",
-    "similarity_bruteforce_topk",
-    "pipeline_clean_corpus",
-    "dedup_cluster_resolve",
-    "tpch_q1_pricing_summary",
-    "pipeline_curate_full",
-    "pipeline_quality_curate",
-    "similarity_srp_lsh_sized",
-    "segment_rfm_customers_cuts",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="*", default=None)
+    ap.add_argument("names", nargs="+")
     ap.add_argument("--plans-dir", default=None, help="directory for explain dumps")
     ap.add_argument("--suffix", default=None, help="file suffix, e.g. before/after")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
-    names = args.names or HEADLINE
+    names = args.names
 
     from markt_database_analyzer_spark.catalog import REGISTRY
     from markt_database_analyzer_spark.session import get_spark
@@ -71,7 +56,7 @@ def main() -> None:
             pass
         spark.catalog.clearCache()
 
-    # warm JVM + parquet footers + python workers (bench.py discipline)
+    # warm JVM + parquet footers + python workers
     force(REGISTRY["j1_revenue_by_priority"].fn(spark, args.sf_dir))
     import pandas as pd  # noqa: F401
 

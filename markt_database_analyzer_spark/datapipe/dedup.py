@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.storagelevel import StorageLevel
 
 from .hashing import hash60, sql_hash60
@@ -308,7 +309,17 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     kernel computes signatures map-side: ZERO exchanges between scan and
     output (same-session A/B and plan diff in OPTIMIZATION_r14.md; the
     explode+aggregate form is kept below as
-    ``simhash_signatures_agg`` — the exactness pin compares the two)."""
+    ``simhash_signatures_agg`` — the exactness pin compares the two).
+
+    ``id_col`` must be an integral column: the kernel emits ``doc`` as
+    bigint, and a cast would turn any other id into a silent NULL, so
+    anything else raises ``ValueError``."""
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise ValueError(
+            f"simhash_signatures: id column {id_col!r} is {id_type.simpleString()}, "
+            "not an integral type"
+        )
     docs = fan_out(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))).select(
         F.col("doc").cast("bigint").alias("doc"),
         F.coalesce(tokens("_text"), F.array()).alias("toks"),

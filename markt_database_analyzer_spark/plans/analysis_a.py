@@ -130,6 +130,10 @@ def lifetime_view_rate_curve(
         out_col="smoothed_rate",
         partition_keys=["category", "age_group"],
     )
-    return smoothed.withColumn("time_hours", F.col("bin") / 60.0).orderBy(
-        "category", "age_group", "bin"
+    # a few segments x 288 bins: sorted in one partition, which needs no
+    # range-partitioning exchange (nor the sampling job that sizes it)
+    return (
+        smoothed.withColumn("time_hours", F.col("bin") / 60.0)
+        .coalesce(1)
+        .orderBy("category", "age_group", "bin")
     )

@@ -47,8 +47,12 @@ def pushes_per_time_bin(profiles: DataFrame, bin_minutes: int = 10) -> DataFrame
     spine = spark.range(n_bins).select(
         hhmm_label((F.col("id") * bin_minutes).cast("double")).alias("time_bin")
     )
-    return join_spine(spine, counted, on="time_bin", zero_fill=["n_pushes"]).orderBy(
-        "time_bin"
+    # the aggregate has at most one row per spine key: broadcast it rather
+    # than shuffle the spine; 144 rows sort in one partition
+    return (
+        join_spine(spine, F.broadcast(counted), on="time_bin", zero_fill=["n_pushes"])
+        .coalesce(1)
+        .orderBy("time_bin")
     )
 
 
@@ -93,7 +97,7 @@ def initial_rate_by_posting_hour(
 
     hourly = rates.groupBy("posting_hour").agg(davg("rate").alias("avg_rate"))
     spine = spark.range(24).select(F.col("id").cast("int").alias("posting_hour"))
-    full = join_spine(spine, hourly, on="posting_hour", zero_fill=["avg_rate"])
+    full = join_spine(spine, F.broadcast(hourly), on="posting_hour", zero_fill=["avg_rate"])
     return centered_rolling_mean(
         full, "posting_hour", "avg_rate", smoothing_window, out_col="smoothed_rate"
     ).orderBy("posting_hour")

@@ -5,22 +5,24 @@ to cities with ≥ N unique ad pushes. The per-push earliest/latest-snapshot
 loop (analyse.py:445-478) becomes conditional ``min_by``/``max_by`` in one
 hash aggregation (SURVEY.md §3.3).
 
-Shuffle budget: broadcast join with the deduped dimension, broadcast
-left-semi against the qualifying-city list, ONE aggregation over
-(ad, push), one tiny aggregation over city.
+Shuffle budget: ONE dedup of the profiles on (ad, push), one window over
+the deduped profiles by city for the threshold count, a join of the
+monitor rows with the surviving profiles (broadcast when the runtime size
+allows), ONE aggregation over (ad, push) and one tiny aggregation over
+city, sorted in a single partition. The threshold is a window count, not
+a groupBy plus a left-semi join against the qualifying cities: that form
+plans the profiles dedup twice (the copies differ in their inferred null
+filters, so AQE cannot reuse the exchange) and adds an aggregate
+exchange and a broadcast of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import blank_to_null, clip_at_zero, davg
-from ..operators import (
-    dedup_keep_first,
-    first_last_by_order,
-    restrict_to_groups_with_min_count,
-)
+from ..operators import dedup_keep_first, first_last_by_order
 from .clean import KEY, clean_monitor
 
 
@@ -39,18 +41,22 @@ def views_gained_by_city(
     )
     prof_unique = dedup_keep_first(prof, KEY, order_by=[F.col("city")])
 
-    # null keys never match in the inner join, which stands in for the
-    # reference's dropna on them (analyse.py:386-388)
-    merged = clean_monitor(monitor).join(prof_unique, on=KEY, how="inner")  # analyse.py:406-411
-
     # HAVING on the PRE-join profiles: pushes without monitor rows still
     # count toward the city threshold (deliberate, analyse.py:417-419).
-    filtered = restrict_to_groups_with_min_count(
-        merged, count_on=prof_unique, key="city", min_count=min_ads_per_city
-    )  # analyse.py:422,431
+    # One row per push after the dedup, so a count over the city window is
+    # the number of unique pushes per city (analyse.py:422,431).
+    qualified = (
+        prof_unique.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("city")))
+        .filter(F.col("__n") >= min_ads_per_city)
+        .drop("__n")
+    )
+
+    # null keys never match in the inner join, which stands in for the
+    # reference's dropna on them (analyse.py:386-388)
+    merged = clean_monitor(monitor).join(qualified, on=KEY, how="inner")  # analyse.py:406-411
 
     per_push = first_last_by_order(
-        filtered,
+        merged,
         group_keys=KEY,
         order=F.col("ad_age_num"),
         value=F.col("views_num"),
@@ -67,5 +73,6 @@ def views_gained_by_city(
     return (
         gained.groupBy("city")
         .agg(davg("views_gained").alias("avg_views_gained"), F.count(F.lit(1)).alias("n_pushes"))
+        .coalesce(1)  # one row per qualifying city
         .orderBy(F.desc("avg_views_gained"), "city")
     )

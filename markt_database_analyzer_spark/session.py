@@ -17,6 +17,20 @@ Design decisions (SURVEY.md §7 Phase 0):
   process may run on (``os.sched_getaffinity``). On a real cluster AQE
   coalescing makes the static partition count far less load-bearing, and
   callers can override via ``extra_conf``.
+- **Driver heap** (local mode only): ``$SPARK_GRAFT_DRIVER_MEM`` when set,
+  otherwise half of ``MemTotal`` in ``/proc/meminfo`` read at call time,
+  capped at 16g — a fixed 16g default asks a 15 GB host for more than it
+  has.
+- **Generated-code cache holds 1000 classes.** Spark's default of 100 is
+  smaller than the working set of the paper's four requests: one pass of
+  A, B1, B2 and C cycles through about 123 distinct generated classes, so
+  the LRU evicts each class before its next use and every warm request
+  pays Janino compilation (and JIT warm-up of the fresh class) again. At
+  1000 a repeated request compiles nothing; each entry is one loaded
+  class of a few KB. It is a *static* conf: ``CodeGenerator`` sizes its
+  cache once per JVM from the conf of the first session, so it must be
+  set here, where every session of this package is built, and cannot be
+  changed by ``spark.conf.set`` later.
 """
 
 from __future__ import annotations
@@ -24,6 +38,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+MEMINFO = "/proc/meminfo"
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Half of the host's ``MemTotal``, capped at 16g; the cap itself when
+    ``/proc/meminfo`` cannot be read (not Linux)."""
+    try:
+        with open(MEMINFO) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # the file counts kB
+                    return f"{min(total_mb // 2, MAX_DRIVER_MEM_MB)}m"
+    except OSError:
+        pass
+    return f"{MAX_DRIVER_MEM_MB}m"
 
 
 def get_spark(
@@ -45,6 +76,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dimension tables (profiles-analogs, nation/region/customer) are
         # small; keep the default broadcast threshold but make the intent
@@ -68,7 +100,8 @@ def get_spark(
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -70,6 +70,21 @@ def test_simhash_properties(spark, docs):
     assert pairs.get((1, 4)) == 0
 
 
+@pytest.mark.parametrize("id_type", ["string", "double", "decimal(10,2)"])
+def test_simhash_signatures_rejects_non_integral_ids(docs, id_type):
+    # a bigint cast would turn these ids into NULL docs without a word
+    bad = docs.withColumn("doc_id", F.col("doc_id").cast(id_type))
+    with pytest.raises(ValueError, match="'doc_id'"):
+        dd.simhash_signatures(bad, "text", "doc_id")
+
+
+@pytest.mark.parametrize("id_type", ["tinyint", "int", "bigint"])
+def test_simhash_signatures_keeps_integral_ids(docs, id_type):
+    ids = docs.withColumn("doc_id", F.col("doc_id").cast(id_type))
+    got = sorted(r["doc"] for r in dd.simhash_signatures(ids, "text", "doc_id").collect())
+    assert got == [1, 2, 3, 4]
+
+
 def test_bruteforce_topk_matches_numpy(spark):
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(30, 8)).astype("float32")

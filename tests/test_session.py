@@ -1,5 +1,6 @@
 """``session.get_spark`` sizes ``local[N]`` and the shuffle partitions
-from one read of ``$SPARK_GRAFT_CPUS`` made at call time."""
+from one read of ``$SPARK_GRAFT_CPUS`` made at call time, and the driver
+heap from ``$SPARK_GRAFT_DRIVER_MEM`` or, unset, from the host's memory."""
 
 from __future__ import annotations
 
@@ -50,3 +51,46 @@ def test_cpus_read_at_call_time_size_master_and_partitions_alike(conf, monkeypat
     session.get_spark()
     assert conf["master"] == f"local[{cpus}]"
     assert conf["spark.sql.shuffle.partitions"] == str(cpus)
+
+
+@pytest.fixture
+def meminfo(monkeypatch, tmp_path):
+    """Points ``session`` at a fake ``/proc/meminfo``; returns a writer."""
+    path = tmp_path / "meminfo"
+    monkeypatch.setattr(session, "MEMINFO", str(path))
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+
+    def write(total_kb: int) -> None:
+        path.write_text(f"MemTotal:       {total_kb} kB\nMemFree:         1024 kB\n")
+
+    return write
+
+
+@pytest.mark.parametrize(
+    "total_kb, heap",
+    [
+        (15 * 1024 * 1024, "7680m"),  # 15 GB host: half
+        (4 * 1024 * 1024, "2048m"),
+        (64 * 1024 * 1024, "16384m"),  # capped at 16g
+    ],
+)
+def test_driver_heap_defaults_to_half_the_host(conf, meminfo, total_kb, heap):
+    meminfo(total_kb)
+    session.get_spark()
+    assert conf["spark.driver.memory"] == heap
+
+
+def test_driver_heap_read_at_call_time(conf, meminfo):
+    meminfo(4 * 1024 * 1024)
+    session.get_spark()
+    meminfo(8 * 1024 * 1024)
+    session.get_spark()
+    assert conf["spark.driver.memory"] == "4096m"
+
+
+def test_driver_heap_env_overrides_host(conf, meminfo, monkeypatch):
+    meminfo(4 * 1024 * 1024)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    session.get_spark()
+    assert conf["spark.driver.memory"] == "1g"
+

@@ -645,17 +645,15 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_decode_png",
     # The decoder is REAL (CRC-verified chunk walk → IDAT reassembly →
-    # zlib container with Adler-32 → our own COMPLETE RFC 1951 inflate:
-    # stored, fixed-Huffman, and dynamic-Huffman blocks with LZ77
-    # back-references → all five PNG filter predictors unapplied), and
-    # the fixture is SQL-replayable by construction: the SAME 64 2-bit
-    # pixel indices as the GIF fixture (md5(doc_id)/'a'/'b'/'c' bytes
-    # mod 4), container rotating on doc_id % 4 — one variant per block
-    # type (8x8 stored with the filter rotation 0..4 / 16x4
-    # fixed-Huffman+LZ77 with the rotation reversed and the stream
-    # split across two IDAT chunks / 8x8 dynamic-Huffman with
-    # frequency-derived trees and the RLE-coded header / GIF-magic
-    # unsupported). Over the fixed 4-colour palette each channel mean
+    # strict bounded zlib inflate (Adler-32 checked; stored,
+    # fixed-Huffman and dynamic-Huffman blocks) → all five PNG filter
+    # predictors unapplied), and the fixture is SQL-replayable by
+    # construction: the SAME 64 2-bit pixel indices as the GIF fixture
+    # (md5(doc_id)/'a'/'b'/'c' bytes mod 4), container rotating on
+    # doc_id % 4 — one variant per block type (8x8 stored with the
+    # filter rotation 0..4 / 16x4 fixed-Huffman with the rotation
+    # reversed and the stream split across two IDAT chunks / 8x8
+    # dynamic-Huffman / GIF-magic unsupported). Over the fixed 4-colour palette each channel mean
     # reduces to 255 * count(idx == channel) / 64 — the decoder's
     # exact operation order.
     oracle="""
@@ -694,18 +692,14 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     class LZW's dictionary codes don't cover): crafted 8-bit-palette
     PNGs (pixel indices = md5(doc_id..) bytes mod 4, see
     datapipe.multimodal.crafted_png_payloads) are decoded by the
-    pure-python/numpy parser — CRC-32-verified chunk walk, two-chunk
-    IDAT reassembly, zlib FCHECK + Adler-32, a COMPLETE RFC 1951
-    inflate (stored, fixed-Huffman, and dynamic-Huffman blocks: full
-    header parse with the permuted code-length code and 16/17/18
-    run-length symbols, LZ77 back-references with overlap-copy), and
-    all five scanline predictors (None/Sub/Up/Average/Paeth)
+    python/numpy parser — CRC-32-verified chunk walk, two-chunk IDAT
+    reassembly, a strict bounded inflate over stdlib zlib (FCHECK and
+    Adler-32 checked; overrun, truncation and trailing bytes rejected),
+    and all five scanline predictors (None/Sub/Up/Average/Paeth)
     unapplied — into per-channel palette-weighted pixel means;
     GIF-magic payloads take the NULL-feature unsupported path. The
-    encoder side is equally real (frequency-derived canonical trees,
-    RLE header) and cross-checked against stdlib zlib as ground truth
-    in BOTH directions (our streams decompress under zlib; zlib
-    level-1..9 streams decode under our inflate). Scale shape: two
+    encoder drives zlib to one DEFLATE block type per fixture variant
+    (stored, fixed-Huffman, dynamic-Huffman). Scale shape: two
     chained map-only Arrow stages, no shuffle at all — the same
     envelope as the raster/audio/GIF twins."""
     docs = _t(spark, sf_dir, "documents")

@@ -583,7 +583,7 @@ GROUP BY o.o_orderpriority ORDER BY priority
 )
 def sql_api_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's SQL surface: the J1 revenue query written as ANSI SQL
-    over registered views (sources.register_views) instead of the
+    over temp views of the tables instead of the
     DataFrame API — same logical plan, same oracle, proving the two
     APIs are interchangeable front-ends to one Catalyst pipeline."""
     for t in ("lineitem", "orders"):

@@ -22,10 +22,17 @@ Two backends ship for ``decode_features``:
   need an external codec (png/jpeg/...) decode to NULL feature columns
   with ``format`` preserved — the batch shape, schema, and partitioning
   are identical to what a PIL/ffmpeg featurizer plugs into.
+
+Three container decoders sit beside it in the same plumbing, each with
+its own feature schema: RIFF/WAVE PCM audio, GIF with its LZW stream
+(hand-written: the standard library has no LZW), and 8-bit palette PNG,
+whose DEFLATE stream and CRC-32/Adler-32 checks go through the standard
+library's ``zlib``.
 """
 
 from __future__ import annotations
 
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -963,573 +970,44 @@ def crafted_gif_anim_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Real PNG decode: DEFLATE (stored + fixed-Huffman blocks with LZ77
-# back-references) in pure python/numpy — the second compression CLASS
-# after GIF's LZW (r12 verdict item: Huffman coding + LZ77 sliding-window
-# matches vs LZW's dictionary codes). The chunk walker verifies real
-# CRC-32s, the zlib container a real Adler-32, and the scanline stage
-# inverts all five PNG filter predictors (None/Sub/Up/Average/Paeth).
-# Dynamic-Huffman blocks (BTYPE=10) are out of scope and take the
-# unsupported path — documented, and pinned by a rejection test.
+# Real PNG decode: the second compression CLASS after GIF's LZW (Huffman
+# coding + LZ77 sliding-window matches vs LZW's dictionary codes). The
+# DEFLATE codec is the standard library's zlib, driven strictly: the
+# chunk walker verifies every CRC-32, ``zlib_unwrap`` is a bounded inflate
+# that rejects overrun, truncation and trailing bytes, and the scanline
+# stage inverts all five PNG filter predictors (None/Sub/Up/Average/Paeth).
 # ---------------------------------------------------------------------------
 
-_CRC_TABLE = None
-
-
-def _crc32(data: bytes) -> int:
-    """Table-driven CRC-32 (reflected, poly 0xEDB88320) — the PNG chunk
-    checksum, implemented rather than imported so the walk is
-    self-contained and the rejection tests exercise OUR table."""
-    global _CRC_TABLE
-    if _CRC_TABLE is None:
-        tbl = []
-        for i in range(256):
-            c = i
-            for _ in range(8):
-                c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
-            tbl.append(c)
-        _CRC_TABLE = tbl
-    c = 0xFFFFFFFF
-    for byte in data:
-        c = _CRC_TABLE[(c ^ byte) & 0xFF] ^ (c >> 8)
-    return c ^ 0xFFFFFFFF
-
-
-def _adler32(data: bytes) -> int:
-    a, b = 1, 0
-    for byte in data:
-        a = (a + byte) % 65521
-        b = (b + a) % 65521
-    return (b << 16) | a
-
-
-# RFC 1951 length/distance code tables: (base, extra_bits) per symbol.
-_LEN_BASE = [3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
-             35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258]
-_LEN_EXTRA = [0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
-              3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0]
-_DIST_BASE = [1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
-              257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-              8193, 12289, 16385, 24577]
-_DIST_EXTRA = [0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6,
-               7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13]
-
-
-class _BitWriter:
-    """LSB-first deflate bitstream. Huffman codes go MSB-of-code first
-    (RFC 1951 packing rule); extra-bit fields go LSB-first."""
-
-    def __init__(self) -> None:
-        self.acc = 0
-        self.n = 0
-        self.out = bytearray()
-
-    def bits(self, value: int, width: int) -> None:
-        self.acc |= value << self.n
-        self.n += width
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def huff(self, code: int, width: int) -> None:
-        rev = 0
-        for _ in range(width):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.bits(rev, width)
-
-    def align(self) -> None:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = self.n = 0
-
-    def done(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
-def _fixed_lit_code(sym: int) -> tuple[int, int]:
-    """Canonical fixed-Huffman (code, width) for literal/length symbol."""
-    if sym <= 143:
-        return 0x30 + sym, 8
-    if sym <= 255:
-        return 0x190 + (sym - 144), 9
-    if sym <= 279:
-        return sym - 256, 7
-    return 0xC0 + (sym - 280), 8
-
-
-def _len_to_code(length: int) -> tuple[int, int, int]:
-    """(symbol, extra_bits_value, extra_bits_width) for a match length."""
-    for i in range(len(_LEN_BASE) - 1, -1, -1):
-        if length >= _LEN_BASE[i]:
-            # symbol 285 (i=28) has 0 extra; guard the 258 exact case
-            if i < 28 and length > _LEN_BASE[i] + (1 << _LEN_EXTRA[i]) - 1:
-                continue
-            return 257 + i, length - _LEN_BASE[i], _LEN_EXTRA[i]
-    raise ValueError(length)
-
-
-def _dist_to_code(dist: int) -> tuple[int, int, int]:
-    for i in range(len(_DIST_BASE) - 1, -1, -1):
-        if dist >= _DIST_BASE[i]:
-            return i, dist - _DIST_BASE[i], _DIST_EXTRA[i]
-    raise ValueError(dist)
-
-
-def deflate_stored(data: bytes) -> bytes:
-    """DEFLATE with stored (BTYPE=00) blocks only — byte-aligned
-    LEN/NLEN framing, no compression."""
-    w = _BitWriter()
-    views = [data[i : i + 65535] for i in range(0, len(data), 65535)] or [b""]
-    for i, chunk in enumerate(views):
-        w.bits(1 if i == len(views) - 1 else 0, 1)  # BFINAL
-        w.bits(0, 2)                                # BTYPE=00
-        w.align()
-        ln = len(chunk)
-        w.out += ln.to_bytes(2, "little")
-        w.out += (ln ^ 0xFFFF).to_bytes(2, "little")
-        w.out += chunk
-    return w.done()
-
-
-def deflate_fixed(data: bytes) -> bytes:
-    """DEFLATE with one fixed-Huffman (BTYPE=01) block: greedy LZ77
-    (see ``_lz77_tokens``) emitting real length/distance
-    back-references — the compression mechanism LZW does not have."""
-    w = _BitWriter()
-    w.bits(1, 1)  # BFINAL
-    w.bits(1, 2)  # BTYPE=01
-    for t in _lz77_tokens(data):
-        if t[0] == "lit":
-            code, width = _fixed_lit_code(t[1])
-            w.huff(code, width)
-        else:
-            _, sym, ev, ew, dsym, dev, dew = t
-            code, width = _fixed_lit_code(sym)
-            w.huff(code, width)
-            if ew:
-                w.bits(ev, ew)
-            w.huff(dsym, 5)  # fixed distance codes are plain 5-bit
-            if dew:
-                w.bits(dev, dew)
-    code, width = _fixed_lit_code(256)  # end of block
-    w.huff(code, width)
-    return w.done()
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def bit(self) -> int | None:
-        if not self.n:
-            if self.pos >= len(self.data):
-                return None
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.n = 8
-        b = self.acc & 1
-        self.acc >>= 1
-        self.n -= 1
-        return b
-
-    def bits(self, width: int) -> int | None:
-        v = 0
-        for i in range(width):
-            b = self.bit()
-            if b is None:
-                return None
-            v |= b << i
-        return v
-
-    def align(self) -> None:
-        self.acc = self.n = 0
-
-
-class _HuffDecoder:
-    """Canonical Huffman decoder per RFC 1951 §3.2.2: codes of each
-    length are consecutive integers starting where the previous length
-    left off (shifted). Lookup is bit-serial MSB-first — fine at header
-    scale and fixture scale; a table-driven fast path plugs in without
-    changing callers."""
-
-    def __init__(self, lengths: list[int]) -> None:
-        max_len = max(lengths, default=0)
-        bl_count = [0] * (max_len + 1)
-        for ln in lengths:
-            if ln:
-                bl_count[ln] += 1
-        code = 0
-        next_code = [0] * (max_len + 1)
-        for bits in range(1, max_len + 1):
-            code = (code + bl_count[bits - 1]) << 1
-            next_code[bits] = code
-        self.table: dict[tuple[int, int], int] = {}
-        for sym, ln in enumerate(lengths):
-            if ln:
-                self.table[(ln, next_code[ln])] = sym
-                next_code[ln] += 1
-        self.max_len = max_len
-
-    def read(self, r: _BitReader) -> int | None:
-        code = 0
-        for length in range(1, self.max_len + 1):
-            b = r.bit()
-            if b is None:
-                return None
-            code = (code << 1) | b
-            sym = self.table.get((length, code))
-            if sym is not None:
-                return sym
-        return None  # not a code in this tree
-
-
-def _fixed_decoders() -> tuple[_HuffDecoder, _HuffDecoder]:
-    lit = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-    return _HuffDecoder(lit), _HuffDecoder([5] * 30)
-
-
-_FIXED_LIT_DEC, _FIXED_DIST_DEC = _fixed_decoders()
-
-# code-length-code transmission order (RFC 1951 §3.2.7)
-_CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15]
-
-
-def _read_dynamic_tables(r: _BitReader) -> tuple[_HuffDecoder, _HuffDecoder] | None:
-    """Parse a BTYPE=10 header: HLIT/HDIST/HCLEN, the 3-bit code-length
-    code lengths in permuted order, then the RLE-coded (16/17/18)
-    literal+distance code lengths."""
-    hlit, hdist, hclen = r.bits(5), r.bits(5), r.bits(4)
-    if hlit is None or hdist is None or hclen is None:
-        return None
-    n_lit, n_dist = hlit + 257, hdist + 1
-    cl_lengths = [0] * 19
-    for i in range(hclen + 4):
-        v = r.bits(3)
-        if v is None:
-            return None
-        cl_lengths[_CLC_ORDER[i]] = v
-    cl_dec = _HuffDecoder(cl_lengths)
-    lengths: list[int] = []
-    while len(lengths) < n_lit + n_dist:
-        sym = cl_dec.read(r)
-        if sym is None:
-            return None
-        if sym < 16:
-            lengths.append(sym)
-        elif sym == 16:
-            ev = r.bits(2)
-            if ev is None or not lengths:
-                return None
-            lengths += [lengths[-1]] * (3 + ev)
-        elif sym == 17:
-            ev = r.bits(3)
-            if ev is None:
-                return None
-            lengths += [0] * (3 + ev)
-        else:
-            ev = r.bits(7)
-            if ev is None:
-                return None
-            lengths += [0] * (11 + ev)
-    if len(lengths) != n_lit + n_dist:
-        return None  # a repeat ran past the table boundary
-    return _HuffDecoder(lengths[:n_lit]), _HuffDecoder(lengths[n_lit:])
-
-
-def _inflate_compressed_block(
-    r: _BitReader, out: bytearray, lit_dec: _HuffDecoder,
-    dist_dec: _HuffDecoder, max_out: int,
-) -> bool:
-    """Shared symbol loop for fixed AND dynamic blocks: literals,
-    end-of-block, length/distance back-references with extra bits and
-    byte-at-a-time overlap-copy semantics."""
-    while True:
-        sym = lit_dec.read(r)
-        if sym is None:
-            return False
-        if sym == 256:
-            return True
-        if sym < 256:
-            if len(out) + 1 > max_out:
-                return False
-            out.append(sym)
-            continue
-        if sym > 285:
-            return False
-        i = sym - 257
-        ev = r.bits(_LEN_EXTRA[i])
-        if ev is None:
-            return False
-        length = _LEN_BASE[i] + ev
-        dsym = dist_dec.read(r)
-        if dsym is None or dsym > 29:
-            return False
-        dev = r.bits(_DIST_EXTRA[dsym])
-        if dev is None:
-            return False
-        dist = _DIST_BASE[dsym] + dev
-        if dist > len(out) or len(out) + length > max_out:
-            return False
-        for _ in range(length):  # byte-at-a-time: overlap semantics
-            out.append(out[-dist])
-
-
-def inflate(data: bytes, max_out: int) -> bytes | None:
-    """Complete RFC 1951 inflate: stored (BTYPE=00, LEN/NLEN verified),
-    fixed-Huffman (01, canonical fixed trees), and dynamic-Huffman (10,
-    full header parse — code-length code in permuted order, 16/17/18
-    run-length symbols — then the same symbol loop). Returns None on
-    reserved block type 11, truncation, bad framing, codes outside the
-    transmitted trees, or output overrun past ``max_out``."""
-    r = _BitReader(data)
-    out = bytearray()
-    while True:
-        bfinal = r.bit()
-        btype = r.bits(2)
-        if bfinal is None or btype is None:
-            return None
-        if btype == 0:
-            r.align()
-            if r.pos + 4 > len(r.data):
-                return None
-            ln = int.from_bytes(r.data[r.pos : r.pos + 2], "little")
-            nlen = int.from_bytes(r.data[r.pos + 2 : r.pos + 4], "little")
-            if ln ^ 0xFFFF != nlen:
-                return None
-            r.pos += 4
-            if r.pos + ln > len(r.data) or len(out) + ln > max_out:
-                return None
-            out += r.data[r.pos : r.pos + ln]
-            r.pos += ln
-        elif btype in (1, 2):
-            if btype == 1:
-                lit_dec, dist_dec = _FIXED_LIT_DEC, _FIXED_DIST_DEC
-            else:
-                tables = _read_dynamic_tables(r)
-                if tables is None:
-                    return None
-                lit_dec, dist_dec = tables
-            if not _inflate_compressed_block(r, out, lit_dec, dist_dec, max_out):
-                return None
-        else:
-            return None  # reserved block type 11
-        if bfinal:
-            return bytes(out)
-
-
-# --------------------------------------------------------------- dynamic
-# Dynamic-Huffman ENCODER: real frequency-derived canonical trees, RLE
-# header transmission — the full RFC 1951 §3.2.7 surface, so the decoder
-# above is exercised end-to-end without leaning on stdlib zlib's choice
-# of block type (which falls back to fixed/stored on tiny inputs).
-
-
-def _huffman_lengths(freqs: dict[int, int], limit: int) -> dict[int, int]:
-    """Code lengths from symbol frequencies (package-style: plain
-    Huffman, halving frequencies and rebuilding if a length exceeds
-    ``limit`` — converges because all-equal frequencies give the
-    balanced tree). Single-symbol alphabets get length 1."""
-    import heapq
-
-    syms = [s for s, f in freqs.items() if f > 0]
-    if not syms:
-        return {}
-    if len(syms) == 1:
-        return {syms[0]: 1}
-    f = {s: freqs[s] for s in syms}
-    while True:
-        heap = [(f[s], s, (s,)) for s in syms]
-        heapq.heapify(heap)
-        depth: dict[int, int] = {s: 0 for s in syms}
-        while len(heap) > 1:
-            fa, _, ga = heapq.heappop(heap)
-            fb, tb, gb = heapq.heappop(heap)
-            for s in ga + gb:
-                depth[s] += 1
-            heapq.heappush(heap, (fa + fb, tb, ga + gb))
-        if max(depth.values()) <= limit:
-            return depth
-        f = {s: (v + 1) // 2 for s, v in f.items()}
-
-
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """(code, width) per symbol for the canonical code of ``lengths`` —
-    the same assignment rule _HuffDecoder inverts."""
-    max_len = max(lengths.values(), default=0)
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths.values():
-        bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for bits in range(1, max_len + 1):
-        code = (code + bl_count[bits - 1]) << 1
-        next_code[bits] = code
-    out: dict[int, tuple[int, int]] = {}
-    for sym in sorted(lengths):
-        ln = lengths[sym]
-        out[sym] = (next_code[ln], ln)
-        next_code[ln] += 1
-    return out
-
-
-def _lz77_tokens(data: bytes) -> list[tuple]:
-    """Greedy LZ77 tokenization shared by the fixed and dynamic
-    encoders: ('lit', byte) and ('match', len_sym, len_ev, len_ew,
-    dist_sym, dist_ev, dist_ew) tuples; the end-of-block symbol is
-    appended by the caller. Min match 3, max 258, 32 KiB window,
-    last-occurrence hash chain of depth 1."""
-    tokens: list[tuple] = []
-    last: dict[bytes, int] = {}
-    i, n = 0, len(data)
-    while i < n:
-        match_len = 0
-        match_dist = 0
-        if i + 3 <= n:
-            key = data[i : i + 3]
-            j = last.get(key, -1)
-            if j >= 0 and i - j <= 32768:
-                length = 3
-                limit = min(258, n - i)
-                while length < limit and data[j + length] == data[i + length]:
-                    length += 1
-                match_len, match_dist = length, i - j
-            last[key] = i
-        if match_len >= 3:
-            sym, ev, ew = _len_to_code(match_len)
-            dsym, dev, dew = _dist_to_code(match_dist)
-            tokens.append(("match", sym, ev, ew, dsym, dev, dew))
-            for p in range(i + 1, min(i + match_len, n - 2)):
-                last[data[p : p + 3]] = p
-            i += match_len
-        else:
-            tokens.append(("lit", data[i]))
-            i += 1
-    return tokens
-
-
-def _rle_code_lengths(lengths: list[int]) -> list[tuple[int, int, int]]:
-    """RLE-encode a code-length vector with symbols 16 (copy prev 3-6),
-    17 (zeros 3-10), 18 (zeros 11-138): (symbol, extra_val, extra_width)
-    triples. The whole equal-valued run starting at each position is
-    consumed before advancing."""
-    out: list[tuple[int, int, int]] = []
-    i, n = 0, len(lengths)
-    while i < n:
-        v = lengths[i]
-        j = i + 1
-        while j < n and lengths[j] == v:
-            j += 1
-        run = j - i
-        if v == 0:
-            while run >= 11:
-                take = min(run, 138)
-                out.append((18, take - 11, 7))
-                run -= take
-            while run >= 3:
-                take = min(run, 10)
-                out.append((17, take - 3, 3))
-                run -= take
-            out += [(0, 0, 0)] * run
-        else:
-            out.append((v, 0, 0))
-            run -= 1
-            while run >= 3:
-                take = min(run, 6)
-                out.append((16, take - 3, 2))
-                run -= take
-            out += [(v, 0, 0)] * run
-        i = j
-    return out
-
-
-def deflate_dynamic(data: bytes) -> bytes:
-    """DEFLATE with one dynamic-Huffman (BTYPE=10) block: the same
-    greedy LZ77 tokenization as ``deflate_fixed``, but literal/length
-    and distance trees are built from the ACTUAL symbol frequencies,
-    canonicalized, and transmitted via the RLE-coded (16/17/18) header
-    with its own code-length code — the full RFC 1951 §3.2.7 surface."""
-    tokens = _lz77_tokens(data)
-    lit_freq: dict[int, int] = {256: 1}
-    dist_freq: dict[int, int] = {}
-    for t in tokens:
-        if t[0] == "lit":
-            lit_freq[t[1]] = lit_freq.get(t[1], 0) + 1
-        else:
-            _, sym, _, _, dsym, _, _ = t
-            lit_freq[sym] = lit_freq.get(sym, 0) + 1
-            dist_freq[dsym] = dist_freq.get(dsym, 0) + 1
-    lit_lengths = _huffman_lengths(lit_freq, 15)
-    dist_lengths = _huffman_lengths(dist_freq, 15) if dist_freq else {0: 1}
-    n_lit = max(257, max(lit_lengths) + 1)
-    n_dist = max(1, max(dist_lengths) + 1)
-    lit_vec = [lit_lengths.get(s, 0) for s in range(n_lit)]
-    dist_vec = [dist_lengths.get(s, 0) for s in range(n_dist)]
-    rle = _rle_code_lengths(lit_vec + dist_vec)
-    cl_freq: dict[int, int] = {}
-    for s, _, _ in rle:
-        cl_freq[s] = cl_freq.get(s, 0) + 1
-    cl_lengths = _huffman_lengths(cl_freq, 7)
-    cl_vec = [cl_lengths.get(s, 0) for s in range(19)]
-    hclen = len(_CLC_ORDER)
-    while hclen > 4 and cl_vec[_CLC_ORDER[hclen - 1]] == 0:
-        hclen -= 1
-    lit_codes = _canonical_codes(lit_lengths)
-    dist_codes = _canonical_codes(dist_lengths)
-    cl_codes = _canonical_codes(cl_lengths)
-    w = _BitWriter()
-    w.bits(1, 1)  # BFINAL
-    w.bits(2, 2)  # BTYPE=10
-    w.bits(n_lit - 257, 5)
-    w.bits(n_dist - 1, 5)
-    w.bits(hclen - 4, 4)
-    for i in range(hclen):
-        w.bits(cl_vec[_CLC_ORDER[i]], 3)
-    for s, ev, ew in rle:
-        code, width = cl_codes[s]
-        w.huff(code, width)
-        if ew:
-            w.bits(ev, ew)
-    for t in tokens:
-        if t[0] == "lit":
-            code, width = lit_codes[t[1]]
-            w.huff(code, width)
-        else:
-            _, sym, ev, ew, dsym, dev, dew = t
-            code, width = lit_codes[sym]
-            w.huff(code, width)
-            if ew:
-                w.bits(ev, ew)
-            code, width = dist_codes[dsym]
-            w.huff(code, width)
-            if dew:
-                w.bits(dev, dew)
-    code, width = lit_codes[256]
-    w.huff(code, width)
-    return w.done()
+# encode_png ``method`` -> (level, strategy): one DEFLATE block type each
+# (stored BTYPE=00, fixed-Huffman 01, dynamic-Huffman 10)
+_DEFLATE_METHODS = {
+    "stored": (0, zlib.Z_DEFAULT_STRATEGY),
+    "fixed": (9, zlib.Z_FIXED),
+    "dynamic": (9, zlib.Z_DEFAULT_STRATEGY),
+}
 
 
 def zlib_wrap(raw: bytes, *, method: str = "fixed") -> bytes:
-    """RFC 1950 container around our own deflate: CMF/FLG 0x78 0x01
-    (CM=8, no preset dict, fcheck-valid) + deflate stream + Adler-32.
+    """RFC 1950 stream of ``raw`` with the DEFLATE block type picked by
     ``method``: 'stored' | 'fixed' | 'dynamic'."""
-    enc = {"stored": deflate_stored, "fixed": deflate_fixed,
-           "dynamic": deflate_dynamic}[method]
-    return b"\x78\x01" + enc(raw) + _adler32(raw).to_bytes(4, "big")
+    level, strategy = _DEFLATE_METHODS[method]
+    c = zlib.compressobj(level, zlib.DEFLATED, 15, 9, strategy)
+    return c.compress(raw) + c.flush()
 
 
 def zlib_unwrap(b: bytes, max_out: int) -> bytes | None:
-    if len(b) < 6 or b[0] & 0x0F != 8 or b[1] & 0x20:
-        return None  # not deflate / preset dictionary
-    if (b[0] * 256 + b[1]) % 31:
-        return None  # FCHECK failure
-    raw = inflate(b[2:-4], max_out)
-    if raw is None or _adler32(raw) != int.from_bytes(b[-4:], "big"):
+    """Strict bounded inflate of one RFC 1950 stream: None on a bad
+    header, checksum or block, on output past ``max_out``, on truncation
+    and on trailing bytes after the Adler-32."""
+    if max_out < 0:
+        return None
+    d = zlib.decompressobj()
+    try:
+        # one byte of headroom: a max_length of 0 would mean "unbounded"
+        raw = d.decompress(b, max_out + 1)
+    except zlib.error:
+        return None
+    if len(raw) > max_out or not d.eof or d.unused_data:
         return None
     return raw
 
@@ -1608,7 +1086,7 @@ def _unfilter_scanlines(raw: bytes, w: int, h: int) -> np.ndarray | None:
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
     return (
         len(data).to_bytes(4, "big") + ctype + data
-        + _crc32(ctype + data).to_bytes(4, "big")
+        + zlib.crc32(ctype + data).to_bytes(4, "big")
     )
 
 
@@ -1622,12 +1100,12 @@ def encode_png(
     split_idat: bool = False,
 ) -> bytes:
     """Minimal real PNG encoder for an HxW palette-index raster: IHDR
-    (bit depth 8, colour type 3) + PLTE + IDAT (our own zlib/DEFLATE,
-    stored or fixed-Huffman-with-LZ77) + IEND, every chunk carrying a
-    real CRC-32. ``filters`` rotates per-row predictors to exercise
-    None/Sub/Up/Average/Paeth; ``split_idat`` splits the stream across
-    two IDAT chunks to exercise reassembly. The decoder below must
-    invert all of it bit-exactly."""
+    (bit depth 8, colour type 3) + PLTE + IDAT (a zlib stream whose
+    DEFLATE block type is chosen by ``method``, see ``zlib_wrap``) +
+    IEND, every chunk carrying a real CRC-32. ``filters`` rotates
+    per-row predictors to exercise None/Sub/Up/Average/Paeth;
+    ``split_idat`` splits the stream across two IDAT chunks to exercise
+    reassembly. The decoder below must invert all of it bit-exactly."""
     h, w = indices.shape
     ihdr = (
         w.to_bytes(4, "big") + h.to_bytes(4, "big")
@@ -1648,11 +1126,10 @@ def encode_png(
 def _parse_png(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
     """Decode an 8-bit palette (colour type 3), non-interlaced PNG to
     (width, height, palette Nx3, indices flat): CRC-verified chunk walk
-    → IHDR validation → PLTE → IDAT reassembly → zlib container
-    (FCHECK + Adler-32) → complete RFC 1951 inflate (stored +
-    fixed-Huffman + dynamic-Huffman) → per-row unfilter. None for
-    anything else: foreign magic, CRC/Adler mismatch, truncation,
-    grayscale/RGB colour types, interlace, bad filter bytes,
+    → IHDR validation → PLTE → IDAT reassembly → bounded strict
+    inflate (``zlib_unwrap``) → per-row unfilter. None for anything
+    else: foreign magic, CRC/Adler mismatch, truncation, trailing
+    bytes, grayscale/RGB colour types, interlace, bad filter bytes,
     out-of-palette indices."""
     if len(b) < 8 or b[:8] != PNG_SIG:
         return None
@@ -1670,7 +1147,7 @@ def _parse_png(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
             return None
         data = b[pos + 8 : pos + 8 + ln]
         crc = int.from_bytes(b[pos + 8 + ln : pos + 12 + ln], "big")
-        if _crc32(ctype + data) != crc:
+        if zlib.crc32(ctype + data) != crc:
             return None
         pos += 12 + ln
         if ctype == b"IHDR":
@@ -1739,10 +1216,10 @@ def _png_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def decode_png_features(df: DataFrame) -> DataFrame:
     """Arrow-batched PNG decode over (doc_id, payload): CRC-verified
-    chunk walk → IDAT reassembly → zlib/DEFLATE inflate (stored +
-    fixed-Huffman with LZ77 back-references) → five-predictor unfilter
-    → per-channel palette-weighted pixel means; non-PNG payloads →
-    NULL features with ``format='unsupported'``. Same mapInPandas
+    chunk walk → IDAT reassembly → zlib inflate (any DEFLATE block
+    type) → five-predictor unfilter → per-channel palette-weighted
+    pixel means; non-PNG payloads → NULL features with
+    ``format='unsupported'``. Same mapInPandas
     iterator shape as the raster/audio/GIF twins — map-only,
     partition-preserving, bounded batch memory."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1760,13 +1237,12 @@ def crafted_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bytes mod 4 over the fixed 4-colour palette), so the oracle replays
     the features as hex-pair arithmetic. Container rotates on
     ``id % 4`` — one variant per DEFLATE block type plus the rejection
-    path: 8x8 stored-block PNG with all five filter predictors rotating
-    across rows; 4x16 fixed-Huffman PNG (real LZ77 back-references)
-    with the predictor rotation reversed AND the stream split across
-    two IDAT chunks; 8x8 dynamic-Huffman PNG (frequency-derived trees,
-    RLE-coded header) with a third predictor rotation; and a GIF-magic
-    payload (the NULL-feature unsupported path). Pure map work inside
-    the same Arrow plumbing."""
+    path: 8x8 stored-block (BTYPE=00) PNG with all five filter
+    predictors rotating across rows; 4x16 fixed-Huffman (01) PNG with
+    the predictor rotation reversed AND the stream split across two
+    IDAT chunks; 8x8 dynamic-Huffman (10) PNG with a third predictor
+    rotation; and a GIF-magic payload (the NULL-feature unsupported
+    path). Pure map work inside the same Arrow plumbing."""
     import hashlib
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -205,26 +205,6 @@ def embedding_neardup_pairs(
     )
 
 
-def assign_cells(corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Assign each vector to its nearest centroid (argmin squared L2,
-    deterministic cell-id tiebreak). ``cents`` is (cell, centroid) and is
-    broadcast — the corpus never shuffles."""
-    sq = F.aggregate(
-        F.zip_with(F.col(vec_col).cast("array<double>"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy(id_col).orderBy("dist", "cell")
-    return (
-        fan_out(corpus)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("dist", sq)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("dist", "_rn", "centroid")
-    )
-
-
 def assign_cells_local(
     corpus: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -239,9 +219,9 @@ def assign_cells_local(
     Lloyd assignment pass is map-only, which is the property that makes
     the iteration count affordable at any corpus size.
 
-    Tie-break parity with :func:`assign_cells` (min dist, then min cell):
-    centroids are laid out in ascending cell order and ``array_position``
-    returns the first occurrence of the min.
+    Ties break to the lowest cell id: centroids are laid out in
+    ascending cell order and ``array_position`` returns the first
+    occurrence of the min.
 
     The whole argmin is rendered as ONE SQL expression string: k·dims
     double literals via ``F.lit`` would be k·dims py4j round trips of
@@ -518,37 +498,13 @@ def srp_neardup_pairs_sized(
     bands: int = SRP_SIZED_BANDS,
 ) -> DataFrame:
     """:func:`srp_neardup_pairs` with ln(n)-sized bands (see
-    :func:`srp_sizing`) and the Arrow code projector
-    (:func:`srp_codes_arrow`). ``n`` defaults to a ``count()`` of the
-    corpus — on parquet sources that is metadata-cheap, and the sizing
-    only needs the order of magnitude. Band self-join and exact-cosine
-    verify are identical to the demo geometry."""
+    :func:`srp_sizing`). ``n`` defaults to a ``count()`` of the corpus —
+    on parquet sources that is metadata-cheap, and the sizing only needs
+    the order of magnitude."""
     if n is None:
         n = corpus.count()
     r, b = srp_sizing(n, bands)
-    vecd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    vecs = corpus.select(F.col(id_col).alias("vid"), vecd.alias("vec"))
-    codes = srp_codes_arrow(corpus, id_col, vec_col, dim, r * b, b).localCheckpoint(
-        eager=True
-    )
-    cand = (
-        codes.alias("a")
-        .join(
-            codes.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_code") == F.col("b.band_code"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    scored = (
-        fan_out(cand)
-        .join(vecs.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a")), "id_a")
-        .join(vecs.select(F.col("vid").alias("id_b"), F.col("vec").alias("vec_b")), "id_b")
-        .withColumn("cos", cosine(F.col("vec_a"), F.col("vec_b")))
-    )
-    return scored.filter(F.col("cos") >= min_cos).select("id_a", "id_b", "cos")
+    return srp_neardup_pairs(corpus, id_col, vec_col, dim, min_cos, bits=r * b, bands=b)
 
 
 def sql_srp_neardup_pairs(

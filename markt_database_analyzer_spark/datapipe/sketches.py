@@ -29,13 +29,10 @@ from pyspark.sql import functions as F
 from .hashing import hash60, sql_hash60
 
 
-def cms_bucket(key: Column, row: int, width: int) -> Column:
-    """Bucket index of ``key`` in sketch row ``row`` (seeded hash mod w)."""
-    return (hash60(key, seed=row) % F.lit(width)).alias("b")
-
-
 def sql_cms_bucket(expr: str, row: int, width: int) -> str:
-    """DuckDB rendering of :func:`cms_bucket`."""
+    """DuckDB rendering of the bucket index of ``expr`` in sketch row
+    ``row`` — the ``hash60(key, seed=row) % width`` that
+    :func:`cms_cells` computes."""
     return f"(({sql_hash60(expr, seed=row)}) % {width})"
 
 

@@ -7,7 +7,6 @@ from .spine import join_spine  # noqa: F401
 from .topk import top_k_per_group  # noqa: F401
 from .asof import asof_join_last, asof_join_next  # noqa: F401
 from .rangejoin import bucketed_range_join  # noqa: F401
-from .skew import salted_join  # noqa: F401
 from .equidepth import (  # noqa: F401
     bucket_by_cuts,
     equi_depth_cut_points,

@@ -7,49 +7,18 @@ that one hash bucket exceeds an executor (city/category power laws —
 exactly the distributions the reference's data has), or aggregations
 with non-combinable state.
 
-``salted_join`` spreads each fact-side key over ``buckets`` sub-keys via
-a deterministic salt (hash of a unique column — never ``rand()``, which
-breaks retry/replay determinism), and replicates the dim side once per
-bucket. The join result is identical to the unsalted join; the shuffle
-partition for a hot key shrinks by ``buckets``×. Cost: dim side × buckets
-rows shuffled — cheap when dim ≪ fact, which is the only regime where
-salting is the right tool anyway.
+``salted_join_hot`` spreads each hot fact-side key over ``buckets``
+sub-keys via a deterministic salt (hash of a unique column — never
+``rand()``, which breaks retry/replay determinism), and replicates the
+matching dim rows once per bucket. The join result is identical to the
+unsalted join; the shuffle partition for a hot key shrinks by
+``buckets``×.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    salt_from: str,
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join ``fact`` ⨝ ``dim`` on ``on`` with fact-side salting.
-    ``salt_from`` is a fact column (ideally unique) whose hash spreads the
-    hot keys; result is row-identical to the plain join.
-
-    Only fact-preserving join types are allowed: the dim side is
-    replicated ``buckets``×, so right/full outer would emit each unmatched
-    dim row once per bucket — silently wrong, hence rejected."""
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi",
-               "left_anti", "leftanti"}
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} not supported — dim rows are replicated "
-            f"{buckets}x, so only fact-preserving joins ({sorted(allowed)}) are "
-            "row-identical to the unsalted join"
-        )
-    fact_s = fact.withColumn("_salt", F.pmod(F.hash(F.col(salt_from)), F.lit(buckets)))
-    dim_s = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    return fact_s.join(dim_s, [*on, "_salt"], how).drop("_salt")
 
 
 def salted_join_hot(
@@ -60,13 +29,13 @@ def salted_join_hot(
     buckets: int = 16,
     hot_threshold: int = 1_000_000,
 ) -> DataFrame:
-    """Inner equi-join with salting applied ONLY to hot keys — the
-    production form of :func:`salted_join`.
+    """Inner equi-join with salting applied ONLY to hot keys.
 
-    Full salting replicates the whole dim side ``buckets``× even though
-    skew by definition lives in a handful of keys. Here the fact side is
-    counted once (one map-side-combined agg whose output is one row per
-    key), keys above ``hot_threshold`` become a broadcast hot-set, and:
+    Salting every key would replicate the whole dim side ``buckets``×
+    even though skew by definition lives in a handful of keys. Here the
+    fact side is counted once (one map-side-combined agg whose output is
+    one row per key), keys above ``hot_threshold`` become a broadcast
+    hot-set, and:
 
     - fact rows on hot keys get ``hash(salt_from) % buckets``; all other
       rows get salt 0 — via a broadcast left join against the hot-set,

@@ -5,7 +5,6 @@ from .readers import (  # noqa: F401
     read_csv,
     read_jsonl,
     read_table,
-    register_views,
 )
 from .sinks import write_bucketed, write_partitioned  # noqa: F401
 from . import plots  # noqa: F401

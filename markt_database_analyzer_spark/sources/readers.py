@@ -131,12 +131,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL API."""
-    for name in TESTDATA_TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_sqlite(
     spark: SparkSession,
     db_path: str,

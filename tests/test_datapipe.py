@@ -85,6 +85,22 @@ def test_simhash_signatures_keeps_integral_ids(docs, id_type):
     assert got == [1, 2, 3, 4]
 
 
+def test_simhash_vote_sums_chunked_matches_unchunked():
+    rng = np.random.default_rng(11)
+    lengths = np.array([0, 5, 1, 0, 0, 9, 2, 0], dtype=np.int64)
+    hs = rng.integers(0, 1 << 60, int(lengths.sum()), dtype=np.uint64)
+    bits = ((hs[:, None] >> np.arange(60, dtype=np.uint64)) & 1).astype(np.int64)
+    doc = np.repeat(np.arange(len(lengths)), lengths)
+    want = np.zeros((len(lengths), 60), dtype=np.int64)
+    np.add.at(want, doc, 2 * bits - 1)
+    assert (dd.simhash_vote_sums(hs, lengths, chunk=len(hs)) == want).all()
+    # chunks smaller than one document split it across blocks
+    for chunk in (1, 2, 3, 4):
+        assert (dd.simhash_vote_sums(hs, lengths, chunk=chunk) == want).all()
+    empty = dd.simhash_vote_sums(np.zeros(0, dtype=np.uint64), np.zeros(3, dtype=np.int64))
+    assert empty.shape == (3, 60) and not empty.any()
+
+
 def test_bruteforce_topk_matches_numpy(spark):
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(30, 8)).astype("float32")

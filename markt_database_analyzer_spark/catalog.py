@@ -9,8 +9,9 @@ the hashes land:
 - every computed column is aliased identically on both sides;
 - float aggregates go through ``dsum``/``davg`` (integer micro-unit
   quantization → bit-stable under partitioning AND across engines; see
-  functions.aggregates) and the oracle uses the matching SQL_DSUM/SQL_DAVG
-  templates below;
+  functions.aggregates), or ``nsum`` for per-row masses of order 1/N
+  (nano-unit grid), and the oracle uses the matching
+  SQL_DSUM/SQL_DAVG/SQL_NSUM templates below;
 - orderings that feed ``min_by``/``row_number`` are made total with
   tiebreak columns down to the selected value, so both engines pick the
   same row even where the synthetic keys collide ((l_orderkey,
@@ -53,13 +54,17 @@ from .operators import (
 )
 from .sources import read_table
 
-# DuckDB rendering of davg()/dsum() — keep in lockstep with functions.aggregates
-# (integer micro-unit quantization; see that module's docstring for why).
+# DuckDB rendering of dsum()/davg()/nsum() — keep in lockstep with
+# functions.aggregates (integer micro-/nano-unit quantization; see that
+# module's docstring for why).
 SQL_DSUM = "(CAST(SUM(CAST(round(({x}) * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0)"
 SQL_DAVG = (
     "(CAST(SUM(CAST(round(({x}) * 1000000.0) AS HUGEINT)) AS DOUBLE)"
     " / COUNT({x}) / 1000000.0)"
 )
+SQL_NSUM = "(CAST(SUM(CAST(round(({x}) * 1000000000.0) AS HUGEINT)) AS DOUBLE) / 1000000000.0)"
+# DuckDB rendering of datapipe.similarity.cosine (rounded to 9 dp).
+SQL_COS = "round(list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[]), 9)"
 
 
 @dataclass

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
+from .catalog import SQL_COS, SQL_DAVG, SQL_DSUM, register, _t
 from .datapipe import text as tx
 from .functions import davg, dsum
 from .catalog import SQL_DSUM, register, _t
@@ -1017,7 +1017,6 @@ def similarity_srp_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.repartition(1).sortWithinPartitions("id_a", "id_b")
 
 
-_SQL_COS = "round(list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[]), 9)"
 _ANN_RECALL_SQL = f"""
 WITH corpus AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
 q AS (SELECT vec_id AS query_id, vec AS qvec FROM corpus WHERE vec_id < 5),
@@ -1025,7 +1024,7 @@ brute AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a='q.qvec', b='e.vec')} DESC, e.vec_id) AS rank
+             ORDER BY {SQL_COS.format(a='q.qvec', b='e.vec')} DESC, e.vec_id) AS rank
     FROM corpus e CROSS JOIN q WHERE e.vec_id != q.query_id
   ) WHERE rank <= 10
 ),
@@ -1043,7 +1042,7 @@ probed AS (
   SELECT query_id, qvec, cell FROM (
     SELECT q.query_id, q.qvec, c.cell,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
+             ORDER BY {SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
     FROM q CROSS JOIN cents c
   ) WHERE crank <= 2
 ),
@@ -1051,7 +1050,7 @@ ivf AS (
   SELECT query_id, neighbor_id FROM (
     SELECT p.query_id, e.vec_id AS neighbor_id,
            row_number() OVER (PARTITION BY p.query_id
-             ORDER BY {_SQL_COS.format(a='p.qvec', b='e.vec')} DESC, e.vec_id) AS rank
+             ORDER BY {SQL_COS.format(a='p.qvec', b='e.vec')} DESC, e.vec_id) AS rank
     FROM corpus e JOIN probed p ON e.label = p.cell
     WHERE e.vec_id != p.query_id
   ) WHERE rank <= 10
@@ -1115,7 +1114,7 @@ full_rank AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a='q.qvec', b='e.vec')} DESC, e.vec_id) AS rank
+             ORDER BY {SQL_COS.format(a='q.qvec', b='e.vec')} DESC, e.vec_id) AS rank
     FROM corpus e CROSS JOIN q WHERE e.vec_id != q.query_id
   ) WHERE rank <= 10
 ),
@@ -1123,7 +1122,7 @@ trunc_rank AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a=f'list_slice(q.qvec, 1, {_TRUNC_DIMS})', b=f'list_slice(e.vec, 1, {_TRUNC_DIMS})')} DESC, e.vec_id) AS rank
+             ORDER BY {SQL_COS.format(a=f'list_slice(q.qvec, 1, {_TRUNC_DIMS})', b=f'list_slice(e.vec, 1, {_TRUNC_DIMS})')} DESC, e.vec_id) AS rank
     FROM corpus e CROSS JOIN q WHERE e.vec_id != q.query_id
   ) WHERE rank <= 10
 )
@@ -1848,7 +1847,6 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KNN_K = 5  # neighbors voting
 _KNN_ANCHORS = 3  # labeled anchors per class
-_KNN_COS = "round(list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[]), 9)"
 
 
 def _sql_knn() -> str:
@@ -1862,7 +1860,7 @@ anch AS (
 ),
 scored AS (
   SELECT c.vec_id, c.label AS true_label, a.a_label, a.a_id,
-         {_KNN_COS.format(a='c.vec', b='a.avec')} AS cos
+         {SQL_COS.format(a='c.vec', b='a.avec')} AS cos
   FROM c JOIN anch a ON a.a_id != c.vec_id
 ),
 top AS (
@@ -1902,7 +1900,7 @@ def ml_knn_classify_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: anchor membership is a deterministic per-class
     row_number prefix; cosines follow the similarity family's shared
-    convention (double fold, round 9 — ``_SQL_COS``); the vote and both
+    convention (double fold, round 9 — ``SQL_COS``); the vote and both
     tie-breaks are integer/lexicographic comparisons.
 
     Scale shape: the anchor panel is classes x 3 rows BROADCAST to a

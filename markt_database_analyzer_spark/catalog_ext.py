@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import register, _t
+from .catalog import SQL_COS, register, _t
 from .datapipe import dedup as dd
 from .datapipe import multimodal as mm
 from .datapipe import similarity as sim
@@ -219,16 +219,13 @@ def dedup_ngram_jaccard_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search
 # --------------------------------------------------------------------------
 
-_SQL_COS = "round(list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[]), 9)"
-
-
 @register(
     "similarity_bruteforce_topk",
     oracle=f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_SQL_COS.format(a='q.qvec', b='e.embedding')} AS cos
+         {SQL_COS.format(a='q.qvec', b='e.embedding')} AS cos
   FROM embeddings e CROSS JOIN q WHERE e.vec_id != q.query_id
 )
 SELECT query_id, neighbor_id, cos, rank FROM (
@@ -264,13 +261,13 @@ probed AS (
   SELECT query_id, qvec, cell FROM (
     SELECT q.query_id, q.qvec, c.cell,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
+             ORDER BY {SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
     FROM q CROSS JOIN cents c
   ) WHERE crank <= 2
 ),
 scored AS (
   SELECT p.query_id, e.vec_id AS neighbor_id,
-         {_SQL_COS.format(a='p.qvec', b='e.vec')} AS cos
+         {SQL_COS.format(a='p.qvec', b='e.vec')} AS cos
   FROM corpus e JOIN probed p ON e.label = p.cell
   WHERE e.vec_id != p.query_id
 )
@@ -293,9 +290,9 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH c AS (SELECT vec_id, label, embedding FROM embeddings)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {_SQL_COS.format(a='a.embedding', b='b.embedding')} AS cos
+       {SQL_COS.format(a='a.embedding', b='b.embedding')} AS cos
 FROM c a JOIN c b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_SQL_COS.format(a='a.embedding', b='b.embedding')} >= 0.2
+WHERE {SQL_COS.format(a='a.embedding', b='b.embedding')} >= 0.2
 ORDER BY id_a, id_b
 """,
     tags=("dedup", "similarity", "embedding"),
@@ -1101,13 +1098,13 @@ probed AS (
   SELECT query_id, qvec, cell FROM (
     SELECT q.query_id, q.qvec, c.cell,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
+             ORDER BY {SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
     FROM q CROSS JOIN {cents} c
   ) WHERE crank <= {nprobe}
 ),
 scored AS (
   SELECT p.query_id, e.vec_id AS neighbor_id,
-         {_SQL_COS.format(a='p.qvec', b='e.vec')} AS cos
+         {SQL_COS.format(a='p.qvec', b='e.vec')} AS cos
   FROM {final_assign} e JOIN probed p ON e.cell = p.cell
   WHERE e.vec_id != p.query_id
 )
@@ -1597,7 +1594,7 @@ probed AS (
   SELECT query_id, qv, cell FROM (
     SELECT q.query_id, q.qv, c.cell,
            row_number() OVER (PARTITION BY q.query_id
-             ORDER BY {_SQL_COS.format(a='q.qv', b='c.centroid')} DESC, c.cell) AS crank
+             ORDER BY {SQL_COS.format(a='q.qv', b='c.centroid')} DESC, c.cell) AS crank
     FROM q CROSS JOIN {cents} c
   ) WHERE crank <= {nprobe}
 ),

@@ -9,7 +9,7 @@ entry docstrings.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import register, _t
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -18,25 +18,10 @@ from .datapipe.clustering import triangle_stats
 from .functions import dsum
 from pyspark.sql import DataFrame, SparkSession
 from .catalog import SQL_DAVG, register, _t
-from .catalog import SQL_DAVG, _t, register
+from .catalog import SQL_DAVG, SQL_NSUM, _t, register
+from .functions import nsum
 
 
-# Nano-grid deterministic sum: dsum's construction at 1e-9 — needed when
-# the summed quantities are per-row masses of order 1/N (PageRank
-# contributions), where the 1e-6 grid would destroy the signal.
-NANO = 1_000_000_000.0
-SQL_NSUM = "(CAST(SUM(CAST(round(({x}) * 1000000000.0) AS HUGEINT)) AS DOUBLE) / 1000000000.0)"
-def nsum(col: Column) -> Column:
-    # exact_long_sum: bit-identical hi/lo long accumulation (~4x the
-    # Decimal128 speed) — the same exact integer total, see aggregates.py
-    from .functions.aggregates import exact_long_sum
-
-    return (
-        exact_long_sum(F.round(col.cast("double") * F.lit(NANO)).cast("long")).cast(
-            "double"
-        )
-        / F.lit(NANO)
-    )
 _PR_ITERS, _PR_D = 5, 0.85
 def _pagerank_oracle() -> str:
     head = f"""

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
+from .catalog import SQL_COS, SQL_DAVG, SQL_DSUM, demo_guard, register, _t
 from .datapipe import sampling as smp
 from .datapipe import text as tx
 from .catalog import SQL_DSUM, register, _t
@@ -390,7 +390,6 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcenter_select(emb, "vec_id", "embedding", k=_KC_K)
 
 
-_SQL_COS = "round(list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[]), 9)"
 _HN_QUERIES = 20
 _HN_K = 3
 _SQL_HARD_NEG = f"""
@@ -400,7 +399,7 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.q_id, q.q_label, e.vec_id AS neg_id, e.label AS neg_label,
-         {_SQL_COS.format(a='q.qvec', b='e.embedding')} AS cos
+         {SQL_COS.format(a='q.qvec', b='e.embedding')} AS cos
   FROM embeddings e CROSS JOIN q
   WHERE e.label != q.q_label
 ),

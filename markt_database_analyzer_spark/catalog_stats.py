@@ -11,9 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, demo_guard, register, _t
+from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, demo_guard, register, _t
 from .datapipe import text as tx
-from .functions import davg, dsum
+from .functions import davg, dsum, nsum
 from .catalog import register, _t
 from .catalog import SQL_DSUM, register, _t
 from .datapipe.sketches import (
@@ -2440,15 +2440,12 @@ def stats_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the median uses the catalog's lower-median convention (rank
     (n+1)//2 over a total order)."""
     ev = _t(spark, sf_dir, "events")
-    micro = F.sum(F.round(F.col("value") * 1000000.0).cast("long"))
     daily = ev.groupBy(
         "event_type",
         F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
         .cast("bigint")
         .alias("d"),
-    ).agg(
-        F.round((micro.cast("double") / F.count(F.lit(1))) / 1000000.0, 9).alias("y")
-    )
+    ).agg(F.round(davg("value"), 9).alias("y"))
     a = daily.select(
         F.col("event_type"), F.col("d").alias("da"), F.col("y").alias("ya")
     )
@@ -4541,8 +4538,9 @@ def stats_wilson_ci_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nationkey")
 
 
-# Bowling et al.'s logistic approximation to the normal CDF — the
-# BH-FDR / TOST convention: identical expression text on both engines.
+# Bowling et al.'s logistic approximation to the normal CDF — the one
+# p-value literal of every stats entry (BH-FDR, TOST, SRM, power, ...):
+# identical expression text on both engines.
 _PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
 _MCN_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 _MCN_THRESHOLD = 0.08  # classifier A: the eval_cohens_kappa decision rule
@@ -4948,7 +4946,6 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SRM_SEED = 7  # the CUPED/TOST/effect-size split — the one being audited
 _SRM_ALPHA = 0.001  # the conventional SRM alarm level
-_PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
 def _sql_srm() -> str:
     arm = f"({sql_hash60('user_id::VARCHAR', seed=_SRM_SEED)} % 2)"
     phi = _PHI.format(z="sqrt(chi2)")
@@ -5097,9 +5094,6 @@ def stats_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month")
 
 
-# Bowling et al.'s logistic approximation to the normal CDF — the
-# BH-FDR / TOST / SRM convention: identical expression text both engines.
-_PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
 _POWER_SEED = 7  # the CUPED/TOST/SRM split — designing for the same experiment
 # z_{alpha/2} at alpha=0.05 and z_beta at 80% power, injected as IDENTICAL
 # decimal literals on both engines (quantile functions differ per libm).
@@ -5335,7 +5329,6 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
 _BB_SEED = 7  # the CUPED/TOST/SRM/power split
 _BB_ALPHA0, _BB_BETA0 = 1.0, 1.0  # uniform prior
 _Z95 = "1.959963984540054"  # 95% interval half-width in SDs (shared literal)
@@ -5587,10 +5580,6 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bowling et al.'s logistic approximation of the standard normal CDF —
-# the same literal every stats entry in the catalog shares, so p-values
-# are identical closed-form expressions on both engines.
-_PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
 _LIFT_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_lift_cuts() -> str:
     toks = tx.sql_tokens("text")
@@ -7788,8 +7777,6 @@ def stats_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 10: mutual information, Jarque-Bera, Cliff's delta, Wasserstein-1
 # --------------------------------------------------------------------------
 
-from .catalog_graph import SQL_NSUM as _SQL_NSUM_R10, nsum as _nsum_r10
-
 
 _SQL_MUTUAL_INFO = f"""
 WITH cells AS (
@@ -7810,14 +7797,14 @@ SELECT nt AS n, n_cells, mi_nats, h_lang, h_source,
        round(mi_nats / sqrt(h_lang * h_source), 9) AS nmi
 FROM mi CROSS JOIN hx CROSS JOIN hy CROSS JOIN n
 """.format(
-    NSUM_MI=_SQL_NSUM_R10.format(
+    NSUM_MI=SQL_NSUM.format(
         x="round((CAST(c AS DOUBLE) / nt)"
         " * ln(CAST(c AS DOUBLE) * nt / (CAST(cx AS DOUBLE) * cy)), 9)"
     ),
-    NSUM_HX=_SQL_NSUM_R10.format(
+    NSUM_HX=SQL_NSUM.format(
         x="round(-(CAST(cx AS DOUBLE) / nt) * ln(CAST(cx AS DOUBLE) / nt), 9)"
     ),
-    NSUM_HY=_SQL_NSUM_R10.format(
+    NSUM_HY=SQL_NSUM.format(
         x="round(-(CAST(cy AS DOUBLE) / nt) * ln(CAST(cy AS DOUBLE) / nt), 9)"
     ),
 )
@@ -7866,15 +7853,15 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mi = joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        _nsum_r10(mi_term).alias("mi_nats"),
+        nsum(mi_term).alias("mi_nats"),
     )
     pxd = F.col("cx").cast("double") / F.col("nt")
     hx = mx.crossJoin(F.broadcast(n)).agg(
-        _nsum_r10(F.round(-pxd * F.log(pxd), 9)).alias("h_lang")
+        nsum(F.round(-pxd * F.log(pxd), 9)).alias("h_lang")
     )
     pyd = F.col("cy").cast("double") / F.col("nt")
     hy = my.crossJoin(F.broadcast(n)).agg(
-        _nsum_r10(F.round(-pyd * F.log(pyd), 9)).alias("h_source")
+        nsum(F.round(-pyd * F.log(pyd), 9)).alias("h_source")
     )
     return (
         mi.crossJoin(F.broadcast(hx))
@@ -7921,9 +7908,9 @@ SELECT event_type, n, round(mean_v, 6) AS mean_v,
 FROM mom ORDER BY event_type
 """.format(
     DAVG_V=SQL_DAVG.format(x="value"),
-    NSUM_D2=_SQL_NSUM_R10.format(x="round(dv * dv, 9)"),
-    NSUM_D3=_SQL_NSUM_R10.format(x="round(dv * dv * dv, 9)"),
-    NSUM_D4=_SQL_NSUM_R10.format(x="round(dv * dv * dv * dv, 9)"),
+    NSUM_D2=SQL_NSUM.format(x="round(dv * dv, 9)"),
+    NSUM_D3=SQL_NSUM.format(x="round(dv * dv * dv, 9)"),
+    NSUM_D4=SQL_NSUM.format(x="round(dv * dv * dv * dv, 9)"),
 )
 
 
@@ -7961,9 +7948,9 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     mom = d.groupBy("event_type").agg(
         F.min("n").alias("n"),
         F.min("mean_v").alias("mean_v"),
-        (_nsum_r10(F.round(dv * dv, 9)) / F.min("n")).alias("s2"),
-        (_nsum_r10(F.round(dv * dv * dv, 9)) / F.min("n")).alias("s3"),
-        (_nsum_r10(F.round(dv * dv * dv * dv, 9)) / F.min("n")).alias("s4"),
+        (nsum(F.round(dv * dv, 9)) / F.min("n")).alias("s2"),
+        (nsum(F.round(dv * dv * dv, 9)) / F.min("n")).alias("s3"),
+        (nsum(F.round(dv * dv * dv * dv, 9)) / F.min("n")).alias("s4"),
     )
     g1 = F.round(F.col("s3") / (F.col("s2") * F.sqrt(F.col("s2"))), 9)
     g2 = F.round(F.col("s4") / (F.col("s2") * F.col("s2")) - 3.0, 9)
@@ -8112,7 +8099,7 @@ SELECT (SELECT na FROM n) AS n_a, (SELECT nb FROM n) AS n_b,
        CAST(count(*) AS BIGINT) AS n_bins,
        round(10.0 * {{NSUM_GAP}}, 6) AS w1
 FROM f
-""".format(NSUM_GAP=_SQL_NSUM_R10.format(x="round(abs(fa - fb), 9)"))
+""".format(NSUM_GAP=SQL_NSUM.format(x="round(abs(fa - fb), 9)"))
 
 
 @register(
@@ -8184,7 +8171,7 @@ def stats_wasserstein_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("nb").alias("n_b"),
         F.count(F.lit(1)).cast("bigint").alias("n_bins"),
         F.round(
-            F.lit(10.0) * _nsum_r10(F.round(F.abs(F.col("fa") - F.col("fb")), 9)),
+            F.lit(10.0) * nsum(F.round(F.abs(F.col("fa") - F.col("fb")), 9)),
             6,
         ).alias("w1"),
     )

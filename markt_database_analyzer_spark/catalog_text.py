@@ -11,9 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
+from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, register, _t
 from .datapipe import text as tx
-from .functions import davg, dsum
+from .functions import davg, dsum, nsum
 from .catalog import SQL_DSUM, register, _t
 from .functions import dsum
 from pyspark.sql import DataFrame, SparkSession
@@ -1181,9 +1181,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = ranked.select(
         F.round(F.log("rank"), 9).alias("x"), F.round(F.log("freq"), 9).alias("y")
     )
-
-    def dsum(c):
-        return F.sum(F.round(c * 1000000.0).cast("long")).cast("double") / 1000000.0
 
     stats = pts.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2470,7 +2467,6 @@ def text_msttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _KL_ALPHA = 0.5  # add-alpha smoothing over the union vocabulary
-_SQL_NSUM_TX = "(CAST(SUM(CAST(round(({x}) * 1000000000.0) AS HUGEINT)) AS DOUBLE) / 1000000000.0)"
 
 
 def _sql_unigram_kl() -> str:
@@ -2498,9 +2494,9 @@ d AS (
 ),
 agg AS (
   SELECT
-    {_SQL_NSUM_TX.format(x='round(p * ln(p / q), 9)')} AS kl_pq,
-    {_SQL_NSUM_TX.format(x='round(q * ln(q / p), 9)')} AS kl_qp,
-    {_SQL_NSUM_TX.format(
+    {SQL_NSUM.format(x='round(p * ln(p / q), 9)')} AS kl_pq,
+    {SQL_NSUM.format(x='round(q * ln(q / p), 9)')} AS kl_qp,
+    {SQL_NSUM.format(
         x='round(0.5 * p * ln(2.0 * p / (p + q)) + 0.5 * q * ln(2.0 * q / (p + q)), 9)'
     )} AS js
   FROM d
@@ -2558,20 +2554,11 @@ def text_unigram_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("c2") + a) / (F.col("n2") + a * F.col("v"))).alias("q"),
     )
 
-    def nsum_tx(col):
-        # exact_long_sum: bit-identical hi/lo long accumulation, ~4x faster
-        from .functions.aggregates import exact_long_sum
-
-        return (
-            exact_long_sum(F.round(col * F.lit(1e9)).cast("long")).cast("double")
-            / F.lit(1e9)
-        )
-
     p, q = F.col("p"), F.col("q")
     agg = d.agg(
-        nsum_tx(F.round(p * F.log(p / q), 9)).alias("kl_pq"),
-        nsum_tx(F.round(q * F.log(q / p), 9)).alias("kl_qp"),
-        nsum_tx(
+        nsum(F.round(p * F.log(p / q), 9)).alias("kl_pq"),
+        nsum(F.round(q * F.log(q / p), 9)).alias("kl_qp"),
+        nsum(
             F.round(
                 0.5 * p * F.log(2.0 * p / (p + q))
                 + 0.5 * q * F.log(2.0 * q / (p + q)),

@@ -11,8 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import davg, dsum
+from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, register, _t
+from .functions import davg, dsum, nsum
 from .catalog import register, _t
 from .catalog import SQL_DSUM, register, _t
 from .functions import davg
@@ -656,9 +656,8 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches #days elements, and at 100 TB the same shape runs per key
     inside a grouped aggregation (one series per group, bounded days)."""
     ev = _t(spark, sf_dir, "events")
-    micro = F.sum(F.round(F.col("value") * 1000000.0).cast("long"))
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.round((micro.cast("double") / F.count(F.lit(1))) / 1000000.0, 9).alias("y")
+        F.round(davg("value"), 9).alias("y")
     )
     arr = daily.agg(
         F.transform(
@@ -764,7 +763,6 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(
         F.col("vm").cast("decimal(38,0)") * (F.col("t_next") - F.col("t"))
     )
-    micro = F.sum(F.round(F.col("value") * 1000000.0).cast("long"))
     return (
         seg.groupBy("user_id")
         .agg(
@@ -772,9 +770,7 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.sum(prod).cast("double") / F.sum(dur).cast("double") / 1000000.0, 9
             ).alias("twa"),
-            F.round((micro.cast("double") / F.count(F.lit(1))) / 1000000.0, 9).alias(
-                "arith_avg"
-            ),
+            F.round(davg("value"), 9).alias("arith_avg"),
         )
         .filter(F.col("n_events") >= 2)
         .orderBy("user_id")
@@ -2369,8 +2365,6 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Durbin-Watson residual autocorrelation — round 10
 # --------------------------------------------------------------------------
 
-_SQL_NSUM_TS = "(CAST(SUM(CAST(round(({x}) * 1000000000.0) AS HUGEINT)) AS DOUBLE) / 1000000000.0)"
-
 _SQL_DURBIN_WATSON = f"""
 WITH daily AS (
   SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
@@ -2390,8 +2384,8 @@ m AS (
 ),
 fit AS (
   SELECT min(m.n) AS n, min(m.tbar) AS tbar, min(m.ybar) AS ybar,
-         {_SQL_NSUM_TS.format(x='round((t - m.tbar) * (y - m.ybar) / 1000.0, 9)')} AS sxy,
-         {_SQL_NSUM_TS.format(x='round((t - m.tbar) * (t - m.tbar) / 1000.0, 9)')} AS sxx
+         {SQL_NSUM.format(x='round((t - m.tbar) * (y - m.ybar) / 1000.0, 9)')} AS sxy,
+         {SQL_NSUM.format(x='round((t - m.tbar) * (t - m.tbar) / 1000.0, 9)')} AS sxx
   FROM idx CROSS JOIN m
 ),
 res AS (
@@ -2407,8 +2401,8 @@ led AS (
 )
 SELECT min(n) AS n_days,
        round(min(sxy) / min(sxx), 9) AS slope_per_day,
-       round({_SQL_NSUM_TS.format(x='CASE WHEN e_prev IS NOT NULL THEN round((e - e_prev) * (e - e_prev) / 1000000.0, 9) ELSE 0.0 END')}
-             / {_SQL_NSUM_TS.format(x='round(e * e / 1000000.0, 9)')}, 6) AS durbin_watson
+       round({SQL_NSUM.format(x='CASE WHEN e_prev IS NOT NULL THEN round((e - e_prev) * (e - e_prev) / 1000000.0, 9) ELSE 0.0 END')}
+             / {SQL_NSUM.format(x='round(e * e / 1000000.0, 9)')}, 6) AS durbin_watson
 FROM led
 """
 
@@ -2452,24 +2446,15 @@ def ts_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         davg(F.col("y")).alias("ybar"),
     )
 
-    def nsum_ts(col):
-        # exact_long_sum: bit-identical hi/lo long accumulation, ~4x faster
-        from .functions.aggregates import exact_long_sum
-
-        return (
-            exact_long_sum(F.round(col * F.lit(1e9)).cast("long")).cast("double")
-            / F.lit(1e9)
-        )
-
     cen = idx.crossJoin(F.broadcast(m))
     fit = cen.agg(
         F.min("n").alias("n"),
         F.min("tbar").alias("tbar"),
         F.min("ybar").alias("ybar"),
-        nsum_ts(
+        nsum(
             F.round((F.col("t") - F.col("tbar")) * (F.col("y") - F.col("ybar")) / 1000.0, 9)
         ).alias("sxy"),
-        nsum_ts(
+        nsum(
             F.round((F.col("t") - F.col("tbar")) * (F.col("t") - F.col("tbar")) / 1000.0, 9)
         ).alias("sxx"),
     )
@@ -2492,5 +2477,5 @@ def ts_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     return led.agg(
         F.min("n").alias("n_days"),
         F.round(F.min("sxy") / F.min("sxx"), 9).alias("slope_per_day"),
-        F.round(nsum_ts(num_term) / nsum_ts(den_term), 6).alias("durbin_watson"),
+        F.round(nsum(num_term) / nsum(den_term), 6).alias("durbin_watson"),
     )

@@ -148,17 +148,6 @@ def minhash_lsh_candidates(
         if shingled is not None
         else shingle_projection(df, text_col, id_col, shingle_k)
     )
-    digests = base.withColumn("digests", F.transform("sh", lambda s: F.md5(s)))
-    hashed = digests.select(
-        "doc",
-        F.transform("digests", lambda d: F.conv(F.substring(d, 1, 14), 16, 10).cast("bigint")).alias("h1"),
-        F.transform("digests", lambda d: F.conv(F.substring(d, 15, 14), 16, 10).cast("bigint")).alias("h2"),
-    )
-    def member(i: int) -> Column:
-        if i == 0:
-            return F.array_min(F.col("h1"))
-        return F.array_min(F.zip_with("h1", "h2", lambda a, b: a + F.lit(i) * b))
-
     # Pin the banded-signature frame: the self-join below references it
     # on BOTH sides, and without the pin each side re-runs the md5 +
     # K-M + banding projection (measured: the whole candidates stage
@@ -168,7 +157,7 @@ def minhash_lsh_candidates(
     # bytes/doc" scale claim), MEMORY_AND_DISK like the shingle
     # projection.
     sig = (
-        hashed.withColumn("sig", F.array(*[member(i) for i in range(num_hashes)]))
+        km_signatures(base, num_hashes)
         .withColumn("band", F.explode(lsh_bands(F.col("sig"), bands, rows)))
         .select("doc", "band.band_id", "band.band_hash")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -708,10 +697,10 @@ ORDER BY d.doc_id
 
 def km_signatures(shingled: DataFrame, num_hashes: int = 16) -> DataFrame:
     """(doc, sig) MinHash signature frame over a
-    :func:`shingle_projection` — the K-M family exactly as
-    :func:`minhash_lsh_candidates` derives it (one md5 per shingle, two
-    56-bit bases, members h1 + i*h2), exposed standalone so estimators
-    can compare signature components without rebuilding the LSH plan."""
+    :func:`shingle_projection`: the K-M family (one md5 per shingle, two
+    56-bit bases, members h1 + i*h2) that :func:`minhash_lsh_candidates`
+    bands, also used standalone by estimators that compare signature
+    components without the LSH plan."""
     digests = shingled.withColumn("digests", F.transform("sh", lambda s: F.md5(s)))
     hashed = digests.select(
         "doc",

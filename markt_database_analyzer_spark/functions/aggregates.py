@@ -6,34 +6,42 @@ return results differing in the last ulps between runs, and differing from
 any external system. That breaks (a) hash-based differential testing and
 (b) reproducibility audits on a 1000-executor job.
 
-``dsum``/``davg`` quantize each value to an integer number of micro-units
-(``round(x * 1e6)``) and sum those integers through ``DECIMAL(38, 0)``:
+Every float aggregate in the engine follows one rule: quantize each value
+to an integer number of grid units (``round(x * scale)``), sum those
+integers exactly, and divide the exact total back down:
+
+- ``dsum``/``davg`` use the micro grid (``MICRO`` = 1e6) — prices, counts,
+  rates, where 1e-6 loses nothing that survives float noise anyway;
+- ``nsum`` uses the nano grid (``NANO`` = 1e9) — per-row masses of order
+  1/N (PageRank contributions, entropy and divergence terms) that the
+  micro grid would destroy.
+
+Why it is exact and portable:
 
 - integer rounding of a given double is identical in every engine
   (half-away-from-zero; exact-tie divergence has measure ~2^-52);
 - integer addition is exact and associative → the aggregate is **bit-stable
   under any partitioning** and reproducible across engines;
-- the final integer → double → /1e6 conversion is deterministic.
+- the final integer → double → /scale conversion is deterministic.
 
 (The naive alternative — accumulating ``CAST(x AS DECIMAL)`` — is NOT
 portable: engines disagree systematically on double→decimal conversion
 below ~1e-10 per value, which accumulates across millions of rows.)
 
-Cost: one multiply+round per value, no extra shuffle, and the Decimal128
-accumulation runs ~3× a native double sum per aggregate (measured on the
-Q1 anchor at sf0.1: 0.25 s native vs 0.69 s quantized for one sum — the
-whole 8-aggregate Q1 pays 2.8 s vs ~1 s). That is the deliberate price of
-bit-stable results; a deployment that prefers speed over reproducibility
-swaps ``F.sum``/``F.avg`` in with an otherwise identical plan. LONG
-accumulation of the micro-units would be ~2× faster but overflows int64
-at ~1.8e8 rows/group for price-scale values — real at 100 TB (TPC-H
-sf100's Q1 groups are ~1.5e9 rows) — so DECIMAL(38,0) is the only
-accumulator that is simultaneously exact, portable, and scale-safe.
+Accumulation: :func:`exact_long_sum` splits each quantized long into a
+high and a low part and sums both through native LONG accumulators, then
+rebuilds the exact total in Decimal128 once per group. The total is the
+same integer a ``DECIMAL(38,0)`` sum computes, at native long-sum speed,
+and it stays one aggregate expression, so no extra shuffle is needed.
+Overflow envelope: each quantized value must fit a long (|x| < ~9.2e12
+on the micro grid, ~9.2e9 on the nano grid), a group may hold up to 2^43
+rows, and a group's absolute mass must stay under ~9.7e18 value units on
+the micro grid (~9.7e15 on the nano grid). Past any of these ANSI mode
+raises ``SparkArithmeticException``; nothing wraps silently.
 
-Semantics: values are quantized at 1e-6 before aggregation —
-document-level metrics (prices, counts, rates) lose nothing that survives
-float noise anyway. Callers that need raw-float semantics use plain
-``F.sum``/``F.avg``.
+Callers that need raw-float semantics use plain ``F.sum``/``F.avg``.
+The DuckDB twins of these helpers are ``catalog.SQL_DSUM``, ``SQL_DAVG``
+and ``SQL_NSUM``.
 """
 
 from __future__ import annotations
@@ -42,11 +50,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MICRO = 1_000_000.0
-
-
-def _quantized(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("double") * F.lit(MICRO)).cast("decimal(38,0)")
+NANO = 1_000_000_000.0
 
 
 def exact_long_sum(q: Column) -> Column:
@@ -76,84 +80,25 @@ def exact_long_sum(q: Column) -> Column:
     )
 
 
-def _qlong(col: Column | str) -> Column:
+def _qlong(col: Column | str, scale: float = MICRO) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("double") * F.lit(MICRO)).cast("long")
+    return F.round(c.cast("double") * F.lit(scale)).cast("long")
 
 
 def dsum(col: Column | str) -> Column:
     """Order-insensitive (deterministic) sum of a double column, as double,
-    quantized at 1e-6. Accumulates via :func:`exact_long_sum` (hi/lo long
-    split) — bit-identical to the Decimal128 form at ~4x the speed."""
+    quantized at 1e-6."""
     return (exact_long_sum(_qlong(col)).cast("double") / F.lit(MICRO)).alias("dsum")
 
 
 def davg(col: Column | str) -> Column:
     """Deterministic mean (nulls excluded from numerator and denominator,
-    matching ``avg`` and pandas ``mean(skipna=True)``), quantized at 1e-6.
-    Accumulates via :func:`exact_long_sum` — bit-identical, ~4x faster."""
+    matching ``avg`` and pandas ``mean(skipna=True)``), quantized at 1e-6."""
     c = F.col(col) if isinstance(col, str) else col
     return ((exact_long_sum(_qlong(c)).cast("double") / F.count(c)) / F.lit(MICRO)).alias("davg")
 
 
-def agg_hier(df, keys, specs):
-    """Hierarchical deterministic aggregation — same results as
-    ``dsum``/``davg`` (bit-identical, verified on the Q1 anchor), ~3x
-    faster on wide aggregates.
-
-    Two-level exact summation: micro-unit LONGs are summed per
-    ``(keys..., spark_partition_id)`` — native whole-stage-codegen long
-    addition, the hot path — and only the per-partition subtotals are
-    re-summed through DECIMAL(38,0). Integer addition is associative at
-    both levels, so the result is the same exact integer ``dsum``
-    computes, at a fraction of the Decimal128 cost (Q1 sf0.1: 3.6 s ->
-    1.3 s for the 7-aggregate plan).
-
-    Overflow envelope: a per-(group, partition) subtotal must fit int64,
-    i.e. rows_per_partition x max|x| x 1e6 < 2^63. With the default
-    128 MiB ``maxPartitionBytes`` (<= ~1.6e7 rows/partition) that allows
-    |x| <= ~5.7e9 — price/metric-scale values forever; ANSI mode makes a
-    violation a loud SparkArithmeticException, never a silent wrap.
-    Callers whose values can exceed the envelope use plain :func:`dsum`
-    (pure Decimal128, unconditional).
-
-    ``specs`` is an ordered list of ``(kind, col, alias)`` with kind in
-    ``{"dsum", "davg", "count", "count_star", "max", "min"}``; output
-    columns appear in spec order after the keys. Costs one extra (tiny)
-    exchange of ``groups x partitions`` subtotal rows.
-    """
-    s1_aggs, s2_aggs = [], []
-    for i, (kind, col, alias) in enumerate(specs):
-        c = F.col(col) if isinstance(col, str) else col
-        q = F.round(c.cast("double") * F.lit(MICRO)).cast("long") if kind in ("dsum", "davg") else None
-        dec = lambda name: F.sum(F.col(name).cast("decimal(38,0)")).cast("double")  # noqa: E731
-        if kind == "dsum":
-            s1_aggs.append(F.sum(q).alias(f"_s{i}"))
-            s2_aggs.append((dec(f"_s{i}") / F.lit(MICRO)).alias(alias))
-        elif kind == "davg":
-            # division order mirrors davg exactly: (Σ/n)/MICRO
-            s1_aggs.append(F.sum(q).alias(f"_s{i}"))
-            s1_aggs.append(F.count(c).alias(f"_n{i}"))
-            s2_aggs.append(
-                ((dec(f"_s{i}") / F.sum(f"_n{i}")) / F.lit(MICRO)).alias(alias)
-            )
-        elif kind == "count":
-            s1_aggs.append(F.count(c).alias(f"_c{i}"))
-            s2_aggs.append(F.sum(f"_c{i}").alias(alias))
-        elif kind == "count_star":
-            s1_aggs.append(F.count(F.lit(1)).alias(f"_c{i}"))
-            s2_aggs.append(F.sum(f"_c{i}").alias(alias))
-        elif kind == "max":
-            s1_aggs.append(F.max(c).alias(f"_m{i}"))
-            s2_aggs.append(F.max(f"_m{i}").alias(alias))
-        elif kind == "min":
-            s1_aggs.append(F.min(c).alias(f"_m{i}"))
-            s2_aggs.append(F.min(f"_m{i}").alias(alias))
-        else:
-            raise ValueError(f"unknown agg kind: {kind}")
-    if not all(isinstance(k, str) for k in keys):
-        raise ValueError("agg_hier keys must be column names (stage-2 re-groups by name)")
-    stage1 = df.groupBy(
-        *keys, F.spark_partition_id().alias("_pid")
-    ).agg(*s1_aggs)
-    return stage1.groupBy(*keys).agg(*s2_aggs)
+def nsum(col: Column | str) -> Column:
+    """:func:`dsum`'s construction on the 1e-9 grid, for summed quantities
+    of order 1/N where the 1e-6 grid would destroy the signal."""
+    return exact_long_sum(_qlong(col, NANO)).cast("double") / F.lit(NANO)

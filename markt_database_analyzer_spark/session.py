@@ -10,8 +10,11 @@ Design decisions (SURVEY.md §7 Phase 0):
 - **AQE on** with partition coalescing and skew-join handling: city/category
   style dimensions are skewed by nature (SURVEY.md §4.2); at 100 TB the
   runtime re-plan is what keeps one hot key from stalling a stage.
-- **Session timezone pinned to UTC** so timestamp semantics agree with
-  columnar at-rest data and with external oracles (DuckDB is UTC-naive).
+- **Engine confs** (UTC session timezone, nanosecond parquet as longs,
+  ``inferTimestampNTZ`` off, ``InferFiltersFromGenerate`` excluded) come
+  from ``sources.readers.ensure_engine_conf``, the one list of them: it
+  runs on every session built here and on any caller-provided session at
+  its first read.
 - **Core count**: ``local[N]`` and ``shuffle.partitions`` both come from one
   read of ``$SPARK_GRAFT_CPUS`` at call time, defaulting to the cores this
   process may run on (``os.sched_getaffinity``). On a real cluster AQE
@@ -38,6 +41,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .sources.readers import ensure_engine_conf
 
 MEMINFO = "/proc/meminfo"
 MAX_DRIVER_MEM_MB = 16 * 1024
@@ -75,7 +80,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dimension tables (profiles-analogs, nation/region/customer) are
@@ -83,18 +87,6 @@ def get_spark(
         # explicit — operators also hint broadcast() where the small side is
         # known statically.
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # Some at-rest parquet carries TIMESTAMP(NANOS) (not in Spark's
-        # type system): read as raw nanosecond longs; sources.read_table
-        # converts to microsecond timestamps (identical to how µs-precision
-        # engines truncate nanos).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Inferred size(e)>0 filters from explode re-evaluate computed
-        # generator expressions at the scan — see sources.readers
-        # ensure_engine_conf for the measured rationale.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
     if master is not None:
         builder = builder.master(master)
@@ -106,5 +98,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    ensure_engine_conf(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark

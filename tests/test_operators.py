@@ -422,52 +422,3 @@ def test_approx_percentile_rank_error_bounded(spark):
                 et, p, a, lo, hi, target, n,
             )
 
-
-def test_agg_hier_bit_identical_to_dsum_davg(spark):
-    """agg_hier's two-level long+decimal summation must be BIT-identical
-    to the flat Decimal128 dsum/davg on the Q1 anchor — same quantized
-    integers, same division order — across every group."""
-    from pyspark.sql import functions as F
-
-    from markt_database_analyzer_spark.catalog import REGISTRY
-    from markt_database_analyzer_spark.functions import davg, dsum
-    from markt_database_analyzer_spark.sources import read_table
-
-    sf = "/root/testdata/sf0.001"
-    li = read_table(spark, sf, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    flat = (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum(F.col("l_quantity")).alias("sum_qty"),
-            dsum(disc).alias("sum_disc_price"),
-            davg(F.col("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-    from markt_database_analyzer_spark.functions import agg_hier
-
-    hier = agg_hier(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            ("dsum", F.col("l_quantity"), "sum_qty"),
-            ("dsum", disc, "sum_disc_price"),
-            ("davg", F.col("l_discount"), "avg_disc"),
-            ("count_star", None, "count_order"),
-        ],
-    )
-    a = sorted(tuple(r) for r in flat.collect())
-    b = sorted(tuple(r) for r in hier.collect())
-    assert a == b  # bit-identical, not approx
-
-
-def test_agg_hier_rejects_expression_keys(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from markt_database_analyzer_spark.functions import agg_hier
-
-    df = spark.range(10)
-    with _pytest.raises(ValueError):
-        agg_hier(df, [F.col("id") % 2], [("count_star", None, "n")])

@@ -494,6 +494,15 @@ def test_tpch_q5_snowflake_broadcasts_dims(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_tpch_q1_is_one_flat_aggregate(spark):
+    """Q1's eight aggregates (dsum x4, davg x3, count) are one
+    map-side-combined hash agg: a single hash exchange on the group key,
+    no per-partition pre-aggregation keyed on ``spark_partition_id``."""
+    plan = _plan(spark, "tpch_q1_pricing_summary")
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "spark_partition_id" not in plan.lower(), plan
+
+
 def test_tpch_q3_top10_uses_take_ordered(spark):
     """Q3's ORDER BY + LIMIT must compile to TakeOrderedAndProject —
     a global sort of the aggregate would be a scale bug."""

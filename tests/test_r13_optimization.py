@@ -14,15 +14,23 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from markt_database_analyzer_spark.functions import dsum, nsum
 from markt_database_analyzer_spark.functions.aggregates import (
     MICRO,
-    _quantized,
+    NANO,
     exact_long_sum,
 )
 
 
 def _qlong(c):
     return F.round(c.cast("double") * F.lit(MICRO)).cast("long")
+
+
+def _decimal_sum(c, scale):
+    """The reference form: the same quantized integers, accumulated per
+    row in DECIMAL(38,0)."""
+    q = F.round(c.cast("double") * F.lit(scale)).cast("decimal(38,0)")
+    return F.sum(q).cast("double") / F.lit(scale)
 
 
 @pytest.fixture(scope="module")
@@ -35,24 +43,26 @@ def spark():
 def test_exact_long_sum_bit_identical_to_decimal_sum(spark):
     # adversarial values: signs, half-ulp ties, nulls, magnitudes that
     # exercise both halves of the 2^20 split, and a deterministic
-    # pseudo-random spread
+    # pseudo-random spread — summed through the public helpers on both
+    # grids (dsum: 1e-6, nsum: 1e-9; nano values stay inside its
+    # |x| < ~9.2e9 per-row envelope)
     import random
 
     rng = random.Random(13)
     vals = (
-        [None, 0.0, -0.0, 0.0000005, -0.0000005, 1e9, -1e9, 123456.789012]
+        [None, 0.0, -0.0, 0.0000005, -0.0000005, 0.0000000005, -0.0000000005]
+        + [1e9, -1e9, 123456.789012, 0.123456789012]
         + [rng.uniform(-1e7, 1e7) for _ in range(20_000)]
+        + [rng.uniform(-1e-3, 1e-3) for _ in range(2_000)]
     )
     df = spark.createDataFrame([(i % 7, v) for i, v in enumerate(vals)], "g int, v double")
-    dec = df.groupBy("g").agg(
-        (F.sum(_quantized(F.col("v"))).cast("double") / F.lit(MICRO)).alias("s")
-    )
-    fast = df.groupBy("g").agg(
-        (exact_long_sum(_qlong(F.col("v"))).cast("double") / F.lit(MICRO)).alias("s")
-    )
-    got_dec = {r["g"]: r["s"] for r in dec.collect()}
-    got_fast = {r["g"]: r["s"] for r in fast.collect()}
-    assert got_dec == got_fast  # exact ==, not approx: the totals are the same integer
+    for helper, scale in ((dsum, MICRO), (nsum, NANO)):
+        dec = df.groupBy("g").agg(_decimal_sum(F.col("v"), scale).alias("s"))
+        fast = df.groupBy("g").agg(helper(F.col("v")).alias("s"))
+        got_dec = {r["g"]: r["s"] for r in dec.collect()}
+        got_fast = {r["g"]: r["s"] for r in fast.collect()}
+        # exact ==, not approx: the totals are the same integer
+        assert got_dec == got_fast, helper.__name__
 
 
 def test_exact_long_sum_null_semantics_match(spark):

@@ -9,6 +9,10 @@ does, which is why these entries were green while the latents stood):
 - ``privacy_l_diversity``: per-class entropy terms quantize to the
   nano-grid before summing, so the class entropy is summation-order
   free on both engines;
+- ``ts_holt_forecast`` / ``stats_theilsen_slope`` /
+  ``ts_time_weighted_avg``: a null event value leaves the mean's
+  denominator (``davg``, COUNT(value) like the oracles' SQL_DAVG), not
+  counted as a row;
 - the as-of NULL-value carry is pinned in
   tests/test_operators.py::test_asof_join_carries_null_values_like_merge_asof.
 
@@ -18,6 +22,8 @@ values exactly — the same differential the driver's t2 gate applies.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 import duckdb
 import pandas as pd
@@ -132,3 +138,26 @@ def test_mood_median_degenerate_single_value_null_both_engines(spark, tmp_path):
     got, want = _run_both(spark, "stats_mood_median_test", str(tmp_path), ["orders"])
     _assert_frames_equal(got, want)
     assert got["chi2"].isna().all()
+
+
+@pytest.mark.parametrize(
+    "name", ["ts_holt_forecast", "stats_theilsen_slope", "ts_time_weighted_avg"]
+)
+def test_mean_skips_null_values_like_oracle(spark, tmp_path, name):
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    extra = events.slice(0, 1).to_pylist()[0]
+    extra["event_id"] = pc.max(events["event_id"]).as_py() + 1
+    extra["value"] = None
+    # its own timestamp (same user, same day): no ordering tie with the
+    # row it copies
+    extra["ts"] += dt.timedelta(seconds=1)
+    extra_t = pa.Table.from_pylist([extra], schema=events.schema)
+    pq.write_table(pa.concat_tables([events, extra_t]), tmp_path / "events.parquet")
+    got, want = _run_both(spark, name, str(tmp_path), ["events"])
+    _assert_frames_equal(got, want)

@@ -1,6 +1,7 @@
 """``session.get_spark`` sizes ``local[N]`` and the shuffle partitions
-from one read of ``$SPARK_GRAFT_CPUS`` made at call time, and the driver
-heap from ``$SPARK_GRAFT_DRIVER_MEM`` or, unset, from the host's memory."""
+from one read of ``$SPARK_GRAFT_CPUS`` made at call time, the driver
+heap from ``$SPARK_GRAFT_DRIVER_MEM`` or, unset, from the host's memory,
+and applies the engine confs of ``sources.readers.ensure_engine_conf``."""
 
 from __future__ import annotations
 
@@ -31,7 +32,10 @@ class _RecordingBuilder:
         return self
 
     def getOrCreate(self):
-        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+        return SimpleNamespace(
+            conf=SimpleNamespace(set=self.conf.__setitem__, get=self.conf.get),
+            sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
+        )
 
 
 @pytest.fixture
@@ -94,3 +98,16 @@ def test_driver_heap_env_overrides_host(conf, meminfo, monkeypatch):
     session.get_spark()
     assert conf["spark.driver.memory"] == "1g"
 
+
+def test_engine_confs_set_before_any_read(spark):
+    """A session from ``get_spark`` carries every engine conf of
+    ``ensure_engine_conf`` before its first ``read_table``, including
+    ``inferTimestampNTZ`` off."""
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.unset(key)  # as on a session no read has touched yet
+    assert spark.conf.get(key) == "true"
+    fresh = session.get_spark(app_name="mda-tests", extra_conf={"spark.ui.enabled": "false"})
+    assert fresh.conf.get(key) == "false"
+    assert fresh.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert "InferFiltersFromGenerate" in fresh.conf.get("spark.sql.optimizer.excludedRules")

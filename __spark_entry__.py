@@ -30,22 +30,19 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver-window rotation (SELF-SLIDING since round 9)
+# Driver-window ordering
 #
-# The driver's per-round correctness run covers exactly the first 50
-# entries of queries(), in dict order (verified every round: each
-# CORRECTNESS_r0N.json keyset equals that round's _ordered_names()[:50]).
-# Rounds 1-8 used hand-laid _DRIVER_HEAD lists; round 8 proved the
-# failure mode — an idle round re-verified round 7's exact window while
-# 17 queued entries stayed unverdicted (VERDICT r8 items 1-2). The head
-# is now COMPUTED from the verdict record itself, so a zero-edit round
-# still spends its window on the entries that need it most:
+# The driver's correctness run covers exactly the first 50 entries of
+# queries(), in dict order (each CORRECTNESS_r*.json keyset equals the
+# _ordered_names()[:50] of the run that wrote it). The order is computed
+# from those verdict records, so the window always goes to the entries
+# that need it most:
 #
 #   1. never-verdicted entries (no key in any CORRECTNESS_r*.json),
 #      registration order — oldest catalog additions first;
 #   2. entries whose LATEST verdict was red (mismatch or error),
-#      oldest verdict round first — regressions re-check immediately;
-#   3. green entries by staleness (oldest latest-verdict round first),
+#      oldest verdict first — regressions re-check immediately;
+#   3. green entries by staleness (oldest latest verdict first),
 #      so standing greens re-confirm on a rolling basis;
 #   4. _DRIVER_TAIL pinned last — long-standing greens that are the
 #      most expensive to re-verify.
@@ -55,7 +52,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DRIVER_TAIL: list[str] = [
-    # already green in r1/r2 and the most expensive to re-verify
+    # long-standing greens, the most expensive to re-verify
     "pipeline_clean_corpus",
     "pipeline_contamination_check",
     "text_repetition",
@@ -71,7 +68,7 @@ def _row_is_green(row: dict) -> bool:
         return row.get("spark_rows") is not None
     # hash_match must be an explicit True: a partially-written row with
     # rows/schema recorded but no value-compare result is NOT a standing
-    # green and must stay at re-check priority (ADVICE r9).
+    # green and must stay at re-check priority.
     return (
         row.get("err") is None
         and row.get("rows_match") is True
@@ -113,7 +110,7 @@ def _ordered_names(verdicts: dict[str, tuple[int, bool]] | None = None) -> list[
     if verdicts is None:
         verdicts = _verdict_state()
     # A typo in the pinned tail must fail LOUDLY: silently dropping an
-    # unknown name would corrupt the rotation with no signal (ADVICE r5).
+    # unknown name would corrupt the ordering with no signal.
     missing = set(_DRIVER_TAIL) - set(REGISTRY)
     assert not missing, f"rotation names not in REGISTRY: {sorted(missing)}"
     assert len(set(_DRIVER_TAIL)) == len(_DRIVER_TAIL), "duplicate tail name"

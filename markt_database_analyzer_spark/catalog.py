@@ -107,9 +107,8 @@ def demo_guard(df: DataFrame, entry: str, twin: str, cap: int = DEMO_FORM_MAX_RO
     applied at the input instead of the sink). The probe counts
     ``limit(cap + 1)`` — it stops the scan as soon as cap+1 rows have
     surfaced, so the guard's cost is bounded by the CAP, not the input
-    size (ADVICE r10: a plain count() was a full-scan job inside the
-    bench's timed window). ``df`` is returned unchanged so call sites
-    stay single-expression."""
+    size (a plain count() would be a full-scan job). ``df`` is returned
+    unchanged so call sites stay single-expression."""
     if df.limit(cap + 1).count() > cap:
         raise ValueError(
             f"{entry} is an oracle-parity demo form (global total-order plan) "

@@ -652,10 +652,9 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤2 rows and the OR collapses to a residual filter on two tiny joined
     columns — never a filter over the full fact×nation² space. The only
     shuffle join is lineitem⋈orders; the nation roles ride broadcasts,
-    and since the r11 audit the customer/supplier legs carry NO hint
-    (sf-proportional frames): AQE broadcasts them at bench SF and
-    shuffles on custkey/suppkey at 100 TB — the trade the old forced
-    hint documented is now the planner's runtime decision."""
+    and the customer/supplier legs carry NO hint (sf-proportional
+    frames): AQE broadcasts them at bench SF and shuffles on
+    custkey/suppkey at 100 TB — the planner's runtime decision."""
     pair = ("NATION_3", "NATION_7")
     nation = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
     n1 = nation.select(
@@ -1452,15 +1451,14 @@ def pipeline_quality_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-language count — and the LM stage references g1 several more
     # times internally (train counts + score pass + threshold). Without
     # persistence Catalyst re-expands each stage per consumer (the
-    # 238-Exchange r13 before-plan re-ran the Gopher rules ~4x and the
-    # LM build twice). One MEMORY_AND_DISK pin per stage evaluates each
-    # exactly once — the minhash_neardup_pairs shingle-projection
-    # discipline; at 100 TB the same barrier is a parquet checkpoint.
-    # Cache lifetime (ADVICE r13): pins are released by the harness
-    # (tools/check_oracle.py unpersists all blocks between entries; tests
-    # clearCache)
-    # — a long-lived library session composing many entries should wrap
-    # calls in its own unpersist scope, as with MLlib model frames.
+    # Gopher rules would run ~4x and the LM build twice). One
+    # MEMORY_AND_DISK pin per stage evaluates each exactly once — the
+    # minhash_neardup_pairs shingle-projection discipline; at 100 TB the
+    # same barrier is a parquet checkpoint. Cache lifetime: pins are
+    # released by the harness (tools/check_oracle.py unpersists all
+    # blocks between entries; tests clearCache) — a long-lived library
+    # session composing many entries should wrap calls in its own
+    # unpersist scope, as with MLlib model frames.
     g1 = (
         docs.select(*base_cols, *tx.gopher_rules("text", min_words=20, max_words=100_000))
         .filter(

@@ -991,8 +991,8 @@ def similarity_srp_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^-r <= 1/n and expected random candidates are <= bands*n/2 —
     LINEAR in the corpus (``srp_sizing``). The fixed-width sibling
     (``similarity_srp_lsh_pairs``, 4-bit bands) admits ~6% of RANDOM
-    pairs per band and was measured quadratic at 10x (57x shuffle,
-    SCALE_EVIDENCE.md); it stays registered as the correctness pin for
+    pairs per band and was measured quadratic at 10x (57x shuffle); it
+    stays registered as the correctness pin for
     the banding algebra while this entry carries the scale contract.
     Same verify step (exact cosine >= 0.4), same md5-derived projection
     family — the sized geometry just takes a longer prefix of it. The
@@ -1001,7 +1001,7 @@ def similarity_srp_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the oracle SF the two MUST coincide, so the count is asserted
     there: a regenerated fixture with a different row count would
     otherwise surface as a confusing value diff instead of a loud
-    geometry error (ADVICE/VERDICT r5)."""
+    geometry error."""
     import os
 
     emb = _t(spark, sf_dir, "embeddings")

@@ -2039,23 +2039,22 @@ def eval_chrf_adjacent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripped string ships at most twice through ONE groupBy(pid)
     exchange — and the per-pair clipped matches for n = 1..3 come from
     two multiset Counters intersected inside a batch-vectorized scalar
-    pandas_udf (exact integers, one Arrow batch per invocation). The
-    r13 before-plan's gram staging exploded ~3x the corpus characters
-    into a (doc, n, gram) groupBy exchange plus a (pid, n, gram)
-    sort-merge join — strictly more shuffled bytes than the two-role
-    string union, and 22 Exchanges against 5 after. Totals still come
-    from per-doc LENGTHS (no second gram pass).
+    pandas_udf (exact integers, one Arrow batch per invocation). Staging
+    grams instead would explode ~3x the corpus characters into a (doc,
+    n, gram) groupBy exchange plus a (pid, n, gram) sort-merge join —
+    strictly more shuffled bytes than the two-role string union. Totals
+    still come from per-doc LENGTHS (no second gram pass).
 
-    r14 (guide §4.2, VERDICT item 7): the per-pair Python Counter loop
-    is replaced by a numpy kernel inside the same Arrow batch. A string
-    is its codepoint sequence (utf-32-le buffer — exact, surrogate-free
-    by construction), an n-gram is the base-2^21 composition of its n
-    codepoints (codepoints < 0x110000 < 2^21, so 3 grams fit int64 with
-    no collisions), and the clipped match count is
-    sum(min(counts)) over np.intersect1d of the two unique-gram sets —
-    the identical exact integers, fuzz-pinned against the Counter form
+    The clip counts are a numpy kernel inside the Arrow batch, not a
+    per-pair Python Counter loop. A string is its codepoint sequence
+    (utf-32-le buffer — exact, surrogate-free by construction), an
+    n-gram is the base-2^21 composition of its n codepoints
+    (codepoints < 0x110000 < 2^21, so 3 grams fit int64 with no
+    collisions), and the clipped match count is sum(min(counts)) over
+    np.intersect1d of the two unique-gram sets — the identical exact
+    integers, fuzz-pinned against the Counter form
     (test_r14_optimization), at vectorized speed (measured 5.6x on
-    2000-char synthetic docs; entry A/B in OPTIMIZATION_r14.md)."""
+    2000-char synthetic docs)."""
     import numpy as np
 
     from .datapipe.util import fan_out
@@ -2501,8 +2500,8 @@ def _pair_roles(d: DataFrame) -> DataFrame:
 def _batch_dp_udf(dp):
     """Batch-vectorized scalar pandas_udf wrapping a per-pair integer DP:
     one Arrow batch per invocation — NOT per-pair applyInPandas, which
-    the r12 bench measured spending ~3x the time building one pandas
-    frame per 2-row group. Created lazily (pandas_udf parses its return
+    was measured spending ~3x the time building one pandas frame per
+    2-row group. Created lazily (pandas_udf parses its return
     type against the active session, so module import must not build
     it)."""
     def run(c: pd.Series, r: pd.Series) -> pd.Series:
@@ -2540,9 +2539,9 @@ def eval_rouge_l_adjacent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     union (each doc ships at most twice) into ONE groupBy(pid) shuffle
     whose conditional-max agg is a plain JVM hash aggregate; the
     O(lc*lr) DP then runs in a batch-vectorized scalar pandas_udf (one
-    Arrow batch per invocation — NOT per-group applyInPandas, which the
-    r12 bench measured spending 3x the time building a pandas frame per
-    2-row group). No skew is possible by construction; at 100 TB the
+    Arrow batch per invocation — NOT per-group applyInPandas, which was
+    measured spending 3x the time building a pandas frame per 2-row
+    group). No skew is possible by construction; at 100 TB the
     cost is one linear shuffle of the token arrays plus CPU bounded by
     doc-length^2, the inherent cost of sequence-level DP."""
     from .datapipe.util import fan_out

@@ -564,7 +564,7 @@ FROM s ORDER BY doc_id
 )
 def multimodal_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode inside the Arrow mapInPandas plumbing — the WAV
-    twin of multimodal_decode_real (VERDICT r10 item 6): crafted RIFF/
+    twin of multimodal_decode_real: crafted RIFF/
     WAVE PCM payloads (samples = md5(doc_id) bytes as int16 LE, see
     datapipe.multimodal.crafted_audio_payloads) are decoded by the
     pure-numpy chunk-walking parser — fmt/data discovery, an interleaved
@@ -622,9 +622,9 @@ FROM s ORDER BY doc_id
 )
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-container decode inside the Arrow mapInPandas
-    plumbing — the LZW twin of multimodal_decode_real/_audio (VERDICT
-    r11 item 5; BMP/PPM/WAV are all uncompressed, this closes the
-    compressed class): crafted GIF87a payloads (pixel indices =
+    plumbing — the LZW twin of multimodal_decode_real/_audio (BMP/PPM/
+    WAV are all uncompressed, this closes the compressed class):
+    crafted GIF87a payloads (pixel indices =
     md5(doc_id..) bytes mod 4, see datapipe.multimodal.
     crafted_gif_payloads) are decoded by the pure-python/numpy LZW
     parser — variable-width LSB-first codes crossing the 3→4→5→6 bit
@@ -684,7 +684,7 @@ FROM s ORDER BY doc_id
 )
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG decode inside the Arrow mapInPandas plumbing — the
-    DEFLATE twin of multimodal_decode_gif (r12 verdict item 4: Huffman
+    DEFLATE twin of multimodal_decode_gif (Huffman
     coding + LZ77 sliding-window back-references are the compression
     class LZW's dictionary codes don't cover): crafted 8-bit-palette
     PNGs (pixel indices = md5(doc_id..) bytes mod 4, see
@@ -835,8 +835,8 @@ FROM w
     tags=("streaming", "window", "unified", "differential"),
 )
 def streaming_batch_parity_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unified batch/streaming differential in ONE self-checking entry
-    (VERDICT r11 item 8): the SAME helper — streaming.jobs.
+    """Unified batch/streaming differential in ONE self-checking entry:
+    the SAME helper — streaming.jobs.
     tumbling_counts, verbatim, not a twin — runs once over
     ``spark.read`` (withWatermark is a no-op in batch) and once over
     ``readStream`` through the memory-sink harness, and the entry
@@ -1400,12 +1400,12 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition), the boilerplate/looped-text gate that complements
     quality_score. Row-local array math, no shuffle.
 
-    r14: the final orderBy was a corpus-sized range sort whose sampling
-    pass re-ran the whole tokenize+ngram projection — for cosmetic order
-    only (the compare is order-insensitive). Dropped; the gram array is
-    staged in its own projection so the three consumers (total size,
-    distinct size) reference one evaluated column instead of re-running
-    the n-gram build per use (HOF chains sit outside codegen CSE)."""
+    No final orderBy: a corpus-sized range sort's sampling pass would
+    re-run the whole tokenize+ngram projection for cosmetic order only
+    (the compare is order-insensitive). The gram array is staged in its
+    own projection so the three consumers (total size, distinct size)
+    reference one evaluated column instead of re-running the n-gram
+    build per use (HOF chains sit outside codegen CSE)."""
     docs = fan_out(_t(spark, sf_dir, "documents"))
     grams = docs.select("doc_id", tx.ngrams_all("text", k=3).alias("grams"))
     total = F.size("grams")

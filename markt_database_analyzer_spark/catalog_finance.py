@@ -215,8 +215,10 @@ FROM scored ORDER BY custkey
 )
 def segment_rfm_customers_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation with quintile boundaries from exact percentile
-    cuts (``SCALE.md``'s promised replacement for the three global
-    ntile sorts in ``segment_rfm_customers``): each metric's 4 cut
+    cuts — the scale replacement for the three global ntile sorts in
+    ``segment_rfm_customers``, which each funnel the whole customer
+    table through one task; the cuts cost one prefix-sum pass per
+    metric instead. Each metric's 4 cut
     values come from the distributed prefix sum over its value domain,
     and scores are map-only comparisons against the broadcast literals.
     Ascending quintile = 1 + #cuts below; recency scores DESCENDING
@@ -1247,7 +1249,7 @@ def finance_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFr
     support-pruning argument), and the per-part counts join back onto
     it WITHOUT a broadcast hint — the part domain is sf-proportional
     (TPC-H part = sf x 200k; billions of rows at 100 TB), so forcing a
-    broadcast would OOM the driver at scale (VERDICT r10). The
+    broadcast would OOM the driver at scale. The
     support-pruned pair table is the small side; AQE picks the
     strategy. Popular-part skew lands in the combiner, not a shuffle
     hot key. At 100 TB this is the standard two-pass FP-growth
@@ -1357,7 +1359,7 @@ def finance_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits. Scale shape: the 3-way self-join stays co-partitioned on the
     order key (the first join's shuffle partitioning is reused for the
     second), pair/triple counts are map-side-combined hash aggs, and no
-    sf-proportional frame carries a broadcast hint (r11 audit rule) —
+    sf-proportional frame carries a broadcast hint —
     the frequent-pair and pruned-item joins are plain joins AQE sizes at
     runtime."""
     li = _t(spark, sf_dir, "lineitem").select(

@@ -95,8 +95,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     verts = edges_deg.select(F.col("u").alias("v")).distinct()
     n = verts.count()
     if n == 0:
-        # Degenerate empty graph (ADVICE r13): the old crossJoin plan
-        # degraded to an empty result; the literal 1/n below would raise
+        # Degenerate empty graph: the literal 1/n below would raise
         # ZeroDivisionError on the driver. Emit the empty output frame.
         return spark.createDataFrame(
             [], "vid bigint, kind string, key bigint, pr double"
@@ -124,7 +123,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Lineage cut per iteration (the HITS/BFS discipline): without it
         # iteration i's broadcast subtree replays iterations 1..i-1, an
-        # O(k^2) re-execution the 174-Exchange r13 before-plan showed.
+        # O(k^2) re-execution (174 Exchanges in the uncut plan).
         # The final iteration feeds TakeOrdered directly — no cut needed.
         if i < _PR_ITERS - 1:
             pr = pr.localCheckpoint(eager=True)
@@ -231,7 +230,7 @@ def paths_top_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _copurchase_pairs(li: DataFrame, weighted: bool = False) -> DataFrame:
-    """All (u < v) same-order part pairs in ONE aggregation pass (r14) —
+    """All (u < v) same-order part pairs in ONE aggregation pass —
     the shared edge build of every co-purchase graph entry. Per-order
     sorted item arrays (``collect_set`` partial-aggregates and dedups
     map-side when the consumer dedups anyway; ``collect_list`` when pair
@@ -316,7 +315,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins are equi-joins on node ids; the (deg, id) order is compared
     pairwise as a join residual, never materialized as a global rank.
 
-    Edge build (r14): the shared one-pass ``_copurchase_pairs`` — see
+    Edge build: the shared one-pass ``_copurchase_pairs`` — see
     its docstring for the equivalence argument vs the old self-join."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return triangle_stats(_copurchase_pairs(li))
@@ -552,7 +551,7 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     labels = ids.select("cid", F.col("cid").alias("lab")).localCheckpoint(eager=True)
     for _ in range(_GRID_CC_ROUNDS):
-        # r14: convergence early-exit, the kcore/CC discipline. Every
+        # Convergence early-exit, the kcore/CC discipline. Every
         # core cell has its (0,0)-offset self-edge in nbr, so the node's
         # own previous label rides through the min-aggregation as a
         # conditional max (one row per (src,dst) pair; dst == src is the
@@ -647,7 +646,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     once. Distances beyond the round budget report as unreached (-1) —
     the bounded-diameter contract, replayed identically by the oracle's
     unrolled CTE chain. Output: nodes per distance (+ the -1 row)."""
-    # Edge build: deliberately KEPT on the self-join form (r14). The
+    # Edge build: deliberately KEPT on the self-join form. The
     # shared one-pass _copurchase_pairs build is faster in isolation
     # (1.3-1.6 s vs 2.0 s for this edge checkpoint) and was adopted for
     # the other five co-purchase entries, but an interleaved same-session
@@ -656,7 +655,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode-built checkpointed edge RDD (row clustering/partitioning
     # interaction with the per-round broadcast-join + min-merge), and a
     # fan_out before the pin did not recover it. Measured loss → keep
-    # the measured-faster form here (the r13 revert-log discipline).
+    # the measured-faster form here.
     li = _t(spark, sf_dir, "lineitem")
     b = li.select("l_orderkey", "l_partkey")
     a = b.select(F.col("l_orderkey"), F.col("l_partkey").alias("pa"))

@@ -706,10 +706,8 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("bigint").alias("k")
     )
     p = F.col("c") / F.col("k").cast("double")
-    # each −p·ln p term quantizes to the bigint nano-grid BEFORE the sum
-    # (ADVICE r8): a raw double sum is summation-order sensitive, and
-    # this was the one r7 float reduction skipping the catalog's
-    # nano-grid discipline.
+    # each −p·ln p term quantizes to the bigint nano-grid BEFORE the sum:
+    # a raw double sum is summation-order sensitive.
     cls = (
         cell.join(ktot, ["c_nationkey", "bal_band"])
         .groupBy("c_nationkey", "bal_band")

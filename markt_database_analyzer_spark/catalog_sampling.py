@@ -925,7 +925,7 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     nd = F.col("n_chars").cast("decimal(38,0)")
-    # singleton-stratum guard (ADVICE r8): count-1 == 0 would make the
+    # singleton-stratum guard: count-1 == 0 would make the
     # sample variance NULL in Spark but inf/raise in DuckDB; both
     # engines pin sigma_h = 0 for n_h < 2 (the stratum then draws a
     # zero Neyman allocation, the natural reading: no measurable

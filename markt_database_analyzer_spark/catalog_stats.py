@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, demo_guard, register, _t
 from .datapipe import text as tx
-from .functions import davg, dsum, nsum
+from .functions import davg, dsum, nano_comoment, nsum
 from .catalog import register, _t
 from .catalog import SQL_DSUM, register, _t
 from .datapipe.sketches import (
@@ -1758,12 +1758,12 @@ def stats_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("qnorm"),
         )
-        # No global order on a corpus-sized output (VERDICT r13 item 3):
-        # the repartition(1) form funneled every event row through ONE
-        # task — a serial stage and an OOM risk at 100 TB; the range-sort
-        # orderBy it replaced sampled + reshuffled the full output. The
-        # order is cosmetic (driver compare sorts rows), so emit
-        # partition-locally sorted rows with NO exchange at all.
+        # No global order on a corpus-sized output: repartition(1) would
+        # funnel every event row through ONE task — a serial stage and an
+        # OOM risk at 100 TB — and a range-sort orderBy samples and
+        # reshuffles the full output. The order is cosmetic (driver
+        # compare sorts rows), so emit partition-locally sorted rows with
+        # NO exchange at all.
         .sortWithinPartitions("event_id")
     )
 
@@ -2639,8 +2639,8 @@ def stats_quantile_normalize_grid(spark: SparkSession, sf_dir: str) -> DataFrame
         / 1000000.0,
         9,
     )
-    # No global order on a corpus-sized output (VERDICT r13 item 3; same
-    # rationale as stats_quantile_normalize): partition-local sort, no
+    # No global order on a corpus-sized output (same rationale as
+    # stats_quantile_normalize): partition-local sort, no
     # single-partition funnel, no range exchange.
     return (
         rows.select("event_id", "event_type", "value", qnorm.alias("qnorm"))
@@ -5316,7 +5316,7 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # argmax on the RAW d/v (matching the oracle's ORDER BY d DESC, v)
         # BEFORE the 9-dp rounding projection, so two domain values whose
         # d round to the same figure cannot select different rows per
-        # engine (ADVICE r6).
+        # engine.
         ks.orderBy(F.desc("d"), "v")
         .limit(1)
         .select(
@@ -5644,7 +5644,7 @@ def eval_lift_gains_deciles_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT nano-ratios before the cut derivation so the domain groupBy
     is exact integer equality on both engines."""
     docs = _t(spark, sf_dir, "documents")
-    # zero-token guard (ADVICE r8): an empty-token document would make
+    # zero-token guard: an empty-token document would make
     # the stopword ratio 0/0 — NULL in Spark, raise/NaN in DuckDB — so
     # both programs exclude it identically before scoring.
     base = docs.select("lang", tx.tokens("text").alias("toks")).filter(
@@ -5803,16 +5803,12 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lead("x", k).over(w).alias(f"x{k}") for k in range(1, _LB_MAX_LAG + 1)],
     )
 
-    def qprod(a, b):
-        return F.sum(
-            F.round((a - F.col("xbar")) * (b - F.col("xbar")) * 1e9).cast("bigint")
-        )
-
+    xbar = F.col("xbar")
     s = led.agg(
         F.max("nn").alias("nn"),
-        qprod(F.col("x"), F.col("x")).alias("denom"),
+        nano_comoment(F.col("x"), F.col("x"), xbar).alias("denom"),
         *[
-            qprod(F.col("x"), F.col(f"x{k}")).alias(f"num{k}")
+            nano_comoment(F.col("x"), F.col(f"x{k}"), xbar).alias(f"num{k}")
             for k in range(1, _LB_MAX_LAG + 1)
         ],
     )
@@ -7226,7 +7222,7 @@ def stats_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         if r < _ESD_K:
             # Lineage cut per round: the recursion references rem three
             # times per round (moments, pick, next rem), so the uncut
-            # plan grows ~3^k subtrees (the 716-Exchange r13 before-plan)
+            # plan grows ~3^k subtrees (716 Exchanges uncut)
             # and re-executes them all. The day-grain frame is tiny;
             # one eager cut per round keeps every round one shallow pass.
             rem = rem.join(p.select("d"), "d", "left_anti").localCheckpoint(
@@ -8401,7 +8397,7 @@ ORDER BY user_id
 def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min heavy hitters driven through Structured Streaming — the
     CMS completion of the streaming-sketch pattern streaming_hll_distinct
-    established (r12 verdict item 8): cms_cells is stream-agnostic
+    established: cms_cells is stream-agnostic
     (explode + groupBy(d, b).count), so the SAME helper builds the batch
     (``sketch_countmin_freq``) and streaming counter tables, and the
     stream's state is BOUNDED BY CONSTRUCTION at d*w = 4x64 = 256

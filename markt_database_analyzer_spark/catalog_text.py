@@ -91,7 +91,7 @@ def fuzzy_block_candidates(
     non-null and '|'-free — it is a single word from p_name); output is
     (a_key, b_key, a_name, b_name, dist) with dist in [1, 3].
 
-    Block ranking is two-geared (ADVICE r4, VERDICT r5). Below
+    Block ranking is two-geared. Below
     ``prefix_sum_ranks_above`` rows it is a plain ``row_number()``
     window over (blk, p_size) — one shuffle, fastest at fixture scale.
     Above it, that window is the last single-task growth pattern in the
@@ -106,14 +106,13 @@ def fuzzy_block_candidates(
     globally-unique p_partkey. Both gears produce identical ranks
     (pinned by test).
 
-    r14: the gear gate is a LIMIT-capped count — LocalLimit short-
-    circuits every scan task at the threshold, so the probe's cost is
-    bounded by the threshold instead of the corpus (the old bare
-    count() was a full-table job). The ranked frame ``pr`` is eagerly
-    pinned: it feeds BOTH sides of the neighborhood self-join plus the
-    rank machinery, and without the pin each side re-ran the window (or
-    prefix-sum) rank pass over the corpus (r14 before-plan: two window
-    subtrees, no reuse)."""
+    The gear gate is a LIMIT-capped count — LocalLimit short-circuits
+    every scan task at the threshold, so the probe's cost is bounded by
+    the threshold instead of the corpus (a bare count() is a full-table
+    job). The ranked frame ``pr`` is eagerly pinned: it feeds BOTH sides
+    of the neighborhood self-join plus the rank machinery, and without
+    the pin each side re-runs the window (or prefix-sum) rank pass over
+    the corpus."""
     if p.limit(prefix_sum_ranks_above + 1).count() <= prefix_sum_ranks_above:
         w = Window.partitionBy("blk", "p_size").orderBy("p_partkey")
         pr = p.withColumn("rnk", F.row_number().over(w))
@@ -1680,7 +1679,7 @@ def search_pseudo_relevance_feedback(spark: SparkSession, sf_dir: str) -> DataFr
         # oracle (no wt factor) still matches bit-for-bit.
         # tf feeds both the per-doc score and its own df aggregation —
         # pin it so the toks scan + filter-join runs once per pass, not
-        # twice (plan-reuse fix from the 148-Exchange r13 before-plan).
+        # twice.
         from pyspark.storagelevel import StorageLevel
 
         tf = (

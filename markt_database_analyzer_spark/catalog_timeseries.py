@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, register, _t
-from .functions import davg, dsum, nsum
+from .functions import davg, dsum, nano_comoment, nsum
 from .catalog import register, _t
 from .catalog import SQL_DSUM, register, _t
 from .functions import davg
@@ -281,12 +281,12 @@ def w_ewma_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ),
         )
-        # No global order on a corpus-sized output (VERDICT r13 item 3):
-        # the r13 repartition(1) funneled every event row through one
-        # task — serial at 100 TB; the orderBy before it range-sampled
-        # (re-executing the window stage) and reshuffled everything for
-        # cosmetic order. The driver compare is order-insensitive, so a
-        # partition-local sort with NO exchange is the scale-safe form.
+        # No global order on a corpus-sized output: repartition(1) would
+        # funnel every event row through one task — serial at 100 TB — and
+        # an orderBy range-samples (re-executing the window stage) and
+        # reshuffles everything for cosmetic order. The driver compare is
+        # order-insensitive, so a partition-local sort with NO exchange is
+        # the scale-safe form.
         .sortWithinPartitions("event_type", "ts", "event_id")
     )
 
@@ -493,13 +493,11 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lead("x", k).over(w).alias(f"x{k}") for k in range(1, _ACF_MAX_LAG + 1)],
     )
 
-    def qprod(a, b):
-        return F.sum(F.round((a - F.col("xbar")) * (b - F.col("xbar")) * 1e9).cast("bigint"))
-
+    xbar = F.col("xbar")
     s = led.agg(
-        qprod(F.col("x"), F.col("x")).alias("denom"),
+        nano_comoment(F.col("x"), F.col("x"), xbar).alias("denom"),
         *[
-            qprod(F.col("x"), F.col(f"x{k}")).alias(f"num{k}")
+            nano_comoment(F.col("x"), F.col(f"x{k}"), xbar).alias(f"num{k}")
             for k in range(1, _ACF_MAX_LAG + 1)
         ],
     )
@@ -1231,15 +1229,14 @@ def ts_pacf_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lead("x", k).over(w).alias(f"x{k}") for k in (1, 2, 3)],
     )
 
-    def qprod(a, b):
-        return F.sum(
-            F.round((a - F.col("xbar")) * (b - F.col("xbar")) * 1e9).cast("bigint")
-        )
-
+    xbar = F.col("xbar")
     s = led.agg(
         F.any_value("n_days").alias("n_days"),
-        qprod(F.col("x"), F.col("x")).alias("denom"),
-        *[qprod(F.col("x"), F.col(f"x{k}")).alias(f"num{k}") for k in (1, 2, 3)],
+        nano_comoment(F.col("x"), F.col("x"), xbar).alias("denom"),
+        *[
+            nano_comoment(F.col("x"), F.col(f"x{k}"), xbar).alias(f"num{k}")
+            for k in (1, 2, 3)
+        ],
     )
     r = s.select(
         "n_days",

@@ -574,10 +574,10 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles. At 100 TB: one fact shuffle on partkey, a 1-row broadcast,
     and a sort of the few survivors.
 
-    The "computed ONCE" contract needs an explicit pin (r14): Catalyst
-    does NOT reuse the per-partkey aggregate across the threshold and
-    probe branches (the r14 before-plan shows the lineitem semi-join +
-    groupBy subtree twice, no ReusedExchange), so ``v`` is eagerly
+    The "computed ONCE" contract needs an explicit pin: Catalyst does
+    NOT reuse the per-partkey aggregate across the threshold and probe
+    branches (the unpinned plan holds the lineitem semi-join + groupBy
+    subtree twice, no ReusedExchange), so ``v`` is eagerly
     localCheckpoint'ed — one row per partkey, the cheapest frame in the
     query — and both branches read the materialized copy."""
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")

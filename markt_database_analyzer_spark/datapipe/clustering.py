@@ -36,7 +36,8 @@ For graphs with truly large diameters the published fix is large-star /
 small-star (Kiveris et al., "Connected Components in MapReduce and
 Beyond"), which converges in O(log² n) rounds; min-label propagation is
 preferred here because dedup graphs are shallow and each round is cheaper
-(no double edge materialization). SCALE.md documents the trade.
+(no double edge materialization); the trade is more rounds on a deep,
+chain-like graph, where large-star/small-star would win.
 """
 
 from __future__ import annotations
@@ -199,7 +200,7 @@ def triangle_stats(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
         F.when(x_first, F.col("y")).otherwise(F.col("x")).alias("b"),
         F.when(x_first, F.col("dy")).otherwise(F.col("dx")).alias("db"),
     ).localCheckpoint(eager=True)
-    # Triangle closure by ADJACENCY INTERSECTION (r14): instead of
+    # Triangle closure by ADJACENCY INTERSECTION: instead of
     # materializing every wedge as a row (sum of oriented out-degrees
     # squared — 41M rows at sf0.1) and shuffling all of them into a
     # (w1, w2) closure join, attach each oriented edge (a, b) its two

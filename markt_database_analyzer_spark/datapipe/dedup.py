@@ -318,14 +318,12 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
       (exact integers, bounded memory),
     - majority → signature bits, packed into one int64.
 
-    Why this shape wins (guide §4.2, VERDICT r13 item 8): the signature
-    is a per-document reduction of per-document tokens — no shuffle is
-    fundamentally required, but the old explode + 60-conditional-sum
-    hash aggregation paid one full exchange of partial vote buffers plus
-    a 60-buffer aggregate per doc (the measured JVM floor). The Arrow
-    kernel computes signatures map-side: ZERO exchanges between scan and
-    output (same-session A/B and plan diff in OPTIMIZATION_r14.md; the
-    explode+aggregate form is kept below as
+    Why this shape wins: the signature is a per-document reduction of
+    per-document tokens — no shuffle is fundamentally required, but an
+    explode + 60-conditional-sum hash aggregation pays one full exchange
+    of partial vote buffers plus a 60-buffer aggregate per doc. The
+    Arrow kernel computes signatures map-side: ZERO exchanges between
+    scan and output (the explode+aggregate form is kept below as
     ``simhash_signatures_agg`` — the exactness pin compares the two).
 
     ``id_col`` must be an integral column: the kernel emits ``doc`` as

@@ -309,7 +309,7 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Real audio decode: RIFF/WAVE PCM 16-bit in pure numpy — the audio twin of
-# the BMP/PPM raster path above (VERDICT r10 item 6). The chunk walker
+# the BMP/PPM raster path above. The chunk walker
 # handles the real container grammar (fmt /data discovery, interleaved
 # extra chunks, odd-size pad bytes), so a libsndfile/ffmpeg featurizer
 # plugs into the identical mapInPandas batch shape.
@@ -461,7 +461,7 @@ def crafted_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Real GIF decode: GIF87a + LZW in pure numpy/python — the COMPRESSED
-# container step (VERDICT r11 item 5). BMP/PPM/WAV above are uncompressed;
+# container step. BMP/PPM/WAV above are uncompressed;
 # GIF's LZW stream (variable-width codes, dictionary growth, clear/EOI,
 # sub-block framing) is the smallest real compressed decode, and the
 # chunk walker additionally skips extension blocks — so a libgif/PIL

@@ -282,11 +282,11 @@ def kmeans_model(
     every prior iteration in every consumer branch (MLlib keeps
     centroids driver-side for the same reason).
 
-    r14: the fan_out'ed corpus is pinned ONCE up front — previously
-    every Lloyd round (assignment pass + centroid re-estimation) and the
-    seed collect re-scanned the source and re-paid the fan_out exchange;
-    now all ``iters`` rounds and the returned assignment read the cached
-    frame (MEMORY_AND_DISK: spills, never OOMs). Cache lifetime follows
+    The fan_out'ed corpus is pinned ONCE up front, so the seed collect,
+    all ``iters`` Lloyd rounds (assignment pass + centroid
+    re-estimation) and the returned assignment read the cached frame
+    instead of re-scanning the source and re-paying the fan_out
+    exchange (MEMORY_AND_DISK: spills, never OOMs). Cache lifetime follows
     the same caller-owned contract as the returned assignment."""
     base = fan_out(corpus).persist(StorageLevel.MEMORY_AND_DISK)
     seed_rows = (
@@ -850,9 +850,9 @@ def kcenter_select(
     engines. At scale, persist the base projection once; each step is a
     single scan. The k sequential passes are inherent to Gonzalez (each
     pick depends on all previous picks); for large k pre-gate with a
-    uniform hash sample or switch to afk-mc²-style seeding — the full
-    cost model and trade-offs live in SCALE.md §"Round-12: k-center
-    pass-count posture at 100 TB"."""
+    uniform hash sample or switch to afk-mc²-style seeding, trading
+    Gonzalez's 2-approximation guarantee on the full corpus for
+    cheaper passes."""
     rows = df.select(
         F.col(id_col).alias("pid"), F.col(vec_col).alias("vec")
     )

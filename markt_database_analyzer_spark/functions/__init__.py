@@ -10,7 +10,7 @@ from .binning import (  # noqa: F401
     bin_right_closed_center,
     minute_of_day,
 )
-from .aggregates import davg, dsum, nsum  # noqa: F401
+from .aggregates import davg, dsum, nano_comoment, nsum  # noqa: F401
 from .scalars import (  # noqa: F401
     age_group,
     categorize_by_contains,

@@ -102,3 +102,12 @@ def nsum(col: Column | str) -> Column:
     """:func:`dsum`'s construction on the 1e-9 grid, for summed quantities
     of order 1/N where the 1e-6 grid would destroy the signal."""
     return exact_long_sum(_qlong(col, NANO)).cast("double") / F.lit(NANO)
+
+
+def nano_comoment(a: Column, b: Column, mean: Column) -> Column:
+    """Σ (a - mean)(b - mean) with each product quantized to a bigint on
+    the 1e-9 grid before the sum — the exact integer numerator of an
+    autocovariance (``a`` a series, ``b`` its lag, ``mean`` their shared
+    mean). Integer totals compose exactly, so ratios of two comoments are
+    identical across engines and partitionings."""
+    return F.sum(F.round((a - mean) * (b - mean) * NANO).cast("bigint"))

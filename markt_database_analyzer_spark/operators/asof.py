@@ -35,7 +35,7 @@ def _match_struct_type(right: DataFrame, value_col: str) -> T.StructType:
     earlier/later row's value instead, diverging from pandas
     ``merge_asof`` / DuckDB ASOF (which match on time and carry the NULL
     through). The struct is non-null for every right row regardless of
-    the value inside, so presence and value stay distinct (ADVICE r8)."""
+    the value inside, so presence and value stay distinct."""
     return T.StructType([T.StructField("v", right.schema[value_col].dataType)])
 
 

@@ -128,7 +128,7 @@ def grouped_value_counts_cum(
     extra plan nodes, constant-folded); above it they become a
     BROADCAST-JOINED frame — a plan-literal map over a high-cardinality
     group column would inflate the serialized plan linearly in #groups
-    and re-ship it with every task (VERDICT r4 item 5). Both gears
+    and re-ship it with every task. Both gears
     produce identical values (pinned by test).
 
     NULL contract: rows with a NULL group OR a NULL value are EXCLUDED —
@@ -279,7 +279,7 @@ def sql_cuts_ctes(
     the Spark side (:func:`bucket_by_cuts` over all-NULL cut literals)
     yields bucket 1. Callers must therefore wrap the fold as
     ``coalesce(list(c ORDER BY b), [])`` — then both engines agree on
-    bucket 1 for every surviving row (ADVICE r5)."""
+    bucket 1 for every surviving row."""
     b = int(n_buckets)
     agg = "count(*)" if weight_sql is None else f"sum({weight_sql})"
     notnull = f"({value_sql}) IS NOT NULL"

@@ -56,7 +56,7 @@ def lifetime_view_rate_curve(
     df = (
         # J1: profiles is the dim side but profile count scales with the
         # data (one row per ad) — no broadcast hint; AQE broadcasts when
-        # the runtime size allows and sort-merges otherwise (r11 audit)
+        # the runtime size allows and sort-merges otherwise
         clean_monitor(monitor)
         .join(prof, on=KEY, how="inner")
         .filter(not_null_or_empty("age"))  # P3 analyse.py:28

@@ -299,7 +299,7 @@ def test_mix_corpora_weights_and_provenance(spark):
 
 
 def test_blank_and_zero_token_edges_match_oracle(spark):
-    """ADVICE r1 edge pins, differentially: a blank/whitespace-only doc
+    """Edge pins, differentially: a blank/whitespace-only doc
     scores exactly 0.2 quality in BOTH engines (not NULL), and a
     zero-token doc packs with chunk_end == chunk_start (never -1) in BOTH
     engines — including the offset=0 first-of-shard case where Spark's

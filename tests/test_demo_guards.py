@@ -2,8 +2,8 @@
 standard-SQL replay: the un-partitioned ntile family + the fixed-band
 SRP LSH) must REFUSE oversized inputs with a pointer to their scale
 twin instead of silently building a single-partition sort — the
-``sources/plots.py`` MAX_PLOT_ROWS pattern applied at the input
-(VERDICT r9 item 2). Below the cap they are no-ops: same plan, same
+``sources/plots.py`` MAX_PLOT_ROWS pattern applied at the input.
+Below the cap they are no-ops: same plan, same
 oracle hashes.
 """
 
@@ -35,7 +35,7 @@ def test_demo_guard_noop_below_cap(spark):
 
 def test_demo_guard_refuses_above_cap_and_names_twin(spark):
     # the probe is limit(cap+1).count() so the exact input size is
-    # never computed (guard cost bounded by the cap, ADVICE r10) —
+    # never computed (guard cost bounded by the cap) —
     # the message names the cap and the twin, not the input size
     df = spark.range(11)
     with pytest.raises(ValueError, match=r"some_entry.*over 10.*some_twin"):

@@ -286,8 +286,8 @@ def test_equal_token_shards_balance(spark):
 
 @pytest.fixture(scope="module")
 def null_vals(spark):
-    """Multiset with NULL values AND a NULL group — the r5 NULL-contract
-    fixture the contract change shipped without (VERDICT r5 item 2)."""
+    """Multiset with NULL values AND a NULL group — the NULL-contract
+    fixture."""
     data = [
         ("a", 1.0), ("a", None), ("a", 3.0), ("a", 3.0),
         ("b", 2.0), ("b", None), ("b", 5.0),
@@ -344,7 +344,7 @@ def test_sql_cuts_ctes_bitwise_matches_spark_on_nulls(spark, null_vals, tmp_path
 
 
 def test_degenerate_all_null_matches_coalesced_oracle(spark, tmp_path):
-    """Empty-cuts degenerate case (ADVICE r5): on an all-NULL value
+    """Empty-cuts degenerate case: on an all-NULL value
     column the cuts CTE emits zero rows; with the callers' contractual
     coalesce(list(...), []) both engines assign bucket 1 to every row."""
     import duckdb
@@ -389,7 +389,7 @@ def test_grouped_cum_broadcast_gear_matches_literal_gear(spark):
 def test_grouped_cum_high_cardinality_plan_stays_bounded(spark):
     """50k distinct groups: offsets must ride a broadcast frame, not a
     create_map plan literal — the serialized plan would otherwise grow
-    linearly in #groups and re-ship with every task (VERDICT r4 item 5).
+    linearly in #groups and re-ship with every task.
     Values spot-checked against plain Python."""
     n_groups = 50_000
     rows = [(f"k{i:05d}", float(j)) for i in range(n_groups) for j in (1.0, 2.0)]

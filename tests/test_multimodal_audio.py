@@ -1,4 +1,4 @@
-"""The real audio decode path (VERDICT r10 item 6): a pure-numpy RIFF/
+"""The real audio decode path: a pure-numpy RIFF/
 WAVE PCM-16 decoder inside the same Arrow mapInPandas plumbing as the
 raster twin. Pins:
 

@@ -1,4 +1,4 @@
-"""The real GIF/LZW decode path (VERDICT r11 item 5): the first
+"""The real GIF/LZW decode path: the first
 COMPRESSED container in the decode family (BMP/PPM/WAV are
 uncompressed) — a pure-python/numpy GIF87a + LZW decoder inside the
 same Arrow mapInPandas plumbing. Pins:
@@ -284,14 +284,14 @@ def test_gif_animation_roundtrip_property(nf, px, delays):
 
 
 def test_lzw_encode_empty_raster_is_clear_eoi_only():
-    # ADVICE r12: encoder used to IndexError on a zero-pixel raster; a
-    # legal stream for it is clear + EOI and decodes to the empty list.
+    # a zero-pixel raster must encode, not IndexError: a legal stream
+    # for it is clear + EOI and decodes to the empty list.
     stream = mm._lzw_encode_gif(np.array([], dtype=np.int64), 2)
     assert mm._lzw_decode_gif(stream, 2) == []
 
 
 def test_parse_gif_rejects_missing_subblock_terminator():
-    # ADVICE r12: _parse_gif now matches _parse_gif_frames' strictness —
+    # _parse_gif matches _parse_gif_frames' strictness —
     # a data sub-block chain that runs off the buffer without the 0x00
     # terminator is malformed, not accepted.
     g = mm.encode_gif(_idx(64).reshape(8, 8))

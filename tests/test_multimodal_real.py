@@ -1,4 +1,4 @@
-"""The real raster decode path (VERDICT r9 item 3): a pure-numpy BMP /
+"""The real raster decode path: a pure-numpy BMP /
 PPM decoder inside the existing Arrow mapInPandas plumbing, replacing
 the backend="real" NotImplementedError gate. Pins:
 

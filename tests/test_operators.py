@@ -163,7 +163,7 @@ def test_asof_join_last_picks_latest_at_or_before(spark):
 
 
 def test_asof_join_carries_null_values_like_merge_asof(spark):
-    """ADVICE r8: a right row that MATCHES on time but carries a NULL
+    """A right row that MATCHES on time but carries a NULL
     value must surface that NULL (pandas merge_asof / DuckDB ASOF
     semantics), not be skipped in favor of an earlier/later non-null
     row. Pinned for both directions."""

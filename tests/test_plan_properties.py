@@ -127,10 +127,10 @@ def test_no_cartesian_or_nested_loop_join(spark, name):
         # 1-row clipped-count pivot + 1-row length totals crossJoined
         # into the single corpus-BLEU output row
         "eval_bleu_adjacent_pairs",
-        # r11: the chrF twin of the BLEU row above — 3-row clip pivot
+        # the chrF twin of the BLEU row above — 3-row clip pivot
         # crossJoined into the 1-row length-total frame
         "eval_chrf_adjacent_pairs",
-        # r11: the k=3 nest of the basket row above — the same 1-row
+        # the k=3 nest of the basket row above — the same 1-row
         # n_orders scalar broadcast; the cubic join itself is the
         # co-partitioned order-key equi-join
         "finance_basket_triples",
@@ -337,10 +337,10 @@ def test_no_cartesian_or_nested_loop_join(spark, name):
         # r7: each ESD round broadcasts its 1-row moments onto the
         # remaining day frame — the scalar idiom, five times
         "stats_esd_outliers",
-        # r12: HLL stitches the 1-row exact-distinct audit aggregate
+        # HLL stitches the 1-row exact-distinct audit aggregate
         # onto the 1-row sketch estimate — the funnel scalar idiom
         "sketch_hll_cardinality",
-        # r12: Bloom stitches the 1-row bit-count audit onto the 1-row
+        # Bloom stitches the 1-row bit-count audit onto the 1-row
         # probe aggregate — the same scalar idiom (the probe join
         # itself is a broadcast equi-join on pos)
         "sketch_bloom_membership",
@@ -734,7 +734,7 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
     "name", ["multimodal_decode_real", "multimodal_decode_audio"]
 )
 def test_decode_entries_are_map_only(spark, name):
-    """r11: both real-codec entries are two chained Arrow map stages —
+    """Both real-codec entries are two chained Arrow map stages —
     a join or aggregate appearing here would mean the fixture builder or
     featurizer grew a shuffle it does not need."""
     plan = _plan(spark, name)

@@ -1,4 +1,4 @@
-"""Differential pin for the ADVICE-r9 logrank latent edge, on a
+"""Differential pin for the logrank latent edge, on a
 CRAFTED input that actually exercises it (the sf testdata has no churn-
 day stratum with zero group-1 subjects, which is why the entry was
 green while the latent stood):

@@ -129,9 +129,9 @@ def test_rouge_l_repeated_tokens_not_greedy(spark, tmp_path):
 
 
 def test_kappa_and_alpha_survive_zero_token_docs(spark, tmp_path):
-    # ADVICE r11: a whitespace-only doc used to throw DIVIDE_BY_ZERO in
-    # Spark's ANSI mode while the DuckDB oracle silently mapped it to
-    # r2=0; both engines must now agree on ratio 0 for token-less docs
+    # a whitespace-only doc must not throw DIVIDE_BY_ZERO in Spark's
+    # ANSI mode while the DuckDB oracle maps it to r2=0; both engines
+    # must agree on ratio 0 for token-less docs
     _write_docs(tmp_path, ["the cat sat", "   ", "no stopwords here xyz", "\t"])
     for entry in ("eval_cohens_kappa", "eval_krippendorff_alpha"):
         got, want = _run_both(spark, entry, str(tmp_path), ["documents"])

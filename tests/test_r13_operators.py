@@ -88,9 +88,9 @@ def test_kmv_set_ops_merge_is_valid_kmv_sketch(spark):
 
 
 def test_fan_out_memoizes_partition_probe(spark):
-    """r12 verdict item 7: fan_out's getNumPartitions probe forces a
-    physical-planning pass; it is now memoized per (session, semantic
-    plan hash) with no behavior change."""
+    """fan_out's getNumPartitions probe forces a physical-planning pass;
+    it is memoized per (session, semantic plan hash) with no behavior
+    change."""
     from markt_database_analyzer_spark.datapipe import util as u
 
     u._NPART_CACHE.clear()

@@ -102,7 +102,7 @@ def test_kcore_early_exit_noop_rounds_identical(spark):
     from markt_database_analyzer_spark.catalog import REGISTRY
     from tests.conftest import SF_DIR
 
-    if not os.path.isdir(SF_DIR):  # ADVICE r13: skip off-layout machines
+    if not os.path.isdir(SF_DIR):  # skip machines without the fixture layout
         pytest.skip(f"fixture dir {SF_DIR} not present")
     out = REGISTRY["graph_kcore"].fn(spark, SF_DIR).collect()
     rounds = [(r["round"], r["n_removed"], r["n_remaining"]) for r in out]

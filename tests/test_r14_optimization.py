@@ -149,7 +149,7 @@ def test_triangle_edge_build_one_pass_equals_self_join(spark):
 
 
 def test_no_single_partition_funnel_on_corpus_outputs(spark):
-    # VERDICT r13 item 3: the corpus-sized outputs must not funnel the
+    # the corpus-sized outputs must not funnel the
     # full row set through one task (repartition(1)) nor pay a global
     # range sort for cosmetic order. Pin on the OPTIMIZED LOGICAL plan:
     # no Repartition(1), and every user Sort is partition-local

@@ -1,4 +1,4 @@
-"""Differential pins for the four ADVICE-r8 latent edge cases, on
+"""Differential pins for four latent edge cases, on
 CRAFTED inputs that actually exercise the edges (the sf testdata never
 does, which is why these entries were green while the latents stood):
 

@@ -233,7 +233,7 @@ def test_observe_metrics_on_batch_pipeline(spark):
 
 def test_session_counts_match_batch_session_window(spark):
     # the streaming merging-session operator must equal the batch
-    # session_window over the same static input (r11: §2.11 widening)
+    # session_window over the same static input (§2.11 widening)
     from markt_database_analyzer_spark.streaming import session_counts
 
     stream = session_counts(read_events_stream(spark, SF_DIR))

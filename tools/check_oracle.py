@@ -9,18 +9,11 @@ over the same parquet tables, then compares:
   compared exactly AND with np.isclose reporting (so a hash-style
   mismatch is distinguishable from a genuine semantic difference)
 
-Usage: python tools/check_oracle.py [sf_dir] [--json out.json] [query ...]
-
-With ``--json``, also writes a machine-readable artifact (one record per
-entry: name, rows, match, secs, problems) — the LOCALCHECK_r{N}.json
-the round narrative commits as the post-consolidation verification
-record.
+Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import json
-import math
 import sys
 import time
 
@@ -98,15 +91,6 @@ def compare(name: str, got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_path = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        if i + 1 >= len(argv):
-            print("usage: check_oracle.py [--json OUT.json] [SF_DIR] [ENTRY ...]",
-                  file=sys.stderr)
-            return 2
-        json_path = argv[i + 1]
-        argv = argv[:i] + argv[i + 2:]
     sf_dir = argv[0] if argv and argv[0].startswith("/") else DEFAULT_SF
     only = [a for a in argv if not a.startswith("/")]
 
@@ -129,9 +113,9 @@ def main() -> int:
         # Release blocks between entries: entries that persist/localCheckpoint
         # shared subtrees leave blocks in the block manager; over 400
         # entries in ONE JVM that accumulates into storage-memory
-        # pressure that skews late-entry `secs` (ADVICE r10). The
-        # getPersistentRDDs sweep uses a private py4j surface absent
-        # under Spark Connect, so fall back to clearCache alone.
+        # pressure that skews late-entry `secs`. The getPersistentRDDs
+        # sweep uses a private py4j surface absent under Spark Connect,
+        # so fall back to clearCache alone.
         try:
             for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
                 rdd.unpersist(False)
@@ -140,11 +124,9 @@ def main() -> int:
         spark.catalog.clearCache()
 
     failures = 0
-    records: dict[str, dict] = {}
     for name in names:
         if name in sf_pinned and "sf0.01" not in sf_dir:
             print(f"SKIP  {name}: oracle rendered for sf0.01 (tag oracle-sf0.01)")
-            records[name] = {"match": None, "skip": "oracle-sf0.01"}
             continue
         release_blocks()  # untimed: before t0, so cleanup cost never lands in `secs`
         t0 = time.time()
@@ -153,29 +135,19 @@ def main() -> int:
         except Exception as exc:
             print(f"FAIL  {name}: spark error: {exc}")
             failures += 1
-            records[name] = {"match": False, "err": f"spark: {exc}"[:300]}
             continue
         if name not in oracles:
             print(f"ROWS  {name}: {len(got)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            records[name] = {
-                "match": None, "rows": len(got), "no_oracle": True,
-                "secs": round(time.time() - t0, 2),
-            }
             continue
         try:
             want = con.execute(oracles[name]).fetchdf()
         except Exception as exc:
             print(f"FAIL  {name}: duckdb error: {exc}")
             failures += 1
-            records[name] = {"match": False, "err": f"duckdb: {exc}"[:300]}
             continue
         problems = compare(name, got, want)
         hard = [p for p in problems if "within 1e-12" not in p]
         secs = round(time.time() - t0, 2)
-        records[name] = {
-            "match": not hard, "rows": len(got), "secs": secs,
-            **({"problems": problems[:5]} if problems else {}),
-        }
         if hard:
             failures += 1
             print(f"FAIL  {name}: " + " | ".join(problems) + f" [{secs}s]")
@@ -184,23 +156,6 @@ def main() -> int:
         else:
             print(f"MATCH {name}: {len(got)} rows [{secs}s]")
     print(f"\n{len(names)-failures}/{len(names)} ok")
-    if json_path:
-        n_match = sum(1 for r in records.values() if r.get("match") is True)
-        n_rows_only = sum(1 for r in records.values() if r.get("no_oracle"))
-        with open(json_path, "w") as f:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "total": len(records),
-                    "match": n_match,
-                    "rows_only": n_rows_only,
-                    "fail": failures,
-                    "entries": records,
-                },
-                f,
-                indent=1,
-            )
-        print(f"wrote {json_path}: {n_match} match / {n_rows_only} rows-only / {failures} fail")
     return 1 if failures else 0
 
 

@@ -8,10 +8,13 @@ the hashes land:
 
 - every computed column is aliased identically on both sides;
 - float aggregates go through ``dsum``/``davg`` (integer micro-unit
-  quantization → bit-stable under partitioning AND across engines; see
-  functions.aggregates), or ``nsum`` for per-row masses of order 1/N
-  (nano-unit grid), and the oracle uses the matching
-  SQL_DSUM/SQL_DAVG/SQL_NSUM templates below;
+  quantization → bit-stable under partitioning AND across engines), or
+  ``nsum`` for per-row masses of order 1/N (nano-unit grid), and the
+  oracle uses the matching SQL_DSUM/SQL_DAVG/SQL_NSUM templates; every
+  other value put on the grid goes through ``qlong`` with its SQL twin
+  ``sql_qlong``. All of these live in ``functions.aggregates``, the one
+  module that spells the grid (``tests/test_quantize_grid.py`` fails on a
+  hand-written round-to-grid cast anywhere else);
 - orderings that feed ``min_by``/``row_number`` are made total with
   tiebreak columns down to the selected value, so both engines pick the
   same row even where the synthetic keys collide ((l_orderkey,
@@ -39,10 +42,9 @@ from .functions import (
     bin_right_closed_center,
     categorize_by_contains,
     clip_at_zero,
-    davg,
-    dsum,
     hhmm_label,
 )
+from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum
 from .operators import (
     centered_rolling_mean,
     dedup_keep_first,
@@ -54,15 +56,6 @@ from .operators import (
 )
 from .sources import read_table
 
-# DuckDB rendering of dsum()/davg()/nsum() — keep in lockstep with
-# functions.aggregates (integer micro-/nano-unit quantization; see that
-# module's docstring for why).
-SQL_DSUM = "(CAST(SUM(CAST(round(({x}) * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0)"
-SQL_DAVG = (
-    "(CAST(SUM(CAST(round(({x}) * 1000000.0) AS HUGEINT)) AS DOUBLE)"
-    " / COUNT({x}) / 1000000.0)"
-)
-SQL_NSUM = "(CAST(SUM(CAST(round(({x}) * 1000000000.0) AS HUGEINT)) AS DOUBLE) / 1000000000.0)"
 # DuckDB rendering of datapipe.similarity.cosine (rounded to 9 dp).
 SQL_COS = "round(list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[]), 9)"
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import SQL_COS, SQL_DAVG, SQL_DSUM, demo_guard, register, _t
+from .catalog import SQL_COS, _t, demo_guard, register
 from .catalog_ext import _sql_minhash_lsh
 from .datapipe import clustering as cl
 from .datapipe import dedup as dd
@@ -22,7 +22,7 @@ from .datapipe import sampling as smp
 from .datapipe import similarity as sim
 from .datapipe import text as tx
 from .datapipe.util import fan_out
-from .functions import davg, dsum
+from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum
 
 # --------------------------------------------------------------------------
 # Duplicate-cluster resolution (connected components over LSH pairs)

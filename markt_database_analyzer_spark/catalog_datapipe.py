@@ -9,27 +9,21 @@ entry docstrings.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-from .catalog import SQL_COS, SQL_DAVG, SQL_DSUM, register, _t
-from .datapipe import text as tx
-from .functions import davg, dsum
-from .catalog import SQL_DSUM, register, _t
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
-from .datapipe.hashing import hash60, sql_hash60
-import tempfile
-from .functions import davg
-from .datapipe import clustering as cl
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
-from .datapipe import dedup as dd
-from .catalog import register, _t
-from .datapipe import similarity as sim
-from .datapipe.util import fan_out
-from .catalog import SQL_DAVG, _t, register
+
+from .catalog import SQL_COS, _t, register
 from .catalog_text import _FUZZY_SN_WINDOW, fuzzy_block_candidates
+from .datapipe import clustering as cl
+from .datapipe import dedup as dd
+from .datapipe import similarity as sim
+from .datapipe import text as tx
+from .datapipe.hashing import hash60, sql_hash60
+from .datapipe.util import fan_out
+from .functions.aggregates import NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 
 
 def _messy_url_spark() -> F.Column:
@@ -616,17 +610,17 @@ cent AS (
 ),
 cnorm AS (
   SELECT clabel,
-         CAST(sum(CAST(round(cd * cd * 1e9) AS BIGINT)) AS BIGINT) AS cq
+         CAST(sum({sql_qlong('cd * cd', NANO)}) AS BIGINT) AS cq
   FROM cent GROUP BY clabel
 ),
 vnorm AS (
   SELECT vec_id,
-         CAST(sum(CAST(round(xd * xd * 1e9) AS BIGINT)) AS BIGINT) AS xq
+         CAST(sum({sql_qlong('xd * xd', NANO)}) AS BIGINT) AS xq
   FROM x GROUP BY vec_id
 ),
 dots AS (
   SELECT x.vec_id, x.label, c.clabel,
-         CAST(sum(CAST(round(x.xd * c.cd * 1e9) AS BIGINT)) AS BIGINT) AS dq
+         CAST(sum({sql_qlong('x.xd * c.cd', NANO)}) AS BIGINT) AS dq
   FROM x JOIN cent c USING (dim)
   GROUP BY x.vec_id, x.label, c.clabel
 ),
@@ -681,16 +675,16 @@ def embeddings_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFr
         davg("xd").alias("cd")
     )
     cnorm = cent.groupBy("clabel").agg(
-        F.sum(F.round(F.col("cd") * F.col("cd") * 1e9).cast("bigint")).alias("cq")
+        F.sum(qlong(F.col("cd") * F.col("cd"), NANO)).alias("cq")
     )
     vnorm = x.groupBy("vec_id").agg(
-        F.sum(F.round(F.col("xd") * F.col("xd") * 1e9).cast("bigint")).alias("xq")
+        F.sum(qlong(F.col("xd") * F.col("xd"), NANO)).alias("xq")
     )
     dots = (
         x.join(F.broadcast(cent), "dim")
         .groupBy("vec_id", "label", "clabel")
         .agg(
-            F.sum(F.round(F.col("xd") * F.col("cd") * 1e9).cast("bigint")).alias("dq")
+            F.sum(qlong(F.col("xd") * F.col("cd"), NANO)).alias("dq")
         )
     )
     dist = (
@@ -824,7 +818,7 @@ WITH p AS (
   SELECT d.doc_id, e.label,
          CAST({ntok} AS INT) AS n_tokens,
          CAST(list_sum(list_transform(e.embedding,
-              v -> CAST(round(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) * 1e9) AS BIGINT)))
+              v -> {sql_qlong('CAST(v AS DOUBLE) * CAST(v AS DOUBLE)', NANO)}))
             AS BIGINT) AS norm_q
   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
   WHERE {ntok} >= 20
@@ -875,9 +869,7 @@ def pipeline_multimodal_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(
                 F.transform(
                     "embedding",
-                    lambda v: F.round(
-                        v.cast("double") * v.cast("double") * 1e9
-                    ).cast("bigint"),
+                    lambda v: qlong(v.cast("double") * v.cast("double"), NANO),
                 ),
                 F.lit(0).cast("bigint"),
                 lambda acc, t: acc + t,
@@ -1034,7 +1026,7 @@ dims AS (
 ),
 cent_dims AS (
   SELECT cell, pos,
-         (CAST(SUM(CAST(round(v * 1000000.0) AS HUGEINT)) AS DOUBLE) / COUNT(v) / 1000000.0) AS cv
+         {SQL_DAVG.format(x='v')} AS cv
   FROM dims GROUP BY cell, pos
 ),
 cents AS (SELECT cell, list(cv ORDER BY pos) AS centroid FROM cent_dims GROUP BY cell),
@@ -1361,8 +1353,7 @@ q AS (SELECT vec_id AS query_id, sv AS qsv FROM sub WHERE vec_id < 5),
 scored AS (
   SELECT q.query_id, d.vec_id AS neighbor_id,
          CAST(list_sum(list_transform(q.qsv, qv ->
-           CAST(round(1000000000.0 * list_max(list_transform(d.sv,
-                  dv -> round(list_inner_product(qv, dv), 9)))) AS BIGINT)
+           {sql_qlong('list_max(list_transform(d.sv, dv -> round(list_inner_product(qv, dv), 9)))', NANO)}
          )) AS BIGINT) AS score_q
   FROM sub d CROSS JOIN q WHERE d.vec_id != q.query_id
 )
@@ -1421,12 +1412,10 @@ def similarity_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> Data
     score = F.aggregate(
         F.transform(
             F.col("qsv"),
-            lambda qv: F.round(
-                F.lit(1000000000.0)
-                * F.array_max(
-                    F.transform(F.col("dsv"), lambda dv: F.round(dot(qv, dv), 9))
-                )
-            ).cast("bigint"),
+            lambda qv: qlong(
+                F.array_max(F.transform(F.col("dsv"), lambda dv: F.round(dot(qv, dv), 9))),
+                NANO,
+            ),
         ),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
@@ -1982,7 +1971,7 @@ d AS (
 ),
 agg AS (
   SELECT CAST(count(*) AS BIGINT) AS dim,
-         (CAST(SUM(CAST(round(round(dm * dm, 9) * 1000000000.0) AS HUGEINT))
+         (CAST(SUM({sql_qlong('round(dm * dm, 9)', NANO, 'HUGEINT')})
                AS DOUBLE) / 1000000000.0) AS mmd2
   FROM d
 )
@@ -2034,9 +2023,7 @@ def eval_embedding_mmd_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("dim"),
         (
             F.sum(
-                F.round(F.round(F.col("dm") * F.col("dm"), 9) * F.lit(1e9)).cast(
-                    "decimal(38,0)"
-                )
+                qlong(F.round(F.col("dm") * F.col("dm"), 9), NANO, "decimal(38,0)")
             ).cast("double")
             / F.lit(1e9)
         ).alias("mmd2"),

@@ -9,25 +9,15 @@ entry docstrings.
 
 from __future__ import annotations
 
+import pandas as pd  # noqa: F401  (resolves postponed UDF type hints)
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import davg, dsum
-from .catalog import SQL_DSUM, register, _t
-from .functions import dsum
-from .operators.scd import scd2_versions
-from pyspark.sql import DataFrame, SparkSession
+
+from .catalog import _t, register
 from .datapipe.hashing import hash60, sql_hash60
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from .catalog import register, _t
-import pandas as pd  # noqa: F401  (resolves postponed UDF type hints)
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
-from .datapipe import dedup as dd
+from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 from .operators.asof import asof_join_last
-from .datapipe.hashing import sql_hash60
-from .catalog import SQL_DAVG, _t, register
-from .functions import davg
+from .operators.scd import scd2_versions
 
 
 @register(
@@ -422,7 +412,7 @@ def assoc_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udf_grouped_agg_gini",
-    oracle="""
+    oracle=f"""
 WITH ranked AS (
   SELECT o_orderpriority AS priority, o_totalprice AS x,
          row_number() OVER (PARTITION BY o_orderpriority
@@ -432,8 +422,8 @@ WITH ranked AS (
 ),
 sums AS (
   SELECT priority, CAST(min(n) AS BIGINT) AS n,
-         SUM(CAST(round((2 * rn - n - 1) * x * 1000000.0) AS HUGEINT)) AS num,
-         SUM(CAST(round(x * 1000000.0) AS HUGEINT)) AS den
+         SUM({sql_qlong('(2 * rn - n - 1) * x', cast='HUGEINT')}) AS num,
+         SUM({sql_qlong('x', cast='HUGEINT')}) AS den
   FROM ranked GROUP BY priority
 )
 SELECT priority, n,
@@ -665,8 +655,7 @@ def intervals_open_orders_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH rev AS (
   SELECT l_partkey AS partkey,
-         SUM(CAST(round(l_extendedprice * (1 - l_discount) * 1000000.0)
-                  AS HUGEINT)) AS r_int
+         SUM({sql_qlong('l_extendedprice * (1 - l_discount)', cast='HUGEINT')}) AS r_int
   FROM lineitem GROUP BY 1
 ),
 tot AS (SELECT CAST(sum(r_int) AS DOUBLE) AS t FROM rev),
@@ -702,9 +691,7 @@ def parts_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("partkey"),
         (
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1_000_000.0
-            ).cast("decimal(38,0)")
+            qlong(F.col("l_extendedprice") * (1 - F.col("l_discount")), cast="decimal(38,0)")
         ).alias("micro"),
     )
     rev = li.groupBy("partkey").agg(F.sum("micro").alias("r_int"))
@@ -805,12 +792,12 @@ def sql_lateral_topk_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.sql(_LATERAL_SQL.format(cust="customer_lat_src", orders="orders_lat_src"))
 
 
-_GBA_SQL = """
+_GBA_SQL = f"""
 SELECT l_returnflag, l_linestatus,
        CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(round(l_quantity * 1000000.0) AS DECIMAL(38,0))) AS DOUBLE)
+       CAST(SUM({sql_qlong('l_quantity', cast='DECIMAL(38,0)')}) AS DOUBLE)
          / 1000000.0 AS sum_qty
-FROM {t}
+FROM {{t}}
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY ALL
 ORDER BY ALL
@@ -923,21 +910,19 @@ def pivot_dynamic_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day")
 
 
-_PIPE_SQL = """
-FROM {t}
+_PIPE_SQL = f"""
+FROM {{t}}
 |> WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-|> EXTEND CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0)
-               AS DECIMAL(38,0)) AS revq
+|> EXTEND {sql_qlong('l_extendedprice * (1.0 - l_discount)', cast='DECIMAL(38,0)')} AS revq
 |> AGGREGATE CAST(count(*) AS BIGINT) AS n_rows,
              CAST(SUM(revq) AS DOUBLE) / 1000000.0 AS revenue
    GROUP BY l_returnflag, l_linestatus
 |> ORDER BY l_returnflag, l_linestatus
 """
-_PIPE_ORACLE = """
+_PIPE_ORACLE = f"""
 SELECT l_returnflag, l_linestatus,
        CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0)
-                     AS HUGEINT)) AS DOUBLE) / 1000000.0 AS revenue
+       {SQL_DSUM.format(x='l_extendedprice * (1.0 - l_discount)')} AS revenue
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus

@@ -10,28 +10,20 @@ entry docstrings.
 from __future__ import annotations
 
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import demo_guard, register, _t
+
+from .catalog import _t, demo_guard, register
+from .catalog_stats import _CAL_BINS, _LR_STOP, _sql_naive_bayes, classify_naive_bayes_langid
+from .catalog_text import _BM25_B, _BM25_K1, _BM25_TERMS, _SQL_TOKENS, _tokens
 from .datapipe import text as tx
-from .functions import dsum
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import davg, dsum
+from .functions.aggregates import NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
-    grouped_value_counts_cum,
-    grouped_values_at_ranks,
     sql_cuts_ctes,
     value_counts_cum,
-    values_at_ranks,
 )
-from .catalog import SQL_DSUM, register, _t
-from .operators.equidepth import value_counts_cum
-from pyspark.sql import DataFrame, SparkSession
-from .catalog_stats import _CAL_BINS, _LR_STOP, _sql_naive_bayes, classify_naive_bayes_langid
-from .catalog_text import _BM25_B, _BM25_K1, _BM25_TERMS, _SQL_TOKENS, _tokens
 
 
 _ATTR_WINDOW_US = 7 * 86400 * 1_000_000
@@ -365,7 +357,7 @@ binned AS (
 per_bin AS (
   SELECT CAST(bin AS BIGINT) AS bin,
          CAST(count(*) AS BIGINT) AS n,
-         round((CAST(SUM(CAST(round(conf * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         round((CAST(SUM({sql_qlong('conf', cast='HUGEINT')}) AS DOUBLE)
                   / count(*)) / 1000000.0, 9) AS mean_conf,
          round(sum(y) / CAST(count(*) AS DOUBLE), 9) AS frac_pos
   FROM binned GROUP BY 1
@@ -373,8 +365,9 @@ per_bin AS (
 btot AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM per_bin)
 SELECT bin, n, mean_conf, frac_pos,
        round(abs(mean_conf - frac_pos), 9) AS gap,
-       (CAST(SUM(CAST(round(n * round(abs(mean_conf - frac_pos), 9) * 1000000.0)
-                      AS HUGEINT)) OVER () AS DOUBLE) / 1000000.0) / min(nt) OVER () AS ece
+       (CAST(SUM({sql_qlong(
+           'n * round(abs(mean_conf - frac_pos), 9)', cast='HUGEINT',
+       )}) OVER () AS DOUBLE) / 1000000.0) / min(nt) OVER () AS ece
 FROM per_bin CROSS JOIN btot ORDER BY bin
 """
 @register(
@@ -408,7 +401,7 @@ def eval_calibration_bins_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.round(
             (
-                F.sum(F.round(F.col("conf") * 1000000.0).cast("long")).cast("double")
+                F.sum(qlong("conf")).cast("double")
                 / F.count(F.lit(1))
             )
             / 1000000.0,
@@ -423,7 +416,7 @@ def eval_calibration_bins_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "ece",
             (
-                F.sum(F.round(F.col("n") * F.col("gap") * 1000000.0).cast("long"))
+                F.sum(qlong(F.col("n") * F.col("gap")))
                 .over(wall)
                 .cast("double")
                 / 1000000.0
@@ -434,7 +427,7 @@ def eval_calibration_bins_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NDCG_SQL = """
+_NDCG_SQL = f"""
 WITH ocnt AS (
   SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders FROM orders GROUP BY 1
 ),
@@ -458,12 +451,12 @@ ideal AS (
 ),
 dcg AS (
   SELECT c_nationkey,
-         CAST(sum(CAST(round(1000000000.0 * (pow(2.0, rel) - 1) / log2(rnk + 1)) AS BIGINT)) AS BIGINT) AS dcg_q
+         CAST(sum({sql_qlong('(pow(2.0, rel) - 1) / log2(rnk + 1)', NANO)}) AS BIGINT) AS dcg_q
   FROM pred WHERE rnk <= 10 GROUP BY 1
 ),
 idcg AS (
   SELECT c_nationkey,
-         CAST(sum(CAST(round(1000000000.0 * (pow(2.0, rel) - 1) / log2(rnk + 1)) AS BIGINT)) AS BIGINT) AS idcg_q
+         CAST(sum({sql_qlong('(pow(2.0, rel) - 1) / log2(rnk + 1)', NANO)}) AS BIGINT) AS idcg_q
   FROM ideal WHERE rnk <= 10 GROUP BY 1
 )
 SELECT n_name AS nation, CAST(10 AS BIGINT) AS k,
@@ -527,11 +520,7 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rnk") <= 10)
             .withColumn(
                 "term",
-                F.round(
-                    F.lit(1000000000.0)
-                    * (F.pow(F.lit(2.0), F.col("rel")) - 1)
-                    / F.log2(F.col("rnk") + 1)
-                ).cast("bigint"),
+                qlong((F.pow(F.lit(2.0), F.col("rel")) - 1) / F.log2(F.col("rnk") + 1), NANO),
             )
             .groupBy("c_nationkey")
             .agg(F.sum("term").cast("bigint").alias("g"))
@@ -593,7 +582,7 @@ segs AS (
 SELECT score, tp, fp,
        round(tp / CAST(tp + fp AS DOUBLE), 9) AS precision,
        round(tp / CAST(pos AS DOUBLE), 9) AS recall,
-       round(CAST(sum(CAST(round(1000000000.0 * ((dtp * tp) / CAST(pos * (tp + fp) AS DOUBLE))) AS BIGINT)) OVER () AS DOUBLE)
+       round(CAST(sum({sql_qlong('((dtp * tp) / CAST(pos * (tp + fp) AS DOUBLE))', NANO)}) OVER () AS DOUBLE)
              / 1000000000.0, 9) AS average_precision
 FROM segs ORDER BY score DESC
 """
@@ -638,13 +627,10 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tp_here").over(wall).cast("bigint").alias("pos"),
     )
     dtp = F.col("tp") - F.coalesce(F.lag("tp").over(word), F.lit(0))
-    term = F.round(
-        F.lit(1000000000.0)
-        * (
-            (dtp * F.col("tp"))
-            / (F.col("pos") * (F.col("tp") + F.col("fp"))).cast("double")
-        )
-    ).cast("bigint")
+    term = qlong(
+        (dtp * F.col("tp")) / (F.col("pos") * (F.col("tp") + F.col("fp"))).cast("double"),
+        NANO,
+    )
     return (
         cum.withColumn("term", term)
         .select(
@@ -663,7 +649,7 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MRR_SQL = """
+_MRR_SQL = f"""
 WITH ocnt AS (
   SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders FROM orders GROUP BY 1
 ),
@@ -687,7 +673,7 @@ per_q AS (
   SELECT c_nationkey,
          CAST(coalesce(first_rel, 0) AS BIGINT) AS first_relevant_rank,
          CASE WHEN first_rel IS NULL THEN CAST(0 AS BIGINT)
-              ELSE CAST(round(1000000000.0 / first_rel) AS BIGINT) END AS rr_q
+              ELSE {sql_qlong('1.0 / first_rel', NANO)} END AS rr_q
   FROM q LEFT JOIN hit USING (c_nationkey)
 )
 SELECT n_name AS nation, first_relevant_rank,
@@ -749,7 +735,7 @@ def eval_mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.when(F.col("first_rel").isNull(), F.lit(0).cast("bigint"))
         .otherwise(
-            F.round(F.lit(1000000000.0) / F.col("first_rel")).cast("bigint")
+            qlong(F.lit(1.0) / F.col("first_rel"), NANO)
         )
         .alias("rr_q"),
     )
@@ -974,8 +960,7 @@ WITH scored AS (
 agg AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(label) AS BIGINT) AS pos,
-         CAST(sum(CAST(round(1000000000.0 * (score - label) * (score - label))
-                       AS BIGINT)) AS BIGINT) AS bq
+         CAST(sum({sql_qlong('(score - label) * (score - label)', NANO)}) AS BIGINT) AS bq
   FROM scored
 )
 SELECT n, pos,
@@ -1014,11 +999,7 @@ def eval_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
         F.round(F.size(stop) / F.size("toks").cast("double"), 9).alias("score"),
     )
-    term = F.round(
-        F.lit(1000000000.0)
-        * (F.col("score") - F.col("label"))
-        * (F.col("score") - F.col("label"))
-    ).cast("bigint")
+    term = qlong((F.col("score") - F.col("label")) * (F.col("score") - F.col("label")), NANO)
     agg = scored.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("label").cast("bigint").alias("pos"),
@@ -1105,8 +1086,9 @@ SELECT CAST({_RBO_DEPTH} AS BIGINT) AS depth,
        round({_RBO_P}, 6) AS p,
        max(CASE WHEN d = {_RBO_DEPTH} THEN ov END) AS overlap_at_depth,
        round((1.0 - {_RBO_P})
-             * CAST(sum(CAST(round(w * (CAST(ov AS DOUBLE) / d) * 1e9)
-                             AS HUGEINT)) AS DOUBLE) / 1e9, 9) AS rbo
+             * CAST(sum({sql_qlong(
+                 'w * (CAST(ov AS DOUBLE) / d)', NANO, 'HUGEINT',
+             )}) AS DOUBLE) / 1e9, 9) AS rbo
 FROM agreement
 """
 @register(
@@ -1209,9 +1191,7 @@ def eval_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "w")
         .agg(F.count("m").cast("bigint").alias("ov"))
     )
-    addend = F.round(
-        F.col("w") * (F.col("ov").cast("double") / F.col("d")) * 1e9
-    ).cast("decimal(38,0)")
+    addend = qlong(F.col("w") * (F.col("ov").cast("double") / F.col("d")), NANO, "decimal(38,0)")
     return agreement.agg(
         F.lit(_RBO_DEPTH).cast("bigint").alias("depth"),
         F.round(F.lit(_RBO_P), 6).alias("p"),
@@ -1346,9 +1326,9 @@ def _sql_ece() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         CAST(round(len(list_filter({toks}, t -> t IN ('the','a','of','and','is')))
-                      / CAST(len({toks}) AS DOUBLE) * 1e9)
-              AS BIGINT) AS s9
+         {sql_qlong(
+             f"len(list_filter({toks}, t -> t IN ('the','a','of','and','is'))) / CAST(len({toks}) AS DOUBLE)", NANO,
+         )} AS s9
   FROM documents
   WHERE len({toks}) > 0
 ),
@@ -1399,8 +1379,7 @@ def eval_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFra
     stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double") * 1e9, 0)
-        .cast("bigint")
+        qlong(F.size(stop) / F.size("toks").cast("double"), NANO)
         .alias("s9"),
     )
     b = scored.groupBy(
@@ -1551,9 +1530,9 @@ WITH rated AS (
           + CASE WHEN n_chars >= 800 THEN 1 ELSE 0 END) AS rb
   FROM (
     SELECT n_chars,
-           CAST(round(len(list_filter({toks}, t -> t IN ('the','a','of','and','is')))
-                        / CAST(len({toks}) AS DOUBLE) * 1e9)
-                AS BIGINT) AS s9
+           {sql_qlong(
+               f"len(list_filter({toks}, t -> t IN ('the','a','of','and','is'))) / CAST(len({toks}) AS DOUBLE)", NANO,
+           )} AS s9
     FROM documents WHERE len({toks}) > 0
   )
 ),
@@ -1610,8 +1589,7 @@ def eval_cohens_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("toks") > 0)
     stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     s9 = (
-        F.round(F.size(stop) / F.size("toks").cast("double") * 1e9, 0)
-        .cast("bigint")
+        qlong(F.size(stop) / F.size("toks").cast("double"), NANO)
     )
     grade = lambda c, cuts: sum(  # noqa: E731
         (F.when(c >= F.lit(t), 1).otherwise(0) for t in cuts), F.lit(0)

@@ -11,11 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import dsum
-from .catalog import SQL_DSUM, register, _t
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import register, _t
+
+from .catalog import _t, register
+from .functions.aggregates import NANO, SQL_DSUM, dsum, qlong, sql_qlong
 
 
 @register(
@@ -192,7 +190,7 @@ def growth_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NANO_SQL = "CAST(round(({x}) * 1000000000.0) AS BIGINT)"
+_NANO_SQL = sql_qlong("{x}", NANO)
 @register(
     "growth_rolling_engagement",
     oracle="""
@@ -356,8 +354,7 @@ def embeddings_pca_power_component(spark: SparkSession, sf_dir: str) -> DataFram
             (
                 F.expr(
                     "aggregate(zip_with(embedding, vec,"
-                    " (x, w) -> CAST(round(CAST(x AS DOUBLE) * w * 1000000000.0)"
-                    " AS BIGINT)), 0L, (a, t) -> a + t)"
+                    f" (x, w) -> {sql_qlong('CAST(x AS DOUBLE) * w', NANO)}), 0L, (a, t) -> a + t)"
                 ).cast("double")
                 / F.lit(1e9)
             ).alias("s"),
@@ -371,9 +368,7 @@ def embeddings_pca_power_component(spark: SparkSession, sf_dir: str) -> DataFram
             .agg(
                 (
                     F.sum(
-                        F.round(
-                            F.col("x").cast("double") * F.col("s") * F.lit(1e9)
-                        ).cast("decimal(38,0)")
+                        qlong(F.col("x").cast("double") * F.col("s"), NANO, "decimal(38,0)")
                     ).cast("double")
                     / F.lit(1e9)
                 ).alias("p")
@@ -384,7 +379,7 @@ def embeddings_pca_power_component(spark: SparkSession, sf_dir: str) -> DataFram
         nrm = p.agg(
             F.sqrt(
                 F.sum(
-                    F.round(F.col("p") * F.col("p") * F.lit(1e9)).cast("decimal(38,0)")
+                    qlong(F.col("p") * F.col("p"), NANO, "decimal(38,0)")
                 ).cast("double")
                 / F.lit(1e9)
             ).alias("nrm")
@@ -793,7 +788,7 @@ j AS (
 ),
 w AS (
   SELECT pid, tid, event_type,
-         CAST(round(1e9 / count(*) OVER (PARTITION BY pid)) AS BIGINT) AS credit9
+         {sql_qlong('1.0 / count(*) OVER (PARTITION BY pid)', NANO)} AS credit9
   FROM j
 )
 SELECT event_type,
@@ -854,9 +849,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pid",
         "tid",
         "event_type",
-        F.round(F.lit(1e9) / F.count(F.lit(1)).over(wcnt)).cast("bigint").alias(
-            "credit9"
-        ),
+        qlong(F.lit(1.0) / F.count(F.lit(1)).over(wcnt), NANO).alias("credit9"),
     )
     return (
         w.groupBy("event_type")
@@ -1030,8 +1023,7 @@ m AS (
 ),
 t AS (
   SELECT d, x,
-         CAST(round((x - m.xbar - {_PH_DELTA_FRAC} * m.xbar) * 1000000000.0)
-              AS HUGEINT) AS term_u,
+         {sql_qlong(f'(x - m.xbar - {_PH_DELTA_FRAC} * m.xbar)', NANO, 'HUGEINT')} AS term_u,
          m.xbar
   FROM daily CROSS JOIN m
 ),
@@ -1087,11 +1079,7 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d",
         "x",
         "xbar",
-        F.round(
-            (F.col("x") - F.col("xbar") - F.lit(_PH_DELTA_FRAC) * F.col("xbar"))
-            * F.lit(1e9)
-        )
-        .cast("decimal(38,0)")
+        qlong(F.col("x") - F.col("xbar") - F.lit(_PH_DELTA_FRAC) * F.col("xbar"), NANO, "decimal(38,0)")
         .alias("term_u"),
     )
     wday = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)

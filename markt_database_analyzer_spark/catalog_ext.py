@@ -19,13 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import SQL_COS, register, _t
+from .catalog import SQL_COS, _t, register
 from .datapipe import dedup as dd
 from .datapipe import multimodal as mm
+from .datapipe import sampling as sp
 from .datapipe import similarity as sim
 from .datapipe import text as tx
 from .datapipe.hashing import hash60, sql_hash60
 from .datapipe.util import fan_out
+from .functions.aggregates import SQL_DAVG
 
 # --------------------------------------------------------------------------
 # Deduplication
@@ -252,7 +254,7 @@ dims AS (
 ),
 cent_dims AS (
   SELECT cell, pos,
-         (CAST(SUM(CAST(round(v * 1000000.0) AS HUGEINT)) AS DOUBLE) / COUNT(v) / 1000000.0) AS cv
+         {SQL_DAVG.format(x='v')} AS cv
   FROM dims GROUP BY cell, pos
 ),
 cents AS (SELECT cell, list(cv ORDER BY pos) AS centroid FROM cent_dims GROUP BY cell),
@@ -1201,8 +1203,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Deterministic sampling / splits / corpus mixing (datapipe.sampling)
 # ---------------------------------------------------------------------------
-
-from .datapipe import sampling as sp  # noqa: E402
 
 
 @register(

@@ -11,29 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DSUM, demo_guard, register, _t
-from .functions import dsum
-from .catalog import register, _t
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import davg, dsum
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    grouped_value_counts_cum,
-    grouped_values_at_ranks,
-    sql_cuts_ctes,
-    value_counts_cum,
-    values_at_ranks,
-)
-from .catalog import SQL_DAVG, register, _t
-from .functions import davg
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, _t, register
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    sql_cuts_ctes,
-)
+
+from .catalog import _t, demo_guard, register
+from .functions.aggregates import NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
+from .operators.equidepth import bucket_by_cuts, equi_depth_cut_points, sql_cuts_ctes
 
 
 @register(
@@ -126,9 +107,9 @@ WITH li AS (
 )
 SELECT l_partkey, month,
        CAST(count(*) AS BIGINT) AS n_trades,
-       round(CAST(SUM(CAST(round(price * qty * 1000000.0) AS HUGEINT)) AS DOUBLE)
-               / CAST(SUM(CAST(round(qty * 1000000.0) AS HUGEINT)) AS DOUBLE), 9) AS vwap,
-       round(CAST(SUM(CAST(round(price * 1000000.0) AS HUGEINT)) AS DOUBLE)
+       round(CAST(SUM({sql_qlong('price * qty', cast='HUGEINT')}) AS DOUBLE)
+               / CAST(SUM({sql_qlong('qty', cast='HUGEINT')}) AS DOUBLE), 9) AS vwap,
+       round(CAST(SUM({sql_qlong('price', cast='HUGEINT')}) AS DOUBLE)
                / count(*) / 1000000.0, 9) AS twap,
        arg_min(price, seq) AS open,
        arg_max(price, seq) AS close,
@@ -162,9 +143,9 @@ def finance_vwap_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").alias("qty"),
         seq.alias("seq"),
     )
-    pq = F.sum(F.round(F.col("price") * F.col("qty") * 1000000.0).cast("long"))
-    qs = F.sum(F.round(F.col("qty") * 1000000.0).cast("long"))
-    ps = F.sum(F.round(F.col("price") * 1000000.0).cast("long"))
+    pq = F.sum(qlong(F.col("price") * F.col("qty")))
+    qs = F.sum(qlong("qty"))
+    ps = F.sum(qlong("price"))
     return (
         base.groupBy("l_partkey", "month")
         .agg(
@@ -438,7 +419,7 @@ led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
 r AS (
-  SELECT CAST(round(ln(CAST(x AS DOUBLE) / xp) * 1e9) AS BIGINT) AS rq
+  SELECT {sql_qlong('ln(CAST(x AS DOUBLE) / xp)', NANO)} AS rq
   FROM led WHERE xp IS NOT NULL
 ),
 s AS (
@@ -497,8 +478,7 @@ def finance_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     r = led.filter(F.col("xp").isNotNull()).select(
-        F.round(F.log(F.col("x").cast("double") / F.col("xp")) * 1e9)
-        .cast("bigint")
+        qlong(F.log(F.col("x").cast("double") / F.col("xp")), NANO)
         .alias("rq")
     )
     rd = F.col("rq").cast("decimal(38,0)")
@@ -542,7 +522,7 @@ led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
 r AS (
-  SELECT d, CAST(round(ln(CAST(x AS DOUBLE) / xp) * 1e9) AS BIGINT) AS rq
+  SELECT d, {sql_qlong('ln(CAST(x AS DOUBLE) / xp)', NANO)} AS rq
   FROM led WHERE xp IS NOT NULL
 ),
 ranked AS (
@@ -596,8 +576,7 @@ def finance_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     r = led.filter(F.col("xp").isNotNull()).select(
         "d",
-        F.round(F.log(F.col("x").cast("double") / F.col("xp")) * 1e9)
-        .cast("bigint")
+        qlong(F.log(F.col("x").cast("double") / F.col("xp")), NANO)
         .alias("rq"),
     )
     wr = Window.orderBy("rq", "d")
@@ -633,7 +612,7 @@ def finance_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # micro-quantized mean of a ~1e-2-magnitude log return: nano grid
 _SQL_DAVG9 = (
-    "(CAST(SUM(CAST(round(({x}) * 1000000000.0) AS HUGEINT)) AS DOUBLE)"
+    f"(CAST(SUM({sql_qlong('{x}', NANO, 'HUGEINT')}) AS DOUBLE)"
     " / COUNT({x}) / 1000000000.0)"
 )
 def _sql_beta_capm() -> str:
@@ -669,10 +648,8 @@ mu AS (
 ),
 s AS (
   SELECT j.event_type, max(mu.n) AS n, max(mu.mi) AS mi, max(mu.mm) AS mm,
-         CAST(sum(CAST(round((j.ri - mu.mi) * (j.rmkt - mu.mm) * 1e9)
-                       AS BIGINT)) AS BIGINT) AS s_im,
-         CAST(sum(CAST(round((j.rmkt - mu.mm) * (j.rmkt - mu.mm) * 1e9)
-                       AS BIGINT)) AS BIGINT) AS s_mm
+         CAST(sum({sql_qlong('(j.ri - mu.mi) * (j.rmkt - mu.mm)', NANO)}) AS BIGINT) AS s_im,
+         CAST(sum({sql_qlong('(j.rmkt - mu.mm) * (j.rmkt - mu.mm)', NANO)}) AS BIGINT) AS s_mm
   FROM j JOIN mu ON j.event_type = mu.event_type
   GROUP BY 1
 )
@@ -729,7 +706,7 @@ def finance_beta_capm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def davg9(c):
         return (
-            F.sum(F.round(c * 1e9).cast("decimal(38,0)")).cast("double")
+            F.sum(qlong(c, NANO, "decimal(38,0)")).cast("double")
             / F.count(c)
             / 1e9
         )
@@ -747,14 +724,12 @@ def finance_beta_capm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("mi").alias("mi"),
             F.max("mm").alias("mm"),
             F.sum(
-                F.round((F.col("ri") - F.col("mi")) * (F.col("rmkt") - F.col("mm")) * 1e9)
-                .cast("bigint")
+                qlong((F.col("ri") - F.col("mi")) * (F.col("rmkt") - F.col("mm")), NANO)
             )
             .cast("bigint")
             .alias("s_im"),
             F.sum(
-                F.round((F.col("rmkt") - F.col("mm")) * (F.col("rmkt") - F.col("mm")) * 1e9)
-                .cast("bigint")
+                qlong((F.col("rmkt") - F.col("mm")) * (F.col("rmkt") - F.col("mm")), NANO)
             )
             .cast("bigint")
             .alias("s_mm"),
@@ -1070,7 +1045,7 @@ def finance_evt_pot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benford first-digit audit — round 10
 # --------------------------------------------------------------------------
 
-_SQL_BENFORD = """
+_SQL_BENFORD = f"""
 WITH px AS (
   SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1)
               AS INT) AS d
@@ -1097,9 +1072,9 @@ t AS (
   FROM s
 )
 SELECT digit, n, share, benford_expected, abs_dev,
-       round((CAST(SUM(CAST(round(abs_dev * 1000000000.0) AS HUGEINT))
+       round((CAST(SUM({sql_qlong('abs_dev', NANO, 'HUGEINT')})
                    OVER () AS DOUBLE) / 1000000000.0) / 9.0, 9) AS mad,
-       round(CAST(SUM(CAST(round(chi2_term * 1000000.0) AS HUGEINT))
+       round(CAST(SUM({sql_qlong('chi2_term', cast='HUGEINT')})
                   OVER () AS DOUBLE) / 1000000.0, 6) AS chi2
 FROM t ORDER BY digit
 """
@@ -1178,7 +1153,7 @@ def finance_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 (
                     F.sum(
-                        F.round(F.col("abs_dev") * 1000000000.0).cast("long")
+                        qlong("abs_dev", NANO)
                     ).over(wall).cast("double")
                     / 1000000000.0
                 )
@@ -1186,7 +1161,7 @@ def finance_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("mad"),
             F.round(
-                F.sum(F.round(F.col("chi2_term") * 1000000.0).cast("long"))
+                F.sum(qlong("chi2_term"))
                 .over(wall)
                 .cast("double")
                 / 1000000.0,

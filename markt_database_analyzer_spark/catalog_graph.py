@@ -11,15 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import register, _t
-from pyspark.sql import DataFrame, SparkSession, Window
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
+
+from .catalog import _t, register
 from .datapipe.clustering import triangle_stats
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, register, _t
-from .catalog import SQL_DAVG, SQL_NSUM, _t, register
-from .functions import nsum
+from .functions.aggregates import NANO, SQL_NSUM, nsum, qlong, sql_qlong
 
 
 _PR_ITERS, _PR_D = 5, 0.85
@@ -446,7 +441,7 @@ _GRID_MINPTS = 3
 _GRID_CC_ROUNDS = 20  # >= measured cell-graph diameter (16 at sf0.1) + margin
 def _sql_grid_density() -> str:
     cell = (
-        "CAST(floor(CAST(round(CAST(embedding[{i}] AS DOUBLE) * 1000000.0) AS BIGINT)"
+        f"CAST(floor({sql_qlong('CAST(embedding[{i}] AS DOUBLE)')}"
         f" / CAST({_GRID_EPS_MICRO} AS DOUBLE)) AS BIGINT)"
     )
     # AS MATERIALIZED: without it DuckDB inlines each single-reference
@@ -514,9 +509,7 @@ def cluster_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
 
     def cell(i: int) -> F.Column:
-        micro = F.round(F.col("embedding").getItem(i).cast("double") * 1000000.0).cast(
-            "long"
-        )
+        micro = qlong(F.col("embedding").getItem(i).cast("double"))
         return F.floor(micro / F.lit(float(_GRID_EPS_MICRO))).cast("bigint")
 
     pts = emb.select("vec_id", cell(0).alias("cx"), cell(1).alias("cy"))
@@ -829,8 +822,7 @@ adjc AS (
 wedge AS (
   SELECT a1.n AS u, a2.n AS v,
          CAST(count(*) AS BIGINT) AS common,
-         CAST(sum(CAST(round(1e9 / ln(CAST(a1.adeg AS DOUBLE))) AS HUGEINT))
-              AS BIGINT) AS aaq
+         CAST(sum({sql_qlong('1.0 / ln(CAST(a1.adeg AS DOUBLE))', NANO, 'HUGEINT')}) AS BIGINT) AS aaq
   FROM adjc a1 JOIN adjc a2 ON a1.a = a2.a AND a1.n < a2.n
   GROUP BY a1.n, a2.n
   HAVING count(*) >= {_LP_MIN_COMMON}
@@ -892,9 +884,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a", "n", F.col("deg").alias("adeg"))
         .localCheckpoint(eager=True)
     )
-    aaq_term = F.round(F.lit(1e9) / F.log(F.col("a1.adeg").cast("double"))).cast(
-        "decimal(38,0)"
-    )
+    aaq_term = qlong(F.lit(1.0) / F.log(F.col("a1.adeg").cast("double")), NANO, "decimal(38,0)")
     wedge = (
         adjc.alias("a1")
         .join(adjc.alias("a2"), "a")

@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import dsum
+from .catalog import _t, register
+from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 
 
 @register(
@@ -122,9 +122,9 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "running_total_per_customer",
-    oracle="""
+    oracle=f"""
 SELECT o_custkey, o_orderkey,
-       CAST(sum(CAST(round(o_totalprice * 1000000.0) AS HUGEINT))
+       CAST(sum({sql_qlong('o_totalprice', cast='HUGEINT')})
             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
          / 1000000.0 AS running_total
@@ -143,7 +143,7 @@ def running_total_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    q = F.round(F.col("o_totalprice").cast("double") * 1_000_000.0).cast("decimal(38,0)")
+    q = qlong(F.col("o_totalprice").cast("double"), cast="decimal(38,0)")
     return (
         orders.select(
             "o_custkey",
@@ -589,10 +589,11 @@ def sql_api_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "orders"):
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
-        """
+        f"""
         SELECT o.o_orderpriority AS priority,
-               CAST(SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 1000000.0)
-                        AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0 AS revenue,
+               CAST(SUM({sql_qlong(
+                   'l.l_extendedprice * (1 - l.l_discount)', cast='DECIMAL(38,0)',
+               )}) AS DOUBLE) / 1000000.0 AS revenue,
                count(*) AS n_items
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY o.o_orderpriority ORDER BY priority
@@ -638,11 +639,11 @@ def grouping_sets_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame
     orders = _t(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_gs")
     return spark.sql(
-        """
+        f"""
         SELECT COALESCE(o_orderstatus, 'ALL') AS status,
                COALESCE(o_orderpriority, 'ALL') AS priority,
                count(*) AS n,
-               CAST(SUM(CAST(round(o_totalprice * 1000000.0) AS DECIMAL(38,0))) AS DOUBLE)
+               CAST(SUM({sql_qlong('o_totalprice', cast='DECIMAL(38,0)')}) AS DOUBLE)
                  / 1000000.0 AS total
         FROM orders_gs
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
@@ -709,10 +710,10 @@ def udf_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w_time_range_rolling",
-    oracle="""
+    oracle=f"""
 SELECT user_id, event_id,
        count(*) OVER w AS n_1h,
-       CAST(sum(CAST(round(value * 1000000.0) AS HUGEINT)) OVER w AS DOUBLE)
+       CAST(sum({sql_qlong('value', cast='HUGEINT')}) OVER w AS DOUBLE)
          / 1000000.0 AS sum_1h
 FROM (SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events)
 WINDOW w AS (PARTITION BY user_id ORDER BY us
@@ -737,7 +738,7 @@ def w_time_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("us")
         .rangeBetween(-3_599_999_999, Window.currentRow)
     )
-    q = F.round(F.col("value").cast("double") * 1_000_000.0).cast("decimal(38,0)")
+    q = qlong(F.col("value").cast("double"), cast="decimal(38,0)")
     return ev.select(
         "user_id",
         "event_id",
@@ -748,7 +749,7 @@ def w_time_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fullouter_balance_by_nation",
-    oracle="""
+    oracle=f"""
 SELECT coalesce(c.nk, s.nk) AS nationkey,
        coalesce(c.n_customers, 0) AS n_customers,
        coalesce(s.n_suppliers, 0) AS n_suppliers,
@@ -756,12 +757,12 @@ SELECT coalesce(c.nk, s.nk) AS nationkey,
        s.s_bal AS supplier_acctbal
 FROM (
   SELECT c_nationkey AS nk, count(*) AS n_customers,
-         (CAST(SUM(CAST(round((c_acctbal) * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0) AS c_bal
+         {SQL_DSUM.format(x='c_acctbal')} AS c_bal
   FROM customer WHERE c_acctbal > 9000.0 GROUP BY c_nationkey
 ) c
 FULL OUTER JOIN (
   SELECT s_nationkey AS nk, count(*) AS n_suppliers,
-         (CAST(SUM(CAST(round((s_acctbal) * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0) AS s_bal
+         {SQL_DSUM.format(x='s_acctbal')} AS s_bal
   FROM supplier WHERE s_acctbal > 9000.0 GROUP BY s_nationkey
 ) s USING (nk)
 ORDER BY nationkey

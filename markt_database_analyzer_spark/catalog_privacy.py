@@ -11,16 +11,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from .catalog import register, _t
-from .catalog import SQL_DSUM, register, _t
+
+from .catalog import _t, register
 from .datapipe.hashing import hash60, sql_hash60
-from pyspark.sql import DataFrame, SparkSession
-from .datapipe.hashing import sql_hash60
 from .datapipe.sampling import RESOLUTION, _gate
+from .functions.aggregates import NANO, qlong, sql_qlong
 from .operators.equidepth import value_counts_cum
-from .catalog import SQL_DAVG, _t, register
 
 
 _PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -237,7 +233,7 @@ terms AS (
   FROM shares
 )
 SELECT feature, bucket, cnt_a, cnt_b, share_a, share_b, psi_term,
-       (CAST(SUM(CAST(round(psi_term * 1000000.0) AS HUGEINT))
+       (CAST(SUM({sql_qlong('psi_term', cast='HUGEINT')})
                OVER (PARTITION BY feature) AS DOUBLE) / 1000000.0) AS psi
 FROM terms ORDER BY feature, bucket
 """
@@ -324,7 +320,7 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return terms.withColumn(
         "psi",
-        F.sum(F.round(F.col("psi_term") * 1000000.0).cast("long")).over(wf).cast(
+        F.sum(qlong("psi_term")).over(wf).cast(
             "double"
         )
         / 1000000.0,
@@ -397,13 +393,13 @@ c AS (
 ),
 terms AS (
   SELECT ca, cb,
-         CAST(round((
-           CASE WHEN ca > 0
-                THEN 0.5 * (ca / na) * ln((ca / na) / ((ca / na + cb / nb) / 2))
-                ELSE 0 END
-           + CASE WHEN cb > 0
-                  THEN 0.5 * (cb / nb) * ln((cb / nb) / ((ca / na + cb / nb) / 2))
-                  ELSE 0 END) * 1e9) AS BIGINT) AS tq
+         {sql_qlong(
+             "CASE WHEN ca > 0 THEN 0.5 * (ca / na) * ln((ca / na) / ((ca / na + cb / nb) / 2))"
+             " ELSE 0 END"
+             " + CASE WHEN cb > 0 THEN 0.5 * (cb / nb) * ln((cb / nb) / ((ca / na + cb / nb) / 2))"
+             " ELSE 0 END",
+             NANO,
+         )} AS tq
   FROM c, tot
 )
 SELECT CAST(sum(CASE WHEN ca > 0 THEN 1 ELSE 0 END) AS BIGINT) AS k_a,
@@ -456,7 +452,7 @@ def dq_jensen_shannon_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0)
     ) + F.when(F.col("cb") > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(F.lit(0.0))
     terms = c.crossJoin(F.broadcast(tot)).select(
-        "ca", "cb", F.round(term * 1e9).cast("bigint").alias("tq")
+        "ca", "cb", qlong(term, NANO).alias("tq")
     )
     return terms.agg(
         F.sum(F.when(F.col("ca") > 0, 1).otherwise(0)).cast("bigint").alias("k_a"),
@@ -640,9 +636,7 @@ cls AS (
   SELECT cell.c_nationkey, cell.bal_band,
          CAST(max(k) AS BIGINT) AS k,
          CAST(count(*) AS BIGINT) AS distinct_l,
-         CAST(sum(CAST(round(-(c / CAST(k AS DOUBLE))
-                             * ln(c / CAST(k AS DOUBLE)) * 1e9)
-                       AS BIGINT)) AS BIGINT) AS h9
+         CAST(sum({sql_qlong('-(c / CAST(k AS DOUBLE)) * ln(c / CAST(k AS DOUBLE))', NANO)}) AS BIGINT) AS h9
   FROM cell JOIN cls_k USING (c_nationkey, bal_band)
   GROUP BY 1, 2
 )
@@ -714,7 +708,7 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("k").alias("k"),
             F.count(F.lit(1)).cast("bigint").alias("distinct_l"),
-            F.sum(F.round(-p * F.ln(p) * 1e9, 0).cast("bigint"))
+            F.sum(qlong(-p * F.ln(p), NANO))
             .cast("bigint")
             .alias("h9"),
         )

@@ -11,33 +11,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_COS, SQL_DAVG, SQL_DSUM, demo_guard, register, _t
+
+from .catalog import SQL_COS, _t, demo_guard, register
 from .datapipe import sampling as smp
 from .datapipe import text as tx
-from .catalog import SQL_DSUM, register, _t
-from .functions.zorder import sql_zorder2, zorder2
 from .datapipe.hashing import hash60, sql_hash60
-from .catalog import register, _t
 from .datapipe.sampling import RESOLUTION, _gate, sql_gate
+from .datapipe.similarity import cosine, kcenter_select
 from .datapipe.util import fan_out
-from .datapipe.similarity import kcenter_select
-from .datapipe.similarity import cosine
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    grouped_value_counts_cum,
-    grouped_values_at_ranks,
-    sql_cuts_ctes,
-    value_counts_cum,
-    values_at_ranks,
-)
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, _t, register
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    sql_cuts_ctes,
-)
+from .functions.aggregates import NANO, qlong, sql_qlong
+from .functions.zorder import sql_zorder2, zorder2
+from .operators.equidepth import bucket_by_cuts, equi_depth_cut_points, sql_cuts_ctes
 
 
 _BUCKET_BOUNDS = (16, 32, 64, 128, 256, 512)
@@ -328,7 +312,7 @@ def _sql_kcenter(k: int = _KC_K) -> str:
         d = f"(CAST({v}[i] AS DOUBLE) - CAST({c}[i] AS DOUBLE))"
         return (
             f"CAST(list_sum(list_transform(range(1, len({v}) + 1), "
-            f"i -> CAST(round({d} * {d} * 1e9) AS BIGINT))) AS BIGINT)"
+            f"i -> {sql_qlong(f'{d} * {d}', NANO)})) AS BIGINT)"
         )
 
     parts = [
@@ -1165,7 +1149,7 @@ w0 AS MATERIALIZED (SELECT i, j, w FROM o)"""
         its.append(
             f""",
 r{k}s AS MATERIALIZED (
-  SELECT i, CAST(sum(CAST(round(w * 1e9) AS HUGEINT)) AS DOUBLE) / 1e9 AS s
+  SELECT i, CAST(sum({sql_qlong('w', NANO, 'HUGEINT')}) AS DOUBLE) / 1e9 AS s
   FROM w{k} GROUP BY i
 ),
 w{k}r AS MATERIALIZED (
@@ -1173,7 +1157,7 @@ w{k}r AS MATERIALIZED (
   FROM w{k} w JOIN r{k}s s USING (i) JOIN rt USING (i)
 ),
 c{k}s AS MATERIALIZED (
-  SELECT j, CAST(sum(CAST(round(w * 1e9) AS HUGEINT)) AS DOUBLE) / 1e9 AS s
+  SELECT j, CAST(sum({sql_qlong('w', NANO, 'HUGEINT')}) AS DOUBLE) / 1e9 AS s
   FROM w{k}r GROUP BY j
 ),
 w{k + 1} AS MATERIALIZED (
@@ -1233,7 +1217,7 @@ def sample_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = o
     for _ in range(_IPF_ROUNDS):
         rs = w.groupBy("i").agg(
-            (F.sum(F.round(F.col("w") * 1e9).cast("decimal(38,0)")).cast("double") / 1e9).alias("s")
+            (F.sum(qlong("w", NANO, "decimal(38,0)")).cast("double") / 1e9).alias("s")
         )
         w = (
             w.join(F.broadcast(rs), "i")
@@ -1241,7 +1225,7 @@ def sample_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("i", "j", F.round(F.col("w") * F.col("ri") / F.col("s"), 9).alias("w"))
         )
         cs = w.groupBy("j").agg(
-            (F.sum(F.round(F.col("w") * 1e9).cast("decimal(38,0)")).cast("double") / 1e9).alias("s")
+            (F.sum(qlong("w", NANO, "decimal(38,0)")).cast("double") / 1e9).alias("s")
         )
         w = (
             w.join(F.broadcast(cs), "j")

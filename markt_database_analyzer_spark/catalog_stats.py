@@ -9,18 +9,18 @@ entry docstrings.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, demo_guard, register, _t
+
+from .catalog import _t, demo_guard, register
 from .datapipe import text as tx
-from .functions import davg, dsum, nano_comoment, nsum
-from .catalog import register, _t
-from .catalog import SQL_DSUM, register, _t
+from .datapipe.hashing import hash60, sql_hash60
+from .datapipe.sampling import RESOLUTION
 from .datapipe.sketches import (
     BLOOM_K,
     BLOOM_M,
-    QD_K,
-    QD_SIGMA,
     QD_U,
     bloom_bits,
     bloom_maybe,
@@ -34,17 +34,20 @@ from .datapipe.sketches import (
     sql_cms_bucket,
     sql_hll,
 )
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
-from .datapipe.hashing import hash60, sql_hash60
-from pyspark.sql import Column, DataFrame, SparkSession, Window
-from .datapipe import clustering as cl
-from .datapipe.sampling import RESOLUTION, _gate, sql_gate
 from .datapipe.util import fan_out
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
-from .datapipe import dedup as dd
-from .datapipe.sampling import RESOLUTION
+from .functions.aggregates import (
+    NANO,
+    SQL_DAVG,
+    SQL_DSUM,
+    SQL_NSUM,
+    davg,
+    dsum,
+    nano_comoment,
+    nsum,
+    qlong,
+    sql_qlong,
+)
+from .functions.scalars import SQL_NORM_CDF, norm_cdf
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
@@ -53,17 +56,6 @@ from .operators.equidepth import (
     sql_cuts_ctes,
     value_counts_cum,
     values_at_ranks,
-)
-from .operators.equidepth import grouped_value_counts_cum
-from .operators.equidepth import value_counts_cum
-import math
-from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split
-from .catalog import SQL_DAVG, _t, register
-from .functions import davg
-from .operators.equidepth import (
-    bucket_by_cuts,
-    equi_depth_cut_points,
-    sql_cuts_ctes,
 )
 
 
@@ -548,17 +540,17 @@ def stats_mad_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_changepoint_cusum",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT event_type,
-         (CAST(SUM(CAST(round(value * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         (CAST(SUM({sql_qlong('value', cast='HUGEINT')}) AS DOUBLE)
           / COUNT(value) / 1000000.0) AS mu,
          CAST(count(*) AS BIGINT) AS n
   FROM events GROUP BY 1
 ),
 dev AS (
   SELECT e.event_type, e.ts, e.event_id, m.n,
-         CAST(sum(CAST(round((e.value - m.mu) * 1000000.0) AS BIGINT))
+         CAST(sum({sql_qlong('(e.value - m.mu)')})
               OVER (PARTITION BY e.event_type ORDER BY e.ts, e.event_id)
               AS BIGINT) AS s_int
   FROM events e JOIN m USING (event_type)
@@ -594,7 +586,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     dev = ev.join(F.broadcast(m), "event_type").withColumn(
         "s_int",
-        F.sum(F.round((F.col("value") - F.col("mu")) * 1_000_000.0).cast("bigint"))
+        F.sum(qlong(F.col("value") - F.col("mu")))
         .over(w)
         .cast("bigint"),
     )
@@ -818,7 +810,7 @@ _WELCH_A, _WELCH_B = "click", "view"
 def _sql_welch() -> str:
     return f"""
 WITH q AS (
-  SELECT event_type, CAST(round(value * 1000000.0) AS HUGEINT) AS q
+  SELECT event_type, {sql_qlong('value', cast='HUGEINT')} AS q
   FROM events WHERE event_type IN ('{_WELCH_A}', '{_WELCH_B}')
 ),
 s AS (
@@ -866,7 +858,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a single shuffle of 6 numbers."""
     cond_a = F.col("event_type") == _WELCH_A
     cond_b = F.col("event_type") == _WELCH_B
-    q = F.round(F.col("value") * 1000000.0).cast("decimal(38,0)")
+    q = qlong("value", cast="decimal(38,0)")
     ev = _t(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_WELCH_A, _WELCH_B)
     )
@@ -905,7 +897,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CORR_VARS = ("l_quantity", "l_extendedprice", "l_discount")
 def _sql_corr_matrix() -> str:
-    qs = {v: f"CAST(round({v} * 1000000.0) AS HUGEINT)" for v in _CORR_VARS}
+    qs = {v: sql_qlong(v, cast="HUGEINT") for v in _CORR_VARS}
     sums = ",\n    ".join(
         [f"CAST(count(*) AS DOUBLE) AS n"]
         + [f"CAST(sum({qs[v]}) AS DOUBLE) AS s_{v}" for v in _CORR_VARS]
@@ -947,7 +939,7 @@ def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
 
     def q(v):
-        return F.round(F.col(v) * 1000000.0).cast("decimal(38,0)")
+        return qlong(F.col(v), cast="decimal(38,0)")
 
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
     aggs += [F.sum(q(v)).cast("double").alias(f"s_{v}") for v in _CORR_VARS]
@@ -1157,10 +1149,10 @@ def stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_weighted_median() -> str:
-    return """
+    return f"""
 WITH pv AS (
   SELECT l_returnflag AS flag, l_extendedprice AS price,
-         CAST(sum(CAST(round(l_quantity * 1000000.0) AS BIGINT)) AS BIGINT) AS w
+         CAST(sum({sql_qlong('l_quantity')}) AS BIGINT) AS w
   FROM lineitem GROUP BY 1, 2
 ),
 run AS (
@@ -1190,7 +1182,7 @@ def stats_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_returnflag").alias("flag"), F.col("l_extendedprice").alias("price"))
         .agg(
-            F.sum(F.round(F.col("l_quantity") * 1000000.0).cast("bigint")).alias("w")
+            F.sum(qlong("l_quantity")).alias("w")
         )
     )
     wrun = Window.partitionBy("flag").orderBy("price").rowsBetween(
@@ -1212,7 +1204,7 @@ def stats_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kaplan_meier() -> str:
-    return """
+    return f"""
 WITH u AS (
   SELECT user_id,
          CAST(min(date_trunc('day', ts)) AS DATE) AS first_day,
@@ -1241,8 +1233,7 @@ et AS (SELECT * FROM rk WHERE d_events > 0),
 cm AS (
   SELECT t, d_events, c_censored, n_risk,
          sum(CASE WHEN d_events < n_risk
-                  THEN CAST(round(ln(1.0 - CAST(d_events AS DOUBLE) / n_risk) * 1e9)
-                       AS BIGINT)
+                  THEN {sql_qlong('ln(1.0 - CAST(d_events AS DOUBLE) / n_risk)', NANO)}
                   ELSE 0 END) OVER (ORDER BY t) AS cum_lq,
          max(CASE WHEN d_events >= n_risk THEN 1 ELSE 0 END) OVER (ORDER BY t)
            AS zerod
@@ -1293,10 +1284,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     wasc = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     lq = F.when(
         F.col("d_events") < F.col("n_risk"),
-        F.round(
-            F.log(F.lit(1.0) - F.col("d_events").cast("double") / F.col("n_risk"))
-            * 1e9
-        ).cast("bigint"),
+        qlong(F.log(F.lit(1.0) - F.col("d_events").cast("double") / F.col("n_risk")), NANO),
     ).otherwise(F.lit(0))
     cm = et.select(
         "t",
@@ -1510,7 +1498,7 @@ scored_tok AS (
 scores AS (
   SELECT doc_id, actual, lang,
          min(logprior)
-           + (CAST(SUM(CAST(round(ll * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0) AS score
+           + {SQL_DSUM.format(x='ll')} AS score
   FROM scored_tok GROUP BY doc_id, actual, lang
 ),
 ranked AS (
@@ -1608,7 +1596,7 @@ def classify_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BENFORD = """
+_SQL_BENFORD = f"""
 WITH cents AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
 ),
@@ -1630,7 +1618,7 @@ scored AS (
   FROM digits CROSS JOIN tot
 )
 SELECT digit, cnt, obs_share, benford_share, chi2_term,
-       (CAST(SUM(CAST(round(chi2_term * 1000000.0) AS HUGEINT)) OVER () AS DOUBLE)
+       (CAST(SUM({sql_qlong('chi2_term', cast='HUGEINT')}) OVER () AS DOUBLE)
           / 1000000.0) AS chi2_total
 FROM scored ORDER BY digit
 """
@@ -1665,15 +1653,15 @@ def stats_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy(F.lit(1))
     return scored.withColumn(
         "chi2_total",
-        F.sum(F.round(F.col("chi2_term") * 1000000.0).cast("long")).over(w).cast("double")
+        F.sum(qlong("chi2_term")).over(w).cast("double")
         / 1000000.0,
     ).orderBy("digit")
 
 
-_SQL_QNORM = """
+_SQL_QNORM = f"""
 WITH ranked AS (
   SELECT event_id, event_type, value,
-         CAST(round(value * 1000000.0) AS BIGINT) AS micro,
+         {sql_qlong('value')} AS micro,
          row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS r,
          count(*) OVER (PARTITION BY event_type) AS n_g
   FROM events
@@ -1716,7 +1704,7 @@ def stats_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stats_quantile_normalize_grid`` (101 exact pooled order
     statistics broadcast, mid-rank ties, no data-sized window)."""
     ev = _t(spark, sf_dir, "events")
-    micro = F.round(F.col("value") * 1000000.0).cast("long")
+    micro = qlong("value")
     wg = Window.partitionBy("event_type").orderBy("value", "event_id")
     ranked = ev.select(
         "event_id",
@@ -1768,10 +1756,10 @@ def stats_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PAV = """
+_SQL_PAV = f"""
 WITH hourly AS (
   SELECT CAST(extract(hour FROM ts) AS BIGINT) AS h,
-         CAST(SUM(CAST(round(value * 1000000.0) AS HUGEINT)) AS BIGINT) AS s,
+         CAST(SUM({sql_qlong('value', cast='HUGEINT')}) AS BIGINT) AS s,
          CAST(count(*) AS BIGINT) AS n
   FROM events GROUP BY 1
 ),
@@ -1817,7 +1805,7 @@ def iso_regression_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
     is constant."""
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy(F.hour("ts").cast("bigint").alias("h")).agg(
-        F.sum(F.round(F.col("value") * 1000000.0).cast("long")).alias("s"),
+        F.sum(qlong("value")).alias("s"),
         F.count(F.lit(1)).alias("n"),
     )
     wh = Window.orderBy("h")
@@ -1872,7 +1860,6 @@ feats AS (
 ),
 n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM feats),
 w0 AS (SELECT 0.0 AS b, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)"""
-    q = "(CAST(SUM(CAST(round(({t}) * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0)"
     steps = []
     for s in range(1, _LR_STEPS + 1):
         p = (
@@ -1880,10 +1867,10 @@ w0 AS (SELECT 0.0 AS b, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)"""
         )
         steps.append(f"""
 g{s} AS (
-  SELECT {q.format(t=f"({p} - y)")} AS gb,
-         {q.format(t=f"({p} - y) * x1")} AS g1,
-         {q.format(t=f"({p} - y) * x2")} AS g2,
-         {q.format(t=f"({p} - y) * x3")} AS g3
+  SELECT {SQL_DSUM.format(x=f"({p} - y)")} AS gb,
+         {SQL_DSUM.format(x=f"({p} - y) * x1")} AS g1,
+         {SQL_DSUM.format(x=f"({p} - y) * x2")} AS g2,
+         {SQL_DSUM.format(x=f"({p} - y) * x3")} AS g3
   FROM feats CROSS JOIN w{s-1}
 ),
 w{s} AS (
@@ -1900,7 +1887,7 @@ WITH {feats},
 SELECT b, w1, w2, w3,
        CAST(sum(CASE WHEN ({p_fin} >= 0.5) = (y = 1.0) THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
        CAST(min(n.n) AS BIGINT) AS n_rows,
-       round({q.format(t=f"-(y * round(ln({p_fin}), 9) + (1.0 - y) * round(ln(1.0 - {p_fin}), 9))")}
+       round({SQL_DSUM.format(x=f"-(y * round(ln({p_fin}), 9) + (1.0 - y) * round(ln(1.0 - {p_fin}), 9))")}
                / min(n.n), 9) AS log_loss
 FROM feats CROSS JOIN w{_LR_STEPS} CROSS JOIN n
 GROUP BY b, w1, w2, w3
@@ -1997,7 +1984,7 @@ binned AS (
 per_bin AS (
   SELECT bin,
          CAST(count(*) AS BIGINT) AS n,
-         round((CAST(SUM(CAST(round(conf * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         round((CAST(SUM({sql_qlong('conf', cast='HUGEINT')}) AS DOUBLE)
                   / count(*)) / 1000000.0, 9) AS mean_conf,
          round(sum(y) / CAST(count(*) AS DOUBLE), 9) AS frac_pos
   FROM binned GROUP BY bin
@@ -2005,8 +1992,9 @@ per_bin AS (
 tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM per_bin)
 SELECT bin, n, mean_conf, frac_pos,
        round(abs(mean_conf - frac_pos), 9) AS gap,
-       (CAST(SUM(CAST(round(n * round(abs(mean_conf - frac_pos), 9) * 1000000.0)
-                      AS HUGEINT)) OVER () AS DOUBLE) / 1000000.0) / min(nt) OVER () AS ece
+       (CAST(SUM({sql_qlong(
+           'n * round(abs(mean_conf - frac_pos), 9)', cast='HUGEINT',
+       )}) OVER () AS DOUBLE) / 1000000.0) / min(nt) OVER () AS ece
 FROM per_bin CROSS JOIN tot ORDER BY bin
 """
 @register(
@@ -2044,7 +2032,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.round(
             (
-                F.sum(F.round(F.col("conf") * 1000000.0).cast("long")).cast("double")
+                F.sum(qlong("conf")).cast("double")
                 / F.count(F.lit(1))
             )
             / 1000000.0,
@@ -2060,7 +2048,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ece",
             (
                 F.sum(
-                    F.round(F.col("n") * F.col("gap") * 1000000.0).cast("long")
+                    qlong(F.col("n") * F.col("gap"))
                 ).over(wall).cast("double")
                 / 1000000.0
             )
@@ -2528,7 +2516,7 @@ def histogram_equi_depth_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QN_GRID = 101  # pooled grid resolution (0..100 inclusive)
 _QN_GRID_SQL = f"""
 WITH vc AS (
-  SELECT CAST(round(value * 1000000.0) AS BIGINT) AS v, count(*) AS cnt
+  SELECT {sql_qlong('value')} AS v, count(*) AS cnt
   FROM events GROUP BY 1
 ),
 cum AS (SELECT v, sum(cnt) OVER (ORDER BY v) AS cum FROM vc),
@@ -2592,7 +2580,7 @@ def stats_quantile_normalize_grid(spark: SparkSession, sf_dir: str) -> DataFrame
     full pooled vector — the approximation the grid resolution
     controls, with the grid itself still EXACT order statistics."""
     ev = _t(spark, sf_dir, "events")
-    micro = F.round(F.col("value") * 1000000.0).cast("long")
+    micro = qlong("value")
     cum, n = value_counts_cum(ev, micro)
     g1 = _QN_GRID - 1
     ranks = [1 + (g * (n - 1)) // g1 for g in range(_QN_GRID)]
@@ -3392,10 +3380,10 @@ WITH b AS (
 u AS (
   SELECT user_id, {arm} AS arm,
          CAST(sum(CASE WHEN epoch_us(ts) < tmid
-                       THEN CAST(round(value * 1000000.0) AS BIGINT)
+                       THEN {sql_qlong('value')}
                        ELSE 0 END) AS BIGINT) AS xq,
          CAST(sum(CASE WHEN epoch_us(ts) >= tmid
-                       THEN CAST(round(value * 1000000.0) AS BIGINT)
+                       THEN {sql_qlong('value')}
                        ELSE 0 END) AS BIGINT) AS yq
   FROM events, b GROUP BY 1, 2
 ),
@@ -3465,7 +3453,7 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("tmid")
     )
-    vq = F.round(F.col("value") * 1000000.0).cast("bigint")
+    vq = qlong("value")
     us = F.unix_micros("ts")
     u = (
         ev.crossJoin(F.broadcast(b))
@@ -3535,7 +3523,7 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_nelson_aalen() -> str:
-    return """
+    return f"""
 WITH u AS (
   SELECT user_id,
          CAST(min(date_trunc('day', ts)) AS DATE) AS first_day,
@@ -3562,7 +3550,7 @@ rk AS (
 et AS (SELECT * FROM rk WHERE d_events > 0),
 cm AS (
   SELECT t, d_events, n_risk,
-         sum(CAST(round(CAST(d_events AS DOUBLE) / n_risk * 1e9) AS BIGINT))
+         sum({sql_qlong('CAST(d_events AS DOUBLE) / n_risk', NANO)})
            OVER (ORDER BY t) AS cum_hq
   FROM et
 )
@@ -3614,9 +3602,7 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     et = rk.filter(F.col("d_events") > 0)
     wasc = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    hq = F.round(F.col("d_events").cast("double") / F.col("n_risk") * 1e9).cast(
-        "bigint"
-    )
+    hq = qlong(F.col("d_events").cast("double") / F.col("n_risk"), NANO)
     cm = et.select(
         "t",
         "d_events",
@@ -3766,9 +3752,6 @@ def regression_multiple_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BH_ALPHA = 0.05
 def _sql_fdr_bh() -> str:
-    # Bowling et al.'s logistic approximation to the normal CDF:
-    # Phi(z) ~ 1 / (1 + exp(-1.5976 z - 0.07056 z^3)); identical
-    # expression text on both engines.
     return f"""
 WITH q AS (
   SELECT c_nationkey, CAST(round(c_acctbal * 100.0) AS BIGINT) AS a
@@ -3793,8 +3776,7 @@ z AS (
 ),
 p AS (
   SELECT c_nationkey, n_g, zs,
-         2.0 * (1.0 - 1.0 / (1.0 + exp(-1.5976 * abs(zs)
-               - 0.07056 * abs(zs) * abs(zs) * abs(zs)))) AS pv
+         2.0 * (1.0 - {SQL_NORM_CDF.format(z="abs(zs)")}) AS pv
   FROM z
 ),
 rk AS (
@@ -3862,11 +3844,7 @@ def stats_fdr_bh_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = g.crossJoin(F.broadcast(tot)).select("c_nationkey", "n_g", zs.alias("zs"))
     az = F.abs(F.col("zs"))
-    pv = F.lit(2.0) * (
-        F.lit(1.0)
-        - F.lit(1.0)
-        / (F.lit(1.0) + F.exp(F.lit(-1.5976) * az - F.lit(0.07056) * az * az * az))
-    )
+    pv = F.lit(2.0) * (F.lit(1.0) - norm_cdf(az))
     p = z.select("c_nationkey", "n_g", "zs", pv.alias("pv"))
     wr = Window.orderBy("pv", "c_nationkey")
     wall = Window.partitionBy()
@@ -3895,7 +3873,7 @@ def stats_fdr_bh_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_jackknife() -> str:
-    return """
+    return f"""
 WITH q AS (
   SELECT date_trunc('month', l_shipdate) AS blk,
          CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT) AS a,
@@ -3916,7 +3894,7 @@ tot AS (
 ),
 loo AS (
   SELECT gg, sa, sb,
-         CAST(round((sa - a_g) / (sb - b_g) * 1e9) AS BIGINT) AS rq
+         {sql_qlong('(sa - a_g) / (sb - b_g)', NANO)} AS rq
   FROM g, tot
 ),
 jk AS (
@@ -3927,9 +3905,9 @@ jk AS (
 ),
 dev AS (
   SELECT gg, sa, sb, rbar,
-         CAST(sum(CAST(round(
-           (CAST(u.r AS DOUBLE) / 1e9 - rbar)
-           * (CAST(u.r AS DOUBLE) / 1e9 - rbar) * 1e15) AS HUGEINT)) AS DOUBLE)
+         CAST(sum({sql_qlong(
+             '(CAST(u.r AS DOUBLE) / 1e9 - rbar) * (CAST(u.r AS DOUBLE) / 1e9 - rbar)', 1e15, 'HUGEINT',
+         )}) AS DOUBLE)
            AS ssq
   FROM jk, unnest(rqs) AS u(r)
   GROUP BY gg, sa, sb, rbar
@@ -3987,8 +3965,7 @@ def stats_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gg",
         "sa",
         "sb",
-        F.round((F.col("sa") - F.col("a_g")) / (F.col("sb") - F.col("b_g")) * 1e9)
-        .cast("bigint")
+        qlong((F.col("sa") - F.col("a_g")) / (F.col("sb") - F.col("b_g")), NANO)
         .alias("rq"),
     )
     jk = loo.agg(
@@ -4002,11 +3979,12 @@ def stats_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.any_value("sa").alias("sa"),
         F.any_value("sb").alias("sb"),
         F.sum(
-            F.round(
+            qlong(
                 (F.col("rq").cast("double") / 1e9 - F.col("rbar"))
-                * (F.col("rq").cast("double") / 1e9 - F.col("rbar"))
-                * 1e15
-            ).cast("decimal(38,0)")
+                * (F.col("rq").cast("double") / 1e9 - F.col("rbar")),
+                1e15,
+                "decimal(38,0)",
+            )
         )
         .cast("double")
         .alias("ssq"),
@@ -4235,7 +4213,7 @@ def _sql_poisson_bootstrap() -> str:
     )
     return f"""
 WITH x AS (
-  SELECT b, CAST(round(value * 1000000.0) AS BIGINT) AS vq,
+  SELECT b, {sql_qlong('value')} AS vq,
          (({hid} + {ob}) % {RESOLUTION}) AS u
   FROM events, unnest(generate_series(0, {_PB_B - 1})) AS t(b)
 ),
@@ -4247,7 +4225,7 @@ rs AS (
   FROM w GROUP BY b
 )
 SELECT CAST(count(*) AS BIGINT) AS n_resamples,
-       round((CAST(SUM(CAST(round((mean_b) * 1000000.0) AS HUGEINT)) AS DOUBLE)
+       round((CAST(SUM({sql_qlong('mean_b', cast='HUGEINT')}) AS DOUBLE)
               / COUNT(mean_b) / 1000000.0), 6) AS mean_of_means,
        round(quantile_cont(mean_b, 0.05), 6) AS ci_lo,
        round(quantile_cont(mean_b, 0.95), 6) AS ci_hi
@@ -4279,7 +4257,7 @@ def stats_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregate; at 100 TB the xB blow-up collapses to
     per-partition partial (sum w*v, sum w) pairs per b."""
     ev = _t(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 1000000.0).cast("bigint").alias("vq"),
+        qlong("value").alias("vq"),
         hash60(F.col("event_id").cast("string"), seed=_PB_SEED).alias("h"),
     )
     offsets = spark.range(_PB_B).select(
@@ -4316,11 +4294,10 @@ _TOST_SEED = 7  # same split as stats_cuped_adjustment: arms are comparable
 _TOST_MARGIN_FRAC = 0.05
 def _sql_tost() -> str:
     arm = f"({sql_hash60('user_id::VARCHAR', seed=_TOST_SEED)} % 2)"
-    phi = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
     return f"""
 WITH u AS (
   SELECT user_id, {arm} AS arm,
-         CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT) AS yq
+         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
   FROM events GROUP BY 1, 2
 ),
 g AS (
@@ -4350,10 +4327,10 @@ SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
        round(diff / 1000000.0, 6) AS diff,
        round(se / 1000000.0, 6) AS se,
        round(delta / 1000000.0, 6) AS delta,
-       round(1.0 - {phi.format(z='t_lower')}, 6) AS p_lower,
-       round({phi.format(z='t_upper')}, 6) AS p_upper,
-       CAST(CASE WHEN 1.0 - {phi.format(z='t_lower')} <= 0.05
-                  AND {phi.format(z='t_upper')} <= 0.05
+       round(1.0 - {SQL_NORM_CDF.format(z='t_lower')}, 6) AS p_lower,
+       round({SQL_NORM_CDF.format(z='t_upper')}, 6) AS p_upper,
+       CAST(CASE WHEN 1.0 - {SQL_NORM_CDF.format(z='t_lower')} <= 0.05
+                  AND {SQL_NORM_CDF.format(z='t_upper')} <= 0.05
             THEN 1 ELSE 0 END AS INT) AS equivalent
 FROM t
 """
@@ -4385,7 +4362,7 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
         ev.groupBy("user_id")
         .agg(
-            F.sum(F.round(F.col("value") * 1000000.0).cast("bigint"))
+            F.sum(qlong("value"))
             .cast("bigint")
             .alias("yq")
         )
@@ -4434,13 +4411,8 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("diff") - F.col("delta")) / F.col("se")).alias("t_upper"),
     )
 
-    def phi(z: F.Column) -> F.Column:
-        return F.lit(1.0) / (
-            F.lit(1.0) + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z)
-        )
-
-    p_lower = F.lit(1.0) - phi(F.col("t_lower"))
-    p_upper = phi(F.col("t_upper"))
+    p_lower = F.lit(1.0) - norm_cdf(F.col("t_lower"))
+    p_upper = norm_cdf(F.col("t_upper"))
     return t.select(
         F.col("n0").cast("bigint").alias("n0"),
         F.col("n1").cast("bigint").alias("n1"),
@@ -4538,15 +4510,11 @@ def stats_wilson_ci_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nationkey")
 
 
-# Bowling et al.'s logistic approximation to the normal CDF — the one
-# p-value literal of every stats entry (BH-FDR, TOST, SRM, power, ...):
-# identical expression text on both engines.
-_PHI = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
 _MCN_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 _MCN_THRESHOLD = 0.08  # classifier A: the eval_cohens_kappa decision rule
 def _sql_mcnemar() -> str:
     toks = tx.sql_tokens("text")
-    phi = _PHI.format(z="sqrt((abs(CAST(b AS DOUBLE) - c) - 1.0) "
+    phi = SQL_NORM_CDF.format(z="sqrt((abs(CAST(b AS DOUBLE) - c) - 1.0) "
                         "* (abs(CAST(b AS DOUBLE) - c) - 1.0) / (b + c))")
     return f"""
 WITH scored AS (
@@ -4628,9 +4596,7 @@ def stats_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff = F.abs(F.col("b").cast("double") - F.col("c")) - F.lit(1.0)
     chi2 = diff * diff / (F.col("b") + F.col("c"))
     z = F.sqrt(chi2)
-    phi = 1.0 / (
-        1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z)
-    )
+    phi = norm_cdf(z)
     return c.select(
         "n",
         "both_right",
@@ -4648,7 +4614,7 @@ def _sql_cohens_d() -> str:
     return f"""
 WITH u AS (
   SELECT user_id, {arm} AS arm,
-         CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT) AS yq
+         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
   FROM events GROUP BY 1, 2
 ),
 g AS (
@@ -4704,7 +4670,7 @@ def stats_cohens_d_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
         ev.groupBy("user_id")
         .agg(
-            F.sum(F.round(F.col("value") * 1000000.0).cast("bigint"))
+            F.sum(qlong("value"))
             .cast("bigint")
             .alias("yq")
         )
@@ -4760,9 +4726,9 @@ tot AS (
          CAST(count(DISTINCT source) AS BIGINT) AS s
   FROM documents
 )
-SELECT round(2.0 * CAST(sum(CAST(round(
-           CAST(c.o AS DOUBLE) * ln(CAST(c.o AS DOUBLE) / ({exp})) * 1e9)
-           AS HUGEINT)) AS DOUBLE) / 1e9, 6) AS g_stat,
+SELECT round(2.0 * CAST(sum({sql_qlong(
+    f'CAST(c.o AS DOUBLE) * ln(CAST(c.o AS DOUBLE) / ({exp}))', NANO, 'HUGEINT',
+)}) AS DOUBLE) / 1e9, 6) AS g_stat,
        min((t.l - 1) * (t.s - 1)) AS dof,
        min(t.n) AS n
 FROM cells c
@@ -4803,9 +4769,8 @@ def stats_gtest_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("source").alias("s"),
     )
     exp = (F.col("nl").cast("double") * F.col("ns")) / F.col("n")
-    term = F.round(
-        F.col("o").cast("double") * F.log(F.col("o").cast("double") / exp) * 1e9
-    ).cast("decimal(38,0)")
+    term = qlong(
+        F.col("o").cast("double") * F.log(F.col("o").cast("double") / exp), NANO, "decimal(38,0)")
     joined = (
         cells.join(rowt, "lang")
         .join(colt, "source")
@@ -4948,7 +4913,7 @@ _SRM_SEED = 7  # the CUPED/TOST/effect-size split — the one being audited
 _SRM_ALPHA = 0.001  # the conventional SRM alarm level
 def _sql_srm() -> str:
     arm = f"({sql_hash60('user_id::VARCHAR', seed=_SRM_SEED)} % 2)"
-    phi = _PHI.format(z="sqrt(chi2)")
+    phi = SQL_NORM_CDF.format(z="sqrt(chi2)")
     return f"""
 WITH u AS (
   SELECT user_id, {arm} AS arm FROM events GROUP BY 1, 2
@@ -5009,7 +4974,7 @@ def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) * (F.col("n1") - expected) / expected
     s = c.select("n0", "n1", expected.alias("expected"), chi2.alias("chi2"))
     z = F.sqrt(F.col("chi2"))
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+    phi = norm_cdf(z)
     p = 2.0 * (1.0 - phi)
     return s.select(
         "n0",
@@ -5105,7 +5070,7 @@ def _sql_power() -> str:
     return f"""
 WITH u AS (
   SELECT user_id, {arm} AS arm,
-         CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS BIGINT) AS yq
+         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
   FROM events GROUP BY 1, 2
 ),
 g AS (
@@ -5167,7 +5132,7 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
         ev.groupBy("user_id")
         .agg(
-            F.sum(F.round(F.col("value") * 1000000.0).cast("bigint"))
+            F.sum(qlong("value"))
             .cast("bigint")
             .alias("yq")
         )
@@ -5215,11 +5180,10 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _sql_lognormal_ks() -> str:
-    phi = _PHI.format(z="(v / 1e9 - mu) / sigma")
+    phi = SQL_NORM_CDF.format(z="(v / 1e9 - mu) / sigma")
     return f"""
 WITH q AS (
-  SELECT CAST(round(ln(CAST(round(l_extendedprice * 100.0) AS BIGINT)) * 1e9)
-              AS BIGINT) AS v
+  SELECT {sql_qlong('ln(CAST(round(l_extendedprice * 100.0) AS BIGINT))', NANO)} AS v
   FROM lineitem
 ),
 dom AS (
@@ -5278,11 +5242,7 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantic spec only."""
     li = _t(spark, sf_dir, "lineitem")
     q = li.select(
-        F.round(
-            F.log(F.round(F.col("l_extendedprice") * 100.0).cast("bigint").cast("double"))
-            * 1e9
-        )
-        .cast("bigint")
+        qlong(F.log(F.round(F.col("l_extendedprice") * 100.0).cast("bigint").cast("double")), NANO)
         .alias("v")
     ).localCheckpoint(eager=True)  # feeds the domain AND the fit moments
     dom, _n = value_counts_cum(q, F.col("v"))
@@ -5301,7 +5261,7 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sigma"),
     )
     z = (F.col("v") / 1e9 - F.col("mu")) / F.col("sigma")
-    cdf = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+    cdf = norm_cdf(z)
     ks = dom.crossJoin(F.broadcast(fit)).select(
         "v",
         "n",
@@ -5334,7 +5294,7 @@ _BB_ALPHA0, _BB_BETA0 = 1.0, 1.0  # uniform prior
 _Z95 = "1.959963984540054"  # 95% interval half-width in SDs (shared literal)
 def _sql_beta_binomial() -> str:
     arm = f"({sql_hash60('user_id::VARCHAR', seed=_BB_SEED)} % 2)"
-    phi = _PHI.format(z="(m1 - m0) / sqrt(v0 + v1)")
+    phi = SQL_NORM_CDF.format(z="(m1 - m0) / sqrt(v0 + v1)")
     return f"""
 WITH u AS (
   SELECT user_id, {arm} AS arm,
@@ -5434,7 +5394,7 @@ def stats_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("arm") == 1, F.col("ps") * F.col("ps"))).alias("v1"),
     )
     z = (F.col("m1") - F.col("m0")) / F.sqrt(F.col("v0") + F.col("v1"))
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+    phi = norm_cdf(z)
     z95 = F.lit(float(_Z95))
     return (
         m.crossJoin(F.broadcast(pair))
@@ -5455,7 +5415,7 @@ def stats_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _sql_runs_test() -> str:
-    phi = _PHI.format(z="abs(z)")
+    phi = SQL_NORM_CDF.format(z="abs(z)")
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
@@ -5569,7 +5529,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("runs") - mu) / sigma).alias("z"),
     )
     az = F.abs(F.col("z"))
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * az - F.lit(0.07056) * az * az * az))
+    phi = norm_cdf(az)
     return zz.select(
         "runs",
         "n_up",
@@ -5586,9 +5546,9 @@ def _sql_lift_cuts() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         CAST(round(len(list_filter({toks}, t -> t IN {_LIFT_STOPWORDS}))
-                      / CAST(len({toks}) AS DOUBLE) * 1e9)
-              AS BIGINT) AS s9
+         {sql_qlong(
+             f'len(list_filter({toks}, t -> t IN {_LIFT_STOPWORDS})) / CAST(len({toks}) AS DOUBLE)', NANO,
+         )} AS s9
   FROM documents
   WHERE len({toks}) > 0
 ),
@@ -5653,8 +5613,7 @@ def eval_lift_gains_deciles_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double") * 1e9, 0)
-        .cast("bigint")
+        qlong(F.size(stop) / F.size("toks").cast("double"), NANO)
         .alias("s9"),
     ).localCheckpoint(eager=True)  # feeds the cut derivation AND assignment
     cuts = equi_depth_cut_points(scored, F.col("s9"), 10)
@@ -5721,7 +5680,7 @@ def _sql_ljung_box() -> str:
         f"lead(x, {k}) OVER (ORDER BY h) AS x{k}" for k in range(1, _LB_MAX_LAG + 1)
     )
     nums = ",\n    ".join(
-        f"CAST(sum(CAST(round((x - xbar) * (x{k} - xbar) * 1e9) AS BIGINT)) AS BIGINT)"
+        f"CAST(sum({sql_qlong(f'(x - xbar) * (x{k} - xbar)', NANO)}) AS BIGINT)"
         f" AS num{k}"
         for k in range(1, _LB_MAX_LAG + 1)
     )
@@ -5735,7 +5694,7 @@ def _sql_ljung_box() -> str:
         f"(cbrt(q / {df}) - (1.0 - 2.0 / (9.0 * {df})))"
         f" / sqrt(2.0 / (9.0 * {df}))"
     )
-    phi = _PHI.format(z="z")
+    phi = SQL_NORM_CDF.format(z="z")
     davg_x = SQL_DAVG.format(x="value")
     return f"""
 WITH hourly AS (
@@ -5750,7 +5709,7 @@ led AS (
 ),
 s AS (
   SELECT max(nn) AS nn,
-    CAST(sum(CAST(round((x - xbar) * (x - xbar) * 1e9) AS BIGINT)) AS BIGINT) AS denom,
+    CAST(sum({sql_qlong('(x - xbar) * (x - xbar)', NANO)}) AS BIGINT) AS denom,
     {nums}
   FROM led
 ),
@@ -5826,7 +5785,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (F.cbrt(F.col("q") / F.lit(dfl)) - (F.lit(1.0) - F.lit(2.0) / (9.0 * dfl))) / F.sqrt(
         F.lit(2.0 / (9.0 * dfl))
     )
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+    phi = norm_cdf(z)
     return q.select(
         F.col("nn").alias("n"),
         "df",
@@ -5835,7 +5794,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _sql_cochran_armitage() -> str:
-    phi = _PHI.format(z="abs(z)")
+    phi = SQL_NORM_CDF.format(z="abs(z)")
     return f"""
 WITH g AS (
   SELECT (hour(ts) // 6) + 1 AS s,
@@ -5901,7 +5860,7 @@ def stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("ssn") - F.col("sn").cast("double") * F.col("sn") / F.col("n"))
     )
     az = F.abs(z)
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * az - F.lit(0.07056) * az * az * az))
+    phi = norm_cdf(az)
     return m.select(
         "n",
         "r",
@@ -5911,7 +5870,7 @@ def stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_friedman() -> str:
     davg_v = SQL_DAVG.format(x="value")
-    phi = _PHI.format(z="z")
+    phi = SQL_NORM_CDF.format(z="z")
     return f"""
 WITH cell AS (
   SELECT date_trunc('day', ts) AS d, event_type, {davg_v} AS x
@@ -6016,7 +5975,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (F.cbrt(F.col("q") / dfq) - (F.lit(1.0) - 2.0 / (9.0 * dfq))) / F.sqrt(
         2.0 / (9.0 * dfq)
     )
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+    phi = norm_cdf(z)
     return q.select(
         F.col("n").alias("n_blocks"),
         F.col("k").alias("k_treatments"),
@@ -6025,15 +5984,15 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _sql_bartlett() -> str:
-    phi = _PHI.format(z="z")
+    phi = SQL_NORM_CDF.format(z="z")
     return f"""
 WITH g AS (
   SELECT event_type,
          CAST(count(*) AS BIGINT) AS n_h,
-         CAST(sum(CAST(round(value * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         CAST(sum({sql_qlong('value', cast='HUGEINT')}) AS DOUBLE)
            / 1e6 AS s1,
-         CAST(sum(CAST(round(value * 1000000.0) AS HUGEINT)
-                  * CAST(round(value * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         CAST(sum({sql_qlong('value', cast='HUGEINT')}
+                  * {sql_qlong('value', cast='HUGEINT')}) AS DOUBLE)
            / 1e12 AS s2
   FROM events GROUP BY 1
 ),
@@ -6084,7 +6043,7 @@ def stats_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combined groupBy to k rows, then a 1-row
     reduce. No joins, no windows."""
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
-    q = F.round(F.col("value") * 1e6).cast("decimal(38,0)")
+    q = qlong("value", cast="decimal(38,0)")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
         (F.sum(q).cast("double") / 1e6).alias("s1"),
@@ -6112,7 +6071,7 @@ def stats_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = (F.cbrt(F.col("t") / dfq) - (F.lit(1.0) - 2.0 / (9.0 * dfq))) / F.sqrt(
         2.0 / (9.0 * dfq)
     )
-    phi = 1.0 / (1.0 + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+    phi = norm_cdf(z)
     return ts.select(
         "n",
         "k",
@@ -6121,13 +6080,13 @@ def stats_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def _sql_anderson_darling() -> str:
-    phi_z = _PHI.format(z="z")
+    phi_z = SQL_NORM_CDF.format(z="z")
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(round(ln(CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount)
-                                           * 100.0) AS BIGINT)) AS DOUBLE))
-                    * 1e9) AS BIGINT) AS v
+         {sql_qlong(
+             'ln(CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT)) AS DOUBLE))', NANO,
+         )} AS v
   FROM lineitem GROUP BY 1
 ),
 m AS (
@@ -6151,9 +6110,9 @@ f AS (
 ),
 s AS (
   SELECT max(n) AS n,
-         CAST(sum(CAST(round(((2.0 * i - 1) * ln(fz)
-                              + (2.0 * n + 1 - 2.0 * i) * ln(1.0 - fz))
-                             * 1e9) AS HUGEINT)) AS DOUBLE) / 1e9 AS t
+         CAST(sum({sql_qlong(
+             '((2.0 * i - 1) * ln(fz) + (2.0 * n + 1 - 2.0 * i) * ln(1.0 - fz))', NANO, 'HUGEINT',
+         )}) AS DOUBLE) / 1e9 AS t
   FROM f
 )
 SELECT n AS n_days, round(-CAST(n AS DOUBLE) - t / n, 9) AS a_sq
@@ -6190,7 +6149,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_shipdate", "l_extendedprice", "l_discount"
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.round(
+        qlong(
             F.ln(
                 F.sum(
                     F.round(
@@ -6199,11 +6158,9 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * 100.0
                     ).cast("bigint")
                 ).cast("double")
-            )
-            * 1e9
-        )
-        .cast("bigint")
-        .alias("v")
+            ),
+            NANO,
+        ).alias("v")
     )
     vd = F.col("v").cast("decimal(38,0)")
     m = daily.agg(
@@ -6225,12 +6182,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("v") / 1e9 - F.col("mu")) / F.col("sigma")).alias("z"),
         "n",
     )
-    fz = 1.0 / (
-        1.0
-        + F.exp(
-            F.lit(-1.5976) * F.col("z") - F.lit(0.07056) * F.col("z") * F.col("z") * F.col("z")
-        )
-    )
+    fz = norm_cdf(F.col("z"))
     f = r.select("i", "n", fz.alias("fz"))
     term = (2.0 * F.col("i") - 1) * F.ln("fz") + (
         2.0 * F.col("n") + 1 - 2.0 * F.col("i")
@@ -6238,7 +6190,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = f.agg(
         F.max("n").alias("n"),
         (
-            F.sum(F.round(term * 1e9).cast("decimal(38,0)")).cast("double") / 1e9
+            F.sum(qlong(term, NANO, "decimal(38,0)")).cast("double") / 1e9
         ).alias("t"),
     )
     return s.select(
@@ -6458,7 +6410,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_theil() -> str:
-    return """
+    return f"""
 WITH x AS (
   SELECT CAST(round(c_acctbal * 100.0) AS BIGINT) AS v
   FROM customer WHERE c_acctbal > 0
@@ -6470,9 +6422,9 @@ m AS (
 ),
 t AS (
   SELECT max(m.n) AS n, max(m.mu) AS mu,
-         CAST(sum(CAST(round((v / m.mu) * ln(v / m.mu) * 1e9) AS BIGINT))
+         CAST(sum({sql_qlong('(v / m.mu) * ln(v / m.mu)', NANO)})
               AS BIGINT) AS st,
-         CAST(sum(CAST(round(ln(m.mu / v) * 1e9) AS BIGINT)) AS BIGINT) AS sl
+         CAST(sum({sql_qlong('ln(m.mu / v)', NANO)}) AS BIGINT) AS sl
   FROM x CROSS JOIN m
 )
 SELECT n, round(mu, 6) AS mean_cents,
@@ -6513,9 +6465,9 @@ def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = x.crossJoin(F.broadcast(m)).agg(
         F.max("n").alias("n"),
         F.max("mu").alias("mu"),
-        F.sum(F.round(r * F.ln(r) * 1e9).cast("bigint")).cast("bigint").alias("st"),
+        F.sum(qlong(r * F.ln(r), NANO)).cast("bigint").alias("st"),
         # mu/v directly (NOT 1/r): two divisions land differently in ulp
-        F.sum(F.round(F.ln(F.col("mu") / F.col("v")) * 1e9).cast("bigint"))
+        F.sum(qlong(F.ln(F.col("mu") / F.col("v")), NANO))
         .cast("bigint")
         .alias("sl"),
     )
@@ -6603,13 +6555,13 @@ def stats_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_gh_means() -> str:
-    return """
+    return f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
-       round(exp(CAST(sum(CAST(round(ln(value) * 1e9) AS HUGEINT)) AS DOUBLE)
+       round(exp(CAST(sum({sql_qlong('ln(value)', NANO, 'HUGEINT')}) AS DOUBLE)
                  / 1e9 / count(*)), 9) AS geometric_mean,
        round(count(*)
-             / (CAST(sum(CAST(round((1.0 / value) * 1e9) AS HUGEINT))
+             / (CAST(sum({sql_qlong('(1.0 / value)', NANO, 'HUGEINT')})
                      AS DOUBLE) / 1e9), 9) AS harmonic_mean
 FROM events WHERE value > 0
 GROUP BY 1 ORDER BY 1
@@ -6641,7 +6593,7 @@ def agg_geometric_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.round(
                 F.exp(
-                    F.sum(F.round(F.ln("value") * 1e9).cast("decimal(38,0)")).cast(
+                    F.sum(qlong(F.ln("value"), NANO, "decimal(38,0)")).cast(
                         "double"
                     )
                     / 1e9
@@ -6653,9 +6605,7 @@ def agg_geometric_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1))
                 / (
                     F.sum(
-                        F.round((F.lit(1.0) / F.col("value")) * 1e9).cast(
-                            "decimal(38,0)"
-                        )
+                        qlong(F.lit(1.0) / F.col("value"), NANO, "decimal(38,0)")
                     ).cast("double")
                     / 1e9
                 ),
@@ -6814,7 +6764,7 @@ e AS (
   FROM xi, m
 ),
 s2 AS (
-  SELECT (CAST(sum(CAST(round(resid * resid * 1e6) AS HUGEINT)) AS DOUBLE)
+  SELECT (CAST(sum({sql_qlong('resid * resid', cast='HUGEINT')}) AS DOUBLE)
           / 1e6) / (max(n) - 2) AS s2
   FROM e
 )
@@ -6898,7 +6848,7 @@ def stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s2 = e.agg(
         (
-            F.sum(F.round(F.col("resid") * F.col("resid") * 1e6).cast("decimal(38,0)")).cast(
+            F.sum(qlong(F.col("resid") * F.col("resid"), cast="decimal(38,0)")).cast(
                 "double"
             )
             / 1e6
@@ -6950,8 +6900,8 @@ bm AS (
 ),
 dev AS (
   SELECT blk.s, blk.b, blk.i,
-         CAST(round((x - m) * 1e9) AS BIGINT) AS d9,
-         CAST(round((x - m) * (x - m) * 1e9) AS BIGINT) AS dd9
+         {sql_qlong('(x - m)', NANO)} AS d9,
+         {sql_qlong('(x - m) * (x - m)', NANO)} AS dd9
   FROM blk JOIN bm ON blk.s = bm.s AND blk.b = bm.b
 ),
 y AS (
@@ -6969,10 +6919,8 @@ rs AS (
 ),
 pt AS (
   SELECT s,
-         CAST(round(ln(CAST(s AS DOUBLE)) * 1e9) AS BIGINT) AS a,
-         CAST(round(ln((CAST(SUM(CAST(round(rs_b * 1000000.0) AS HUGEINT))
-                             AS DOUBLE) / count(*)) / 1000000.0) * 1e9)
-              AS BIGINT) AS bb
+         {sql_qlong('ln(CAST(s AS DOUBLE))', NANO)} AS a,
+         {sql_qlong(f"ln((CAST(SUM({sql_qlong('rs_b', cast='HUGEINT')}) AS DOUBLE) / count(*)) / 1000000.0)", NANO)} AS bb
   FROM rs GROUP BY s
 ),
 f AS (
@@ -7043,9 +6991,8 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s",
         "b",
         "i",
-        F.round((F.col("x") - F.col("m")) * 1e9).cast("bigint").alias("d9"),
-        F.round((F.col("x") - F.col("m")) * (F.col("x") - F.col("m")) * 1e9)
-        .cast("bigint")
+        qlong(F.col("x") - F.col("m"), NANO).alias("d9"),
+        qlong((F.col("x") - F.col("m")) * (F.col("x") - F.col("m")), NANO)
         .alias("dd9"),
     )
     wy = (
@@ -7063,21 +7010,15 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rs_b")
     )
     pt = rs.groupBy("s").agg(
-        F.round(F.ln(F.col("s").cast("double")) * 1e9)
-        .cast("bigint")
-        .alias("a"),
-        F.round(
+        qlong(F.ln(F.col("s").cast("double")), NANO).alias("a"),
+        qlong(
             F.ln(
-                F.sum(F.round(F.col("rs_b") * 1e6).cast("decimal(38,0)")).cast(
-                    "double"
-                )
+                F.sum(qlong("rs_b", cast="decimal(38,0)")).cast("double")
                 / F.count(F.lit(1))
                 / 1e6
-            )
-            * 1e9
-        )
-        .cast("bigint")
-        .alias("bb"),
+            ),
+            NANO,
+        ).alias("bb"),
     )
     ad = F.col("a").cast("decimal(38,0)")
     f = pt.agg(
@@ -7362,13 +7303,11 @@ def stats_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are INTEGER NANO-GRID LITERALS computed once here, so both engines do
 # pure integer arithmetic end-to-end (the catalog's float-literal
 # discipline: no ln() evaluated inside either engine).
-import math as _math
-
 _SPRT_P0, _SPRT_P1 = 0.18, 0.22
-_SPRT_L1_9 = round(_math.log(_SPRT_P1 / _SPRT_P0) * 1e9)  # per-success LLR
-_SPRT_L0_9 = round(_math.log((1 - _SPRT_P1) / (1 - _SPRT_P0)) * 1e9)  # per-failure
-_SPRT_A9 = round(_math.log((1 - 0.10) / 0.05) * 1e9)  # accept-H1 boundary
-_SPRT_B9 = round(_math.log(0.10 / (1 - 0.05)) * 1e9)  # accept-H0 boundary
+_SPRT_L1_9 = round(math.log(_SPRT_P1 / _SPRT_P0) * 1e9)  # per-success LLR
+_SPRT_L0_9 = round(math.log((1 - _SPRT_P1) / (1 - _SPRT_P0)) * 1e9)  # per-failure
+_SPRT_A9 = round(math.log((1 - 0.10) / 0.05) * 1e9)  # accept-H1 boundary
+_SPRT_B9 = round(math.log(0.10 / (1 - 0.05)) * 1e9)  # accept-H0 boundary
 
 
 def _sql_sprt() -> str:
@@ -7477,7 +7416,7 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_fisher() -> str:
-    return """
+    return f"""
 WITH m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(count(*) FILTER (WHERE s_acctbal > 5000.0) AS BIGINT) AS r1,
@@ -7489,7 +7428,7 @@ WITH m AS (
 lf AS (
   SELECT i,
          sum(CASE WHEN i = 0 THEN 0
-                  ELSE CAST(round(ln(CAST(i AS DOUBLE)) * 1e9) AS BIGINT) END)
+                  ELSE {sql_qlong('ln(CAST(i AS DOUBLE))', NANO)} END)
            OVER (ORDER BY i) AS v
   FROM (SELECT unnest(generate_series(0, (SELECT n FROM m))) AS i)
 ),
@@ -7521,8 +7460,7 @@ lp AS (
 obs AS (SELECT logp9 AS obs9 FROM lp WHERE kk = a_obs)
 SELECT min(lp.n) AS n, min(lp.r1) AS r1, min(lp.c1) AS c1,
        min(lp.a_obs) AS a_obs,
-       round(CAST(sum(CAST(round(exp(CAST(lp.logp9 AS DOUBLE) / 1e9) * 1e12)
-                           AS BIGINT))
+       round(CAST(sum({sql_qlong('exp(CAST(lp.logp9 AS DOUBLE) / 1e9)', 1e12)})
                       FILTER (WHERE lp.logp9 <= obs.obs9) AS DOUBLE)
              / 1e12, 9) AS p_two_sided
 FROM lp CROSS JOIN obs
@@ -7571,7 +7509,7 @@ def stats_fisher_exact_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "i",
             F.when(F.col("i") == 0, F.lit(0))
-            .otherwise(F.round(F.log(F.col("i").cast("double")) * 1e9).cast("bigint"))
+            .otherwise(qlong(F.log(F.col("i").cast("double")), NANO))
             .alias("t"),
         )
         .select(
@@ -7620,7 +7558,7 @@ def stats_fisher_exact_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = lp.filter(F.col("kk") == F.col("a_obs")).select(
         F.col("logp9").alias("obs9")
     )
-    term = F.round(F.exp(F.col("logp9").cast("double") / 1e9) * 1e12).cast("bigint")
+    term = qlong(F.exp(F.col("logp9").cast("double") / 1e9), 1e12)
     return (
         lp.crossJoin(F.broadcast(obs))
         .agg(

@@ -11,25 +11,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, register, _t
-from .datapipe import text as tx
-from .functions import davg, dsum, nsum
-from .catalog import SQL_DSUM, register, _t
-from .functions import dsum
-from pyspark.sql import DataFrame, SparkSession
-from .datapipe.hashing import hash60, sql_hash60
-from .functions import davg
-from .catalog import register, _t
+
+from .catalog import _t, register
 from .datapipe import lm
-from .datapipe.sampling import RESOLUTION, _gate, sql_gate
-from .datapipe.util import fan_out
-from .datapipe.sampling import RESOLUTION
-from .operators.equidepth import grouped_value_counts_cum
+from .datapipe import text as tx
+from .datapipe.hashing import hash60, sql_hash60
 from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split
-from .catalog import SQL_DAVG, _t, register
+from .datapipe.util import fan_out
+from .functions.aggregates import NANO, SQL_DSUM, SQL_NSUM, dsum, nsum, qlong, sql_qlong
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
+    grouped_value_counts_cum,
     sql_cuts_ctes,
 )
 
@@ -871,7 +864,7 @@ ws AS (
 ),
 sc AS (
   SELECT pw.doc_id, pw.pos, pw.phrase,
-         CAST(sum(CAST(round(CAST(ws.deg AS DOUBLE) / ws.freq * 1e9) AS BIGINT))
+         CAST(sum({sql_qlong('CAST(ws.deg AS DOUBLE) / ws.freq', NANO)})
            AS BIGINT) AS score_q
   FROM pw JOIN ws ON pw.doc_id = ws.doc_id AND pw.word = ws.word
   GROUP BY pw.doc_id, pw.pos, pw.phrase
@@ -929,9 +922,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "pos", "phrase")
         .agg(
             F.sum(
-                F.round(F.col("deg").cast("double") / F.col("freq") * 1e9).cast(
-                    "bigint"
-                )
+                qlong(F.col("deg").cast("double") / F.col("freq"), NANO)
             ).alias("score_q")
         )
     )
@@ -955,7 +946,6 @@ def _sql_info_gain() -> str:
     h = _PLOGP.format(p="d / CAST(n AS DOUBLE)")
     hp = _PLOGP.format(p="n1 / CAST(n1_tot AS DOUBLE)")
     ha = _PLOGP.format(p="(d - n1) / CAST(n - n1_tot AS DOUBLE)")
-    q = "CAST(SUM(CAST(round(({t}) * 1000000.0) AS HUGEINT)) AS DOUBLE) / 1000000.0"
     return f"""
 WITH pres AS (
   SELECT DISTINCT doc_id, lang, unnest({toks}) AS tok FROM documents
@@ -965,7 +955,7 @@ lang_tot AS (
 ),
 ntot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
 h_lang AS (
-  SELECT -({q.format(t=h)}) AS h0 FROM lang_tot CROSS JOIN ntot
+  SELECT -({SQL_DSUM.format(x=h)}) AS h0 FROM lang_tot CROSS JOIN ntot
 ),
 grid AS (
   SELECT t.tok, l.lang, l.d, COALESCE(c.n1, 0) AS n1
@@ -986,8 +976,8 @@ terms AS (
 ),
 ent AS (
   SELECT tok, min(n1_tot) AS df,
-         -({q.format(t="tp")}) AS h_pres,
-         -({q.format(t="ta")}) AS h_abs,
+         -({SQL_DSUM.format(x="tp")}) AS h_pres,
+         -({SQL_DSUM.format(x="ta")}) AS h_abs,
          min(n1_tot) / CAST(min(n) AS DOUBLE) AS w_pres
   FROM terms GROUP BY tok
 )
@@ -1772,8 +1762,7 @@ cf AS (
 ),
 kq AS (
   SELECT CAST(count(*) AS BIGINT) AS nq,
-         CAST(sum(CAST(round(ln({_QL_MU} * (CAST(cf AS DOUBLE) / ct)) * 1e9)
-                       AS BIGINT)) AS BIGINT) AS kq
+         CAST(sum({sql_qlong(f'ln({_QL_MU} * (CAST(cf AS DOUBLE) / ct))', NANO)}) AS BIGINT) AS kq
   FROM cf, ctot
 ),
 tf AS (
@@ -1782,9 +1771,9 @@ tf AS (
 ),
 sd AS (
   SELECT t.doc_id,
-         CAST(sum(CAST(round((ln(t.tf + {_QL_MU} * (CAST(c.cf AS DOUBLE) / ct))
-                              - ln({_QL_MU} * (CAST(c.cf AS DOUBLE) / ct)))
-                             * 1e9) AS BIGINT)) AS BIGINT) AS sd
+         CAST(sum({sql_qlong(
+             f'(ln(t.tf + {_QL_MU} * (CAST(c.cf AS DOUBLE) / ct)) - ln({_QL_MU} * (CAST(c.cf AS DOUBLE) / ct)))', NANO,
+         )}) AS BIGINT) AS sd
   FROM tf t JOIN cf c USING (w) CROSS JOIN ctot
   GROUP BY t.doc_id
 ),
@@ -1846,7 +1835,7 @@ def search_query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataF
         cf.crossJoin(F.broadcast(ctot))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("nq"),
-            F.sum(F.round(F.log(pw) * 1e9).cast("bigint"))
+            F.sum(qlong(F.log(pw), NANO))
             .cast("bigint")
             .alias("kq"),
         )
@@ -1860,7 +1849,7 @@ def search_query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataF
         .crossJoin(F.broadcast(ctot))
         .groupBy("doc_id")
         .agg(
-            F.sum(F.round(contrib * 1e9).cast("bigint"))
+            F.sum(qlong(contrib, NANO))
             .cast("bigint")
             .alias("sd")
         )
@@ -2187,7 +2176,7 @@ SELECT lang, source,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(count(*) FILTER (WHERE score >= {_CODE_THRESHOLD}) AS BIGINT)
          AS flagged_code,
-       round((CAST(SUM(CAST(round(score * 1000000.0) AS HUGEINT)) AS DOUBLE)
+       round((CAST(SUM({sql_qlong('score', cast='HUGEINT')}) AS DOUBLE)
                 / count(*)) / 1000000.0, 9) AS mean_score
 FROM scored GROUP BY 1, 2 ORDER BY 1, 2
 """
@@ -2233,7 +2222,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("flagged_code"),
             F.round(
-                F.sum(F.round(F.col("score") * 1e6).cast("decimal(38,0)")).cast(
+                F.sum(qlong("score", cast="decimal(38,0)")).cast(
                     "double"
                 )
                 / F.count(F.lit(1))
@@ -2277,8 +2266,8 @@ vcum AS (
   GROUP BY cp
 ),
 pts AS (
-  SELECT CAST(round(ln(n_tokens) * 1e9) AS BIGINT) AS a,
-         CAST(round(ln(v_types) * 1e9) AS BIGINT) AS b
+  SELECT {sql_qlong('ln(n_tokens)', NANO)} AS a,
+         {sql_qlong('ln(v_types)', NANO)} AS b
   FROM ncum JOIN vcum USING (cp)
 ),
 s AS (
@@ -2348,8 +2337,8 @@ def vocab_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("v_types"))
     )
     pts = ncum.join(F.broadcast(vcum), "cp").select(
-        F.round(F.ln("n_tokens") * 1e9).cast("bigint").alias("a"),
-        F.round(F.ln("v_types") * 1e9).cast("bigint").alias("b"),
+        qlong(F.ln("n_tokens"), NANO).alias("a"),
+        qlong(F.ln("v_types"), NANO).alias("b"),
     )
     ad = F.col("a").cast("decimal(38,0)")
     bd = F.col("b").cast("decimal(38,0)")

@@ -11,16 +11,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from .catalog import SQL_DAVG, SQL_DSUM, SQL_NSUM, register, _t
-from .functions import davg, dsum, nano_comoment, nsum
-from .catalog import register, _t
-from .catalog import SQL_DSUM, register, _t
-from .functions import davg
-from pyspark.sql import DataFrame, SparkSession
-from .catalog import SQL_DAVG, register, _t
-from .functions.aggregates import davg
+
+from .catalog import _t, register
+from .functions.aggregates import (
+    MICRO,
+    NANO,
+    SQL_DAVG,
+    SQL_DSUM,
+    SQL_NSUM,
+    davg,
+    dsum,
+    nano_comoment,
+    nsum,
+    qlong,
+    sql_qlong,
+)
+from .functions.scalars import SQL_NORM_CDF, norm_cdf
 from .operators.rolling import centered_rolling_mean
-from .catalog import SQL_DAVG, _t, register
 
 
 @register(
@@ -145,7 +152,7 @@ spine AS (
 ),
 obs AS (
   SELECT user_id, date_trunc('hour', ts) AS h,
-         round((CAST(SUM(CAST(round(value * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         round((CAST(SUM({sql_qlong('value', cast='HUGEINT')}) AS DOUBLE)
                 / count(*)) / 1000000.0, 9) AS y
   FROM events WHERE user_id <= {_LOCF_MAX_USER}
   GROUP BY 1, 2
@@ -190,7 +197,7 @@ def gapfill_locf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("user_id") <= _LOCF_MAX_USER).select("user_id").distinct()
     )
     spine = users.crossJoin(F.broadcast(hours))
-    micro = F.sum(F.round(F.col("value") * 1000000.0).cast("long"))
+    micro = F.sum(qlong("value"))
     obs = (
         ev.filter(F.col("user_id") <= _LOCF_MAX_USER)
         .groupBy("user_id", F.date_trunc("hour", "ts").alias("h"))
@@ -229,8 +236,7 @@ num AS (
   SELECT event_type, ts, event_id, value, len(arr) AS n,
          list_aggregate(
            list_transform(range(1, len(arr) + 1),
-             i -> CAST(round(arr[i] * pow(0.5, len(arr) - i) * 1000000000.0)
-                       AS BIGINT)),
+             i -> {sql_qlong('arr[i] * pow(0.5, len(arr) - i)', NANO)}),
            'sum') AS s
   FROM arrs
 )
@@ -263,9 +269,7 @@ def w_ewma_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = None
     for k in range(_EWMA_W):
         term = F.coalesce(
-            F.round(F.lag("value", k).over(w) * F.lit(0.5**k) * F.lit(1e9)).cast(
-                "bigint"
-            ),
+            qlong(F.lag("value", k).over(w) * F.lit(0.5**k), NANO),
             F.lit(0).cast("bigint"),
         )
         num = term if num is None else num + term
@@ -436,7 +440,7 @@ def _sql_acf() -> str:
         f"lead(x, {k}) OVER (ORDER BY h) AS x{k}" for k in range(1, _ACF_MAX_LAG + 1)
     )
     nums = ",\n    ".join(
-        f"CAST(sum(CAST(round((x - xbar) * (x{k} - xbar) * 1e9) AS BIGINT)) AS BIGINT)"
+        f"CAST(sum({sql_qlong(f'(x - xbar) * (x{k} - xbar)', NANO)}) AS BIGINT)"
         f" AS num{k}"
         for k in range(1, _ACF_MAX_LAG + 1)
     )
@@ -457,7 +461,7 @@ led AS (
 ),
 s AS (
   SELECT
-    CAST(sum(CAST(round((x - xbar) * (x - xbar) * 1e9) AS BIGINT)) AS BIGINT) AS denom,
+    CAST(sum({sql_qlong('(x - xbar) * (x - xbar)', NANO)}) AS BIGINT) AS denom,
     {nums}
   FROM led
 )
@@ -545,7 +549,7 @@ res AS (
   FROM de JOIN seas ON hour(de.h) = seas.hod
 ),
 sig AS (
-  SELECT sqrt(CAST(sum(CAST(round(resid * resid * 1e9) AS BIGINT)) AS DOUBLE)
+  SELECT sqrt(CAST(sum({sql_qlong('resid * resid', NANO)}) AS DOUBLE)
               / count(*) / 1e9) AS sigma
   FROM res
 )
@@ -583,7 +587,7 @@ def ts_stl_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = res.agg(
         F.sqrt(
-            F.sum(F.round(F.col("resid") * F.col("resid") * 1e9).cast("bigint")).cast(
+            F.sum(qlong(F.col("resid") * F.col("resid"), NANO)).cast(
                 "double"
             )
             / F.count(F.lit(1))
@@ -709,7 +713,7 @@ _TWA_MAX_USER = 200
 _SQL_TWA = f"""
 WITH s AS (
   SELECT user_id, epoch_us(ts) AS t, value,
-         CAST(round(value * 1000000.0) AS BIGINT) AS vm
+         {sql_qlong('value')} AS vm
   FROM events WHERE user_id <= {_TWA_MAX_USER}
 ),
 seg AS (
@@ -749,7 +753,7 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros("ts").alias("t"),
         "value",
-        F.round(F.col("value") * 1000000.0).cast("long").alias("vm"),
+        qlong("value").alias("vm"),
     )
     w = Window.partitionBy("user_id").orderBy("t", "vm")
     seg = s.withColumn("t_next", F.lead("t").over(w))
@@ -775,10 +779,10 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PEAKS = """
+_SQL_PEAKS = f"""
 WITH hourly AS (
   SELECT date_trunc('hour', ts) AS h,
-         round((CAST(SUM(CAST(round(value * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         round((CAST(SUM({sql_qlong('value', cast='HUGEINT')}) AS DOUBLE)
                 / count(*)) / 1000000.0, 9) AS y
   FROM events GROUP BY 1
 ),
@@ -808,7 +812,7 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours-sized; the threshold is a 1-row broadcast; endpoints are
     excluded (no one-sided peaks)."""
     ev = _t(spark, sf_dir, "events")
-    micro = F.sum(F.round(F.col("value") * 1000000.0).cast("long"))
+    micro = F.sum(qlong("value"))
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.round((micro.cast("double") / F.count(F.lit(1))) / 1000000.0, 9).alias("y")
     )
@@ -1143,7 +1147,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_pacf() -> str:
     leads = ", ".join(f"lead(x, {k}) OVER (ORDER BY d) AS x{k}" for k in (1, 2, 3))
     nums = ",\n    ".join(
-        f"CAST(sum(CAST(round((x - xbar) * (x{k} - xbar) * 1e9) AS BIGINT)) AS BIGINT)"
+        f"CAST(sum({sql_qlong(f'(x - xbar) * (x{k} - xbar)', NANO)}) AS BIGINT)"
         f" AS num{k}"
         for k in (1, 2, 3)
     )
@@ -1160,7 +1164,7 @@ m AS (
 led AS (SELECT x, xbar, n_days, {leads} FROM daily, m),
 s AS (
   SELECT any_value(n_days) AS n_days,
-    CAST(sum(CAST(round((x - xbar) * (x - xbar) * 1e9) AS BIGINT)) AS BIGINT) AS denom,
+    CAST(sum({sql_qlong('(x - xbar) * (x - xbar)', NANO)}) AS BIGINT) AS denom,
     {nums}
   FROM led
 ),
@@ -1287,7 +1291,7 @@ bucketed AS (
 ),
 anchors AS (
   SELECT bkt,
-         CAST(round(CAST(sum(x) AS DOUBLE) / count(*) * 1000000.0) AS BIGINT)
+         {sql_qlong('CAST(sum(x) AS DOUBLE) / count(*)')}
            AS axq,
          CAST(round(CAST(sum(CAST(y AS HUGEINT)) AS DOUBLE) / count(*)) AS BIGINT)
            AS ayq,
@@ -1380,8 +1384,7 @@ def ts_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
     )
     anchors = bucketed.groupBy("bkt").agg(
-        F.round(F.sum("x").cast("double") / F.count(F.lit(1)) * 1000000.0)
-        .cast("bigint")
+        qlong(F.sum("x").cast("double") / F.count(F.lit(1)))
         .alias("axq"),
         F.round(
             F.sum(F.col("y").cast("decimal(38,0)")).cast("double")
@@ -1441,7 +1444,6 @@ def ts_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _STR_W = 25  # the ts_stl_residual_outliers trend window
-_Q = 1e6  # micro-unit grid for component values, nano for squares
 def _sql_seasonal_strength() -> str:
     davg_val = SQL_DAVG.format(x="value")
     half = _STR_W // 2
@@ -1449,13 +1451,13 @@ def _sql_seasonal_strength() -> str:
     def var(z: str, mean_alias: str) -> str:
         # E[z^2] - E[z]^2 on the nano/micro grid — identical text Spark-side
         return (
-            f"(CAST(sum(CAST(round(({z}) * ({z}) * 1e9) AS HUGEINT)) AS DOUBLE)"
+            f"(CAST(sum({sql_qlong(f'({z}) * ({z})', NANO, 'HUGEINT')}) AS DOUBLE)"
             f" / count(*) / 1e9"
             f" - {mean_alias} * {mean_alias})"
         )
 
     mean = (
-        "(CAST(sum(CAST(round(({z}) * 1e6) AS HUGEINT)) AS DOUBLE)"
+        f"(CAST(sum({sql_qlong('{z}', cast='HUGEINT')}) AS DOUBLE)"
         " / count(*) / 1e6)"
     )
     return f"""
@@ -1536,14 +1538,14 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def mean_of(z):
         return (
-            F.sum(F.round(z * _Q).cast("decimal(38,0)")).cast("double")
+            F.sum(qlong(z, cast="decimal(38,0)")).cast("double")
             / F.count(F.lit(1))
-            / _Q
+            / MICRO
         )
 
     def sq_of(z):
         return (
-            F.sum(F.round(z * z * 1e9).cast("decimal(38,0)")).cast("double")
+            F.sum(qlong(z * z, NANO, "decimal(38,0)")).cast("double")
             / F.count(F.lit(1))
             / 1e9
         )
@@ -1691,7 +1693,7 @@ paa AS (
 m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          {davg_p} AS mu,
-         (CAST(SUM(CAST(round(p * p * 1000000.0) AS HUGEINT)) AS DOUBLE)
+         (CAST(SUM({sql_qlong('p * p', cast='HUGEINT')}) AS DOUBLE)
             / count(*)) / 1000000.0 AS m2
   FROM paa
 ),
@@ -1741,7 +1743,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         davg("p").alias("mu"),
         (
-            F.sum(F.round(F.col("p") * F.col("p") * 1e6).cast("decimal(38,0)")).cast(
+            F.sum(qlong(F.col("p") * F.col("p"), cast="decimal(38,0)")).cast(
                 "double"
             )
             / F.count(F.lit(1))
@@ -1954,7 +1956,7 @@ def ts_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_entropy_rate() -> str:
-    return """
+    return f"""
 WITH seq AS (
   SELECT event_type AS src,
          lead(event_type) OVER (PARTITION BY user_id
@@ -1968,9 +1970,9 @@ cnt AS (
 rowt AS (SELECT src, CAST(sum(n) AS BIGINT) AS row_n FROM cnt GROUP BY 1),
 tot AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM cnt),
 h AS (
-  SELECT CAST(sum(CAST(round(-(CAST(c.n AS DOUBLE) / t.t)
-                             * ln(CAST(c.n AS DOUBLE) / r.row_n) * 1e9)
-                       AS BIGINT)) AS BIGINT) AS h9,
+  SELECT CAST(sum({sql_qlong(
+      '-(CAST(c.n AS DOUBLE) / t.t) * ln(CAST(c.n AS DOUBLE) / r.row_n)', NANO,
+  )}) AS BIGINT) AS h9,
          max(t.t) AS t
   FROM cnt c JOIN rowt r USING (src) CROSS JOIN tot t
 )
@@ -2025,7 +2027,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         cnt.join(F.broadcast(rowt), "src")
         .crossJoin(F.broadcast(tot))
         .agg(
-            F.sum(F.round(term * 1e9).cast("bigint")).cast("bigint").alias("h9"),
+            F.sum(qlong(term, NANO)).cast("bigint").alias("h9"),
             F.max("t").alias("t"),
         )
     )
@@ -2192,9 +2194,8 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_granger() -> str:
-    from .catalog_stats import _PHI
 
-    phi = _PHI.format(z="abs(tt)")
+    phi = SQL_NORM_CDF.format(z="abs(tt)")
     # zero-variance guard (the r8 latent class): the moment products are
     # exact integers, so the degenerate-series test is pure integer
     # comparison — NULL on both engines instead of NaN-vs-error
@@ -2347,9 +2348,7 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(-F.sqrt(fcol))
     ft = pc.select("n", "rp", fcol.alias("f"), tt.alias("tt"))
     z = F.abs(F.col("tt"))
-    phi = 1.0 / (
-        1.0 + F.exp(-1.5976 * z - 0.07056 * z * z * z)
-    )
+    phi = norm_cdf(z)
     return ft.select(
         "n",
         F.round("rp", 9).alias("r_partial"),

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import SQL_DAVG, SQL_DSUM, register, _t
-from .functions import davg, dsum
+from .catalog import _t, register
+from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum
 
 _DISC_PRICE = "l_extendedprice * (1 - l_discount)"
 

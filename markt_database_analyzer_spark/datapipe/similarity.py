@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.aggregates import NANO, sql_qlong
 from .util import fan_out
 
 
@@ -286,38 +287,45 @@ def kmeans_model(
     all ``iters`` Lloyd rounds (assignment pass + centroid
     re-estimation) and the returned assignment read the cached frame
     instead of re-scanning the source and re-paying the fan_out
-    exchange (MEMORY_AND_DISK: spills, never OOMs). Cache lifetime follows
-    the same caller-owned contract as the returned assignment."""
+    exchange (MEMORY_AND_DISK: spills, never OOMs). That pin is released
+    before returning, once the returned assignment is materialized in its
+    own cache; the assignment's cache is the caller's to release."""
     base = fan_out(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    seed_rows = (
-        base.orderBy(id_col)
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("centroid"))
-        .collect()
-    )
-    # cell ids by ascending centroid (lexicographic — matches Spark's
-    # array ordering), same as the historical row_number() seeding.
-    cents = [(i, list(r["centroid"])) for i, r in enumerate(sorted(seed_rows, key=lambda r: list(r["centroid"])))]
-    assigned = base
-    for i in range(iters):
-        assigned = assign_cells_local(base, cents, id_col, vec_col)
-        if i < iters - 1:
-            # Re-estimated centroids are rounded to 9 dp at the collect
-            # boundary: the mean's last ulps depend on partial-agg merge
-            # order (Spark) and engine (DuckDB oracle replay), so the
-            # literals re-injected into the next assignment pass are pinned
-            # to a representation every engine reproduces exactly. Seeds
-            # are NOT rounded — they are raw corpus values (float32→double
-            # is exact everywhere).
-            cents = [
-                (int(r["cell"]), [round(float(v), 9) for v in r["centroid"]])
-                for r in ivf_centroids(assigned, cell_col="cell", vec_col=vec_col).collect()
-            ]
-    # persist the final assignment: every IVF consumer (centroid
-    # estimation, probe, scoring) branches off it, and recomputing the
-    # assignment pass per branch dominates otherwise. The caller owns the
-    # cache lifetime (same contract as MLlib model dataframes).
-    return assigned.persist(), cents
+    try:
+        seed_rows = (
+            base.orderBy(id_col)
+            .limit(k)
+            .select(F.col(vec_col).cast("array<double>").alias("centroid"))
+            .collect()
+        )
+        # cell ids by ascending centroid (lexicographic — matches Spark's
+        # array ordering), same as the historical row_number() seeding.
+        cents = [(i, list(r["centroid"])) for i, r in enumerate(sorted(seed_rows, key=lambda r: list(r["centroid"])))]
+        assigned = base
+        for i in range(iters):
+            assigned = assign_cells_local(base, cents, id_col, vec_col)
+            if i < iters - 1:
+                # Re-estimated centroids are rounded to 9 dp at the collect
+                # boundary: the mean's last ulps depend on partial-agg merge
+                # order (Spark) and engine (DuckDB oracle replay), so the
+                # literals re-injected into the next assignment pass are pinned
+                # to a representation every engine reproduces exactly. Seeds
+                # are NOT rounded — they are raw corpus values (float32→double
+                # is exact everywhere).
+                cents = [
+                    (int(r["cell"]), [round(float(v), 9) for v in r["centroid"]])
+                    for r in ivf_centroids(assigned, cell_col="cell", vec_col=vec_col).collect()
+                ]
+        # persist the final assignment: every IVF consumer (centroid
+        # estimation, probe, scoring) branches off it, and recomputing the
+        # assignment pass per branch dominates otherwise. The caller owns the
+        # cache lifetime (same contract as MLlib model dataframes). Materialize
+        # it first so that releasing ``base`` costs no consumer a re-scan.
+        assigned = assigned.persist()
+        assigned.count()
+    finally:
+        base.unpersist()
+    return assigned, cents
 
 
 # ---------------------------------------------------------------------------
@@ -828,7 +836,7 @@ def _qdist_expr(vec_col: str, cvec: list[float]) -> str:
     arr = ", ".join(_dlit(v) for v in cvec)
     return (
         f"aggregate(zip_with(cast(`{vec_col}` as array<double>), array({arr}), "
-        "(x, y) -> cast(round((x - y) * (x - y) * 1e9) as bigint)), "
+        f"(x, y) -> {sql_qlong('(x - y) * (x - y)', NANO)}), "
         "cast(0 as bigint), (acc, t) -> acc + t)"
     )
 

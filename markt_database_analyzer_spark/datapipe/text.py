@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.aggregates import NANO, qlong, sql_qlong
 from .hashing import hash60, sql_hash60
 
 # Tiny built-in stopword lists for the language-ID heuristic. A real
@@ -532,7 +533,7 @@ def entropy_frame(
     counts = ex.groupBy(id_col, "_sym").agg(F.count(F.lit(1)).alias("_c"))
     totals = counts.groupBy(id_col).agg(F.sum("_c").alias("_n"))
     p = F.col("_c").cast("double") / F.col("_n").cast("double")
-    term_q = F.round(p * F.log2(p) * F.lit(1e9)).cast("long")
+    term_q = qlong(p * F.log2(p), NANO)
     return (
         counts.join(totals, id_col)
         .groupBy(id_col)
@@ -549,7 +550,7 @@ def sql_entropy_cte(table: str, id_expr: str, items_expr: str, out_col: str) -> 
   SELECT id,
          round(-(sum(term_q) / 1e9), 9) AS {out_col}
   FROM (
-    SELECT id, CAST(round((c / n) * log2(c / n) * 1e9) AS BIGINT) AS term_q
+    SELECT id, {sql_qlong('(c / n) * log2(c / n)', NANO)} AS term_q
     FROM (
       SELECT id, sym, CAST(count(*) AS DOUBLE) AS c,
              CAST(sum(count(*)) OVER (PARTITION BY id) AS DOUBLE) AS n

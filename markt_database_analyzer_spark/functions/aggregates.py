@@ -40,8 +40,14 @@ the micro grid (~9.7e15 on the nano grid). Past any of these ANSI mode
 raises ``SparkArithmeticException``; nothing wraps silently.
 
 Callers that need raw-float semantics use plain ``F.sum``/``F.avg``.
-The DuckDB twins of these helpers are ``catalog.SQL_DSUM``, ``SQL_DAVG``
-and ``SQL_NSUM``.
+
+This module is the one place that knows how a value is put on the grid,
+on both engines: :func:`qlong` (Spark) and :func:`sql_qlong` (DuckDB SQL,
+also valid Spark SQL inside ``F.expr``) are the quantize step, and
+``SQL_DSUM``/``SQL_DAVG``/``SQL_NSUM`` below are the DuckDB twins of
+``dsum``/``davg``/``nsum``, built from ``sql_qlong``. Callers keep their
+own accumulator (long sum, :func:`exact_long_sum`, decimal, HUGEINT
+product) and only take the quantize step from here.
 """
 
 from __future__ import annotations
@@ -80,28 +86,57 @@ def exact_long_sum(q: Column) -> Column:
     )
 
 
-def _qlong(col: Column | str, scale: float = MICRO) -> Column:
+def qlong(col: Column | str, scale: float = MICRO, cast: str = "long") -> Column:
+    """Put a value on the grid: ``round(x · scale)`` as an integer,
+    rounding half away from zero (the rounding DuckDB's ``round`` also
+    uses). ``scale`` is the number of grid units per value unit
+    (``MICRO``, ``NANO``). ``cast`` is ``long`` (|x · scale| < 2^63, or
+    ANSI mode raises) or ``decimal(38,0)`` for a site that accumulates
+    past the long range. Past 2^53 Spark casts a double to decimal through
+    its shortest decimal string and DuckDB keeps its exact binary value,
+    so there the two engines agree only where those coincide.
+    :func:`sql_qlong` renders the same step for DuckDB."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("double") * F.lit(scale)).cast("long")
+    return F.round(c.cast("double") * F.lit(scale)).cast(cast)
+
+
+def sql_qlong(expr: str, scale: float = MICRO, cast: str = "BIGINT") -> str:
+    """SQL twin of :func:`qlong`: ``CAST(round((expr) * scale) AS cast)``.
+    ``cast`` is ``BIGINT`` for a value that feeds a long sum or is kept
+    as a column, ``HUGEINT`` or ``DECIMAL(38,0)`` where the sum must
+    accumulate past 2^63. The scale renders as a DECIMAL literal in
+    DuckDB: a DOUBLE ``expr`` gives the same product as :func:`qlong`,
+    but a FLOAT one would multiply in single precision, so cast FLOAT
+    operands to DOUBLE first."""
+    return f"CAST(round(({expr}) * {scale!r}) AS {cast})"
+
+
+# DuckDB renderings of dsum()/davg()/nsum().
+SQL_DSUM = f"(CAST(SUM({sql_qlong('{x}', cast='HUGEINT')}) AS DOUBLE) / {MICRO!r})"
+SQL_DAVG = (
+    f"(CAST(SUM({sql_qlong('{x}', cast='HUGEINT')}) AS DOUBLE)"
+    f" / COUNT({{x}}) / {MICRO!r})"
+)
+SQL_NSUM = f"(CAST(SUM({sql_qlong('{x}', NANO, 'HUGEINT')}) AS DOUBLE) / {NANO!r})"
 
 
 def dsum(col: Column | str) -> Column:
     """Order-insensitive (deterministic) sum of a double column, as double,
     quantized at 1e-6."""
-    return (exact_long_sum(_qlong(col)).cast("double") / F.lit(MICRO)).alias("dsum")
+    return (exact_long_sum(qlong(col)).cast("double") / F.lit(MICRO)).alias("dsum")
 
 
 def davg(col: Column | str) -> Column:
     """Deterministic mean (nulls excluded from numerator and denominator,
     matching ``avg`` and pandas ``mean(skipna=True)``), quantized at 1e-6."""
     c = F.col(col) if isinstance(col, str) else col
-    return ((exact_long_sum(_qlong(c)).cast("double") / F.count(c)) / F.lit(MICRO)).alias("davg")
+    return ((exact_long_sum(qlong(c)).cast("double") / F.count(c)) / F.lit(MICRO)).alias("davg")
 
 
 def nsum(col: Column | str) -> Column:
     """:func:`dsum`'s construction on the 1e-9 grid, for summed quantities
     of order 1/N where the 1e-6 grid would destroy the signal."""
-    return exact_long_sum(_qlong(col, NANO)).cast("double") / F.lit(NANO)
+    return exact_long_sum(qlong(col, NANO)).cast("double") / F.lit(NANO)
 
 
 def nano_comoment(a: Column, b: Column, mean: Column) -> Column:
@@ -110,4 +145,4 @@ def nano_comoment(a: Column, b: Column, mean: Column) -> Column:
     autocovariance (``a`` a series, ``b`` its lag, ``mean`` their shared
     mean). Integer totals compose exactly, so ratios of two comoments are
     identical across engines and partitionings."""
-    return F.sum(F.round((a - mean) * (b - mean) * NANO).cast("bigint"))
+    return F.sum(qlong((a - mean) * (b - mean), NANO))

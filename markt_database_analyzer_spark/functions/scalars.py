@@ -12,6 +12,17 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Bowling et al.'s logistic approximation to the standard normal CDF,
+# Phi(z) ~ 1 / (1 + exp(-1.5976 z - 0.07056 z^3)) — the p-value kernel of
+# the stats entries. The two forms evaluate the same double expression in
+# the same order, so Spark and DuckDB return identical bits.
+SQL_NORM_CDF = "1.0 / (1.0 + exp(-1.5976 * ({z}) - 0.07056 * ({z}) * ({z}) * ({z})))"
+
+
+def norm_cdf(z: Column) -> Column:
+    """Spark twin of ``SQL_NORM_CDF``: Phi(z) for a double column."""
+    return F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(-1.5976) * z - F.lit(0.07056) * z * z * z))
+
 
 def contains_ci(col: Column | str, needle: str) -> Column:
     """Case-insensitive, null-safe substring match (F1).

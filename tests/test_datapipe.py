@@ -586,3 +586,36 @@ def test_substring_span_union_random_positions(spark):
     got = {r["id"]: r["c"] for r in df.select("id", sweep.alias("c")).collect()}
     want = {i: covered for i, _, covered in rows}
     assert got == want
+
+
+# sha256 of the sorted (vec_id, cell) pairs and of the centroid list that
+# kmeans_model(k=4, iters=3) returns on the sf0.001 embeddings, recorded
+# before kmeans_model released its input pin.
+_KMEANS_ASSIGN_SHA = "3bb2a019b3237a3d1b95a99bef5b5ecbf6ee02a1a6a019182cce49aee780d17c"
+_KMEANS_CENTS_SHA = "3bb0c132cf6f608d51826741fb3487727ddf5f6e68925cd55f01ff1a1da44e0f"
+
+
+def test_kmeans_model_releases_its_input_pin(spark):
+    """kmeans_model pins the fanned-out corpus for its Lloyd rounds and
+    releases that pin once the returned assignment sits in its own cache.
+    The release changes neither the assignment nor the centroids."""
+    import hashlib
+
+    from pyspark import StorageLevel
+
+    from markt_database_analyzer_spark.datapipe.util import fan_out
+    from markt_database_analyzer_spark.sources import read_table
+
+    from tests.conftest import SF_DIR
+
+    emb = read_table(spark, SF_DIR, "embeddings")
+    assigned, cents = sim.kmeans_model(emb, k=4, iters=3)
+    try:
+        # the cache manager holds no entry for the pinned base any more
+        assert fan_out(emb).storageLevel == StorageLevel.NONE
+        assert assigned.storageLevel != StorageLevel.NONE
+        rows = sorted((r["vec_id"], r["cell"]) for r in assigned.select("vec_id", "cell").collect())
+        assert hashlib.sha256(repr(rows).encode()).hexdigest() == _KMEANS_ASSIGN_SHA
+        assert hashlib.sha256(repr(cents).encode()).hexdigest() == _KMEANS_CENTS_SHA
+    finally:
+        assigned.unpersist()

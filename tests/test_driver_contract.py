@@ -66,9 +66,9 @@ def test_driver_ordering_covers_registry_exactly():
 
 
 def test_driver_window_covers_every_unverdicted_entry():
-    """The ≤1-window verification-debt invariant (VERDICT r8 task 4):
-    every entry that has never received a driver verdict — not a key in
-    ANY CORRECTNESS_r*.json — must sit inside the checked 50-prefix of
+    """The ≤1-window verification-debt invariant: every entry that has
+    never received a driver verdict — not a key in ANY
+    CORRECTNESS_r*.json — must sit inside the checked 50-prefix of
     queries(), and there must be at most 50 of them. The self-sliding
     head guarantees placement by construction; this pins both that and
     the debt bound, so adding >50 entries in one round is a red test,
@@ -122,9 +122,9 @@ def test_driver_rotation_self_slides():
 
 
 def test_readme_catalog_count_matches_registry():
-    """ADVICE r6: the README's headline entry count went stale mid-round
-    (292→304 while the registry grew to 318). Derive-and-compare so a
-    stale count is a red test, not a judge finding."""
+    """The README's headline entry count once went stale while the
+    registry grew (292→304 in the README against 318 registered).
+    Derive-and-compare so a stale count is a red test."""
     import os
     import re
 

@@ -19,11 +19,8 @@ from markt_database_analyzer_spark.functions.aggregates import (
     MICRO,
     NANO,
     exact_long_sum,
+    qlong,
 )
-
-
-def _qlong(c):
-    return F.round(c.cast("double") * F.lit(MICRO)).cast("long")
 
 
 def _decimal_sum(c, scale):
@@ -68,9 +65,9 @@ def test_exact_long_sum_bit_identical_to_decimal_sum(spark):
 def test_exact_long_sum_null_semantics_match(spark):
     # all-null group and empty-input aggregate both yield NULL like sum(decimal)
     df = spark.createDataFrame([(1, None), (1, None)], "g int, v double")
-    row = df.groupBy("g").agg(exact_long_sum(_qlong(F.col("v"))).alias("t")).collect()[0]
+    row = df.groupBy("g").agg(exact_long_sum(qlong(F.col("v"))).alias("t")).collect()[0]
     assert row["t"] is None
-    empty = df.filter("g = 99").agg(exact_long_sum(_qlong(F.col("v"))).alias("t")).collect()[0]
+    empty = df.filter("g = 99").agg(exact_long_sum(qlong(F.col("v"))).alias("t")).collect()[0]
     assert empty["t"] is None
 
 
@@ -79,7 +76,7 @@ def test_exact_long_sum_is_two_long_sums_in_the_plan(spark):
     # not decimal sums — pin the aggregate buffer types via the plan
     df = spark.range(1000).select((F.col("id") * 1.5).alias("v"))
     plan = (
-        df.agg(exact_long_sum(_qlong(F.col("v"))).alias("t"))
+        df.agg(exact_long_sum(qlong(F.col("v"))).alias("t"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -516,7 +516,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only Arrow stages, no shuffle at all."""
     docs = _t(spark, sf_dir, "documents")
     with_payload = mm.crafted_payloads(docs, "doc_id")
-    return mm.decode_features(with_payload, backend="real").sortWithinPartitions("doc_id")
+    return mm.decode_raster_features(with_payload).sortWithinPartitions("doc_id")
 
 
 @register(

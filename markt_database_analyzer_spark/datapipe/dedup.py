@@ -245,34 +245,6 @@ def minhash_neardup_pairs(
 # SimHash
 # --------------------------------------------------------------------------
 
-def simhash64(col: Column | str) -> Column:
-    """64-bit SimHash of the token multiset, as bigint — expression form.
-
-    bit j of the signature = 1 iff sum over tokens of ±1 (sign of bit j of
-    the token hash) is positive (strict majority; ties → 0).
-
-    This form re-walks the hash array once per bit (higher-order functions
-    sit outside whole-stage codegen, so the 60 ``filter`` passes are not
-    subexpression-eliminated). Fine for ad-hoc use on small inputs; the
-    hot path is :func:`simhash_signatures`, which hashes each token
-    exactly once and reduces via a map-side-combined aggregation."""
-    toks = tokens(col)
-    hashes = F.transform(toks, lambda t: hash60(t))
-
-    def bit_vote(j: int) -> Column:
-        # NB: the HOF lambda must be unary — a second (defaulted) parameter
-        # would make Spark pass the element index into it.
-        def has_bit(h: Column) -> Column:
-            return h.bitwiseAND(F.lit(1 << j)) != 0
-
-        ones = F.size(F.filter(hashes, has_bit))
-        return F.when(ones * 2 > F.size(hashes), F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-    sig = bit_vote(0)
-    for j in range(1, 60):  # hash60 yields 60-bit values
-        sig = sig + bit_vote(j)
-    return sig
-
-
 SIMHASH_VOTE_CHUNK = 4096  # tokens per vote block: a 4096x60 int64 matrix is ~2 MB
 
 
@@ -304,8 +276,9 @@ def simhash_vote_sums(hs, lengths, chunk: int = SIMHASH_VOTE_CHUNK):
 def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document 60-bit SimHash — the scale path (Arrow kernel, r14).
 
-    Identical output to ``simhash64`` (strict-majority vote per bit, ties
-    and empty documents → 0). Tokenization stays a JVM expression (the
+    Bit j of the signature is 1 iff the token hashes with bit j set are a
+    strict majority of the document's tokens (ties and empty documents
+    → 0). Tokenization stays a JVM expression (the
     engine-parity tokenizer — Java regex semantics are NOT replicated in
     Python, so the token stream is computed once where the oracle
     contract lives); only the hash+vote reduction crosses into an Arrow
@@ -379,8 +352,8 @@ def simhash_signatures_agg(df: DataFrame, text_col: str, id_col: str) -> DataFra
     kernel against, and as the fallback for Arrow-less deployments.
 
     explode tokens → hash each token ONCE → 60 conditional ±1 sums in one
-    hash aggregation → fold votes into the signature. The md5 work drops
-    60× versus the expression form and the shuffle carries just 60 ints
+    hash aggregation → fold votes into the signature. Each token is
+    hashed once, not once per bit, and the shuffle carries just 60 ints
     per document. (A 21-bit-lane packed variant with 20 buffers was
     measured SLOWER — the shift/or chains outweigh the buffer savings.)"""
     docs = fan_out(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))).select(

@@ -6,34 +6,37 @@ of typed metadata alongside. What is REAL here (and tested):
 - schema convention (``payload binary, meta struct<...>``)
 - metadata extraction as pure column expressions (size, content hash,
   magic-byte sniffing)
-- the Arrow-batched decode/feature pipeline shape: ``mapInPandas`` over
-  an iterator of record batches, preserving partitioning, with bounded
-  batch memory (the exact shape a real image decoder plugs into)
+- one Arrow-batched decode envelope: ``mapInPandas`` over an iterator
+  of record batches, preserving partitioning, with bounded batch memory
+  (the exact shape a real image decoder plugs into)
 
-Two backends ship for ``decode_features``:
+Every format goes through that one envelope and supplies only a
+``bytes -> feature tuple | None`` function; a payload it cannot decode
+becomes a row of NULL features with ``format='unsupported'``. The
+featurizers, each with its own feature schema and ``feature_version``:
 
-- ``backend="fake"`` — deterministic byte-stat featurizer (the original
-  stand-in, kept for the plumbing entries);
-- ``backend="real"`` — an actual pixel decoder for the self-describing
-  uncompressed raster formats (BMP 24-bpp BI_RGB and binary PPM ``P6``),
-  implemented in pure numpy inside the same Arrow ``mapInPandas``
-  plumbing: header parse → stride/padding/bottom-up handling → HxWx3
-  uint8 array → per-channel statistics. Payloads in formats that would
-  need an external codec (png/jpeg/...) decode to NULL feature columns
-  with ``format`` preserved — the batch shape, schema, and partitioning
-  are identical to what a PIL/ffmpeg featurizer plugs into.
+- ``decode_features`` — deterministic byte statistics of any payload
+  (the stand-in featurizer of the plumbing entries);
+- ``decode_raster_features`` — a pixel decoder for the self-describing
+  uncompressed raster formats (BMP 24-bpp BI_RGB and binary PPM ``P6``)
+  in pure numpy: header parse → stride/padding/bottom-up handling →
+  HxWx3 uint8 array → per-channel statistics;
+- ``decode_audio_features`` — RIFF/WAVE PCM audio;
+- ``decode_gif_features`` / ``decode_gif_anim_features`` — still and
+  animated GIF, one block walker and a hand-written LZW decoder (the
+  standard library has no LZW);
+- ``decode_png_features`` — 8-bit palette PNG, whose DEFLATE stream and
+  CRC-32/Adler-32 checks go through the standard library's ``zlib``.
 
-Three container decoders sit beside it in the same plumbing, each with
-its own feature schema: RIFF/WAVE PCM audio, GIF with its LZW stream
-(hand-written: the standard library has no LZW), and 8-bit palette PNG,
-whose DEFLATE stream and CRC-32/Adler-32 checks go through the standard
-library's ``zlib``.
+The ``crafted_*`` builders make each decoder's SQL-replayable fixture
+through one fixture envelope, from a per-id payload function.
 """
 
 from __future__ import annotations
 
+import hashlib
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -49,6 +52,7 @@ MAGIC = {
     b"RIFF": "riff",  # wav/avi containers
     b"GIF8": "gif",
 }
+PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def to_payload(col: Column | str) -> Column:
@@ -73,34 +77,86 @@ def payload_meta(payload: Column | str) -> Column:
     )
 
 
+def _decode_batch(
+    pdf: pd.DataFrame, featurize: Callable[[bytes], tuple | None],
+    schema: str, version: str,
+) -> pd.DataFrame:
+    """One Arrow batch of (doc_id, payload) through ``featurize``: a NULL
+    payload reads as empty bytes, and a payload ``featurize`` rejects
+    (None) becomes ``format='unsupported'`` with NULL features. Columns
+    are the names of ``schema``, ``feature_version`` last."""
+    names = [c.split()[0] for c in schema.split(",")]
+    unsupported = ("unsupported",) + (None,) * (len(names) - 3)
+    rows = []
+    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+        feats = featurize(bytes(payload) if payload is not None else b"")
+        rows.append((doc_id, *(unsupported if feats is None else feats)))
+    return pd.DataFrame(rows, columns=names[:-1]).assign(feature_version=version)
+
+
+def _decode(
+    df: DataFrame, featurize: Callable[[bytes], tuple | None],
+    schema: str, version: str,
+) -> DataFrame:
+    """The decode envelope every ``decode_*`` entry point shares: map-only,
+    partition-preserving, one bounded Arrow batch at a time."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _decode_batch(pdf, featurize, schema, version)
+
+    return fan_out(df.select("doc_id", "payload")).mapInPandas(run, schema=schema)
+
+
+def _crafted(df: DataFrame, id_col: str, payload_of: Callable[[object], bytes]) -> DataFrame:
+    """The fixture envelope every ``crafted_*`` builder shares: one
+    ``payload_of(id)`` per id, map-only inside the same Arrow plumbing."""
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [payload_of(d) for d in pdf[id_col]]
+            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+
+    return fan_out(df.select(id_col)).mapInPandas(
+        build, schema=f"{id_col} long, payload binary"
+    )
+
+
+def _md5(s: str) -> bytes:
+    return hashlib.md5(s.encode("ascii")).digest()
+
+
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, byte_mean double, byte_min int, byte_max int, feature_version string"
 )
 
 
-def _fake_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _byte_stats(b: bytes) -> tuple[int, float, int, int]:
     """Deterministic stand-in featurizer: byte statistics of the payload,
-    vectorized with numpy per payload (``np.frombuffer`` is zero-copy) —
-    the same inner-loop discipline a real decoder batch needs. Replaces
-    (e.g.) decode→resize→embed for an image batch."""
-    def stats(b: bytes) -> tuple[int, float, int, int]:
-        if not b:
-            return (0, 0.0, 0, 0)
-        arr = np.frombuffer(b, dtype=np.uint8)
-        return (len(b), float(arr.sum()) / len(b), int(arr.min()), int(arr.max()))
+    vectorized with numpy (``np.frombuffer`` is zero-copy) — the same
+    inner-loop discipline a real decoder batch needs. Replaces (e.g.)
+    decode→resize→embed for an image batch."""
+    if not b:
+        return (0, 0.0, 0, 0)
+    arr = np.frombuffer(b, dtype=np.uint8)
+    return (len(b), float(arr.sum()) / len(b), int(arr.min()), int(arr.max()))
 
-    s = pdf["payload"].map(stats)
-    out = pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"],
-            "n_bytes": s.map(lambda t: t[0]),
-            "byte_mean": s.map(lambda t: t[1]),
-            "byte_min": s.map(lambda t: t[2]),
-            "byte_max": s.map(lambda t: t[3]),
-            "feature_version": "fake-v1",
-        }
+
+def decode_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched byte-stat features over (doc_id, payload): length,
+    mean, min and max byte of every payload, whatever its format. The
+    ``mapInPandas`` envelope is the one every decoder below shares, so
+    swapping in a PIL/ffmpeg codec is a one-function change."""
+    return _decode(df, _byte_stats, FEATURE_SCHEMA, "fake-v1")
+
+
+def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
+    """Video-frame-sampling shape without a codec: given (doc_id, payload),
+    emit one row per sampled "frame" index based on payload size — the
+    partition-preserving explode pattern a real frame sampler uses."""
+    n_frames = (F.length("payload") / F.lit(100)).cast("int") + 1
+    return (
+        df.withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))))
+        .select("doc_id", "frame_idx")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -218,51 +274,35 @@ def decode_pixels(b: bytes) -> tuple[str, np.ndarray] | None:
     return _parse_bmp(b) or _parse_ppm(b)
 
 
-def _real_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        decoded = decode_pixels(bytes(payload) if payload is not None else b"")
-        if decoded is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None))
-            continue
-        fmt, px = decoded
-        means = px.reshape(-1, 3).mean(axis=0, dtype=np.float64)
-        rows.append(
-            (
-                doc_id, fmt, px.shape[1], px.shape[0],
-                px.shape[0] * px.shape[1],
-                round(float(means[0]), 6),
-                round(float(means[1]), 6),
-                round(float(means[2]), 6),
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "width", "height", "n_pixels",
-            "mean_r", "mean_g", "mean_b",
-        ],
-    ).assign(feature_version="real-v1")
+def _raster_features(b: bytes) -> tuple | None:
+    decoded = decode_pixels(b)
+    if decoded is None:
+        return None
+    fmt, px = decoded
+    means = px.reshape(-1, 3).mean(axis=0, dtype=np.float64)
+    return (
+        fmt, px.shape[1], px.shape[0], px.shape[0] * px.shape[1],
+        *(round(float(m), 6) for m in means),
+    )
 
 
-def decode_features(df: DataFrame, backend: str = "fake") -> DataFrame:
-    """Arrow-batched decode/feature extraction over (doc_id, payload).
+def decode_raster_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched raster decode over (doc_id, payload): BMP 24-bpp /
+    PPM P6 → width, height and per-channel pixel means; payloads in any
+    other format (png/jpeg/...) → NULL features with
+    ``format='unsupported'``. Same envelope as ``decode_features``."""
+    return _decode(df, _raster_features, REAL_FEATURE_SCHEMA, "real-v1")
 
-    ``backend="fake"`` runs the deterministic byte-stat featurizer;
-    ``backend="real"`` runs the zero-dependency raster decoder (BMP
-    24-bpp / PPM P6 → per-channel pixel means; unsupported formats →
-    NULL features). Both share the same ``mapInPandas`` iterator shape,
-    so swapping in a PIL/ffmpeg codec is a one-function change."""
-    if backend not in ("fake", "real"):
-        raise ValueError(f"unknown decode backend {backend!r}")
-    batch_fn = _real_decode_batch if backend == "real" else _fake_decode_batch
-    schema = REAL_FEATURE_SCHEMA if backend == "real" else FEATURE_SCHEMA
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield batch_fn(pdf)
-
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(run, schema=schema)
+def _raster_payload(d) -> bytes:
+    raw = _md5(str(d))[:12]
+    px = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2, 3)
+    k = int(d) % 3
+    if k == 0:
+        return encode_bmp(px)
+    if k == 1:
+        return encode_ppm(px)
+    return PNG_SIG + raw
 
 
 def crafted_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -274,37 +314,7 @@ def crafted_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bottom-up + BGR), PPM P6 (exercises ASCII header parse), and a
     PNG-magic payload no zero-dependency decoder handles (exercises the
     NULL-feature path). Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = hashlib.md5(str(d).encode("ascii")).digest()[:12]
-                px = np.frombuffer(raw, dtype=np.uint8).reshape(2, 2, 3)
-                k = int(d) % 3
-                if k == 0:
-                    payloads.append(encode_bmp(px))
-                elif k == 1:
-                    payloads.append(encode_ppm(px))
-                else:
-                    payloads.append(b"\x89PNG\r\n\x1a\n" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video-frame-sampling shape without a codec: given (doc_id, payload),
-    emit one row per sampled "frame" index based on payload size — the
-    partition-preserving explode pattern a real frame sampler uses."""
-    n_frames = (F.length("payload") / F.lit(100)).cast("int") + 1
-    return (
-        df.withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))))
-        .select("doc_id", "frame_idx")
-    )
+    return _crafted(df, id_col, _raster_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -379,32 +389,19 @@ def _parse_wav(b: bytes) -> tuple[int, int, np.ndarray] | None:
     return n_channels, sample_rate, np.frombuffer(data, dtype="<i2")
 
 
-def _audio_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_wav(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None, None))
-            continue
-        n_channels, sample_rate, smp = parsed
-        n = len(smp)
-        s64 = smp.astype(np.int64)
-        # exact integer sums first, float division last — the same
-        # operation order the SQL oracle replays, so doubles bit-match
-        mean_amp = float(int(s64.sum())) / n if n else None
-        rms = round(float(np.sqrt(float(int((s64 * s64).sum())) / n)), 6) if n else None
-        clip = float(int((np.abs(s64) >= CLIP_ABS).sum())) / n if n else None
-        rows.append(
-            (doc_id, "wav", n_channels, sample_rate,
-             n // n_channels, n, mean_amp, rms, clip)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "n_channels", "sample_rate",
-            "n_frames", "n_samples", "mean_amp", "rms", "clip_frac",
-        ],
-    ).assign(feature_version="audio-v1")
+def _audio_features(b: bytes) -> tuple | None:
+    parsed = _parse_wav(b)
+    if parsed is None:
+        return None
+    n_channels, sample_rate, smp = parsed
+    n = len(smp)
+    s64 = smp.astype(np.int64)
+    # exact integer sums first, float division last — the same
+    # operation order the SQL oracle replays, so doubles bit-match
+    mean_amp = float(int(s64.sum())) / n if n else None
+    rms = round(float(np.sqrt(float(int((s64 * s64).sum())) / n)), 6) if n else None
+    clip = float(int((np.abs(s64) >= CLIP_ABS).sum())) / n if n else None
+    return ("wav", n_channels, sample_rate, n // n_channels, n, mean_amp, rms, clip)
 
 
 def decode_audio_features(df: DataFrame) -> DataFrame:
@@ -413,13 +410,20 @@ def decode_audio_features(df: DataFrame) -> DataFrame:
     NULL features with ``format='unsupported'``. Same mapInPandas
     iterator shape as ``decode_features`` — map-only, partition-
     preserving, bounded batch memory."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _audio_decode_batch(pdf)
+    return _decode(df, _audio_features, AUDIO_FEATURE_SCHEMA, "audio-v1")
 
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
-    )
+
+def _audio_payload(d) -> bytes:
+    raw = _md5(str(d))[:16]
+    smp = np.frombuffer(raw, dtype="<i2")
+    k = int(d) % 3
+    sr = 8000 + 1000 * (int(d) % 5)
+    if k == 0:
+        return encode_wav(smp, n_channels=1, sample_rate=sr)
+    if k == 1:
+        extra = b"LIST" + (6).to_bytes(4, "little") + b"INFOab"
+        return encode_wav(smp, n_channels=2, sample_rate=sr, extra_chunk=extra)
+    return b"ID3\x03\x00" + raw
 
 
 def crafted_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -433,30 +437,7 @@ def crafted_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decoder handles (exercises the NULL-feature path). Sample rate
     varies as ``8000 + 1000 * (id % 5)`` so the header parse is
     value-checked too. Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = hashlib.md5(str(d).encode("ascii")).digest()[:16]
-                smp = np.frombuffer(raw, dtype="<i2")
-                k = int(d) % 3
-                sr = 8000 + 1000 * (int(d) % 5)
-                if k == 0:
-                    payloads.append(encode_wav(smp, n_channels=1, sample_rate=sr))
-                elif k == 1:
-                    extra = b"LIST" + (6).to_bytes(4, "little") + b"INFOab"
-                    payloads.append(
-                        encode_wav(smp, n_channels=2, sample_rate=sr, extra_chunk=extra)
-                    )
-                else:
-                    payloads.append(b"ID3\x03\x00" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+    return _crafted(df, id_col, _audio_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -526,7 +507,12 @@ def _lzw_decode_gif(data: bytes, min_code_size: int) -> list[int] | None:
     """GIF-variant LZW decoder: variable-width LSB-first codes, table
     reset on clear, KwKwK handling for the just-assigned code, width
     bump when the next free code reaches ``2**size``. None on a
-    malformed stream (code beyond the table, missing EOI is fine)."""
+    malformed stream (code beyond the table, missing EOI is fine) and
+    on a minimum code size past 11, whose first codes would already be
+    wider than GIF's 12-bit ceiling (the size byte comes from the
+    payload; unchecked, it sets the size of the initial table)."""
+    if min_code_size > 11:
+        return None
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
 
     def reset() -> tuple[dict[int, tuple[int, ...]], int, int]:
@@ -573,6 +559,36 @@ def _lzw_decode_gif(data: bytes, min_code_size: int) -> list[int] | None:
         prev = entry
 
 
+def _gif_screen(version: bytes, shape: tuple[int, int], palette: np.ndarray) -> bytes:
+    """GIF header, logical screen descriptor and global colour table."""
+    h, w = shape
+    gct_bits = max(1, (len(palette) - 1).bit_length())
+    return (
+        version
+        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
+        + bytes([0x80 | (gct_bits - 1)])  # GCT present, size 2**gct_bits
+        + b"\x00\x00"                     # bg index, aspect
+        + palette.astype(np.uint8).tobytes()
+    )
+
+
+def _gif_image(indices: np.ndarray, palette: np.ndarray) -> bytes:
+    """One image: descriptor (no local table, not interlaced), LZW code
+    size, the LZW stream in 255-byte sub-blocks and the 0x00 terminator."""
+    h, w = indices.shape
+    min_code_size = max(2, (len(palette) - 1).bit_length())
+    out = (
+        b"\x2c" + b"\x00\x00\x00\x00"
+        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
+        + b"\x00" + bytes([min_code_size])
+    )
+    stream = _lzw_encode_gif(indices.reshape(-1), min_code_size)
+    for i in range(0, len(stream), 255):
+        chunk = stream[i : i + 255]
+        out += bytes([len(chunk)]) + chunk
+    return out + b"\x00"
+
+
 def encode_gif(
     indices: np.ndarray, palette: np.ndarray = GIF_PALETTE,
     comment: bytes | None = None,
@@ -582,124 +598,122 @@ def encode_gif(
     table + optional comment extension + one image descriptor with a
     real LZW-compressed, sub-block-framed data stream. The decoder
     below must invert this bit-exactly."""
-    h, w = indices.shape
-    n_colors = len(palette)
-    gct_bits = max(1, (n_colors - 1).bit_length())
-    min_code_size = max(2, gct_bits)
-    head = (
-        b"GIF87a"
-        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        + bytes([0x80 | (gct_bits - 1)])  # GCT present, size 2**gct_bits
-        + b"\x00\x00"                     # bg index, aspect
-        + palette.astype(np.uint8).tobytes()
-    )
-    body = b""
+    ext = b""
     if comment is not None:
         # a zero-length sub-block IS the terminator — emit data blocks
         # only for non-empty comments
         sub = bytes([len(comment)]) + comment if comment else b""
-        body += b"\x21\xfe" + sub + b"\x00"
-    body += (
-        b"\x2c" + b"\x00\x00\x00\x00"
-        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        + b"\x00"                         # no local table, not interlaced
-        + bytes([min_code_size])
+        ext = b"\x21\xfe" + sub + b"\x00"
+    return (
+        _gif_screen(b"GIF87a", indices.shape, palette) + ext
+        + _gif_image(indices, palette) + b"\x3b"  # trailer
     )
-    stream = _lzw_encode_gif(indices.reshape(-1), min_code_size)
-    for i in range(0, len(stream), 255):
-        chunk = stream[i : i + 255]
-        body += bytes([len(chunk)]) + chunk
-    return head + body + b"\x00\x3b"      # block terminator + trailer
 
 
-def _parse_gif(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
-    """Decode a GIF87a/89a with a global colour table, one non-interlaced
-    image and no local colour table to (width, height, palette HxWx3,
-    indices flat); None for anything else (foreign magic, truncated
-    stream, interlace/local-table variants, bad LZW)."""
+def _gif_walk(b: bytes) -> Iterator[tuple]:
+    """Walk a GIF87a/89a with a global colour table block by block.
+
+    Yields ``("screen", width, height, palette Nx3)`` first, then in
+    stream order ``("delay", centiseconds)`` per graphics-control
+    extension, ``("image", width, height, flat indices)`` per image and
+    ``("trailer",)``. Stops at the trailer and at the first thing it
+    cannot walk: foreign magic, truncation, a sub-block chain without
+    its 0x00 terminator, an interlaced image or one with a local colour
+    table, bad LZW, a pixel count other than the descriptor's, an index
+    past the palette, an unknown block."""
     if len(b) < 13 or b[:4] != b"GIF8" or b[4:6] not in (b"7a", b"9a"):
-        return None
-    width = int.from_bytes(b[6:8], "little")
-    height = int.from_bytes(b[8:10], "little")
+        return
     packed = b[10]
     if not packed & 0x80:
-        return None  # no global colour table
+        return  # no global colour table
     n_colors = 2 << (packed & 0x07)
-    pos = 13
-    if pos + 3 * n_colors > len(b):
-        return None
-    palette = np.frombuffer(b[pos : pos + 3 * n_colors], dtype=np.uint8)
+    pos = 13 + 3 * n_colors
+    if pos > len(b):
+        return
+    palette = np.frombuffer(b[13:pos], dtype=np.uint8)
     palette = palette.reshape(n_colors, 3).astype(np.int64)
-    pos += 3 * n_colors
+    yield "screen", int.from_bytes(b[6:8], "little"), int.from_bytes(b[8:10], "little"), palette
     while pos < len(b):
         block = b[pos]
-        if block == 0x21:  # extension: label + sub-blocks, skip
-            pos += 2
+        if block == 0x21:  # extension: label + sub-blocks
+            if pos + 2 >= len(b):
+                return
+            label, start = b[pos + 1], pos + 2
+            pos = start
             while pos < len(b) and b[pos] != 0:
                 pos += 1 + b[pos]
+            if pos >= len(b):
+                return
+            if label == 0xF9 and b[start] == 4 and start + 4 <= len(b):
+                yield "delay", int.from_bytes(b[start + 2 : start + 4], "little")
             pos += 1
         elif block == 0x2C:  # image descriptor
-            if pos + 10 > len(b):
-                return None
+            if pos + 10 > len(b) or b[pos + 9] & 0xC0:
+                return  # truncated, or a local colour table / interlace
             iw = int.from_bytes(b[pos + 5 : pos + 7], "little")
             ih = int.from_bytes(b[pos + 7 : pos + 9], "little")
-            ipacked = b[pos + 9]
-            if ipacked & 0xC0:  # local colour table or interlace
-                return None
             pos += 10
             if pos >= len(b):
-                return None
+                return
             min_code_size = b[pos]
             pos += 1
             stream = bytearray()
             while pos < len(b) and b[pos] != 0:
                 size = b[pos]
                 if pos + 1 + size > len(b):
-                    return None
+                    return
                 stream += b[pos + 1 : pos + 1 + size]
                 pos += 1 + size
             if pos >= len(b):
-                return None  # sub-block chain without the 0x00 terminator
+                return  # sub-block chain without the 0x00 terminator
+            pos += 1
             decoded = _lzw_decode_gif(bytes(stream), min_code_size)
             if decoded is None or len(decoded) != iw * ih:
-                return None
+                return
             idx = np.asarray(decoded, dtype=np.int64)
             if (idx >= n_colors).any():
-                return None
-            return width, height, palette, idx
-        elif block == 0x3B:  # trailer before any image
-            return None
+                return
+            yield "image", iw, ih, idx
         else:
-            return None
+            if block == 0x3B:
+                yield ("trailer",)
+            return
+
+
+def _parse_gif(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
+    """Decode a GIF87a/89a with a global colour table, one non-interlaced
+    image and no local colour table to (width, height, palette Nx3,
+    indices flat): the first image the walk reaches, trailer or not;
+    None for anything else (foreign magic, truncated stream,
+    interlace/local-table variants, bad LZW)."""
+    for event in _gif_walk(b):
+        if event[0] == "screen":
+            _, width, height, palette = event
+        elif event[0] == "image":
+            return width, height, palette, event[3]
     return None
 
 
-def _gif_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_gif(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None, None))
-            continue
-        width, height, palette, idx = parsed
-        n = len(idx)
-        rgb = palette[idx]
-        # exact integer channel sums first, float division last — the
-        # same operation order the SQL oracle replays
-        means = [
-            round(float(int(rgb[:, c].sum())) / n, 6) if n else None
-            for c in range(3)
-        ]
-        rows.append(
-            (doc_id, "gif", width, height, n, len(palette), *means)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "width", "height", "n_pixels",
-            "n_colors", "mean_r", "mean_g", "mean_b",
-        ],
-    ).assign(feature_version="gif-v1")
+def _palette_features(fmt: str, parsed: tuple | None) -> tuple | None:
+    """Features of a decoded palette image (width, height, palette,
+    flat indices): pixel count, palette size and per-channel
+    palette-weighted pixel means."""
+    if parsed is None:
+        return None
+    width, height, palette, idx = parsed
+    n = len(idx)
+    rgb = palette[idx]
+    # exact integer channel sums first, float division last — the
+    # same operation order the SQL oracle replays
+    means = [
+        round(float(int(rgb[:, c].sum())) / n, 6) if n else None
+        for c in range(3)
+    ]
+    return (fmt, width, height, n, len(palette), *means)
+
+
+def _gif_features(b: bytes) -> tuple | None:
+    return _palette_features("gif", _parse_gif(b))
 
 
 def decode_gif_features(df: DataFrame) -> DataFrame:
@@ -709,13 +723,24 @@ def decode_gif_features(df: DataFrame) -> DataFrame:
     → NULL features with ``format='unsupported'``. Same mapInPandas
     iterator shape as the raster/audio twins — map-only, partition-
     preserving, bounded batch memory."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_decode_batch(pdf)
+    return _decode(df, _gif_features, GIF_FEATURE_SCHEMA, "gif-v1")
 
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=GIF_FEATURE_SCHEMA
-    )
+
+def _palette_indices(d) -> tuple[bytes, np.ndarray]:
+    """The GIF and PNG fixtures' 64 pixel indices: md5(str(id)), +'a',
+    +'b', +'c' bytes mod 4, with the 64 raw bytes."""
+    raw = b"".join(_md5(str(d) + sfx) for sfx in ("", "a", "b", "c"))
+    return raw, (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
+
+
+def _gif_payload(d) -> bytes:
+    raw, idx = _palette_indices(d)
+    k = int(d) % 3
+    if k == 0:
+        return encode_gif(idx.reshape(8, 8))
+    if k == 1:
+        return encode_gif(idx.reshape(4, 16), comment=b"crafted")
+    return PNG_SIG + raw
 
 
 def crafted_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -730,37 +755,13 @@ def crafted_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     64 four-symbol pixels push the LZW dictionary across the 3→4→5→6
     bit code-width boundaries, so width growth is exercised on every
     payload. Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = b"".join(
-                    hashlib.md5((str(d) + sfx).encode("ascii")).digest()
-                    for sfx in ("", "a", "b", "c")
-                )
-                idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
-                k = int(d) % 3
-                if k == 0:
-                    payloads.append(encode_gif(idx.reshape(8, 8)))
-                elif k == 1:
-                    payloads.append(
-                        encode_gif(idx.reshape(4, 16), comment=b"crafted")
-                    )
-                else:
-                    payloads.append(b"\x89PNG\r\n\x1a\n" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+    return _crafted(df, id_col, _gif_payload)
 
 
 # ---------------------------------------------------------------------------
 # Animated GIF: the TEMPORAL decode surface — multiple image blocks with
 # graphics-control extensions (per-frame delay), the smallest real
-# video-like container. Reuses the round-12 LZW machinery; a real
+# video-like container. Shares the GIF walker and LZW codec above; a real
 # ffmpeg-style frame featurizer plugs into the identical batch shape.
 # ---------------------------------------------------------------------------
 
@@ -779,33 +780,15 @@ def encode_gif_animation(
     block carrying the centisecond delay) and an image descriptor with a
     real LZW data stream. All frames share the screen geometry."""
     h, w = frames[0].shape
-    n_colors = len(palette)
-    gct_bits = max(1, (n_colors - 1).bit_length())
-    min_code_size = max(2, gct_bits)
-    out = bytearray(
-        b"GIF89a"
-        + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        + bytes([0x80 | (gct_bits - 1)]) + b"\x00\x00"
-        + palette.astype(np.uint8).tobytes()
-    )
+    out = _gif_screen(b"GIF89a", (h, w), palette)
     for frame, delay in zip(frames, delays_cs):
         assert frame.shape == (h, w)
         out += (
             b"\x21\xf9\x04\x00"
             + int(delay).to_bytes(2, "little") + b"\x00\x00"
+            + _gif_image(frame, palette)
         )
-        out += (
-            b"\x2c" + b"\x00\x00\x00\x00"
-            + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-            + b"\x00" + bytes([min_code_size])
-        )
-        stream = _lzw_encode_gif(frame.reshape(-1), min_code_size)
-        for i in range(0, len(stream), 255):
-            chunk = stream[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
+    return out + b"\x3b"
 
 
 def _parse_gif_frames(
@@ -816,107 +799,41 @@ def _parse_gif_frames(
     as the single-image parser (global colour table, no interlace/local
     tables); frames whose geometry diverges from the screen, bad LZW, or
     a missing trailer return None."""
-    if len(b) < 13 or b[:4] != b"GIF8" or b[4:6] not in (b"7a", b"9a"):
-        return None
-    width = int.from_bytes(b[6:8], "little")
-    height = int.from_bytes(b[8:10], "little")
-    packed = b[10]
-    if not packed & 0x80:
-        return None
-    n_colors = 2 << (packed & 0x07)
-    pos = 13
-    if pos + 3 * n_colors > len(b):
-        return None
-    palette = np.frombuffer(b[pos : pos + 3 * n_colors], dtype=np.uint8)
-    palette = palette.reshape(n_colors, 3).astype(np.int64)
-    pos += 3 * n_colors
     frames: list = []
     total_cs = 0
-    while pos < len(b):
-        block = b[pos]
-        if block == 0x21:
-            if pos + 2 >= len(b):
+    for event in _gif_walk(b):
+        kind = event[0]
+        if kind == "screen":
+            _, width, height, palette = event
+        elif kind == "delay":
+            total_cs += event[1]
+        elif kind == "image":
+            if event[1:3] != (width, height):
                 return None
-            label = b[pos + 1]
-            pos += 2
-            sub_start = pos
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            if pos >= len(b):
-                return None
-            if label == 0xF9 and b[sub_start] == 4 and sub_start + 4 <= len(b):
-                total_cs += int.from_bytes(b[sub_start + 2 : sub_start + 4], "little")
-            pos += 1
-        elif block == 0x2C:
-            if pos + 10 > len(b):
-                return None
-            iw = int.from_bytes(b[pos + 5 : pos + 7], "little")
-            ih = int.from_bytes(b[pos + 7 : pos + 9], "little")
-            if (iw, ih) != (width, height) or b[pos + 9] & 0xC0:
-                return None
-            pos += 10
-            if pos >= len(b):
-                return None
-            min_code_size = b[pos]
-            pos += 1
-            stream = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                size = b[pos]
-                if pos + 1 + size > len(b):
-                    return None
-                stream += b[pos + 1 : pos + 1 + size]
-                pos += 1 + size
-            if pos >= len(b):
-                return None
-            pos += 1
-            decoded = _lzw_decode_gif(bytes(stream), min_code_size)
-            if decoded is None or len(decoded) != iw * ih:
-                return None
-            idx = np.asarray(decoded, dtype=np.int64)
-            if (idx >= n_colors).any():
-                return None
-            frames.append(idx)
-        elif block == 0x3B:
-            if not frames:
-                return None
+            frames.append(event[3])
+        elif frames:  # the trailer
             return width, height, palette, frames, total_cs
-        else:
-            return None
-    return None  # ran off the end without a trailer
+    return None
 
 
-def _gif_anim_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_gif_frames(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append(
-                (doc_id, "unsupported", None, None, None, None, None, None, None)
-            )
-            continue
-        width, height, _palette, frames, total_cs = parsed
-        k, px = len(frames), width * height
-        total = k * px
-        # exact integer sums first, float division last — the SQL
-        # oracle's operation order
-        mean_idx = round(float(int(sum(int(f.sum()) for f in frames))) / total, 6)
-        if k > 1:
-            msum = sum(
-                int(np.abs(frames[i] - frames[i - 1]).sum()) for i in range(1, k)
-            )
-            motion = round(float(msum) / ((k - 1) * px), 6)
-        else:
-            motion = None
-        rows.append(
-            (doc_id, "gif", k, width, height, total, total_cs, mean_idx, motion)
+def _gif_anim_features(b: bytes) -> tuple | None:
+    parsed = _parse_gif_frames(b)
+    if parsed is None:
+        return None
+    width, height, _palette, frames, total_cs = parsed
+    k, px = len(frames), width * height
+    total = k * px
+    # exact integer sums first, float division last — the SQL
+    # oracle's operation order
+    mean_idx = round(float(int(sum(int(f.sum()) for f in frames))) / total, 6)
+    if k > 1:
+        msum = sum(
+            int(np.abs(frames[i] - frames[i - 1]).sum()) for i in range(1, k)
         )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "n_frames", "width", "height",
-            "n_pixels_total", "total_cs", "mean_idx", "motion",
-        ],
-    ).assign(feature_version="gifanim-v1")
+        motion = round(float(msum) / ((k - 1) * px), 6)
+    else:
+        motion = None
+    return ("gif", k, width, height, total, total_cs, mean_idx, motion)
 
 
 def decode_gif_anim_features(df: DataFrame) -> DataFrame:
@@ -925,13 +842,21 @@ def decode_gif_anim_features(df: DataFrame) -> DataFrame:
     decode per image block) → frame count, duration, overall index mean
     and inter-frame motion; non-GIF payloads → NULL features. Same
     map-only mapInPandas envelope as every decode twin."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_anim_decode_batch(pdf)
+    return _decode(df, _gif_anim_features, GIF_ANIM_FEATURE_SCHEMA, "gifanim-v1")
 
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=GIF_ANIM_FEATURE_SCHEMA
-    )
+
+def _gif_anim_payload(d) -> bytes:
+    k = int(d) % 3
+    if k == 2:
+        return b"\xff\xd8\xff\xe0" + _md5(str(d))
+    n_frames, (h, w) = ((3, (4, 4)), (5, (2, 4)))[k]
+    frames, delays = [], []
+    for f in range(n_frames):
+        raw = _md5(f"{d}f{f}")[: h * w]
+        idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
+        frames.append(idx.reshape(h, w))
+        delays.append((int(d) + f) % 7)
+    return encode_gif_animation(frames, delays)
 
 
 def crafted_gif_anim_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -941,32 +866,7 @@ def crafted_gif_anim_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
     hex-pair arithmetic in ANSI SQL. Container rotates on ``id % 3``:
     3 frames of 4x4, 5 frames of 4x2 (different geometry AND frame
     count), and a JPEG-magic payload (the NULL-feature path)."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                k = int(d) % 3
-                if k == 2:
-                    payloads.append(
-                        b"\xff\xd8\xff\xe0"
-                        + hashlib.md5(str(d).encode("ascii")).digest()
-                    )
-                    continue
-                n_frames, (h, w) = ((3, (4, 4)), (5, (2, 4)))[k]
-                frames, delays = [], []
-                for f in range(n_frames):
-                    raw = hashlib.md5(f"{d}f{f}".encode("ascii")).digest()[: h * w]
-                    idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
-                    frames.append(idx.reshape(h, w))
-                    delays.append((int(d) + f) % 7)
-                payloads.append(encode_gif_animation(frames, delays))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+    return _crafted(df, id_col, _gif_anim_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -1090,7 +990,6 @@ def _png_chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
 PNG_MAX_RAW = 1 << 24  # 16 MiB decoded-scanline cap (DoS guard)
 
 
@@ -1190,28 +1089,8 @@ def _parse_png(b: bytes) -> tuple[int, int, np.ndarray, np.ndarray] | None:
     return w, h, palette.astype(np.int64), idx
 
 
-def _png_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = []
-    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-        parsed = _parse_png(bytes(payload) if payload is not None else b"")
-        if parsed is None:
-            rows.append((doc_id, "unsupported", None, None, None, None, None, None, None))
-            continue
-        width, height, palette, idx = parsed
-        n = len(idx)
-        rgb = palette[idx]
-        means = [
-            round(float(int(rgb[:, c].sum())) / n, 6) if n else None
-            for c in range(3)
-        ]
-        rows.append((doc_id, "png", width, height, n, len(palette), *means))
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "format", "width", "height", "n_pixels",
-            "n_colors", "mean_r", "mean_g", "mean_b",
-        ],
-    ).assign(feature_version="png-v1")
+def _png_features(b: bytes) -> tuple | None:
+    return _palette_features("png", _parse_png(b))
 
 
 def decode_png_features(df: DataFrame) -> DataFrame:
@@ -1222,13 +1101,21 @@ def decode_png_features(df: DataFrame) -> DataFrame:
     ``format='unsupported'``. Same mapInPandas
     iterator shape as the raster/audio/GIF twins — map-only,
     partition-preserving, bounded batch memory."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _png_decode_batch(pdf)
+    return _decode(df, _png_features, GIF_FEATURE_SCHEMA, "png-v1")
 
-    return fan_out(df.select("doc_id", "payload")).mapInPandas(
-        run, schema=GIF_FEATURE_SCHEMA
-    )
+
+def _png_payload(d) -> bytes:
+    raw, idx = _palette_indices(d)
+    k = int(d) % 4
+    if k == 0:
+        return encode_png(idx.reshape(8, 8), method="stored", filters=[0, 1, 2, 3, 4])
+    if k == 1:
+        return encode_png(
+            idx.reshape(4, 16), method="fixed", filters=[4, 3, 2, 1, 0], split_idat=True,
+        )
+    if k == 2:
+        return encode_png(idx.reshape(8, 8), method="dynamic", filters=[2, 0, 4, 1, 3])
+    return b"GIF87a" + raw
 
 
 def crafted_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1243,43 +1130,4 @@ def crafted_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     IDAT chunks; 8x8 dynamic-Huffman (10) PNG with a third predictor
     rotation; and a GIF-magic payload (the NULL-feature unsupported
     path). Pure map work inside the same Arrow plumbing."""
-    import hashlib
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                raw = b"".join(
-                    hashlib.md5((str(d) + sfx).encode("ascii")).digest()
-                    for sfx in ("", "a", "b", "c")
-                )
-                idx = (np.frombuffer(raw, dtype=np.uint8) % 4).astype(np.int64)
-                k = int(d) % 4
-                if k == 0:
-                    payloads.append(
-                        encode_png(
-                            idx.reshape(8, 8), method="stored",
-                            filters=[0, 1, 2, 3, 4],
-                        )
-                    )
-                elif k == 1:
-                    payloads.append(
-                        encode_png(
-                            idx.reshape(4, 16), method="fixed",
-                            filters=[4, 3, 2, 1, 0], split_idat=True,
-                        )
-                    )
-                elif k == 2:
-                    payloads.append(
-                        encode_png(
-                            idx.reshape(8, 8), method="dynamic",
-                            filters=[2, 0, 4, 1, 3],
-                        )
-                    )
-                else:
-                    payloads.append(b"GIF87a" + raw)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return fan_out(df.select(id_col)).mapInPandas(
-        build, schema=f"{id_col} long, payload binary"
-    )
+    return _crafted(df, id_col, _png_payload)

@@ -92,12 +92,24 @@ def qlong(col: Column | str, scale: float = MICRO, cast: str = "long") -> Column
     uses). ``scale`` is the number of grid units per value unit
     (``MICRO``, ``NANO``). ``cast`` is ``long`` (|x · scale| < 2^63, or
     ANSI mode raises) or ``decimal(38,0)`` for a site that accumulates
-    past the long range. Past 2^53 Spark casts a double to decimal through
-    its shortest decimal string and DuckDB keeps its exact binary value,
-    so there the two engines agree only where those coincide.
-    :func:`sql_qlong` renders the same step for DuckDB."""
+    past the long range; either holds the double's exact binary value,
+    as DuckDB's casts do. :func:`sql_qlong` renders the same step for
+    DuckDB."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("double") * F.lit(scale)).cast(cast)
+    q = F.round(c.cast("double") * F.lit(scale))
+    if not cast.startswith("decimal"):
+        return q.cast(cast)
+    # Spark casts a double to decimal through its shortest decimal string,
+    # which past 2^53 is not the double's value (4.4100545258615846e20
+    # reads 441005452586158460000, not ...456832). Split the integral q
+    # into three parts that each cast to long exactly (a power-of-two
+    # quotient and a remainder below the divisor are exact doubles).
+    hi = (q / F.lit(2.0**64)).cast("long")
+    rest = q - hi.cast("double") * F.lit(2.0**64)
+    mid = (rest / F.lit(2.0**32)).cast("long")
+    lo = (rest - mid.cast("double") * F.lit(2.0**32)).cast("long")
+    two32 = F.lit(1 << 32).cast(cast)
+    return ((hi.cast(cast) * two32 + mid.cast(cast)) * two32 + lo.cast(cast)).cast(cast)
 
 
 def sql_qlong(expr: str, scale: float = MICRO, cast: str = "BIGINT") -> str:

@@ -33,7 +33,7 @@ def pushes_per_time_bin(profiles: DataFrame, bin_minutes: int = 10) -> DataFrame
     """B1: one row per "HH:MM" bin with ``n_pushes`` (zero-filled).
 
     Unique pushes come from the profiles table alone (analyse.py:191-194);
-    duplicate scrapes are collapsed with a deterministic keep-first dedup.
+    duplicate scrapes collapse to their earliest posting time.
     """
     spark = profiles.sparkSession
     counted = (

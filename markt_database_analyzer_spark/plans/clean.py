@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import coerce_numeric, coerce_timestamp
-from ..operators import dedup_keep_first
 
 KEY = ["ad_unique_id", "push_counter"]
 
@@ -38,4 +37,4 @@ def unique_pushes(profiles: DataFrame) -> DataFrame:
     parsed = profiles.select(
         *KEY, coerce_timestamp("posting_time").alias("posting_ts")
     ).na.drop(subset=["posting_ts", *KEY])
-    return dedup_keep_first(parsed, KEY, order_by=[F.col("posting_ts")])
+    return parsed.groupBy(*KEY).agg(F.min("posting_ts").alias("posting_ts"))

@@ -7,12 +7,10 @@ ranking (analyse.py:501-513). The engine's contract ends at the small
 aggregate DataFrame; these sinks collect it (**only** ≤ a few hundred
 rows ever reach the driver) and render the same three figures.
 
-Backends: matplotlib when installed (``backend="matplotlib"``), else the
-dependency-free SVG renderer (``sources.svg_render``) — so the sinks are
-end-to-end real in this image, producing actual figure files.
-``backend="auto"`` (default) picks matplotlib if importable, SVG
-otherwise. The *collect discipline* — assert the frame is small before
-``toPandas`` — is the engine-level behavior either way.
+The figures are SVG, drawn by the dependency-free renderer in
+``sources.svg_render``, so the sinks produce actual figure files with
+no plotting library installed. The *collect discipline* — refuse a frame
+that is not small before ``toPandas`` — is the engine-level behavior.
 """
 
 from __future__ import annotations
@@ -22,29 +20,6 @@ from pyspark.sql import DataFrame
 from . import svg_render
 
 MAX_PLOT_ROWS = 10_000  # a plot sink is a driver-side sink; refuse big frames
-
-
-def _matplotlib_or_none():
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")  # headless
-        import matplotlib.pyplot as plt
-
-        return plt
-    except ImportError:
-        return None
-
-
-def _pick(backend: str):
-    if backend not in ("auto", "matplotlib", "svg"):
-        raise ValueError(f"unknown plot backend {backend!r}")
-    plt = _matplotlib_or_none() if backend in ("auto", "matplotlib") else None
-    if backend == "matplotlib" and plt is None:
-        raise RuntimeError(
-            "matplotlib is not installed; use backend='svg' or install it"
-        )
-    return plt
 
 
 def _small_pandas(df: DataFrame, expected_cols: list[str]):
@@ -61,63 +36,31 @@ def _small_pandas(df: DataFrame, expected_cols: list[str]):
 
 
 def plot_rate_curve(
-    df: DataFrame, out_path: str, x: str = "bin", y: str = "smoothed_rate", backend: str = "auto"
+    df: DataFrame, out_path: str, x: str = "bin", y: str = "smoothed_rate"
 ) -> str:
     """Line chart of a smoothed rate curve (analyse.py:109-135 shape)."""
     pdf = _small_pandas(df, [x, y])
-    plt = _pick(backend)
-    if plt is None:
-        return svg_render.render_line(
-            [float(v) for v in pdf[x]], [float(v) for v in pdf[y]],
-            out_path, "Lifetime rate curve", x, y,
-        )
-    fig, ax = plt.subplots(figsize=(10, 5))
-    ax.plot(pdf[x], pdf[y])
-    ax.set_xlabel(x)
-    ax.set_ylabel(y)
-    fig.savefig(out_path)
-    plt.close(fig)
-    return out_path
+    return svg_render.render_line(
+        [float(v) for v in pdf[x]], [float(v) for v in pdf[y]],
+        out_path, "Lifetime rate curve", x, y,
+    )
 
 
-def plot_dual_axis(
-    df: DataFrame, out_path: str, x: str, bars: str, line: str, backend: str = "auto"
-) -> str:
-    """Bar+line time-of-day chart (analyse.py:303-351 shape). matplotlib
-    renders the reference's literal twin-axis figure; the SVG backend
-    draws the same two series as stacked aligned panels (one scale per
-    panel)."""
+def plot_dual_axis(df: DataFrame, out_path: str, x: str, bars: str, line: str) -> str:
+    """Bar+line time-of-day chart (analyse.py:303-351 shape): the
+    reference's twin-axis figure drawn as two stacked aligned panels,
+    one scale per panel."""
     pdf = _small_pandas(df, [x, bars, line])
-    plt = _pick(backend)
-    if plt is None:
-        return svg_render.render_bar_line(
-            list(pdf[x]), [float(v) for v in pdf[bars]], [float(v) for v in pdf[line]],
-            out_path, "Per-slot activity", bars, line,
-        )
-    fig, ax1 = plt.subplots(figsize=(12, 5))
-    ax1.bar(range(len(pdf)), pdf[bars])
-    ax2 = ax1.twinx()
-    ax2.plot(range(len(pdf)), pdf[line], color="C1")
-    ax1.set_xlabel(x)
-    fig.savefig(out_path)
-    plt.close(fig)
-    return out_path
+    return svg_render.render_bar_line(
+        list(pdf[x]), [float(v) for v in pdf[bars]], [float(v) for v in pdf[line]],
+        out_path, "Per-slot activity", bars, line,
+    )
 
 
-def plot_ranking_barh(
-    df: DataFrame, out_path: str, label: str, value: str, backend: str = "auto"
-) -> str:
+def plot_ranking_barh(df: DataFrame, out_path: str, label: str, value: str) -> str:
     """Horizontal-bar ranking chart (analyse.py:501-513 shape)."""
     pdf = _small_pandas(df, [label, value])
-    plt = _pick(backend)
-    if plt is None:
-        return svg_render.render_barh(
-            list(pdf[label]), [float(v) for v in pdf[value]],
-            out_path, "Ranking", value,
-        )
-    fig, ax = plt.subplots(figsize=(8, max(3, 0.3 * len(pdf))))
-    ax.barh(pdf[label], pdf[value])
-    ax.set_xlabel(value)
-    fig.savefig(out_path)
-    plt.close(fig)
-    return out_path
+    return svg_render.render_barh(
+        list(pdf[label]), [float(v) for v in pdf[value]],
+        out_path, "Ranking", value,
+    )

@@ -12,14 +12,7 @@ defensive coercion (SURVEY.md §1.2) is reproduced by declaring the at-rest
 types and funnelling every possibly-dirty column through
 ``functions.cleaning`` (``try_cast``-based), never through inference.
 
-For a real SQLite ingest edge the reference's source maps to Spark's JDBC
-reader (needs the xerial sqlite-jdbc jar on the classpath):
-
-    spark.read.format("jdbc")
-        .option("url", "jdbc:sqlite:/path/monitoring.db")
-        .option("dbtable", "monitor_records").load()
-
-The jar is not in this image, so ``read_sqlite`` falls back to a
+The reference's SQLite source is ingested by ``read_sqlite``: a
 driver-side stdlib ``sqlite3`` read with an explicit schema (correct for
 the small operational DBs SQLite holds — see its docstring for the scale
 argument); everything downstream is format-agnostic DataFrames.
@@ -141,17 +134,13 @@ def read_sqlite(
 ) -> DataFrame:
     """Ingest edge for the reference's native format (analyse.py:8,12-15).
 
-    Two strategies, tried in order:
+    The driver reads the table with the standard library's ``sqlite3`` in
+    ``batch_size`` row chunks and builds a DataFrame with the EXPLICIT
+    ``schema``. ``columns`` renders a projected ``SELECT`` so pruning
+    happens inside SQLite, exactly the reference's pushed-projection
+    pattern (analyse.py:158-164, 370-375).
 
-    1. **JDBC** (the cluster path): needs the xerial sqlite-jdbc jar on the
-       Spark classpath. Projection/predicates push into the JDBC scan.
-    2. **stdlib ``sqlite3`` fallback** (no jar in this image): the driver
-       reads the table in ``batch_size`` row chunks and builds a DataFrame
-       with the EXPLICIT ``schema``. ``columns`` renders a projected
-       ``SELECT`` so pruning happens inside SQLite, exactly the reference's
-       pushed-projection pattern (analyse.py:158-164, 370-375).
-
-    The fallback is driver-side by design, not a limitation to engineer
+    The read is driver-side by design, not a limitation to engineer
     around: SQLite is a single-file, single-host operational format — the
     same topology the reference reads it with — and in a 100 TB pipeline it
     only ever appears as a small operational/dimension source. A SQLite
@@ -160,27 +149,16 @@ def read_sqlite(
     distributively thereafter; there is no scalable way to read one
     B-tree file from a thousand executors.
 
-    ``schema`` is mandatory for the fallback (SQLite is dynamically typed;
-    inference would reproduce the driver-default-typing bug class the
-    SURVEY calls out). Values are coerced cell-wise with the same
-    tolerance as the JDBC driver: declared STRING columns keep whatever
-    repr SQLite holds, numeric columns pass through (dirty numerics should
-    be declared STRING and cleaned with ``functions.cleaning``)."""
-    try:
-        return (
-            spark.read.format("jdbc")
-            .option("url", f"jdbc:sqlite:{db_path}")
-            .option("dbtable", table)
-            .option("driver", "org.sqlite.JDBC")
-            .load()
+    ``schema`` is mandatory (SQLite is dynamically typed; inference would
+    reproduce the driver-default-typing bug class the SURVEY calls out).
+    Declared STRING columns keep whatever repr SQLite holds, numeric
+    columns pass through (dirty numerics should be declared STRING and
+    cleaned with ``functions.cleaning``)."""
+    if schema is None:
+        raise RuntimeError(
+            "read_sqlite needs an explicit schema; pass schema= (inference "
+            "over a dynamically-typed file is not supported)"
         )
-    except Exception:
-        if schema is None:
-            raise RuntimeError(
-                "SQLite JDBC driver not on classpath and no explicit schema "
-                "given for the sqlite3 fallback; pass schema= (inference "
-                "over a dynamically-typed file is not supported)"
-            )
     import sqlite3
 
     proj = ", ".join(f'"{c}"' for c in columns) if columns else "*"

@@ -1,9 +1,8 @@
 """Dependency-free SVG renderer for the three reference figure shapes.
 
-The plot sinks (``sources.plots``) prefer matplotlib; this module is the
-fallback backend when it isn't installed (as in this image), so S5 is
+The plot sinks (``sources.plots``) draw through this module, so S5 is
 end-to-end real — actual figure files from the collected result frames —
-rather than an import-gated stub. Pure string assembly, deterministic
+with no plotting library installed. Pure string assembly, deterministic
 output for a given input frame.
 
 Design notes: marks are thin, grid/axes recessive, text in neutral ink,

@@ -58,7 +58,7 @@ def test_minhash_lsh_finds_planted_neardup(spark, docs):
 
 
 def test_simhash_properties(spark, docs):
-    sigs = {r["doc_id"]: r["s"] for r in docs.select("doc_id", dd.simhash64("text").alias("s")).collect()}
+    sigs = {r["doc"]: r["sig"] for r in dd.simhash_signatures(docs, "text", "doc_id").collect()}
     assert sigs[1] == sigs[4]  # identical text → identical signature
     ham_near = bin(sigs[1] ^ sigs[2]).count("1")
     ham_far = bin(sigs[1] ^ sigs[3]).count("1")
@@ -207,13 +207,10 @@ def test_multimodal_decode_stub(spark):
     row = mm.decode_features(df).first()
     assert row["n_bytes"] == 3 and row["byte_min"] == ord("a") and row["byte_max"] == ord("c")
     assert row["feature_version"] == "fake-v1"
-    # backend="real" is a working raster decoder since round 10
-    # (tests/test_multimodal_real.py); a text payload has no BMP/PPM
-    # magic, so it takes the NULL-feature unsupported path
-    real = mm.decode_features(df, backend="real").first()
+    # a text payload has no BMP/PPM magic, so the raster decoder
+    # (tests/test_multimodal_real.py) takes the NULL-feature path
+    real = mm.decode_raster_features(df).first()
     assert real["format"] == "unsupported" and real["width"] is None
-    with pytest.raises(ValueError, match="backend"):
-        mm.decode_features(df, backend="nope")
 
 
 def test_frame_sample_plan(spark):

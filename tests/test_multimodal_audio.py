@@ -85,7 +85,7 @@ def test_audio_batch_stats_match_hand_computation():
     pdf = pd.DataFrame(
         {"doc_id": [1, 2], "payload": [mm.encode_wav(smp, 2, 44100), b"ID3\x03\x00xx"]}
     )
-    out = mm._audio_decode_batch(pdf)
+    out = mm._decode_batch(pdf, mm._audio_features, mm.AUDIO_FEATURE_SCHEMA, "audio-v1")
     s = smp.astype(np.int64)
     assert out.loc[0, "format"] == "wav"
     assert out.loc[0, "n_channels"] == 2

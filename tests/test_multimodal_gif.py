@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import random
+import tracemalloc
 
 import duckdb
 import numpy as np
@@ -33,6 +34,12 @@ from markt_database_analyzer_spark.catalog import REGISTRY
 def _idx(n: int, seed: int = 0, nsym: int = 4) -> np.ndarray:
     rng = np.arange(n, dtype=np.int64) * 7919 + seed * 101
     return rng % nsym
+
+
+def _anim_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    return mm._decode_batch(
+        pdf, mm._gif_anim_features, mm.GIF_ANIM_FEATURE_SCHEMA, "gifanim-v1"
+    )
 
 
 @pytest.mark.parametrize("n", [1, 2, 3, 15, 16, 17, 64, 300, 3000])
@@ -110,7 +117,7 @@ def test_gif_batch_stats_match_hand_computation():
     pdf = pd.DataFrame(
         {"doc_id": [1, 2], "payload": [mm.encode_gif(idx), b"\x89PNG\r\n\x1a\nxx"]}
     )
-    out = mm._gif_decode_batch(pdf)
+    out = mm._decode_batch(pdf, mm._gif_features, mm.GIF_FEATURE_SCHEMA, "gif-v1")
     assert out.loc[0, "format"] == "gif"
     assert (out.loc[0, "width"], out.loc[0, "height"]) == (8, 8)
     assert out.loc[0, "n_pixels"] == 64 and out.loc[0, "n_colors"] == 4
@@ -230,7 +237,7 @@ def test_gif_anim_batch_stats_match_hand_computation():
             ],
         }
     )
-    out = mm._gif_anim_decode_batch(pdf)
+    out = _anim_batch(pdf)
     assert out.loc[0, "format"] == "gif"
     assert out.loc[0, "n_frames"] == 2 and out.loc[0, "total_cs"] == 11
     assert out.loc[0, "n_pixels_total"] == 32
@@ -244,7 +251,7 @@ def test_gif_anim_single_frame_motion_is_null():
     pdf = pd.DataFrame(
         {"doc_id": [1], "payload": [mm.encode_gif_animation([_idx(16).reshape(4, 4)], [3])]}
     )
-    out = mm._gif_anim_decode_batch(pdf)
+    out = _anim_batch(pdf)
     assert out.loc[0, "n_frames"] == 1 and pd.isna(out.loc[0, "motion"])
 
 
@@ -288,6 +295,26 @@ def test_lzw_encode_empty_raster_is_clear_eoi_only():
     # for it is clear + EOI and decodes to the empty list.
     stream = mm._lzw_encode_gif(np.array([], dtype=np.int64), 2)
     assert mm._lzw_decode_gif(stream, 2) == []
+
+
+def test_lzw_code_size_past_the_12_bit_ceiling_is_rejected_in_bounded_memory():
+    # the LZW minimum code size is a payload byte; a flipped one (say 200)
+    # would otherwise size the initial table at 2**200 entries
+    assert mm._lzw_decode_gif(b"\x00" * 4, 12) is None
+    assert mm._lzw_decode_gif(b"\x00" * 4, 16) is None
+    g = bytearray(mm.encode_gif(_idx(64).reshape(8, 8)))
+    at = 13 + 3 * 4 + 10  # header, 4-colour table, image descriptor
+    assert g[at] == 2
+    for size in (12, 16):
+        g[at] = size
+        tracemalloc.start()
+        try:
+            got = (mm._parse_gif(bytes(g)), mm._parse_gif_frames(bytes(g)))
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert got == (None, None)
+        assert peak < 256 * 1024
 
 
 def test_parse_gif_rejects_missing_subblock_terminator():

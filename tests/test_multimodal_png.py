@@ -215,8 +215,9 @@ def test_crafted_payload_variants():
                                     filters=[2, 0, 4, 1, 3])
         else:
             payload = b"GIF87a" + raw
-        got = mm._png_decode_batch(
-            pd.DataFrame({"doc_id": [d], "payload": [payload]})
+        got = mm._decode_batch(
+            pd.DataFrame({"doc_id": [d], "payload": [payload]}),
+            mm._png_features, mm.GIF_FEATURE_SCHEMA, "png-v1",
         )
         assert got["format"][0] == expect
         if expect == "png":

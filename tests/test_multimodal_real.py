@@ -1,6 +1,6 @@
 """The real raster decode path: a pure-numpy BMP /
-PPM decoder inside the existing Arrow mapInPandas plumbing, replacing
-the backend="real" NotImplementedError gate. Pins:
+PPM decoder inside the shared Arrow mapInPandas decode envelope
+(``decode_raster_features``). Pins:
 
 - byte-level encoder/decoder round-trips, including the layout traps
   (BMP 4-byte row-stride padding at width=3, bottom-up row order, BGR
@@ -93,7 +93,7 @@ def test_rejections_return_none():
 def test_real_batch_means_match_hand_computation():
     px = _px(2, 2, seed=1)
     pdf = pd.DataFrame({"doc_id": [1], "payload": [mm.encode_bmp(px)]})
-    out = mm._real_decode_batch(pdf)
+    out = mm._decode_batch(pdf, mm._raster_features, mm.REAL_FEATURE_SCHEMA, "real-v1")
     flat = px.reshape(-1, 3).astype(float)
     assert out.loc[0, "format"] == "bmp"
     assert out.loc[0, "mean_r"] == round(flat[:, 0].mean(), 6)

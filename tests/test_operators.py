@@ -283,8 +283,7 @@ def test_read_jsonl_explicit_schema_and_corrupt_lines(spark, tmp_path):
 
 def test_plot_sink_collect_discipline(spark):
     """S5 plot sinks: a frame that is not a small aggregate must be refused
-    before it reaches the driver; missing columns fail fast; and without
-    matplotlib installed the error is actionable."""
+    before it reaches the driver, and missing columns fail fast."""
     import pytest
     from pyspark.sql import functions as F
     from markt_database_analyzer_spark.sources import plots
@@ -299,23 +298,11 @@ def test_plot_sink_collect_discipline(spark):
     with pytest.raises(ValueError, match="missing columns"):
         plots.plot_rate_curve(small, "/tmp/never.png")  # no smoothed_rate col
 
-    ok = small.withColumnRenamed("rate", "smoothed_rate")
-    try:
-        import matplotlib  # noqa: F401
-
-        has_mpl = True
-    except ImportError:
-        has_mpl = False
-    if not has_mpl:
-        with pytest.raises(RuntimeError, match="matplotlib is not installed"):
-            plots.plot_rate_curve(ok, "/tmp/never.png", backend="matplotlib")
-
 
 def test_plot_sinks_render_three_figures(spark, fixtures, tmp_path):
     """S5 end-to-end: the three reference figure shapes
     (analyse.py:109-135, 303-351, 501-513) render to real files from the
-    small result frames of the three analyses — via matplotlib when
-    installed, the dependency-free SVG backend otherwise."""
+    small result frames of the three analyses, as SVG."""
     from markt_database_analyzer_spark.plans import (
         initial_rate_by_posting_hour,
         lifetime_view_rate_curve,
@@ -339,7 +326,7 @@ def test_plot_sinks_render_three_figures(spark, fixtures, tmp_path):
     for p in (p1, p2, p3):
         with open(p) as f:
             head = f.read(200)
-        assert "<svg" in head or head.startswith("\x89PNG") is False
+        assert "<svg" in head
         assert (tmp_path / p.split("/")[-1]).stat().st_size > 500
 
 

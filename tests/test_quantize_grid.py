@@ -220,11 +220,13 @@ def test_qlong_matches_sql_qlong(spark, scale):
 
 
 def test_qlong_decimal_matches_sql_qlong_past_the_long_range(spark):
-    # |x * scale| beyond 2^63: the decimal form keeps the integer. Past
-    # 2^53 Spark converts a double to decimal through its shortest decimal
-    # string while DuckDB keeps the exact binary value, so the twins agree
-    # there only on doubles whose shortest string is exact (5e20, 3.3e21).
-    values = [5e11, -3.3e12, 2.5e-09, -2.5e-09, 1.5e-09]
+    # |x * scale| beyond 2^63: the decimal form keeps the integer, the
+    # exact binary value of the rounded double on both engines, also where
+    # its shortest decimal string is not exact (4.41...e20 on the nano grid
+    # is 441005452586158456832, not 441005452586158460000)
+    values = [5e11, -3.3e12, 2.5e-09, -2.5e-09, 1.5e-09, 4.4100545258615846e11,
+              -4.4100545258615846e11, 1.2345678901234567e16, 3.0e19 / 7, 9.1e28 / 3,
+              -(2.0**64) / 1e9, 2.0**63 / 1e9 + 4096.0, 123456.789, 9007199.254740993]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, v double")
     got = {
         r["i"]: int(r["q"])
@@ -237,6 +239,7 @@ def test_qlong_decimal_matches_sql_qlong_past_the_long_range(spark):
     want = {i: int(q) for i, q in con.execute(sql).fetchall()}
     assert got == want
     assert got[0] == 5 * 10**20 and got[2] == 3 and got[3] == -3
+    assert got[5] == 441005452586158456832 == -got[6]
 
 
 _CDF_Z = [0.0, 0.5, -0.5, 1.0, -1.0, 1.959963984540054, -1.959963984540054, 1.6448536269514722,

@@ -6,8 +6,9 @@ Two mechanisms keep it down, and both are pinned here:
   of the four plans cycles through, so asking them again compiles nothing;
 - the plans run only the jobs their answer needs: bounded results are
   sorted in one partition (no range-partitioning exchange, no sampling
-  job), spine joins broadcast the aggregate, and C deduplicates the
-  profiles once.
+  job), spine joins broadcast the aggregate, C deduplicates the
+  profiles once, and B1 and B2 take each push's earliest posting time
+  with one hash aggregate instead of a ranking window.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from markt_database_analyzer_spark.plans import (
 )
 
 MAX_JOBS = {"A": 5, "B1": 4, "B2": 7, "C": 6}
+PUSH_KEY = {"ad_unique_id", "push_counter"}
 
 
 def _plans(mon, prof):
@@ -109,3 +111,21 @@ def test_c_deduplicates_the_profiles_once(runs):
         and sorted(_names(node.child().output())) == ["ad_unique_id", "city", "push_counter"]
     ]
     assert len(dedup_shuffles) == 1
+
+
+@pytest.mark.parametrize("name", ["B1", "B2"])
+def test_b_takes_unique_pushes_without_a_window(runs, name):
+    # the earliest posting time per push is a min, not a row_number
+    # window over the push key and the group limit Spark plans for it
+    nodes = list(_nodes(runs[name][1]))
+    kinds = [node.getClass().getSimpleName() for node in nodes]
+    assert "WindowGroupLimitExec" not in kinds
+    for node in nodes:
+        if node.getClass().getSimpleName() == "WindowExec":
+            spec = node.partitionSpec()
+            keys = {
+                key
+                for i in range(spec.size())
+                for key in _names(spec.apply(i).references().toSeq())
+            }
+            assert not keys & PUSH_KEY, node.toString()

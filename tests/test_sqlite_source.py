@@ -1,8 +1,8 @@
 """S3: real SQLite ingest (the reference's native source, analyse.py:8,12-15).
 
 Builds a genuine ``monitoring.db`` from the fixture generator, reads it
-back through ``read_sqlite`` (JDBC when a jar is present, stdlib-sqlite3
-driver-side fallback otherwise), and round-trips Analysis C — the result
+back through ``read_sqlite`` (a driver-side stdlib ``sqlite3`` read), and
+round-trips Analysis C — the result
 must be row-identical to the same analysis over directly-constructed
 fixture frames.
 """

@@ -11,10 +11,16 @@ the hashes land:
   quantization → bit-stable under partitioning AND across engines), or
   ``nsum`` for per-row masses of order 1/N (nano-unit grid), and the
   oracle uses the matching SQL_DSUM/SQL_DAVG/SQL_NSUM templates; every
-  other value put on the grid goes through ``qlong`` with its SQL twin
-  ``sql_qlong``. All of these live in ``functions.aggregates``, the one
-  module that spells the grid (``tests/test_quantize_grid.py`` fails on a
-  hand-written round-to-grid cast anywhere else);
+  other value put on a grid, money in integer cents (``CENTS``) or basis
+  points (``BASIS_POINTS``) included, goes through ``qlong`` with its SQL
+  twin ``sql_qlong``. All of these live in ``functions.aggregates``, the
+  one module that spells the grid (``tests/test_quantize_grid.py`` fails
+  on a hand-written round-to-grid cast anywhere else);
+- a fixture several entries share has one Spark/SQL twin, used by every
+  entry: the stopword-ratio classifier is ``datapipe.text.stop_ratio`` /
+  ``sql_stop_ratio`` over ``EN_STOPWORDS``, and the seed-7 A/B split is
+  ``catalog_stats.ab_arm`` / ``SQL_AB_ARM`` (``tests/test_shared_fixtures.py``
+  fails on a second spelling of either);
 - orderings that feed ``min_by``/``row_number`` are made total with
   tiebreak columns down to the selected value, so both engines pick the
   same row even where the synthetic keys collide ((l_orderkey,

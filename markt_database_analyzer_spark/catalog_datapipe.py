@@ -181,7 +181,6 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JACCARD_T = 0.9  # similarity threshold (rational 9/10 — integer math)
 @register(
     "join_set_similarity_prefix",
     oracle=f"""

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from .catalog import _t, register
 from .datapipe.hashing import hash60, sql_hash60
-from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
+from .functions.aggregates import CENTS, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 from .operators.asof import asof_join_last
 from .operators.scd import scd2_versions
 
@@ -1078,7 +1078,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SKY_MAX_PART = 2000
 _SQL_SKYLINE = f"""
 WITH p AS (
-  SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+  SELECT p_partkey, {sql_qlong('p_retailprice', CENTS)} AS price_cents,
          CAST(p_size AS BIGINT) AS size
   FROM part WHERE p_partkey <= {_SKY_MAX_PART}
 ),
@@ -1116,7 +1116,7 @@ def parts_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_partkey") <= _SKY_MAX_PART)
         .select(
             "p_partkey",
-            F.round(F.col("p_retailprice") * 100).cast("bigint").alias("price_cents"),
+            qlong("p_retailprice", CENTS).alias("price_cents"),
             F.col("p_size").cast("bigint").alias("size"),
         )
     )
@@ -1135,12 +1135,12 @@ def parts_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NAMED_WINDOW = """
+_SQL_NAMED_WINDOW = f"""
 SELECT o_custkey,
        CAST(o_orderkey AS BIGINT) AS o_orderkey,
-       CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+       {sql_qlong('o_totalprice', CENTS)} AS price_cents,
        CAST(row_number() OVER w AS BIGINT) AS order_seq,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS BIGINT)
+       CAST(SUM({sql_qlong('o_totalprice', CENTS)}) OVER w AS BIGINT)
          AS running_cents
 FROM orders
 WHERE o_custkey <= 100
@@ -1162,7 +1162,7 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_NAMED_WINDOW)
 
 
-_SQL_PIT = """
+_SQL_PIT = f"""
 WITH states AS (
   SELECT o_custkey AS cust, epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS vf,
          CAST(o_orderkey AS BIGINT) AS seq, o_orderpriority AS prio
@@ -1170,7 +1170,7 @@ WITH states AS (
 ),
 facts AS (
   SELECT o.o_custkey AS cust, epoch_us(CAST(l.l_shipdate AS TIMESTAMP)) AS t,
-         CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT) AS rev_cents
+         {sql_qlong('l.l_extendedprice * (1 - l.l_discount)', CENTS)} AS rev_cents
   FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 ),
 u AS (
@@ -1224,9 +1224,7 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_custkey").alias("cust"),
             F.unix_micros(F.col("l_shipdate").cast("timestamp")).alias("t"),
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            ).cast("long").alias("rev_cents"),
+            qlong(F.col("l_extendedprice") * (1 - F.col("l_discount")), CENTS).alias("rev_cents"),
         )
     )
     joined = asof_join_last(

@@ -14,10 +14,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, demo_guard, register
-from .catalog_stats import _CAL_BINS, _LR_STOP, _sql_naive_bayes, classify_naive_bayes_langid
+from .catalog_stats import _CAL_BINS, _sql_naive_bayes, classify_naive_bayes_langid
 from .catalog_text import _BM25_B, _BM25_K1, _BM25_TERMS, _SQL_TOKENS, _tokens
 from .datapipe import text as tx
-from .functions.aggregates import NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
+from .functions.aggregates import CENTS, NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
@@ -93,15 +93,13 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_ROC_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_roc() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_ROC_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stop_ratio(toks)}, 9) AS score
   FROM documents
 ),
 by_score AS (
@@ -146,10 +144,9 @@ def eval_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets scores to a fixed grid first."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("score"),
+        F.round(tx.stop_ratio(ts), 9).alias("score"),
     )
     by_score = scored.groupBy("score").agg(
         F.sum("label").alias("tp_here"),
@@ -343,8 +340,7 @@ def _sql_calibration_cuts() -> str:
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         round(len(list_filter({toks}, t -> t IN {_LR_STOP}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS conf
+         round({tx.sql_stop_ratio(toks)}, 9) AS conf
   FROM documents
 ),
 {sql_cuts_ctes("scored", "conf", _CAL_BINS)},
@@ -389,11 +385,10 @@ def eval_calibration_bins_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain exactly replayable."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("conf"),
+        F.round(tx.stop_ratio(ts), 9).alias("conf"),
     ).localCheckpoint(eager=True)  # feeds the cut derivation AND the binning
     cuts = equi_depth_cut_points(scored, F.col("conf"), _CAL_BINS)
     binned = scored.withColumn("bin", bucket_by_cuts(F.col("conf"), cuts))
@@ -551,14 +546,12 @@ def eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_pr_auc() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_PR_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stop_ratio(toks)}, 9) AS score
   FROM documents
 ),
 by_score AS (
@@ -609,10 +602,9 @@ def eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the domain is bounded by the grid, not the corpus)."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("score"),
+        F.round(tx.stop_ratio(ts), 9).alias("score"),
     )
     by_score = scored.groupBy("score").agg(
         F.sum("label").alias("tp_here"),
@@ -757,7 +749,6 @@ def eval_mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KAPPA_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 _KAPPA_THRESHOLD = 0.08
 def _sql_kappa() -> str:
     toks = tx.sql_tokens("text")
@@ -765,8 +756,7 @@ def _sql_kappa() -> str:
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS truth,
          CASE WHEN (CASE WHEN len({toks}) = 0 THEN 0.0
-                         ELSE round(len(list_filter({toks}, t -> t IN {_KAPPA_STOPWORDS}))
-                                    / CAST(len({toks}) AS DOUBLE), 9)
+                         ELSE round({tx.sql_stop_ratio(toks)}, 9)
                     END) >= {_KAPPA_THRESHOLD}
               THEN 1 ELSE 0 END AS pred
   FROM documents
@@ -811,12 +801,11 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan, one 4-cell combine."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("lang", tx.tokens("text").alias("toks"))
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("truth"),
         (
             F.when(F.size("toks") == 0, F.lit(0.0)).otherwise(
-                F.round(F.size(stop) / F.size("toks").cast("double"), 9)
+                F.round(tx.stop_ratio("toks"), 9)
             )
             >= _KAPPA_THRESHOLD
         ).cast("int").alias("pred"),
@@ -854,14 +843,12 @@ def eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LIFT_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_lift() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_LIFT_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stop_ratio(toks)}, 9) AS score
   FROM documents
 ),
 dec AS (
@@ -909,11 +896,10 @@ def eval_lift_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval_lift_gains_deciles_cuts",
     )
     base = docs.select("doc_id", "lang", tx.tokens("text").alias("toks"))
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double"), 9).alias("score"),
+        F.round(tx.stop_ratio("toks"), 9).alias("score"),
     )
     dec = scored.select(
         "label",
@@ -947,14 +933,12 @@ def eval_lift_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("decile")
 
 
-_BRIER_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_brier() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN {_BRIER_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stop_ratio(toks)}, 9) AS score
   FROM documents
 ),
 agg AS (
@@ -994,10 +978,9 @@ def eval_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this is a single scan with a 3-number combine."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select("lang", tx.tokens("text").alias("toks"))
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size("toks").cast("double"), 9).alias("score"),
+        F.round(tx.stop_ratio("toks"), 9).alias("score"),
     )
     term = qlong((F.col("score") - F.col("label")) * (F.col("score") - F.col("label")), NANO)
     agg = scored.agg(
@@ -1204,14 +1187,12 @@ def eval_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_F1_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"  # the ROC/kappa fixture
 def _sql_f1_sweep() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         round(len(list_filter({toks}, t -> t IN {_F1_STOPWORDS}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS v
+         round({tx.sql_stop_ratio(toks)}, 9) AS v
   FROM documents
 ),
 dom AS (
@@ -1270,10 +1251,9 @@ def eval_f1_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     only."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("v"),
+        F.round(tx.stop_ratio(ts), 9).alias("v"),
     ).localCheckpoint(eager=True)  # feeds both prefix sums
     cnt_cum, _ = value_counts_cum(scored, F.col("v"))
     pos_cum, _ = value_counts_cum(scored, F.col("v"), weight=F.col("y"))
@@ -1326,9 +1306,7 @@ def _sql_ece() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         {sql_qlong(
-             f"len(list_filter({toks}, t -> t IN ('the','a','of','and','is'))) / CAST(len({toks}) AS DOUBLE)", NANO,
-         )} AS s9
+         {sql_qlong(tx.sql_stop_ratio(toks), NANO)} AS s9
   FROM documents
   WHERE len({toks}) > 0
 ),
@@ -1376,11 +1354,9 @@ def eval_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFra
     base = docs.select("lang", tx.tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        qlong(F.size(stop) / F.size("toks").cast("double"), NANO)
-        .alias("s9"),
+        qlong(tx.stop_ratio("toks"), NANO).alias("s9"),
     )
     b = scored.groupBy(
         F.least(F.lit(9), F.floor(F.col("s9") / F.lit(100000000))).alias("bin")
@@ -1421,7 +1397,7 @@ WITH panel AS (
 ),
 ranks AS (
   SELECT p_partkey,
-         row_number() OVER (ORDER BY CAST(round(p_retailprice * 100.0) AS BIGINT) DESC,
+         row_number() OVER (ORDER BY {sql_qlong('p_retailprice', CENTS)} DESC,
                             p_partkey) AS r1,
          row_number() OVER (ORDER BY p_size DESC, p_partkey) AS r2,
          row_number() OVER (ORDER BY length(p_name) DESC, p_partkey) AS r3
@@ -1479,7 +1455,7 @@ def eval_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_KW_PANEL)
     )
     r1 = Window.orderBy(
-        F.desc(F.round(F.col("p_retailprice") * 100.0).cast("bigint")), "p_partkey"
+        F.desc(qlong("p_retailprice", CENTS)), "p_partkey"
     )
     r2 = Window.orderBy(F.desc("p_size"), "p_partkey")
     r3 = Window.orderBy(F.desc(F.length("p_name")), "p_partkey")
@@ -1530,9 +1506,7 @@ WITH rated AS (
           + CASE WHEN n_chars >= 800 THEN 1 ELSE 0 END) AS rb
   FROM (
     SELECT n_chars,
-           {sql_qlong(
-               f"len(list_filter({toks}, t -> t IN ('the','a','of','and','is'))) / CAST(len({toks}) AS DOUBLE)", NANO,
-           )} AS s9
+           {sql_qlong(tx.sql_stop_ratio(toks), NANO)} AS s9
     FROM documents WHERE len({toks}) > 0
   )
 ),
@@ -1587,10 +1561,7 @@ def eval_cohens_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "n_chars", tx.tokens("text").alias("toks")
     ).filter(F.size("toks") > 0)
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
-    s9 = (
-        qlong(F.size(stop) / F.size("toks").cast("double"), NANO)
-    )
+    s9 = qlong(tx.stop_ratio("toks"), NANO)
     grade = lambda c, cuts: sum(  # noqa: E731
         (F.when(c >= F.lit(t), 1).otherwise(0) for t in cuts), F.lit(0)
     )
@@ -1639,8 +1610,7 @@ def _sql_auc_ci() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         round(len(list_filter({toks}, t -> t IN ('the','a','of','and','is')))
-               / CAST(len({toks}) AS DOUBLE), 9) AS score
+         round({tx.sql_stop_ratio(toks)}, 9) AS score
   FROM documents WHERE len({toks}) > 0
 ),
 by_score AS (
@@ -1711,10 +1681,9 @@ def eval_auc_hanley_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB form buckets scores to a fixed grid first), 1-row reduce."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("score"),
+        F.round(tx.stop_ratio(ts), 9).alias("score"),
     ).filter(F.size(ts) > 0)
     by_score = scored.groupBy("score").agg(
         F.sum("label").alias("tp_here"),
@@ -2130,8 +2099,7 @@ WITH rated AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS r1,
          CASE WHEN (CASE WHEN len({toks}) = 0 THEN 0.0
-                         ELSE round(len(list_filter({toks}, t -> t IN {_KAPPA_STOPWORDS}))
-                                    / CAST(len({toks}) AS DOUBLE), 9)
+                         ELSE round({tx.sql_stop_ratio(toks)}, 9)
                     END) >= {_KAPPA_THRESHOLD}
               THEN 1 ELSE 0 END AS r2,
          CASE WHEN doc_id % 5 = 0 THEN NULL
@@ -2199,13 +2167,12 @@ def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id", "lang", F.length("text").alias("tlen"), tx.tokens("text").alias("toks")
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     rated = base.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("r1"),
         (
             F.when(F.size("toks") == 0, F.lit(0.0)).otherwise(
-                F.round(F.size(stop) / F.size("toks").cast("double"), 9)
+                F.round(tx.stop_ratio("toks"), 9)
             )
             >= _KAPPA_THRESHOLD
         ).cast("int").alias("r2"),

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
-from .functions.aggregates import NANO, SQL_DSUM, dsum, qlong, sql_qlong
+from .functions.aggregates import CENTS, NANO, SQL_DSUM, dsum, qlong, sql_qlong
 
 
 @register(
@@ -499,10 +499,10 @@ def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_MOM_YOY = """
+_SQL_MOM_YOY = f"""
 WITH monthly AS (
   SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS HUGEINT)) AS BIGINT) AS rev_cents
+         CAST(SUM({sql_qlong('o_totalprice', CENTS, 'HUGEINT')}) AS BIGINT) AS rev_cents
   FROM orders GROUP BY 1
 ),
 g AS (
@@ -532,7 +532,7 @@ def growth_mom_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     date_trunc, so month boundaries agree across engines (UTC-pinned)."""
     o = _t(spark, sf_dir, "orders")
     monthly = o.groupBy(F.trunc("o_orderdate", "month").alias("month")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_cents")
+        F.sum(qlong("o_totalprice", CENTS)).alias("rev_cents")
     )
     w = Window.orderBy("month")
     g = monthly.select(

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, demo_guard, register
-from .functions.aggregates import NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
+from .functions.aggregates import CENTS, NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 from .operators.equidepth import bucket_by_cuts, equi_depth_cut_points, sql_cuts_ctes
 
 
@@ -247,10 +247,10 @@ def segment_rfm_customers_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).sortWithinPartitions("custkey")
 
 
-_DRAWDOWN_SQL = """
+_DRAWDOWN_SQL = f"""
 WITH pts AS (
   SELECT l_partkey, l_shipdate, l_orderkey, l_linenumber,
-         CAST(round(100.0 * l_extendedprice / l_quantity) AS BIGINT) AS p_cents
+         {sql_qlong(f'l_extendedprice * {CENTS} / l_quantity', 1.0)} AS p_cents
   FROM lineitem
 ),
 runs AS (
@@ -291,9 +291,9 @@ def finance_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_shipdate",
         "l_orderkey",
         "l_linenumber",
-        F.round(F.lit(100.0) * F.col("l_extendedprice") / F.col("l_quantity"))
-        .cast("bigint")
-        .alias("p_cents"),
+        # cents scaled before the division: unit prices are often exact
+        # half-cent ties, so the order decides the rounded cent
+        qlong(F.col("l_extendedprice") * CENTS / F.col("l_quantity"), 1.0).alias("p_cents"),
     )
     w = (
         Window.partitionBy("l_partkey")
@@ -315,10 +315,10 @@ def finance_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RSI_SQL = """
+_RSI_SQL = f"""
 WITH daily AS (
   SELECT o_orderpriority AS priority, o_orderdate AS day,
-         CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) AS v
+         CAST(sum({sql_qlong('o_totalprice', CENTS)}) AS BIGINT) AS v
   FROM orders GROUP BY 1, 2
 ),
 d AS (
@@ -370,7 +370,7 @@ def finance_rsi_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("priority"),
         F.col("o_orderdate").alias("day"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("bigint"))
+        F.sum(qlong("o_totalprice", CENTS))
         .cast("bigint")
         .alias("v")
     )
@@ -411,8 +411,7 @@ def _sql_sharpe() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 led AS (
@@ -468,9 +467,7 @@ def finance_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("x")
@@ -514,8 +511,7 @@ def _sql_var_cvar() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 led AS (
@@ -565,9 +561,7 @@ def finance_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("x")
@@ -804,8 +798,7 @@ def _sql_macd() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 win AS (
@@ -860,9 +853,7 @@ def finance_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("x")
@@ -905,7 +896,7 @@ def _sql_evt_pot() -> str:
     return f"""
 WITH hourly AS (
   SELECT date_trunc('hour', ts) AS h,
-         CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('value', CENTS)}) AS BIGINT) AS x
   FROM events GROUP BY 1
 ),
 deltas AS (
@@ -982,7 +973,7 @@ def finance_evt_pot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw event table never meets a window."""
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.sum(F.round(F.col("value") * 100.0).cast("bigint"))
+        F.sum(qlong("value", CENTS))
         .cast("bigint")
         .alias("x")
     )
@@ -1047,7 +1038,7 @@ def finance_evt_pot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_BENFORD = f"""
 WITH px AS (
-  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1)
+  SELECT CAST(substr(CAST({sql_qlong('o_totalprice', CENTS)} AS VARCHAR), 1, 1)
               AS INT) AS d
   FROM orders WHERE o_totalprice > 0
 ),
@@ -1108,7 +1099,7 @@ def finance_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbs them map-side)."""
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     d = F.substring(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"), 1, 1
+        qlong("o_totalprice", CENTS).cast("string"), 1, 1
     ).cast("int")
     counts = orders.select(d.alias("d")).groupBy("d").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from .catalog import _t, register
 from .datapipe.hashing import hash60, sql_hash60
 from .datapipe.sampling import RESOLUTION, _gate
-from .functions.aggregates import NANO, qlong, sql_qlong
+from .functions.aggregates import CENTS, NANO, qlong, sql_qlong
 from .operators.equidepth import value_counts_cum
 
 
@@ -473,7 +473,7 @@ def _sql_kanon() -> str:
 WITH qid AS (
   SELECT c_nationkey,
          c_mktsegment,
-         CAST(floor(CAST(round(c_acctbal * 100.0) AS BIGINT)
+         CAST(floor({sql_qlong('c_acctbal', CENTS)}
                     / {_KANON_BAND}.0) AS BIGINT) AS bal_band
   FROM customer
 ),
@@ -521,9 +521,7 @@ def privacy_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qid = c.select(
         "c_nationkey",
         "c_mktsegment",
-        F.floor(
-            F.round(F.col("c_acctbal") * 100.0).cast("bigint") / float(_KANON_BAND)
-        )
+        F.floor(qlong("c_acctbal", CENTS) / float(_KANON_BAND))
         .cast("bigint")
         .alias("bal_band"),
     )
@@ -619,7 +617,7 @@ def _sql_ldiversity() -> str:
     return f"""
 WITH qid AS (
   SELECT c_nationkey,
-         CAST(floor(CAST(round(c_acctbal * 100.0) AS BIGINT)
+         CAST(floor({sql_qlong('c_acctbal', CENTS)}
                     / {_LDIV_BAND}.0) AS BIGINT) AS bal_band,
          c_mktsegment AS sensitive
   FROM customer
@@ -682,9 +680,7 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     qid = c.select(
         "c_nationkey",
-        F.floor(
-            F.round(F.col("c_acctbal") * 100.0).cast("bigint") / float(_LDIV_BAND)
-        )
+        F.floor(qlong("c_acctbal", CENTS) / float(_LDIV_BAND))
         .cast("bigint")
         .alias("bal_band"),
         F.col("c_mktsegment").alias("sensitive"),
@@ -869,7 +865,7 @@ def _sql_tcloseness() -> str:
     return f"""
 WITH qid AS (
   SELECT c_nationkey,
-         CAST(floor(CAST(round(c_acctbal * 100.0) AS BIGINT)
+         CAST(floor({sql_qlong('c_acctbal', CENTS)}
                     / {_LDIV_BAND}.0) AS BIGINT) AS bal_band,
          c_mktsegment AS sensitive
   FROM customer
@@ -943,9 +939,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     qid = c.select(
         "c_nationkey",
-        F.floor(
-            F.round(F.col("c_acctbal") * 100.0).cast("bigint") / float(_LDIV_BAND)
-        )
+        F.floor(qlong("c_acctbal", CENTS) / float(_LDIV_BAND))
         .cast("bigint")
         .alias("bal_band"),
         F.col("c_mktsegment").alias("sensitive"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, demo_guard, register
@@ -36,6 +36,8 @@ from .datapipe.sketches import (
 )
 from .datapipe.util import fan_out
 from .functions.aggregates import (
+    BASIS_POINTS,
+    CENTS,
     NANO,
     SQL_DAVG,
     SQL_DSUM,
@@ -1598,7 +1600,7 @@ def classify_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_BENFORD = f"""
 WITH cents AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
+  SELECT {sql_qlong('o_totalprice', CENTS)} AS c FROM orders
 ),
 digits AS (
   SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS BIGINT) AS digit,
@@ -1635,7 +1637,7 @@ def stats_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums 9 micro-quantized per-digit terms — an unbounded window over a
     9-row frame, constant state at any scale. One scan, one 9-group agg."""
     cents = _t(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")
+        qlong("o_totalprice", CENTS).alias("c")
     )
     digits = cents.groupBy(
         F.substring(F.col("c").cast("string"), 1, 1).cast("bigint").alias("digit")
@@ -1845,15 +1847,13 @@ def iso_regression_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LR_STEPS = 8
 _LR_LR = 1.0
-_LR_STOP = "('the', 'a', 'of', 'and', 'is')"
 def _sql_logreg() -> str:
     toks = tx.sql_tokens("text")
     feats = f"""
 feats AS (
   SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
          1.0 AS x0,
-         round(len(list_filter({toks}, t -> t IN {_LR_STOP}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS x1,
+         round({tx.sql_stop_ratio(toks)}, 9) AS x1,
          round(len(array_to_string({toks}, '')) / CAST(len({toks}) AS DOUBLE), 9) AS x2,
          round(len(list_distinct({toks})) / CAST(len({toks}) AS DOUBLE), 9) AS x3
   FROM documents
@@ -1908,11 +1908,10 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     training accuracy numerator, and mean log-loss — one row."""
     docs = _t(spark, sf_dir, "documents")
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     nf = F.size(ts).cast("double")
     feats = docs.select(
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
-        F.round(F.size(stop) / nf, 9).alias("x1"),
+        F.round(tx.stop_ratio(ts), 9).alias("x1"),
         F.round(F.length(F.array_join(ts, "")) / nf, 9).alias("x2"),
         F.round(F.size(F.array_distinct(ts)) / nf, 9).alias("x3"),
     ).localCheckpoint(eager=True)
@@ -1973,8 +1972,7 @@ def _sql_calibration() -> str:
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         round(len(list_filter({toks}, t -> t IN {_LR_STOP}))
-                 / CAST(len({toks}) AS DOUBLE), 9) AS conf
+         round({tx.sql_stop_ratio(toks)}, 9) AS conf
   FROM documents
 ),
 binned AS (
@@ -2019,11 +2017,10 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval_calibration_bins_cuts",
     )
     ts = tx.tokens("text")
-    stop = F.filter(ts, lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = docs.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.round(F.size(stop) / F.size(ts).cast("double"), 9).alias("conf"),
+        F.round(tx.stop_ratio(ts), 9).alias("conf"),
     )
     binned = scored.withColumn(
         "bin", F.ntile(_CAL_BINS).over(Window.orderBy("conf", "doc_id"))
@@ -2860,9 +2857,9 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
 def _sql_anova() -> str:
     cols = []
+    q = sql_qlong("o_totalprice", CENTS, "HUGEINT")
     for i, g in enumerate(_PRIORITIES):
         c = f"o_orderpriority = '{g}'"
-        q = "CAST(round(o_totalprice * 100.0) AS HUGEINT)"
         cols += [
             f"CAST(count(*) FILTER (WHERE {c}) AS DOUBLE) AS n{i}",
             f"CAST(sum({q}) FILTER (WHERE {c}) AS DOUBLE) AS s{i}",
@@ -2905,7 +2902,7 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold in the identical order and the IEEE result is bit-equal —
     never a float SUM over a nondeterministically-ordered group set."""
     orders = _t(spark, sf_dir, "orders")
-    q = F.round(F.col("o_totalprice") * 100.0).cast("decimal(38,0)")
+    q = qlong("o_totalprice", CENTS, "decimal(38,0)")
     aggs = []
     for i, g in enumerate(_PRIORITIES):
         c = F.col("o_orderpriority") == g
@@ -2952,7 +2949,7 @@ def _sql_kruskal() -> str:
     return f"""
 WITH pts AS (
   SELECT l_returnflag AS grp,
-         CAST(round(l_quantity * 100.0) AS BIGINT) AS v
+         {sql_qlong('l_quantity', CENTS)} AS v
   FROM lineitem
 ),
 dom AS (
@@ -3000,7 +2997,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_returnflag").alias("grp"),
-        F.round(F.col("l_quantity") * 100.0).cast("bigint").alias("v"),
+        qlong("l_quantity", CENTS).alias("v"),
     )
     cum, _ = value_counts_cum(pts, F.col("v"))
     # two consumers (rank map + tie sum) — pin the window output once
@@ -3139,7 +3136,7 @@ def _sql_brown_forsythe() -> str:
     return f"""
 WITH pts AS (
   SELECT l_returnflag AS grp,
-         CAST(round(l_quantity * 100.0) AS BIGINT) AS v
+         {sql_qlong('l_quantity', CENTS)} AS v
   FROM lineitem
 ),
 dom AS (
@@ -3191,7 +3188,7 @@ def stats_levene_brownforsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_returnflag").alias("grp"),
-        F.round(F.col("l_quantity") * 100.0).cast("bigint").alias("v"),
+        qlong("l_quantity", CENTS).alias("v"),
     )
     cum, _ = grouped_value_counts_cum(pts, F.col("grp"), F.col("v"))
     cum = cum.localCheckpoint(eager=True)
@@ -3368,9 +3365,61 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUPED_SEED = 7
+# The seed-7 A/B experiment that the experimentation entries (CUPED, TOST,
+# effect size, SRM, power, beta-binomial, odds ratio) all read out: a
+# user's arm is the parity of a seeded md5 hash of the user id, so every
+# readout describes the same split.
+AB_SEED = 7
+SQL_AB_ARM = f"({sql_hash60('user_id::VARCHAR', seed=AB_SEED)} % 2)"
+
+
+def ab_arm() -> Column:
+    """Spark twin of ``SQL_AB_ARM``: the user's arm, 0 or 1."""
+    return F.pmod(hash60(F.col("user_id").cast("string"), seed=AB_SEED), F.lit(2))
+
+
+# Per-user total event value on the micro grid (``yq``) with the arm.
+_SQL_AB_TOTALS = f"""
+  SELECT user_id, {SQL_AB_ARM} AS arm,
+         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
+  FROM events GROUP BY 1, 2"""
+
+
+def _ab_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events").select("user_id", "value")
+    return (
+        ev.groupBy("user_id")
+        .agg(F.sum(qlong("value")).cast("bigint").alias("yq"))
+        .select(ab_arm().alias("arm"), "yq")
+    )
+
+
+# The six per-arm moments of ``yq`` (count, sum, sum of squares), exact
+# in HUGEINT / decimal(38,0) and cast to DOUBLE once.
+_SQL_AB_MOMENTS = """
+         CAST(count(*) FILTER (WHERE arm = 0) AS DOUBLE) AS n0,
+         CAST(count(*) FILTER (WHERE arm = 1) AS DOUBLE) AS n1,
+         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 0) AS DOUBLE) AS s0,
+         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 1) AS DOUBLE) AS s1,
+         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 0) AS DOUBLE) AS ss0,
+         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 1) AS DOUBLE) AS ss1"""
+
+
+def _ab_moments() -> list[Column]:
+    yd = F.col("yq").cast("decimal(38,0)")
+    a0 = F.col("arm") == 0
+    a1 = F.col("arm") == 1
+    return [
+        F.count(F.when(a0, 1)).cast("double").alias("n0"),
+        F.count(F.when(a1, 1)).cast("double").alias("n1"),
+        F.sum(F.when(a0, yd)).cast("double").alias("s0"),
+        F.sum(F.when(a1, yd)).cast("double").alias("s1"),
+        F.sum(F.when(a0, yd * F.col("yq"))).cast("double").alias("ss0"),
+        F.sum(F.when(a1, yd * F.col("yq"))).cast("double").alias("ss1"),
+    ]
+
+
 def _sql_cuped() -> str:
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_CUPED_SEED)} % 2)"
     return f"""
 WITH b AS (
   SELECT CAST(floor((epoch_us(min(ts)) + epoch_us(max(ts))) / 2.0) AS BIGINT)
@@ -3378,7 +3427,7 @@ WITH b AS (
   FROM events
 ),
 u AS (
-  SELECT user_id, {arm} AS arm,
+  SELECT user_id, {SQL_AB_ARM} AS arm,
          CAST(sum(CASE WHEN epoch_us(ts) < tmid
                        THEN {sql_qlong('value')}
                        ELSE 0 END) AS BIGINT) AS xq,
@@ -3466,14 +3515,7 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("yq"),
         )
-        .select(
-            F.pmod(
-                hash60(F.col("user_id").cast("string"), seed=_CUPED_SEED),
-                F.lit(2),
-            ).alias("arm"),
-            "xq",
-            "yq",
-        )
+        .select(ab_arm().alias("arm"), "xq", "yq")
         .localCheckpoint(eager=True)
     )
     xd = F.col("xq").cast("decimal(38,0)")
@@ -3635,9 +3677,9 @@ def _sql_multiple_ols() -> str:
     d2 = det("n", "s1", "sy", "s1", "s11", "s1y", "s2", "s12", "s2y")
     return f"""
 WITH q AS (
-  SELECT CAST(round(l_quantity * 100.0) AS BIGINT) AS x1,
-         CAST(round(l_discount * 10000.0) AS BIGINT) AS x2,
-         CAST(round(l_extendedprice * 100.0) AS BIGINT) AS y
+  SELECT {sql_qlong('l_quantity', CENTS)} AS x1,
+         {sql_qlong('l_discount', BASIS_POINTS)} AS x2,
+         {sql_qlong('l_extendedprice', CENTS)} AS y
   FROM lineitem
 ),
 g AS (
@@ -3692,9 +3734,9 @@ def regression_multiple_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratically but the pass count not at all."""
     li = _t(spark, sf_dir, "lineitem")
     q = li.select(
-        F.round(F.col("l_quantity") * 100.0).cast("bigint").alias("x1"),
-        F.round(F.col("l_discount") * 10000.0).cast("bigint").alias("x2"),
-        F.round(F.col("l_extendedprice") * 100.0).cast("bigint").alias("y"),
+        qlong("l_quantity", CENTS).alias("x1"),
+        qlong("l_discount", BASIS_POINTS).alias("x2"),
+        qlong("l_extendedprice", CENTS).alias("y"),
     )
 
     def dsum2(a: str, b: str):
@@ -3754,7 +3796,7 @@ _BH_ALPHA = 0.05
 def _sql_fdr_bh() -> str:
     return f"""
 WITH q AS (
-  SELECT c_nationkey, CAST(round(c_acctbal * 100.0) AS BIGINT) AS a
+  SELECT c_nationkey, {sql_qlong('c_acctbal', CENTS)} AS a
   FROM customer
 ),
 g AS (
@@ -3824,7 +3866,7 @@ def stats_fdr_bh_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB."""
     cust = _t(spark, sf_dir, "customer")
     q = cust.select(
-        "c_nationkey", F.round(F.col("c_acctbal") * 100.0).cast("bigint").alias("a")
+        "c_nationkey", qlong("c_acctbal", CENTS).alias("a")
     )
     ad = F.col("a").cast("decimal(38,0)")
     g = q.groupBy("c_nationkey").agg(
@@ -3876,8 +3918,8 @@ def _sql_jackknife() -> str:
     return f"""
 WITH q AS (
   SELECT date_trunc('month', l_shipdate) AS blk,
-         CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT) AS a,
-         CAST(round(l_quantity * 100.0) AS BIGINT) AS b
+         {sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)} AS a,
+         {sql_qlong('l_quantity', CENTS)} AS b
   FROM lineitem
 ),
 g AS (
@@ -3947,10 +3989,9 @@ def stats_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     q = li.select(
         F.date_trunc("month", "l_shipdate").alias("blk"),
-        F.round(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0)
-        .cast("bigint")
+        qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         .alias("a"),
-        F.round(F.col("l_quantity") * 100.0).cast("bigint").alias("b"),
+        qlong("l_quantity", CENTS).alias("b"),
     )
     g = q.groupBy("blk").agg(
         F.sum(F.col("a").cast("decimal(38,0)")).cast("double").alias("a_g"),
@@ -4001,9 +4042,9 @@ def stats_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_gini() -> str:
-    return """
+    return f"""
 WITH pts AS (
-  SELECT CAST(round(c_acctbal * 100.0) AS BIGINT) AS v
+  SELECT {sql_qlong('c_acctbal', CENTS)} AS v
   FROM customer WHERE c_acctbal >= 0
 ),
 dom AS (
@@ -4047,7 +4088,7 @@ def stats_gini_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's global window is the semantic spec only). One more
     map-side-combined aggregate over the domain frame finishes it."""
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 0)
-    pts = cust.select(F.round(F.col("c_acctbal") * 100.0).cast("bigint").alias("v"))
+    pts = cust.select(qlong("c_acctbal", CENTS).alias("v"))
     cum, _n = value_counts_cum(pts, F.col("v"))
     vd = F.col("v").cast("decimal(38,0)")
     s = cum.agg(
@@ -4290,23 +4331,13 @@ def stats_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOST_SEED = 7  # same split as stats_cuped_adjustment: arms are comparable
 _TOST_MARGIN_FRAC = 0.05
 def _sql_tost() -> str:
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_TOST_SEED)} % 2)"
     return f"""
-WITH u AS (
-  SELECT user_id, {arm} AS arm,
-         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
-  FROM events GROUP BY 1, 2
+WITH u AS ({_SQL_AB_TOTALS}
 ),
 g AS (
-  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS DOUBLE) AS n0,
-         CAST(count(*) FILTER (WHERE arm = 1) AS DOUBLE) AS n1,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 0) AS DOUBLE) AS s0,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 1) AS DOUBLE) AS s1,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 0) AS DOUBLE) AS ss0,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 1) AS DOUBLE) AS ss1
+  SELECT {_SQL_AB_MOMENTS}
   FROM u
 ),
 d AS (
@@ -4358,32 +4389,7 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy-user shuffle, then ONE 6-statistic
     FILTERed aggregate — no window, no driver data; left-assoc folds
     nowhere needed (two-arm folds are single expressions)."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "value")
-    u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum(qlong("value"))
-            .cast("bigint")
-            .alias("yq")
-        )
-        .select(
-            F.pmod(
-                hash60(F.col("user_id").cast("string"), seed=_TOST_SEED), F.lit(2)
-            ).alias("arm"),
-            "yq",
-        )
-    )
-    yd = F.col("yq").cast("decimal(38,0)")
-    a0 = F.col("arm") == 0
-    a1 = F.col("arm") == 1
-    g = u.agg(
-        F.count(F.when(a0, F.lit(1))).cast("double").alias("n0"),
-        F.count(F.when(a1, F.lit(1))).cast("double").alias("n1"),
-        F.sum(F.when(a0, yd)).cast("double").alias("s0"),
-        F.sum(F.when(a1, yd)).cast("double").alias("s1"),
-        F.sum(F.when(a0, yd * F.col("yq"))).cast("double").alias("ss0"),
-        F.sum(F.when(a1, yd * F.col("yq"))).cast("double").alias("ss1"),
-    )
+    g = _ab_totals(spark, sf_dir).agg(*_ab_moments())
     d = g.select(
         "n0",
         "n1",
@@ -4510,7 +4516,6 @@ def stats_wilson_ci_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nationkey")
 
 
-_MCN_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 _MCN_THRESHOLD = 0.08  # classifier A: the eval_cohens_kappa decision rule
 def _sql_mcnemar() -> str:
     toks = tx.sql_tokens("text")
@@ -4519,8 +4524,7 @@ def _sql_mcnemar() -> str:
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS truth,
-         CASE WHEN round(len(list_filter({toks}, t -> t IN {_MCN_STOPWORDS}))
-                      / CAST(len({toks}) AS DOUBLE), 9) >= {_MCN_THRESHOLD}
+         CASE WHEN round({tx.sql_stop_ratio(toks)}, 9) >= {_MCN_THRESHOLD}
               THEN 1 ELSE 0 END AS pa,
          CASE WHEN len(list_filter({toks}, t -> t = 'the')) > 0
               THEN 1 ELSE 0 END AS pb
@@ -4568,12 +4572,11 @@ def stats_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("truth"),
         tx.tokens("text").alias("toks"),
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     the = F.filter(F.col("toks"), lambda t: t == "the")
     scored = base.select(
         "truth",
         (
-            F.round(F.size(stop) / F.size("toks").cast("double"), 9)
+            F.round(tx.stop_ratio("toks"), 9)
             >= _MCN_THRESHOLD
         ).cast("int").alias("pa"),
         (F.size(the) > 0).cast("int").alias("pb"),
@@ -4608,24 +4611,12 @@ def stats_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EFFECT_SEED = 7  # the CUPED/TOST split: arms are comparable across entries
 def _sql_cohens_d() -> str:
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_EFFECT_SEED)} % 2)"
     return f"""
-WITH u AS (
-  SELECT user_id, {arm} AS arm,
-         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
-  FROM events GROUP BY 1, 2
+WITH u AS ({_SQL_AB_TOTALS}
 ),
 g AS (
-  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS DOUBLE) AS n0,
-         CAST(count(*) FILTER (WHERE arm = 1) AS DOUBLE) AS n1,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 0) AS DOUBLE) AS s0,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 1) AS DOUBLE) AS s1,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 0) AS DOUBLE)
-           AS ss0,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 1) AS DOUBLE)
-           AS ss1
+  SELECT {_SQL_AB_MOMENTS}
   FROM u
 ),
 d AS (
@@ -4666,31 +4657,7 @@ def stats_cohens_d_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy-user shuffle (map-side combined), then ONE
     6-statistic FILTERed aggregate to a single row — no window, no
     driver data."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "value")
-    u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum(qlong("value"))
-            .cast("bigint")
-            .alias("yq")
-        )
-        .select(
-            F.pmod(
-                hash60(F.col("user_id").cast("string"), seed=_EFFECT_SEED),
-                F.lit(2),
-            ).alias("arm"),
-            "yq",
-        )
-    )
-    yd = F.col("yq").cast("decimal(38,0)")
-    g = u.agg(
-        F.count(F.when(F.col("arm") == 0, 1)).cast("double").alias("n0"),
-        F.count(F.when(F.col("arm") == 1, 1)).cast("double").alias("n1"),
-        F.sum(F.when(F.col("arm") == 0, yd)).cast("double").alias("s0"),
-        F.sum(F.when(F.col("arm") == 1, yd)).cast("double").alias("s1"),
-        F.sum(F.when(F.col("arm") == 0, yd * F.col("yq"))).cast("double").alias("ss0"),
-        F.sum(F.when(F.col("arm") == 1, yd * F.col("yq"))).cast("double").alias("ss1"),
-    )
+    g = _ab_totals(spark, sf_dir).agg(*_ab_moments())
     diff = F.col("s1") / F.col("n1") - F.col("s0") / F.col("n0")
     sp = F.sqrt(
         (
@@ -4789,9 +4756,9 @@ def _sql_ridge() -> str:
     det = f"((s11c + {lam}) * (s22c + {lam}) - s12c * s12c)"
     return f"""
 WITH q AS (
-  SELECT CAST(round(l_quantity * 100.0) AS BIGINT) AS x1,
-         CAST(round(l_discount * 10000.0) AS BIGINT) AS x2,
-         CAST(round(l_extendedprice * 100.0) AS BIGINT) AS y
+  SELECT {sql_qlong('l_quantity', CENTS)} AS x1,
+         {sql_qlong('l_discount', BASIS_POINTS)} AS x2,
+         {sql_qlong('l_extendedprice', CENTS)} AS y
   FROM lineitem
 ),
 g AS (
@@ -4854,9 +4821,9 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ML recipe (same as OLS; regularization costs nothing extra)."""
     li = _t(spark, sf_dir, "lineitem")
     q = li.select(
-        F.round(F.col("l_quantity") * 100.0).cast("bigint").alias("x1"),
-        F.round(F.col("l_discount") * 10000.0).cast("bigint").alias("x2"),
-        F.round(F.col("l_extendedprice") * 100.0).cast("bigint").alias("y"),
+        qlong("l_quantity", CENTS).alias("x1"),
+        qlong("l_discount", BASIS_POINTS).alias("x2"),
+        qlong("l_extendedprice", CENTS).alias("y"),
     )
     d1 = F.col("x1").cast("decimal(38,0)")
     d2 = F.col("x2").cast("decimal(38,0)")
@@ -4909,14 +4876,12 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SRM_SEED = 7  # the CUPED/TOST/effect-size split — the one being audited
 _SRM_ALPHA = 0.001  # the conventional SRM alarm level
 def _sql_srm() -> str:
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_SRM_SEED)} % 2)"
     phi = SQL_NORM_CDF.format(z="sqrt(chi2)")
     return f"""
 WITH u AS (
-  SELECT user_id, {arm} AS arm FROM events GROUP BY 1, 2
+  SELECT user_id, {SQL_AB_ARM} AS arm FROM events GROUP BY 1, 2
 ),
 c AS (
   SELECT CAST(count(*) FILTER (WHERE arm = 0) AS BIGINT) AS n0,
@@ -4958,12 +4923,7 @@ def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy(user, arm) distinct shuffle (map-side
     combined), then a 2-cell combine to one row."""
     ev = _t(spark, sf_dir, "events").select("user_id")
-    u = ev.groupBy(
-        "user_id",
-        F.pmod(
-            hash60(F.col("user_id").cast("string"), seed=_SRM_SEED), F.lit(2)
-        ).alias("arm"),
-    ).agg(F.lit(1).alias("one"))
+    u = ev.groupBy("user_id", ab_arm().alias("arm")).agg(F.lit(1).alias("one"))
     c = u.agg(
         F.count(F.when(F.col("arm") == 0, 1)).cast("bigint").alias("n0"),
         F.count(F.when(F.col("arm") == 1, 1)).cast("bigint").alias("n1"),
@@ -4987,11 +4947,10 @@ def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hhi() -> str:
-    return """
+    return f"""
 WITH rev AS (
   SELECT date_trunc('month', l_shipdate) AS month, l_suppkey,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS r
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS r
   FROM lineitem GROUP BY 1, 2
 ),
 m AS (
@@ -5035,9 +4994,7 @@ def stats_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
     ).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("r")
@@ -5059,31 +5016,19 @@ def stats_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month")
 
 
-_POWER_SEED = 7  # the CUPED/TOST/SRM split — designing for the same experiment
 # z_{alpha/2} at alpha=0.05 and z_beta at 80% power, injected as IDENTICAL
 # decimal literals on both engines (quantile functions differ per libm).
 _Z_ALPHA = "1.959963984540054"
 _Z_BETA = "0.8416212335729143"
 _MDE_REL_TARGET = 0.02  # size the experiment for a 2% lift
 def _sql_power() -> str:
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_POWER_SEED)} % 2)"
     return f"""
-WITH u AS (
-  SELECT user_id, {arm} AS arm,
-         CAST(sum({sql_qlong('value')}) AS BIGINT) AS yq
-  FROM events GROUP BY 1, 2
+WITH u AS ({_SQL_AB_TOTALS}
 ),
 g AS (
-  SELECT CAST(count(*) FILTER (WHERE arm = 0) AS DOUBLE) AS n0,
-         CAST(count(*) FILTER (WHERE arm = 1) AS DOUBLE) AS n1,
+  SELECT {_SQL_AB_MOMENTS},
          CAST(sum(CAST(yq AS HUGEINT)) AS DOUBLE) AS s,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) AS DOUBLE) AS ss,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 0) AS DOUBLE) AS s0,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 1) AS DOUBLE) AS s1,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 0) AS DOUBLE)
-           AS ss0,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 1) AS DOUBLE)
-           AS ss1
+         CAST(sum(CAST(yq AS HUGEINT) * yq) AS DOUBLE) AS ss
   FROM u
 ),
 d AS (
@@ -5128,32 +5073,13 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy-user shuffle (map-side combined), ONE
     8-statistic FILTERed aggregate, row-local algebra on a 1-row
     frame."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "value")
-    u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum(qlong("value"))
-            .cast("bigint")
-            .alias("yq")
-        )
-        .select(
-            F.pmod(
-                hash60(F.col("user_id").cast("string"), seed=_POWER_SEED),
-                F.lit(2),
-            ).alias("arm"),
-            "yq",
-        )
-    )
+    # the pooled s/ss are their own sums: s0 + s1 in double need not
+    # equal the exact total
     yd = F.col("yq").cast("decimal(38,0)")
-    g = u.agg(
-        F.count(F.when(F.col("arm") == 0, 1)).cast("double").alias("n0"),
-        F.count(F.when(F.col("arm") == 1, 1)).cast("double").alias("n1"),
+    g = _ab_totals(spark, sf_dir).agg(
+        *_ab_moments(),
         F.sum(yd).cast("double").alias("s"),
         F.sum(yd * F.col("yq")).cast("double").alias("ss"),
-        F.sum(F.when(F.col("arm") == 0, yd)).cast("double").alias("s0"),
-        F.sum(F.when(F.col("arm") == 1, yd)).cast("double").alias("s1"),
-        F.sum(F.when(F.col("arm") == 0, yd * F.col("yq"))).cast("double").alias("ss0"),
-        F.sum(F.when(F.col("arm") == 1, yd * F.col("yq"))).cast("double").alias("ss1"),
     )
     mean_y = F.col("s") / (F.col("n0") + F.col("n1"))
     sp = F.sqrt(
@@ -5181,9 +5107,10 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_lognormal_ks() -> str:
     phi = SQL_NORM_CDF.format(z="(v / 1e9 - mu) / sigma")
+    lnv = sql_qlong(f"ln({sql_qlong('l_extendedprice', CENTS)})", NANO)
     return f"""
 WITH q AS (
-  SELECT {sql_qlong('ln(CAST(round(l_extendedprice * 100.0) AS BIGINT))', NANO)} AS v
+  SELECT {lnv} AS v
   FROM lineitem
 ),
 dom AS (
@@ -5242,7 +5169,7 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantic spec only."""
     li = _t(spark, sf_dir, "lineitem")
     q = li.select(
-        qlong(F.log(F.round(F.col("l_extendedprice") * 100.0).cast("bigint").cast("double")), NANO)
+        qlong(F.log(qlong("l_extendedprice", CENTS).cast("double")), NANO)
         .alias("v")
     ).localCheckpoint(eager=True)  # feeds the domain AND the fit moments
     dom, _n = value_counts_cum(q, F.col("v"))
@@ -5289,15 +5216,13 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BB_SEED = 7  # the CUPED/TOST/SRM/power split
 _BB_ALPHA0, _BB_BETA0 = 1.0, 1.0  # uniform prior
 _Z95 = "1.959963984540054"  # 95% interval half-width in SDs (shared literal)
 def _sql_beta_binomial() -> str:
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_BB_SEED)} % 2)"
     phi = SQL_NORM_CDF.format(z="(m1 - m0) / sqrt(v0 + v1)")
     return f"""
 WITH u AS (
-  SELECT user_id, {arm} AS arm,
+  SELECT user_id, {SQL_AB_ARM} AS arm,
          CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
               AS BIGINT) AS converted
   FROM events GROUP BY 1, 2
@@ -5367,12 +5292,7 @@ def stats_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("converted")
         )
-        .select(
-            F.pmod(
-                hash60(F.col("user_id").cast("string"), seed=_BB_SEED), F.lit(2)
-            ).alias("arm"),
-            "converted",
-        )
+        .select(ab_arm().alias("arm"), "converted")
     )
     c = u.groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -5419,8 +5339,7 @@ def _sql_runs_test() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 led AS (
@@ -5485,9 +5404,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("x")
@@ -5540,15 +5457,12 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LIFT_STOPWORDS = "('the', 'a', 'of', 'and', 'is')"
 def _sql_lift_cuts() -> str:
     toks = tx.sql_tokens("text")
     return f"""
 WITH scored AS (
   SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-         {sql_qlong(
-             f'len(list_filter({toks}, t -> t IN {_LIFT_STOPWORDS})) / CAST(len({toks}) AS DOUBLE)', NANO,
-         )} AS s9
+         {sql_qlong(tx.sql_stop_ratio(toks), NANO)} AS s9
   FROM documents
   WHERE len({toks}) > 0
 ),
@@ -5610,11 +5524,9 @@ def eval_lift_gains_deciles_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("lang", tx.tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
-    stop = F.filter(F.col("toks"), lambda t: t.isin("the", "a", "of", "and", "is"))
     scored = base.select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
-        qlong(F.size(stop) / F.size("toks").cast("double"), NANO)
-        .alias("s9"),
+        qlong(tx.stop_ratio("toks"), NANO).alias("s9"),
     ).localCheckpoint(eager=True)  # feeds the cut derivation AND assignment
     cuts = equi_depth_cut_points(scored, F.col("s9"), 10)
     dec = scored.select(
@@ -6081,12 +5993,12 @@ def stats_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_anderson_darling() -> str:
     phi_z = SQL_NORM_CDF.format(z="z")
+    rev = sql_qlong("l_extendedprice * (1.0 - l_discount)", CENTS)
+    lnv = sql_qlong(f"ln(CAST(sum({rev}) AS DOUBLE))", NANO)
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         {sql_qlong(
-             'ln(CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT)) AS DOUBLE))', NANO,
-         )} AS v
+         {lnv} AS v
   FROM lineitem GROUP BY 1
 ),
 m AS (
@@ -6152,11 +6064,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         qlong(
             F.ln(
                 F.sum(
-                    F.round(
-                        F.col("l_extendedprice")
-                        * (F.lit(1.0) - F.col("l_discount"))
-                        * 100.0
-                    ).cast("bigint")
+                    qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
                 ).cast("double")
             ),
             NANO,
@@ -6200,11 +6108,10 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_grubbs() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 s AS (
@@ -6251,9 +6158,7 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("x")
@@ -6290,11 +6195,10 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kendall_tau() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x,
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x,
          CAST(count(DISTINCT l_orderkey) AS BIGINT) AS y
   FROM lineitem GROUP BY 1
 ),
@@ -6348,11 +6252,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
         .agg(
             F.sum(
-                F.round(
-                    F.col("l_extendedprice")
-                    * (F.lit(1.0) - F.col("l_discount"))
-                    * 100.0
-                ).cast("bigint")
+                qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
             )
             .cast("bigint")
             .alias("x"),
@@ -6412,7 +6312,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_theil() -> str:
     return f"""
 WITH x AS (
-  SELECT CAST(round(c_acctbal * 100.0) AS BIGINT) AS v
+  SELECT {sql_qlong('c_acctbal', CENTS)} AS v
   FROM customer WHERE c_acctbal > 0
 ),
 m AS (
@@ -6456,7 +6356,7 @@ def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, one map-side-combined reduce. Nothing keyed, nothing
     windowed."""
     c = _t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 0)
-    x = c.select(F.round(F.col("c_acctbal") * 100.0).cast("bigint").alias("v"))
+    x = c.select(qlong("c_acctbal", CENTS).alias("v"))
     m = x.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         (F.sum(F.col("v").cast("decimal(38,0)")).cast("double") / F.count(F.lit(1))).alias("mu"),
@@ -6617,12 +6517,9 @@ def agg_geometric_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_odds_ratio() -> str:
-    from .datapipe.hashing import sql_hash60
-
-    arm = f"({sql_hash60('user_id::VARCHAR', seed=_BB_SEED_OR)} % 2)"
     return f"""
 WITH u AS (
-  SELECT user_id, {arm} AS arm,
+  SELECT user_id, {SQL_AB_ARM} AS arm,
          CAST(CASE WHEN count(*) FILTER (WHERE event_type = 'purchase')
                         >= {_OR_HEAVY} THEN 1 ELSE 0 END
               AS BIGINT) AS converted
@@ -6653,7 +6550,6 @@ SELECT a, b, c, d,
          AS ci_hi
 FROM c
 """
-_BB_SEED_OR = 7  # the CUPED/TOST/SRM/power/beta-binomial split
 _OR_HEAVY = 14  # 'heavy purchaser' outcome: >= median purchase count
 @register(
     "stats_odds_ratio_ci",
@@ -6680,8 +6576,6 @@ def stats_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combined user groupBy, one 1-row
     reduce."""
-    from .datapipe.hashing import hash60
-
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type")
     u = ev.groupBy("user_id").agg(
         F.when(
@@ -6690,12 +6584,7 @@ def stats_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .cast("bigint")
         .alias("converted")
-    ).select(
-        F.pmod(hash60(F.col("user_id").cast("string"), seed=_BB_SEED_OR), F.lit(2)).alias(
-            "arm"
-        ),
-        "converted",
-    )
+    ).select(ab_arm().alias("arm"), "converted")
     c = u.agg(
         F.sum(F.when((F.col("arm") == 1) & (F.col("converted") == 1), 1).otherwise(0))
         .cast("bigint")
@@ -6736,8 +6625,7 @@ def _sql_cooks_distance() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS y
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS y
   FROM lineitem GROUP BY 1
 ),
 xi AS (
@@ -6808,9 +6696,7 @@ def stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("y")
@@ -7038,11 +6924,10 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ESD_K = 5
 def _sql_esd() -> str:
-    base = """
+    base = f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 )"""
     ctes = [base]
@@ -7115,11 +7000,7 @@ def stats_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
         .agg(
             F.sum(
-                F.round(
-                    F.col("l_extendedprice")
-                    * (F.lit(1.0) - F.col("l_discount"))
-                    * 100.0
-                ).cast("bigint")
+                qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
             )
             .cast("bigint")
             .alias("x")
@@ -7186,7 +7067,7 @@ def _sql_mood_median() -> str:
     return f"""
 WITH vals AS (
   SELECT o_orderpriority AS g,
-         CAST(round(o_totalprice * 100.0) AS BIGINT) AS v
+         {sql_qlong('o_totalprice', CENTS)} AS v
   FROM orders
 ),
 {sql_cuts_ctes("vals", "v", 2)},
@@ -7248,7 +7129,7 @@ def stats_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand median is the only order statistic the whole plan needs."""
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
-        F.round(F.col("o_totalprice") * 100.0).cast("bigint").alias("v"),
+        qlong("o_totalprice", CENTS).alias("v"),
     ).localCheckpoint(eager=True)  # feeds the cut derivation AND the cells
     med = equi_depth_cut_points(o, F.col("v"), 2)[0]
     cells = o.groupBy("g").agg(
@@ -7902,7 +7783,7 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CLIFFS_DELTA = f"""
 WITH o AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
+  SELECT {sql_qlong('o_totalprice', CENTS)} AS v,
          CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g
   FROM orders WHERE o_totalprice IS NOT NULL
 ),
@@ -7970,7 +7851,7 @@ def stats_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice").isNotNull())
         .select(
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
+            qlong("o_totalprice", CENTS).alias("v"),
             F.when(F.col("o_orderpriority") == "1-URGENT", 1)
             .otherwise(0)
             .alias("g"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from .catalog import _t, register
 from .functions.aggregates import (
+    CENTS,
     MICRO,
     NANO,
     SQL_DAVG,
@@ -608,8 +609,6 @@ def ts_stl_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HOLT_ALPHA = 0.5
-_HOLT_BETA = 0.3
 _HOLT_H = 7
 def _sql_holt() -> str:
     # DuckDB 1.0's list_reduce mis-evaluates struct accumulators whose
@@ -842,10 +841,10 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BOLL_SQL = """
+_BOLL_SQL = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS BIGINT) AS v_cents
+         CAST(sum({sql_qlong('value', CENTS)}) AS BIGINT) AS v_cents
   FROM events GROUP BY 1, 2
 ),
 w AS (
@@ -895,7 +894,7 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100.0).cast("bigint"))
+        F.sum(qlong("value", CENTS))
         .cast("bigint")
         .alias("v_cents")
     )
@@ -928,10 +927,10 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "day")
 
 
-_MK_SQL = """
+_MK_SQL = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS BIGINT) AS v
+         CAST(sum({sql_qlong('value', CENTS)}) AS BIGINT) AS v
   FROM events GROUP BY 1, 2
 ),
 pairs AS (
@@ -990,7 +989,7 @@ def ts_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100.0).cast("bigint"))
+        F.sum(qlong("value", CENTS))
         .cast("bigint")
         .alias("v")
     )
@@ -1280,8 +1279,7 @@ def _sql_ltob() -> str:
     return f"""
 WITH daily AS (
   SELECT CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS y
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS y
   FROM lineitem GROUP BY 1
 ),
 b AS (SELECT CAST(min(x) AS BIGINT) AS x0 FROM daily),
@@ -1368,9 +1366,7 @@ def ts_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x")
     ).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("y")
@@ -1581,8 +1577,7 @@ def _sql_hampel() -> str:
     return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 win AS (
@@ -1642,9 +1637,7 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("x")
@@ -1835,11 +1828,10 @@ def events_markov2_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_pettitt() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS x
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
   FROM lineitem GROUP BY 1
 ),
 nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily),
@@ -1903,9 +1895,7 @@ def ts_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
         .agg(
             F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-                ).cast("bigint")
+                qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
             )
             .cast("bigint")
             .alias("x")
@@ -2043,11 +2033,10 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_seasonal_mk() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT date_trunc('day', l_shipdate) AS day, isodow(l_shipdate) AS g,
-         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)
-                       AS BIGINT)) AS BIGINT) AS v
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS v
   FROM lineitem GROUP BY 1, 2
 ),
 pairs AS (
@@ -2114,9 +2103,7 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fixed weekday numbering partitions the days identically
     ).agg(
         F.sum(
-            F.round(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0
-            ).cast("bigint")
+            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
         )
         .cast("bigint")
         .alias("v")

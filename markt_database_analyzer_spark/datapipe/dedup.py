@@ -347,9 +347,9 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def simhash_signatures_agg(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """The pre-r14 explode + 60-conditional-sum aggregation form of
-    :func:`simhash_signatures` — kept as the pure-JVM reference the
+    :func:`simhash_signatures` — kept only as the pure-JVM reference the
     exactness pin (tests/test_r14_optimization.py) compares the Arrow
-    kernel against, and as the fallback for Arrow-less deployments.
+    kernel against; nothing else calls it.
 
     explode tokens → hash each token ONCE → 60 conditional ±1 sums in one
     hash aggregation → fold votes into the signature. Each token is
@@ -432,7 +432,6 @@ def contamination_pairs(
     text_col: str,
     id_col: str,
     shingle_k: int = 5,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(eval_id, train_id, n_shared) for every eval document sharing at
     least one k-shingle with a train document — the decontamination sweep
@@ -442,15 +441,13 @@ def contamination_pairs(
     — the distinct is free (shingle sets are already deduped per doc) and
     hashing means the join key is an 8-byte int, never shingle text.
     An eval holdout is a fixed-size benchmark set, orders of magnitude
-    smaller than train, so by default its (eval_id, sh_h) pairs BROADCAST
-    and the train shingles — the 100 TB side — are never shuffled at all:
-    the join is map-side against the eval hash table, and the only
-    exchange left is the group-by on matched pairs, bounded by true
-    overlap. Set ``broadcast_eval=False`` for the symmetric shuffle join
-    when the 'eval' side is itself corpus-sized (a corpus×corpus overlap
-    audit rather than a holdout sweep). Join fan-out is bounded either
-    way: a shingle in t train docs and e eval docs emits t·e rows for
-    THAT shingle only, and the group-by collapses them map-side.
+    smaller than train, so its (eval_id, sh_h) pairs BROADCAST and the
+    train shingles — the 100 TB side — are never shuffled at all: the
+    join is map-side against the eval hash table, and the only exchange
+    left is the group-by on matched pairs, bounded by true overlap. Join
+    fan-out is bounded: a shingle in t train docs and e eval docs emits
+    t·e rows for THAT shingle only, and the group-by collapses them
+    map-side.
     Empty/short-document sentinel shingles are dropped so blank docs
     don't cross-match."""
     def side(df: DataFrame, alias: str) -> DataFrame:
@@ -463,7 +460,7 @@ def contamination_pairs(
 
     ev = side(eval_df, "eval_id")
     tr = side(train, "train_id")
-    joined = tr.join(F.broadcast(ev) if broadcast_eval else ev, "sh_h")
+    joined = tr.join(F.broadcast(ev), "sh_h")
     return (
         joined.groupBy("eval_id", "train_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))

@@ -10,8 +10,7 @@ Spark:  conv(substring(md5(x), 1, 15), 16, 10)::bigint
 DuckDB: ('0x' || substring(md5(x), 1, 15))::bigint
 
 (verified bit-identical). md5 is ~2× slower than xxhash64 but still
-JVM-side and codegen-friendly; for pure-Spark production paths where
-cross-engine parity is not needed, pass ``fast=True`` to use xxhash64.
+JVM-side and codegen-friendly.
 
 Seeded variants prepend ``"<seed>|"`` so k independent hash families can be
 derived for MinHash.
@@ -23,13 +22,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def hash60(col: Column | str, seed: int | None = None, fast: bool = False) -> Column:
+def hash60(col: Column | str, seed: int | None = None) -> Column:
     """Portable 60-bit hash of a string column (seeded if ``seed`` given)."""
     c = F.col(col) if isinstance(col, str) else col
     if seed is not None:
         c = F.concat(F.lit(f"{seed}|"), c)
-    if fast:
-        return F.xxhash64(c)
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 

@@ -572,21 +572,27 @@ def _gif_screen(version: bytes, shape: tuple[int, int], palette: np.ndarray) -> 
     )
 
 
+def _gif_sub_blocks(data: bytes) -> bytes:
+    """``data`` in 255-byte sub-blocks, then the 0x00 terminator (a
+    zero-length sub-block IS the terminator, so empty data is just it)."""
+    out = b""
+    for i in range(0, len(data), 255):
+        chunk = data[i : i + 255]
+        out += bytes([len(chunk)]) + chunk
+    return out + b"\x00"
+
+
 def _gif_image(indices: np.ndarray, palette: np.ndarray) -> bytes:
     """One image: descriptor (no local table, not interlaced), LZW code
-    size, the LZW stream in 255-byte sub-blocks and the 0x00 terminator."""
+    size and the sub-block framed LZW stream."""
     h, w = indices.shape
     min_code_size = max(2, (len(palette) - 1).bit_length())
-    out = (
+    return (
         b"\x2c" + b"\x00\x00\x00\x00"
         + w.to_bytes(2, "little") + h.to_bytes(2, "little")
         + b"\x00" + bytes([min_code_size])
+        + _gif_sub_blocks(_lzw_encode_gif(indices.reshape(-1), min_code_size))
     )
-    stream = _lzw_encode_gif(indices.reshape(-1), min_code_size)
-    for i in range(0, len(stream), 255):
-        chunk = stream[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    return out + b"\x00"
 
 
 def encode_gif(
@@ -598,12 +604,7 @@ def encode_gif(
     table + optional comment extension + one image descriptor with a
     real LZW-compressed, sub-block-framed data stream. The decoder
     below must invert this bit-exactly."""
-    ext = b""
-    if comment is not None:
-        # a zero-length sub-block IS the terminator — emit data blocks
-        # only for non-empty comments
-        sub = bytes([len(comment)]) + comment if comment else b""
-        ext = b"\x21\xfe" + sub + b"\x00"
+    ext = b"" if comment is None else b"\x21\xfe" + _gif_sub_blocks(comment)
     return (
         _gif_screen(b"GIF87a", indices.shape, palette) + ext
         + _gif_image(indices, palette) + b"\x3b"  # trailer

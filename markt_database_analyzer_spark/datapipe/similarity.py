@@ -675,8 +675,8 @@ def pq_encode_reconstruct_exprs(
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The pre-r14 literal-expression form of
-    :func:`pq_encode_reconstruct` — kept as the pure-JVM reference its
-    exactness pin compares against (and for Arrow-less deployments).
+    :func:`pq_encode_reconstruct` — kept only as the pure-JVM reference
+    its exactness pin compares against; nothing else calls it.
     Codebook subvectors render as one SQL literal expression per
     subspace (``repr`` doubles — exact shortest round-trip, no py4j
     literal storm); per-row subvector slices are staged as named columns

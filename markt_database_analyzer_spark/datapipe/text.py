@@ -26,6 +26,11 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "zh": ("de", "shi", "bu", "le", "wo", "ni", "ta", "men"),
 }
 
+# The English stopword-ratio classifier that the eval_* and stats_*
+# entries score documents with: the share of a document's tokens that
+# are in this list.
+EN_STOPWORDS = ("the", "a", "of", "and", "is")
+
 TOKEN_SPLIT = r"\s+"
 # BPE-ish word/number/punctuation pieces (public GPT-2-style pre-tokenizer
 # shape: word chars, digits, or single non-space symbols).
@@ -40,6 +45,19 @@ def tokens(col: Column | str) -> Column:
 
 def sql_tokens(expr: str) -> str:
     return f"list_filter(regexp_split_to_array(lower(trim({expr})), '\\s+'), t -> t != '')"
+
+
+def stop_ratio(toks: Column | str) -> Column:
+    """Share of a token array's tokens that are ``EN_STOPWORDS``, as an
+    unrounded double. Callers round it or guard the empty document."""
+    t = F.col(toks) if isinstance(toks, str) else toks
+    return F.size(F.filter(t, lambda w: w.isin(*EN_STOPWORDS))) / F.size(t).cast("double")
+
+
+def sql_stop_ratio(toks_expr: str) -> str:
+    """DuckDB rendering of :func:`stop_ratio` over a token-array expression."""
+    words = ", ".join(repr(w) for w in EN_STOPWORDS)
+    return f"len(list_filter({toks_expr}, t -> t IN ({words}))) / CAST(len({toks_expr}) AS DOUBLE)"
 
 
 def token_count_whitespace(col: Column | str) -> Column:

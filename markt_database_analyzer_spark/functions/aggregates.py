@@ -41,7 +41,10 @@ raises ``SparkArithmeticException``; nothing wraps silently.
 
 Callers that need raw-float semantics use plain ``F.sum``/``F.avg``.
 
-This module is the one place that knows how a value is put on the grid,
+Money takes the same step onto coarser grids: integer cents (``CENTS`` =
+1e2) and basis points (``BASIS_POINTS`` = 1e4).
+
+This module is the one place that knows how a value is put on a grid,
 on both engines: :func:`qlong` (Spark) and :func:`sql_qlong` (DuckDB SQL,
 also valid Spark SQL inside ``F.expr``) are the quantize step, and
 ``SQL_DSUM``/``SQL_DAVG``/``SQL_NSUM`` below are the DuckDB twins of
@@ -55,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+CENTS = 100.0
+BASIS_POINTS = 10_000.0
 MICRO = 1_000_000.0
 NANO = 1_000_000_000.0
 
@@ -90,11 +95,11 @@ def qlong(col: Column | str, scale: float = MICRO, cast: str = "long") -> Column
     """Put a value on the grid: ``round(x · scale)`` as an integer,
     rounding half away from zero (the rounding DuckDB's ``round`` also
     uses). ``scale`` is the number of grid units per value unit
-    (``MICRO``, ``NANO``). ``cast`` is ``long`` (|x · scale| < 2^63, or
-    ANSI mode raises) or ``decimal(38,0)`` for a site that accumulates
-    past the long range; either holds the double's exact binary value,
-    as DuckDB's casts do. :func:`sql_qlong` renders the same step for
-    DuckDB."""
+    (``CENTS``, ``BASIS_POINTS``, ``MICRO``, ``NANO``). ``cast`` is
+    ``long`` (|x · scale| < 2^63, or ANSI mode raises) or
+    ``decimal(38,0)`` for a site that accumulates past the long range;
+    either holds the double's exact binary value, as DuckDB's casts do.
+    :func:`sql_qlong` renders the same step for DuckDB."""
     c = F.col(col) if isinstance(col, str) else col
     q = F.round(c.cast("double") * F.lit(scale))
     if not cast.startswith("decimal"):

@@ -20,10 +20,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+# ``try_cast`` reads numbers with Java's grammar, which takes a float-type
+# suffix ('1d', '1.5F'); pandas rejects those.
+_JAVA_SUFFIX = r"[0-9.][dDfF]\s*$"
+
+
 def coerce_numeric(col: Column | str, to: str = "double") -> Column:
-    """``pd.to_numeric(errors='coerce')`` (F8): malformed → null, never throw."""
+    """``pd.to_numeric(errors='coerce')`` (F8): malformed → null, never throw.
+    A Java-suffixed number ('1d', '2F') is malformed, as in pandas."""
     c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(to)
+    return F.when(~c.rlike(_JAVA_SUFFIX), c.try_cast(to))
 
 
 def coerce_timestamp(col: Column | str) -> Column:

@@ -52,8 +52,6 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-EVENTS_RAW_SCHEMA = _events_raw_schema(T.LongType())
-
 DOCUMENTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -71,8 +71,11 @@ def test_lzw_garbage_code_returns_none():
     assert mm._lzw_decode_gif(bad, 2) is None
 
 
+# the 600-byte comment spans three 255-byte comment sub-blocks
 @pytest.mark.parametrize("shape,comment", [((8, 8), None), ((4, 16), b"crafted"),
-                                           ((1, 1), None), ((50, 60), b"x" * 40)])
+                                           ((1, 1), None), ((50, 60), b"x" * 40),
+                                           pytest.param((8, 8), bytes(range(256)) * 2 + b"c" * 88,
+                                                        id="shape4-comment600")])
 def test_gif_container_round_trip(shape, comment):
     idx = _idx(shape[0] * shape[1], seed=shape[0]).reshape(shape)
     parsed = mm._parse_gif(mm.encode_gif(idx, comment=comment))
@@ -168,7 +171,7 @@ from hypothesis import strategies as st
 @settings(max_examples=200, deadline=None)
 @given(
     pixels=st.lists(st.integers(min_value=0, max_value=3), min_size=1, max_size=256),
-    comment=st.one_of(st.none(), st.binary(max_size=60)),
+    comment=st.one_of(st.none(), st.binary(max_size=60), st.binary(min_size=200, max_size=600)),
 )
 def test_gif_codec_roundtrip_property(pixels, comment):
     idx = np.array(pixels, dtype=np.int64).reshape(1, -1)

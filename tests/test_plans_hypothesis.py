@@ -28,11 +28,12 @@ from . import pandas_semantics as ref
 from .test_plans_parity import assert_frames_close
 
 # Left out on purpose, as open divergences between Spark's coercions and
-# pandas': numeric suffixes ('1d', '1f', which try_cast accepts), doubles
-# beyond the float range ('1e400': inf in Spark, NaN in pandas), and
-# timestamps outside the fixture's 'YYYY-MM-DD HH:MM:SS' form (ISO 'T',
-# date-only, UTC offsets), which pandas' inferred format rejects.
-GARBAGE_NUMBERS = ["", None, "nan", "inf", "-inf", "??", "n/a", "1,5", " 7 "]
+# pandas': doubles beyond the float range ('1e400': inf in Spark, NaN in
+# pandas), and timestamps outside the fixture's 'YYYY-MM-DD HH:MM:SS' form
+# (ISO 'T', date-only, UTC offsets), which pandas' inferred format rejects.
+GARBAGE_NUMBERS = [
+    "", None, "nan", "inf", "-inf", "??", "n/a", "1,5", " 7 ", "1d", "1f", "1.5D", "2F",
+]
 
 ages = st.one_of(
     st.integers(16, 60).map(str),

@@ -7,6 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from markt_database_analyzer_spark.functions import coerce_numeric
 from markt_database_analyzer_spark.plans import (
     initial_rate_by_posting_hour,
     lifetime_view_rate_curve,
@@ -105,6 +106,20 @@ def test_analysis_a_drops_nan_age(spark):
     profiles = [_profile("ad_a", "30", "sexbilder-sexvideos"), _profile("ad_b", "nan", "sexchat")]
     got = _curve_parity(spark, monitor, profiles)
     assert set(zip(got["category"], got["age_group"])) == {("sexbilder-sexvideos", "26+")}
+
+
+def test_coerce_numeric_matches_pandas_on_java_suffixes(spark):
+    # try_cast reads numbers with Java's grammar, which takes a float-type
+    # suffix; pandas' to_numeric rejects '1d', so both must give null/NaN.
+    # 'inf', '-inf' and 'nan' end in the same letters and keep their values.
+    values = ["1d", "1f", "1.5D", "2F", "1e5d", ".5f", "1d ", "inf", "-inf", "nan", "INF",
+              "Infinity", "1e1", " 7 ", "3.5", "-2"]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, s string")
+    got = [r["v"] for r in df.select("i", coerce_numeric("s").alias("v")).orderBy("i").collect()]
+    want = pd.to_numeric(pd.Series(values, dtype=object), errors="coerce").tolist()
+    for v, g, w in zip(values, got, want):
+        assert (g is None or np.isnan(g)) if np.isnan(w) else g == w, (v, g, w)
+    assert got[:7] == [None] * 7 and np.isnan(got[values.index("nan")])
 
 
 def test_analysis_a_rescrapes_in_two_segments_take_deltas_apart(spark):

@@ -2,10 +2,12 @@
 
 Every float result matches its DuckDB oracle because both engines put each
 value on the same integer grid (``round(x * 1e6)`` or ``round(x * 1e9)``)
-before summing. ``qlong`` is that step on Spark and ``sql_qlong`` on
-DuckDB; ``SQL_DSUM``/``SQL_DAVG``/``SQL_NSUM`` are the twins of
-``dsum``/``davg``/``nsum``. These tests pin the twins to each other and
-fail on any hand-written round-to-grid cast outside that module.
+before summing, and every money value in the same integer cents or basis
+points (``round(x * 100)``, ``round(x * 10000)``). ``qlong`` is that step
+on Spark and ``sql_qlong`` on DuckDB; ``SQL_DSUM``/``SQL_DAVG``/``SQL_NSUM``
+are the twins of ``dsum``/``davg``/``nsum``. These tests pin the twins to
+each other and fail on any hand-written round-to-grid cast outside that
+module.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from markt_database_analyzer_spark.functions.aggregates import (
+    BASIS_POINTS,
+    CENTS,
     MICRO,
     NANO,
     SQL_DAVG,
@@ -31,9 +35,13 @@ from markt_database_analyzer_spark.functions.aggregates import (
 PKG = Path(__file__).resolve().parent.parent / "markt_database_analyzer_spark"
 HOME = PKG / "functions" / "aggregates.py"
 
-# Grid scales: micro, nano and the finer pico/femto grids a few entries use.
-GRID_VALUES = {1e6, 1e9, 1e12, 1e15}
-_GRID_SQL = r"(?:1e6|1e9|1e12|1e15|1_?000_?000(?:_?000)*(?:\.0)?)"
+# Grid scales: cents, basis points, micro, nano and the finer pico/femto
+# grids a few entries use.
+GRID_VALUES = {1e2, 1e4, 1e6, 1e9, 1e12, 1e15}
+GRID_NAMES = {"CENTS", "BASIS_POINTS", "MICRO", "NANO"}
+_GRID_SQL = (
+    r"(?:1e2|1e4|1e6|1e9|1e12|1e15|100|10_?000|1_?000_?000(?:_?000)*)(?:\.0)?(?![\w.])"
+)
 _INT_CASTS = {"long", "bigint", "decimal(38,0)"}
 
 # Sites that may keep a hand-written spelling, each with its reason
@@ -46,7 +54,7 @@ def _is_grid(node: ast.AST) -> bool:
     if isinstance(node, ast.Constant) and isinstance(node.value, (int, float)):
         return not isinstance(node.value, bool) and float(node.value) in GRID_VALUES
     if isinstance(node, ast.Name):
-        return node.id in ("MICRO", "NANO")
+        return node.id in GRID_NAMES
     if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "lit":
         return len(node.args) == 1 and _is_grid(node.args[0])
     return False
@@ -83,7 +91,7 @@ def spark_spellings(src: str) -> list[tuple[int, str]]:
 
 
 _SQL_OPEN = re.compile(r"(?i)cast\(\s*round\(")
-_SQL_SCALE = re.compile(rf"(?:\*\s*{_GRID_SQL}\b|\b{_GRID_SQL}\s*[*/])")
+_SQL_SCALE = re.compile(rf"(?:\*\s*{_GRID_SQL}|(?<![\w.]){_GRID_SQL}\s*[*/])")
 _SQL_TAIL = re.compile(r"""(?is)^[\s"'f]*\)[\s"'f]*as\s+(bigint|hugeint|decimal)""")
 
 
@@ -144,6 +152,11 @@ def test_guard_detects_each_spelling():
         'F.round(F.col("v") * 1000000.0).cast("long")',
         'F.round(F.lit(1e9) / F.col("m")).cast("decimal(38,0)")',
         'F.round(\n    F.col("a")\n    * F.col("b")\n    * 1e6\n).cast(\n    "bigint"\n)',
+        'F.round(F.col("p") * 100.0).cast("bigint")',
+        'F.round(F.col("o_totalprice") * 100).cast("long")',
+        'F.round(F.col("d") * 10000.0).cast("bigint")',
+        'F.round(F.col("x") * (F.lit(1.0) - F.col("d")) * 100.0).cast("decimal(38,0)")',
+        'F.round(F.col("p") * CENTS).cast("bigint")',
     ]
     for code in spark:
         assert spark_spellings(code), code
@@ -154,20 +167,31 @@ def test_guard_detects_each_spelling():
         '"cast(round((x - y) * (x - y) * 1e9) as bigint)"',
         '"CAST(round(CAST(x AS DOUBLE) * w * 1000000000.0)"\n    " AS BIGINT)"',
         '"CAST(round(l_quantity * 1000000.0) AS DECIMAL(38,0))"',
+        '"CAST(round(l_extendedprice * 100.0) AS BIGINT)"',
+        '"CAST(round(o_totalprice * 100) AS HUGEINT)"',
+        '"CAST(round(l_discount * 10000.0) AS BIGINT)"',
+        '"CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)"',
+        '"CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0)"\n    " AS BIGINT)) AS BIGINT)"',
     ]
     for code in sql:
         assert sql_spellings(code), code
-    # not a grid spelling: cents, de-quantization, rounding to 9 places
+    # not a grid spelling: de-quantization, rounding to places, a scale
+    # that only starts like a grid one, a qlong call
     for code in [
-        'F.round(F.col("p") * 100.0).cast("bigint")',
         'F.round(F.col("q") / 1e9, 9).alias("x")',
+        'F.round(F.col("b2") * 100.0, 6).alias("beta2")',
+        'F.round(F.col("p") * 1000.0).cast("bigint")',
         'qlong(F.col("v"), NANO, "decimal(38,0)")',
+        'qlong(F.col("p"), CENTS)',
     ]:
         assert not spark_spellings(code), code
     for code in [
-        '"CAST(round(l_extendedprice * 100.0) AS BIGINT)"',
         '"round(CAST(s AS DOUBLE) / 1e9, 9)"',
         '"CAST(round(ln(CAST(s AS DOUBLE) / 1e9), 9) AS DOUBLE)"',
+        '"CAST(round(p * 1000.0) AS BIGINT)"',
+        '"CAST(round(p * 100.5) AS BIGINT)"',
+        '"CAST(round(p * 0.100) AS BIGINT)"',
+        '"CAST(round(100 * p, 2) AS DOUBLE)"',
     ]:
         assert not sql_spellings(code), code
 
@@ -185,26 +209,35 @@ def test_sql_templates_render_from_sql_qlong():
     )
 
 
-# Half-unit ties: x * scale is exactly k + 0.5 in double arithmetic.
+# Half-unit ties: x * scale is exactly k + 0.5 in double arithmetic
+# (half-cent prices such as 19.995 and 2.675 are exact ties in double).
 _TIES = {
+    CENTS: [19.995, -19.995, 2.675, -2.675, 0.125, -0.125, 1234.625, -1234.625],
+    BASIS_POINTS: [5e-05, -5e-05, 0.07245, -0.07245, 1.23455, -1.23455, 0.03125, -0.03125],
     MICRO: [5e-07, -5e-07, 1.5e-06, -1.5e-06, 2.5e-06, -2.5e-06, 1.25e-05, -1.25e-05],
     NANO: [5e-10, -5e-10, 1.5e-09, -1.5e-09, 2.5e-09, -2.5e-09, 4.5675e-06, -4.5675e-06],
 }
-# Plus negatives, values below one grid unit, ordinary values, and values
-# near the long envelope (|x * scale| just under 2^63 ≈ 9.22e18).
+# Plus negatives, a value below one grid unit, values just off a tie,
+# ordinary values, and values near the long envelope (|x * scale| just
+# under 2^63 ≈ 9.22e18).
+_BELOW = {CENTS: 0.004, BASIS_POINTS: 4e-05, MICRO: 4e-07, NANO: 4e-10}
+_ENVELOPE = {CENTS: 9.2e16, BASIS_POINTS: 9.2e14, MICRO: 9.2e12, NANO: 9.2e9}
 _OTHERS = {
-    MICRO: [0.0, 4e-07, -4e-07, 1e-07, -1e-07, 0.123456789, -0.123456789, 1234.5678905,
-            9.2e12, -9.2e12],
-    NANO: [0.0, 4e-10, -4e-10, 1e-10, -1e-10, 0.1234567895, -0.1234567895, 2.0**-31,
-           9.2e9, -9.2e9],
+    CENTS: [1.005, -1.005, 0.1 + 0.2, -(0.1 + 0.2), 1234.56, -1234.56],
+    BASIS_POINTS: [0.00015, -0.00015, 0.0725, -0.0725, 0.123456, -0.123456],
+    MICRO: [1e-07, -1e-07, 0.123456789, -0.123456789, 1234.5678905],
+    NANO: [1e-10, -1e-10, 0.1234567895, -0.1234567895, 2.0**-31],
 }
 
 
-@pytest.mark.parametrize("scale", [MICRO, NANO], ids=["micro", "nano"])
+@pytest.mark.parametrize(
+    "scale", [CENTS, BASIS_POINTS, MICRO, NANO], ids=["cents", "basis_points", "micro", "nano"]
+)
 def test_qlong_matches_sql_qlong(spark, scale):
     ties = _TIES[scale]
     assert all(abs(v * scale) % 1 == 0.5 for v in ties)
-    values = ties + _OTHERS[scale]
+    below, env = _BELOW[scale], _ENVELOPE[scale]
+    values = ties + [0.0, below, -below, env, -env] + _OTHERS[scale]
     df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(values)], "i int, v double")
     got = {r["i"]: r["q"] for r in df.select("i", qlong("v", scale).alias("q")).collect()}
     con = duckdb.connect()
@@ -215,8 +248,8 @@ def test_qlong_matches_sql_qlong(spark, scale):
     # ties round half away from zero, below-unit values round to 0
     for i, v in enumerate(ties):
         assert got[i] == int(v * scale + (0.5 if v > 0 else -0.5))
-    assert got[values.index(4e-07 if scale == MICRO else 4e-10)] == 0
-    assert got[values.index(-9.2e12 if scale == MICRO else -9.2e9)] == -9_200_000_000_000_000_000
+    assert got[values.index(below)] == got[values.index(-below)] == 0
+    assert got[values.index(-env)] == -9_200_000_000_000_000_000
 
 
 def test_qlong_decimal_matches_sql_qlong_past_the_long_range(spark):

@@ -11,7 +11,7 @@ from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
-from markt_database_analyzer_spark.catalog_stats import _EFFECT_SEED, _MCN_THRESHOLD, _RIDGE_LAMBDA_FRAC
+from markt_database_analyzer_spark.catalog_stats import AB_SEED, _MCN_THRESHOLD, _RIDGE_LAMBDA_FRAC
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -73,7 +73,7 @@ def test_cohens_d_matches_python_pooled_replay(spark):
         per_user[r["user_id"]] += _q_half_up(r["value"] * 1000000.0)
     arms: dict[int, list[int]] = {0: [], 1: []}
     for uid, yq in per_user.items():
-        arms[_h60(f"{_EFFECT_SEED}|{uid}") % 2].append(yq)
+        arms[_h60(f"{AB_SEED}|{uid}") % 2].append(yq)
     n0, n1 = len(arms[0]), len(arms[1])
     s0, s1 = sum(arms[0]), sum(arms[1])
     ss0 = sum(y * y for y in arms[0])

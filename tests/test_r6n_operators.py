@@ -11,7 +11,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
 from markt_database_analyzer_spark.catalog_graph import _LP_ANCHOR_CAP, _LP_MIN_COMMON, _LP_MIN_W
-from markt_database_analyzer_spark.catalog_stats import _SRM_SEED
+from markt_database_analyzer_spark.catalog_stats import AB_SEED
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -88,7 +88,7 @@ def test_adamic_adar_matches_python_wedge_replay(spark):
 def test_srm_check_matches_python_split_replay(spark):
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select("user_id").collect()
     users = {r["user_id"] for r in ev}
-    n0 = sum(1 for u in users if _h60(f"{_SRM_SEED}|{u}") % 2 == 0)
+    n0 = sum(1 for u in users if _h60(f"{AB_SEED}|{u}") % 2 == 0)
     n1 = len(users) - n0
     e = (n0 + n1) / 2.0
     chi2 = (n0 - e) ** 2 / e + (n1 - e) ** 2 / e

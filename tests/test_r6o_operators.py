@@ -10,7 +10,7 @@ from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
-from markt_database_analyzer_spark.catalog_stats import _MDE_REL_TARGET, _POWER_SEED, _Z_ALPHA, _Z_BETA
+from markt_database_analyzer_spark.catalog_stats import AB_SEED, _MDE_REL_TARGET, _Z_ALPHA, _Z_BETA
 from markt_database_analyzer_spark.catalog_text import _NOV_EVAL_FRACTION, _NOV_SEED
 from markt_database_analyzer_spark.datapipe.sampling import RESOLUTION
 
@@ -38,7 +38,7 @@ def test_power_mde_matches_python_replay(spark):
         per_user[r["user_id"]] += _q_half_up(r["value"] * 1000000.0)
     arms = {0: [], 1: []}
     for uid, yq in per_user.items():
-        arms[_h60(f"{_POWER_SEED}|{uid}") % 2].append(yq)
+        arms[_h60(f"{AB_SEED}|{uid}") % 2].append(yq)
     n0, n1 = len(arms[0]), len(arms[1])
     s = sum(arms[0]) + sum(arms[1])
     mean_y = s / (n0 + n1)

@@ -9,7 +9,7 @@ from collections import Counter, defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
-from markt_database_analyzer_spark.catalog_stats import _BB_SEED
+from markt_database_analyzer_spark.catalog_stats import AB_SEED
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +38,7 @@ def test_beta_binomial_matches_python_posterior_replay(spark):
             conv.setdefault(r["user_id"], 0)
     arms = {0: [0, 0], 1: [0, 0]}  # arm -> [n, conversions]
     for uid, c in conv.items():
-        a = _h60(f"{_BB_SEED}|{uid}") % 2
+        a = _h60(f"{AB_SEED}|{uid}") % 2
         arms[a][0] += 1
         arms[a][1] += c
     post = {}

@@ -13,14 +13,22 @@ the hashes land:
   oracle uses the matching SQL_DSUM/SQL_DAVG/SQL_NSUM templates; every
   other value put on a grid, money in integer cents (``CENTS``) or basis
   points (``BASIS_POINTS``) included, goes through ``qlong`` with its SQL
-  twin ``sql_qlong``. All of these live in ``functions.aggregates``, the
-  one module that spells the grid (``tests/test_quantize_grid.py`` fails
-  on a hand-written round-to-grid cast anywhere else);
+  twin ``sql_qlong``; grid integers whose sums may pass 2^63 (raw
+  moments Σa, Σa·b) are summed exactly by ``wide_sum`` (``decimal(38,0)``)
+  with its SQL twin ``sql_wide_sum`` (``HUGEINT``). All of these live in
+  ``functions.aggregates``, the one module that spells the grid and the
+  wide accumulator (``tests/test_quantize_grid.py`` and
+  ``tests/test_wide_sum.py`` fail on a hand-written spelling anywhere
+  else);
 - a fixture several entries share has one Spark/SQL twin, used by every
   entry: the stopword-ratio classifier is ``datapipe.text.stop_ratio`` /
-  ``sql_stop_ratio`` over ``EN_STOPWORDS``, and the seed-7 A/B split is
-  ``catalog_stats.ab_arm`` / ``SQL_AB_ARM`` (``tests/test_shared_fixtures.py``
-  fails on a second spelling of either);
+  ``sql_stop_ratio`` over ``EN_STOPWORDS``, the seed-7 A/B split is
+  ``catalog_stats.ab_arm`` / ``SQL_AB_ARM`` with the arms' pooled SD
+  ``_ab_pooled_sd`` / ``_SQL_AB_POOLED_SD``, and the lineitem revenue in
+  cents per ship day is ``_daily_revenue`` / ``_SQL_DAILY_REVENUE`` below
+  (``tests/test_shared_fixtures.py`` fails on a second spelling of any);
+- a piece two catalog modules share lives here or in ``datapipe``, never
+  in a sibling catalog module, so each module imports on its own;
 - orderings that feed ``min_by``/``row_number`` are made total with
   tiebreak columns down to the selected value, so both engines pick the
   same row even where the synthetic keys collide ((l_orderkey,
@@ -50,7 +58,7 @@ from .functions import (
     clip_at_zero,
     hhmm_label,
 )
-from .functions.aggregates import SQL_DAVG, SQL_DSUM, davg, dsum
+from .functions.aggregates import CENTS, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
 from .operators import (
     centered_rolling_mean,
     dedup_keep_first,
@@ -60,6 +68,7 @@ from .operators import (
     restrict_to_groups_with_min_count,
     top_k_per_group,
 )
+from .datapipe import text as tx
 from .sources import read_table
 
 # DuckDB rendering of datapipe.similarity.cosine (rounded to 9 dp).
@@ -138,6 +147,268 @@ _SQL_EVENTS_AGE = """
             / 60000000.0 AS age_min
   FROM events
 """
+
+
+# The revenue series the finance, stats and time-series entries test,
+# rank and smooth: lineitem revenue in exact integer cents per ship day.
+# Each entry derives its own alias, log, day number or weekday from it.
+
+def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(d, rev): Σ round(l_extendedprice · (1 - l_discount) · 100) as a
+    BIGINT per ``date_trunc('day', l_shipdate)``."""
+    li = _t(spark, sf_dir, "lineitem")
+    rev = qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
+    return li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
+        F.sum(rev).cast("bigint").alias("rev")
+    )
+
+
+_SQL_DAILY_REVENUE = f"""
+  SELECT date_trunc('day', l_shipdate) AS d,
+         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS rev
+  FROM lineitem GROUP BY 1"""
+
+
+# ---------------------------------------------------------------------------
+# Shared building blocks over `documents`: the token stream, the BM25
+# query, the calibration bin count and the Naive Bayes language
+# classifier that the text, stats and eval entries read alike.
+# ---------------------------------------------------------------------------
+
+_TOKENIZE = "[^a-z]+"
+
+
+def _tokens(df: DataFrame) -> DataFrame:
+    """(doc_id, w) token stream — the shared tokenization convention."""
+    return df.select(
+        "doc_id", F.explode(F.split(F.lower(F.col("text")), _TOKENIZE)).alias("w")
+    ).filter(F.length("w") > 0)
+
+
+_SQL_TOKENS = """
+  SELECT doc_id, w
+  FROM (SELECT doc_id,
+               unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
+        FROM documents)
+  WHERE len(w) > 0"""
+_BM25_TERMS = ("spark", "join", "window")
+_BM25_K1, _BM25_B = 1.2, 0.75
+_CAL_BINS = 10
+_NB_LL = "round(ln((COALESCE(c, 0) + 1) / CAST(t_total + vocab AS DOUBLE)), 9)"
+
+
+def _sql_naive_bayes() -> str:
+    toks = tx.sql_tokens("text")
+    return f"""
+WITH train AS (
+  SELECT lang, unnest({toks}) AS tok FROM documents WHERE doc_id % 5 <> 0
+),
+counts AS (
+  SELECT lang, tok, CAST(count(*) AS BIGINT) AS c FROM train GROUP BY lang, tok
+),
+totals AS (
+  SELECT lang, CAST(sum(c) AS BIGINT) AS t_total FROM counts GROUP BY lang
+),
+vsz AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vocab FROM train),
+lang_docs AS (
+  SELECT lang, CAST(count(*) AS BIGINT) AS d
+  FROM documents WHERE doc_id % 5 <> 0 GROUP BY lang
+),
+priors AS (
+  SELECT lang,
+         round(ln(d / CAST(sum(d) OVER () AS DOUBLE)), 9) AS logprior
+  FROM lang_docs
+),
+test_tok AS (
+  SELECT doc_id, lang AS actual, unnest({toks}) AS tok
+  FROM documents WHERE doc_id % 5 = 0
+),
+scored_tok AS (
+  SELECT t.doc_id, t.actual, p.lang, p.logprior,
+         {_NB_LL} AS ll
+  FROM test_tok t
+  CROSS JOIN priors p
+  CROSS JOIN vsz
+  JOIN totals ON totals.lang = p.lang
+  LEFT JOIN counts ON counts.lang = p.lang AND counts.tok = t.tok
+),
+scores AS (
+  SELECT doc_id, actual, lang,
+         min(logprior)
+           + {SQL_DSUM.format(x='ll')} AS score
+  FROM scored_tok GROUP BY doc_id, actual, lang
+),
+ranked AS (
+  SELECT doc_id, actual, lang AS predicted, score,
+         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang ASC) AS rn
+  FROM scores
+)
+SELECT doc_id, actual, predicted, round(score, 6) AS score,
+       (actual = predicted) AS correct
+FROM ranked WHERE rn = 1 ORDER BY doc_id
+"""
+
+
+def _naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multinomial Naive Bayes language classifier, trained and evaluated
+    in one plan. Training is pure aggregation (token counts per lang,
+    lang totals, vocabulary size); scoring explodes each held-out doc's
+    tokens against the broadcast model grid and argmaxes per doc. Every
+    log-likelihood is rounded at 9 dp before the micro-quantized sum, so
+    scores are bit-identical across engines; argmax tie-breaks on
+    (score desc, lang asc)."""
+    docs = _t(spark, sf_dir, "documents")
+    train = docs.filter(F.col("doc_id") % 5 != 0)
+    test = docs.filter(F.col("doc_id") % 5 == 0)
+
+    tr_tok = train.select("lang", F.explode(tx.tokens("text")).alias("tok"))
+    counts = tr_tok.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c"))
+    totals = counts.groupBy("lang").agg(F.sum("c").alias("t_total"))
+    vsz = tr_tok.agg(F.countDistinct("tok").alias("vocab"))
+    # priors stay a lazy 5-row frame: per-lang doc counts with the grand
+    # total from an unbounded window over those 5 rows (no driver action)
+    priors = (
+        train.groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .select(
+            "lang",
+            F.round(
+                F.log(
+                    F.col("d") / F.sum("d").over(Window.partitionBy(F.lit(1))).cast("double")
+                ),
+                9,
+            ).alias("logprior"),
+        )
+    )
+
+    test_tok = test.select(
+        "doc_id", F.col("lang").alias("actual"), F.explode(tx.tokens("text")).alias("tok")
+    )
+    # model grid rides in as broadcast dims: 5 langs x (totals, priors),
+    # vocab as a 1-row scalar, counts as the only sizable dim (vocab x lang)
+    cdim = counts.select(
+        F.col("lang").alias("c_lang"), F.col("tok").alias("c_tok"), "c"
+    )
+    scored_tok = (
+        test_tok.crossJoin(F.broadcast(priors))
+        .crossJoin(F.broadcast(vsz))
+        .join(F.broadcast(totals), "lang")
+        .join(
+            F.broadcast(cdim),
+            (F.col("c_lang") == F.col("lang")) & (F.col("c_tok") == F.col("tok")),
+            "left",
+        )
+        .select(
+            "doc_id",
+            "actual",
+            "lang",
+            "logprior",
+            F.round(
+                F.log(
+                    (F.coalesce(F.col("c"), F.lit(0)) + 1)
+                    / (F.col("t_total") + F.col("vocab")).cast("double")
+                ),
+                9,
+            ).alias("ll"),
+        )
+    )
+    scores = scored_tok.groupBy("doc_id", "actual", "lang").agg(
+        (F.min("logprior") + dsum(F.col("ll"))).alias("score")
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("lang"))
+    return (
+        scores.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "doc_id",
+            "actual",
+            F.col("lang").alias("predicted"),
+            F.round("score", 6).alias("score"),
+            (F.col("actual") == F.col("lang")).alias("correct"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Shared building block over `part`: the capped fuzzy entity-resolution
+# candidate generator of the text and datapipe entries.
+# ---------------------------------------------------------------------------
+
+_FUZZY_SN_WINDOW = 20  # sorted-neighborhood width: per-row verify work is O(W)
+
+
+def fuzzy_block_candidates(
+    p: DataFrame, prefix_sum_ranks_above: int = 100_000
+) -> DataFrame:
+    """Shared capped fuzzy-ER candidate generator (used by
+    ``join_fuzzy_blocked`` and ``er_fuzzy_canonicalize``): blocked on
+    (name-noun, size), sorted-neighborhood rank band W via gap-offset
+    explode so candidate enumeration is a pure equi-join doing O(n*W)
+    work. Input needs columns p_partkey, p_name, p_size, blk (blk
+    non-null and '|'-free — it is a single word from p_name); output is
+    (a_key, b_key, a_name, b_name, dist) with dist in [1, 3].
+
+    Block ranking is two-geared. Below
+    ``prefix_sum_ranks_above`` rows it is a plain ``row_number()``
+    window over (blk, p_size) — one shuffle, fastest at fixture scale.
+    Above it, that window is the last single-task growth pattern in the
+    catalog: the block vocabulary is FIXED (a word list x ~50 sizes),
+    so each hash-partition of the window shuffle carries n/#partitions
+    data rows through one sorting task, linear in the corpus. The scale
+    gear instead derives ranks from the range-partitioned grouped
+    prefix sum (``operators/equidepth.py``): p_partkey is unique within
+    a block, so the cumulative distinct-value count IS the dense
+    1-based rank, every task is bounded by a range slice of the
+    (block, key) domain, and the rank map joins back on the
+    globally-unique p_partkey. Both gears produce identical ranks
+    (pinned by test).
+
+    The gear gate is a LIMIT-capped count — LocalLimit short-circuits
+    every scan task at the threshold, so the probe's cost is bounded by
+    the threshold instead of the corpus (a bare count() is a full-table
+    job). The ranked frame ``pr`` is eagerly pinned: it feeds BOTH sides
+    of the neighborhood self-join plus the rank machinery, and without
+    the pin each side re-runs the window (or prefix-sum) rank pass over
+    the corpus."""
+    if p.limit(prefix_sum_ranks_above + 1).count() <= prefix_sum_ranks_above:
+        w = Window.partitionBy("blk", "p_size").orderBy("p_partkey")
+        pr = p.withColumn("rnk", F.row_number().over(w))
+    else:
+        from .operators.equidepth import grouped_value_counts_cum
+
+        gkey = F.concat_ws("|", F.col("blk"), F.col("p_size").cast("string"))
+        cum, _ = grouped_value_counts_cum(p, gkey, F.col("p_partkey"))
+        ranks = cum.select(
+            F.col("v").alias("p_partkey"), F.col("cum").alias("rnk")
+        )
+        pr = p.join(ranks, "p_partkey")
+    pr = pr.localCheckpoint(eager=True)
+    b = pr.select(
+        F.col("p_partkey").alias("b_key"),
+        F.col("p_name").alias("b_name"),
+        "p_size",
+        "blk",
+        F.explode(
+            F.array(*[F.lit(j) for j in range(1, _FUZZY_SN_WINDOW + 1)])
+        ).alias("gap"),
+        F.col("rnk").alias("b_rnk"),
+    ).withColumn("a_rnk", F.col("b_rnk") - F.col("gap"))
+    dist = F.levenshtein(F.col("p_name"), F.col("b_name"))
+    return (
+        pr.join(
+            b,
+            on=[pr["blk"] == b["blk"], pr["p_size"] == b["p_size"], pr["rnk"] == b["a_rnk"]],
+        )
+        .filter(dist.between(1, 3))
+        .select(
+            F.col("p_partkey").alias("a_key"),
+            "b_key",
+            F.col("p_name").alias("a_name"),
+            "b_name",
+            dist.cast("bigint").alias("dist"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -748,19 +1019,20 @@ def set_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Extension operators (dedup / similarity / text / multimodal / streaming)
 # and the general-analytics completion register on import; kept in separate
-# modules for readability.
+# modules for readability. This import order is the registration order,
+# which ``queries()`` keeps; no catalog module imports a sibling.
 from . import catalog_ext  # noqa: E402,F401  (intentional tail import)
 from . import catalog_more  # noqa: E402,F401
 from . import catalog_curate  # noqa: E402,F401
 from . import catalog_tpch  # noqa: E402,F401
+from . import catalog_text  # noqa: E402,F401
 from . import catalog_datapipe  # noqa: E402,F401
 from . import catalog_engine  # noqa: E402,F401
+from . import catalog_stats  # noqa: E402,F401
 from . import catalog_eval  # noqa: E402,F401
 from . import catalog_events  # noqa: E402,F401
 from . import catalog_finance  # noqa: E402,F401
 from . import catalog_graph  # noqa: E402,F401
 from . import catalog_privacy  # noqa: E402,F401
 from . import catalog_sampling  # noqa: E402,F401
-from . import catalog_stats  # noqa: E402,F401
-from . import catalog_text  # noqa: E402,F401
 from . import catalog_timeseries  # noqa: E402,F401

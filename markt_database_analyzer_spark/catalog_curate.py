@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import SQL_COS, _t, demo_guard, register
-from .catalog_ext import _sql_minhash_lsh
 from .datapipe import clustering as cl
 from .datapipe import dedup as dd
 from .datapipe import sampling as smp
@@ -32,7 +31,7 @@ def _sql_cluster_resolve() -> str:
     # The MinHash-LSH pair SQL (already differential-green as
     # dedup_minhash_lsh) becomes the edge list of a recursive
     # transitive-closure walk; min reachable id = cluster id = survivor.
-    lsh = _sql_minhash_lsh()
+    lsh = dd.sql_minhash_lsh()
     return f"""
 WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({lsh}) lsh),
 edges AS (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
@@ -975,7 +974,7 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_pipeline_curate() -> str:
     blocked = ", ".join(repr(s) for s in _BLOCKED_SOURCES)
     gate = smp.sql_stratified_gate("doc_id", "lang", _STRATA, seed=3)
-    lsh = _sql_minhash_lsh(base="gated")
+    lsh = dd.sql_minhash_lsh(base="gated")
     return f"""
 WITH RECURSIVE gated AS (
   SELECT doc_id, text, lang FROM documents
@@ -1143,9 +1142,7 @@ _set_lm_oracle()
 # --------------------------------------------------------------------------
 
 def _sql_semdedup(k: int = 10, iters: int = 3, min_cos: float = 0.95) -> str:
-    from .catalog_ext import _sql_kmeans_ctes
-
-    kmeans, final_assign, _ = _sql_kmeans_ctes(k=k, iters=iters)
+    kmeans, final_assign, _ = sim.sql_kmeans_ctes(k=k, iters=iters)
     cos = SQL_COS.format(a="a.vec", b="b.vec")
     return f"""
 WITH RECURSIVE corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),

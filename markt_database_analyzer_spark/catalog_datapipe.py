@@ -15,8 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .catalog import SQL_COS, _t, register
-from .catalog_text import _FUZZY_SN_WINDOW, fuzzy_block_candidates
+from .catalog import SQL_COS, _FUZZY_SN_WINDOW, _t, fuzzy_block_candidates, register
 from .datapipe import clustering as cl
 from .datapipe import dedup as dd
 from .datapipe import similarity as sim

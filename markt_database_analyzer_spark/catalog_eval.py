@@ -13,11 +13,32 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, demo_guard, register
-from .catalog_stats import _CAL_BINS, _sql_naive_bayes, classify_naive_bayes_langid
-from .catalog_text import _BM25_B, _BM25_K1, _BM25_TERMS, _SQL_TOKENS, _tokens
+from .catalog import (
+    _BM25_B,
+    _BM25_K1,
+    _BM25_TERMS,
+    _CAL_BINS,
+    _SQL_TOKENS,
+    _naive_bayes_langid,
+    _sql_naive_bayes,
+    _t,
+    _tokens,
+    demo_guard,
+    register,
+)
 from .datapipe import text as tx
-from .functions.aggregates import CENTS, NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
+from .functions.aggregates import (
+    CENTS,
+    NANO,
+    SQL_DAVG,
+    SQL_DSUM,
+    davg,
+    dsum,
+    qlong,
+    sql_qlong,
+    sql_wide_sum,
+    wide_sum,
+)
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
@@ -291,7 +312,7 @@ def eval_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 5.4 s -> ~NB cost at sf0.1, and at 100 TB the difference is
     a driver OOM vs a 25-row grid. The eager localCheckpoint pins the
     grid so classes and the per-class agg share ONE classifier run."""
-    preds = classify_naive_bayes_langid(spark, sf_dir)
+    preds = _naive_bayes_langid(spark, sf_dir)
     cells = (
         preds.groupBy("actual", "predicted")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1314,7 +1335,7 @@ b AS (
   SELECT least(9, s9 // 100000000) AS bin,
          CAST(count(*) AS BIGINT) AS n_b,
          CAST(sum(label) AS BIGINT) AS pos_b,
-         CAST(sum(CAST(s9 AS HUGEINT)) AS HUGEINT) AS conf9_b
+         CAST({sql_wide_sum('s9')} AS HUGEINT) AS conf9_b
   FROM scored GROUP BY 1
 )
 SELECT CAST(sum(n_b) AS BIGINT) AS n_docs,
@@ -1363,7 +1384,7 @@ def eval_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFra
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_b"),
         F.sum("label").cast("bigint").alias("pos_b"),
-        F.sum(F.col("s9").cast("decimal(38,0)")).alias("conf9_b"),
+        wide_sum("s9").alias("conf9_b"),
     )
     num = F.abs(
         F.col("pos_b").cast("decimal(38,0)") * F.lit(1000000000) - F.col("conf9_b")
@@ -1466,12 +1487,10 @@ def eval_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(r3).alias("r3"),
     )
     n_all = F.count(F.lit(1)).over(Window.partitionBy())
-    dev = (2 * (F.col("r1") + F.col("r2") + F.col("r3")) - 3 * (n_all + 1)).cast(
-        "decimal(38,0)"
-    )
+    dev = 2 * (F.col("r1") + F.col("r2") + F.col("r3")) - 3 * (n_all + 1)
     s = ranks.select(dev.alias("dv")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("dv") * F.col("dv")).alias("s4"),
+        wide_sum("dv", "dv").alias("s4"),
     )
     nd = F.col("n").cast("decimal(38,0)")
     return s.select(
@@ -1516,12 +1535,12 @@ cells AS (
 ra_t AS (SELECT ra, CAST(count(*) AS BIGINT) AS r FROM rated GROUP BY 1),
 rb_t AS (SELECT rb, CAST(count(*) AS BIGINT) AS c FROM rated GROUP BY 1),
 num AS (
-  SELECT CAST(sum(CAST((ra - rb) * (ra - rb) AS HUGEINT) * o) AS HUGEINT) AS wo,
+  SELECT CAST({sql_wide_sum('(ra - rb) * (ra - rb)', 'o')} AS HUGEINT) AS wo,
          CAST(sum(o) AS BIGINT) AS n
   FROM cells
 ),
 den AS (
-  SELECT CAST(sum(CAST((a.ra - b.rb) * (a.ra - b.rb) AS HUGEINT) * a.r * b.c)
+  SELECT CAST({sql_wide_sum('(a.ra - b.rb) * (a.ra - b.rb)', 'a.r * b.c')}
               AS HUGEINT) AS wrc
   FROM ra_t a CROSS JOIN rb_t b
 )
@@ -1572,16 +1591,14 @@ def eval_cohens_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = rated.groupBy("ra", "rb").agg(F.count(F.lit(1)).cast("bigint").alias("o"))
     ra_t = rated.groupBy("ra").agg(F.count(F.lit(1)).cast("bigint").alias("r"))
     rb_t = rated.groupBy("rb").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    w = ((F.col("ra") - F.col("rb")) * (F.col("ra") - F.col("rb"))).cast(
-        "decimal(38,0)"
-    )
+    w = (F.col("ra") - F.col("rb")) * (F.col("ra") - F.col("rb"))
     num = cells.agg(
-        F.sum(w * F.col("o")).alias("wo"),
+        wide_sum(w, "o").alias("wo"),
         F.sum("o").cast("bigint").alias("n"),
     )
     den = (
         ra_t.crossJoin(rb_t)
-        .agg(F.sum(w * F.col("r") * F.col("c")).alias("wrc"))
+        .agg(wide_sum(w * F.col("r"), "c").alias("wrc"))
     )
     return num.crossJoin(F.broadcast(den)).select(
         "n",
@@ -1633,7 +1650,7 @@ seg AS (
 ),
 a AS (
   SELECT CAST(min(pos) AS BIGINT) AS pos, CAST(min(neg) AS BIGINT) AS neg,
-         CAST(sum(CAST(seg2 AS HUGEINT)) AS HUGEINT) AS s2
+         CAST({sql_wide_sum('seg2')} AS HUGEINT) AS s2
   FROM seg
 ),
 f AS (
@@ -1701,10 +1718,10 @@ def eval_auc_hanley_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg2 = (F.col("fp") - F.coalesce(F.lag("fp").over(word), F.lit(0))) * (
         F.col("tp") + F.coalesce(F.lag("tp").over(word), F.lit(0))
     )
-    a = cum.select("pos", "neg", seg2.cast("decimal(38,0)").alias("seg2")).agg(
+    a = cum.select("pos", "neg", seg2.alias("seg2")).agg(
         F.min("pos").cast("bigint").alias("pos"),
         F.min("neg").cast("bigint").alias("neg"),
-        F.sum("seg2").alias("s2"),
+        wide_sum("seg2").alias("s2"),
     )
     auc = F.col("s2").cast("double") / (2.0 * F.col("pos") * F.col("neg"))
     f = a.select("pos", "neg", auc.alias("auc"))
@@ -2608,9 +2625,6 @@ def edit_distance(cand: list, ref: list) -> int:
         np.minimum(old[:-1] + (r_ids != cid), old[1:] + 1, out=tmp[1:])
         old = idx + np.minimum.accumulate(tmp - idx)
     return int(old[-1])
-
-
-
 
 
 @register(

@@ -13,7 +13,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
-from .functions.aggregates import CENTS, NANO, SQL_DSUM, dsum, qlong, sql_qlong
+from .functions.aggregates import (
+    CENTS,
+    NANO,
+    SQL_DSUM,
+    dsum,
+    qlong,
+    sql_qlong,
+    sql_wide_sum,
+    wide_sum,
+)
 
 
 @register(
@@ -299,13 +308,13 @@ s{i} AS (
 ),
 p{i} AS (
   SELECT u.j AS dim,
-         CAST(SUM(CAST({_NANO_SQL.format(x='CAST(s.embedding[u.j] AS DOUBLE) * s.s')}
-                       AS HUGEINT)) AS DOUBLE) / 1000000000.0 AS p
+         CAST({sql_wide_sum(_NANO_SQL.format(x='CAST(s.embedding[u.j] AS DOUBLE) * s.s'))}
+              AS DOUBLE) / 1000000000.0 AS p
   FROM s{i} s CROSS JOIN (SELECT unnest(range(1, {_PCA_DIMS + 1})) AS j) u
   GROUP BY u.j
 ),
 n{i} AS (
-  SELECT sqrt(CAST(SUM(CAST({_NANO_SQL.format(x='p * p')} AS HUGEINT)) AS DOUBLE)
+  SELECT sqrt(CAST({sql_wide_sum(_NANO_SQL.format(x='p * p'))} AS DOUBLE)
               / 1000000000.0) AS nrm
   FROM p{i}
 ),
@@ -603,7 +612,7 @@ def events_dau_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_burstiness() -> str:
-    return """
+    return f"""
 WITH ordered AS (
   SELECT event_type, user_id, epoch_us(ts) AS tu, event_id
   FROM events
@@ -617,8 +626,8 @@ gaps AS (
 g AS (
   SELECT event_type,
          CAST(count(*) AS BIGINT) AS n_gaps,
-         CAST(sum(CAST(gap AS HUGEINT)) AS DOUBLE) AS s,
-         CAST(sum(CAST(gap AS HUGEINT) * gap) AS DOUBLE) AS ss
+         CAST({sql_wide_sum('gap')} AS DOUBLE) AS s,
+         CAST({sql_wide_sum('gap', 'gap')} AS DOUBLE) AS ss
   FROM gaps WHERE gap IS NOT NULL GROUP BY event_type
 ),
 m AS (
@@ -664,11 +673,10 @@ def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFram
     gaps = ev.select(
         "event_type", (F.col("tu") - F.lag("tu").over(w)).alias("gap")
     ).filter(F.col("gap").isNotNull())
-    gd = F.col("gap").cast("decimal(38,0)")
     g = gaps.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_gaps"),
-        F.sum(gd).cast("double").alias("s"),
-        F.sum(gd * F.col("gap")).cast("double").alias("ss"),
+        wide_sum("gap").cast("double").alias("s"),
+        wide_sum("gap", "gap").cast("double").alias("ss"),
     )
     mean_gap = F.col("s") / F.col("n_gaps")
     sd_gap = F.sqrt(
@@ -693,7 +701,7 @@ def events_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _sql_heatmap() -> str:
-    return """
+    return f"""
 WITH cells AS (
   SELECT CAST(isodow(ts) AS BIGINT) AS dow,
          CAST(hour(ts) AS BIGINT) AS hod,
@@ -702,8 +710,8 @@ WITH cells AS (
 ),
 tot AS (
   SELECT CAST(count(*) AS DOUBLE) AS grid,
-         CAST(sum(CAST(n AS HUGEINT)) AS DOUBLE) AS s,
-         CAST(sum(CAST(n AS HUGEINT) * n) AS DOUBLE) AS ss
+         CAST({sql_wide_sum('n')} AS DOUBLE) AS s,
+         CAST({sql_wide_sum('n', 'n')} AS DOUBLE) AS ss
   FROM cells
 ),
 m AS (
@@ -741,11 +749,10 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(extract(DAYOFWEEK_ISO FROM ts) AS BIGINT)").alias("dow"),
         F.hour("ts").cast("bigint").alias("hod"),
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    nd = F.col("n").cast("decimal(38,0)")
     tot = cells.agg(
         F.count(F.lit(1)).cast("double").alias("grid"),
-        F.sum(nd).cast("double").alias("s"),
-        F.sum(nd * F.col("n")).cast("double").alias("ss"),
+        wide_sum("n").cast("double").alias("s"),
+        wide_sum("n", "n").cast("double").alias("ss"),
     )
     mean = F.col("s") / F.col("grid")
     sd = F.sqrt(F.greatest(F.col("ss") / F.col("grid") - mean * mean, F.lit(0.0)))

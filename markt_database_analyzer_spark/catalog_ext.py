@@ -72,42 +72,9 @@ def dedup_fingerprint_tokenset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_minhash_lsh(num_hashes: int = 16, bands: int = 4, shingle_k: int = 3, min_jaccard: float = 0.5, base: str = "documents") -> str:
-    rows = num_hashes // bands
-    sh_expr = dd.sql_shingles("text", k=shingle_k)
-    mins = ",\n    ".join(
-        f"list_min(list_transform(sh, s -> {dd.sql_km_hash('s', i)})) AS m{i}"
-        for i in range(num_hashes)
-    )
-    band_selects = []
-    for b in range(bands):
-        vals = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_id, {sql_hash60(f'({vals})', seed=1000 + b)} AS band_hash FROM sig"
-        )
-    bands_sql = "\nUNION ALL\n".join(band_selects)
-    return f"""
-WITH sh AS (SELECT doc_id, {sh_expr} AS sh FROM {base}),
-sig AS (SELECT doc_id, sh, {mins} FROM sh),
-bands AS ({bands_sql}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-)
-SELECT c.id_a AS id_a, c.id_b AS id_b,
-       len(list_intersect(sa.sh, sb.sh))::DOUBLE
-         / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE AS jaccard
-FROM cand c JOIN sh sa ON c.id_a = sa.doc_id JOIN sh sb ON c.id_b = sb.doc_id
-WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-        / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE >= {min_jaccard}
-ORDER BY id_a, id_b
-"""
-
-
 @register(
     "dedup_minhash_lsh",
-    oracle=_sql_minhash_lsh(),
+    oracle=dd.sql_minhash_lsh(),
     tags=("dedup", "minhash", "lsh"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,21 +90,26 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.repartition(1).sortWithinPartitions("id_a", "id_b")
 
 
-def _sql_simhash(bits: int = 60) -> str:
+def _sql_simhash_sig() -> str:
+    """``WITH h, sig``: each document's 60-bit SimHash signature, the
+    per-bit majority vote over its tokens' md5-60 hashes."""
     toks = tx.sql_tokens("text")
     h = f"list_transform({toks}, t -> {sql_hash60('t')})"
     terms = " + ".join(
         f"(CASE WHEN 2 * len(list_filter(hs, x -> (x >> {j}) & 1 = 1)) > len(hs) "
         f"THEN (1::BIGINT << {j}) ELSE 0::BIGINT END)"
-        for j in range(bits)
+        for j in range(60)
     )
     return f"""
-WITH h AS (SELECT doc_id, {h} AS hs FROM documents)
-SELECT doc_id, ({terms}) AS simhash FROM h ORDER BY doc_id
-"""
+WITH h AS (SELECT doc_id, {h} AS hs FROM documents),
+sig AS (SELECT doc_id, ({terms}) AS simhash FROM h)"""
 
 
-@register("dedup_simhash_signatures", oracle=_sql_simhash(), tags=("dedup", "simhash"))
+@register(
+    "dedup_simhash_signatures",
+    oracle=f"{_sql_simhash_sig()}\nSELECT doc_id, simhash FROM sig ORDER BY doc_id\n",
+    tags=("dedup", "simhash"),
+)
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 60-bit SimHash signatures (near-dup key; pairs query
     below consumes them). Uses the explode+aggregate scale path — one md5
@@ -150,22 +122,12 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_simhash_pairs(max_hamming: int = 3) -> str:
-    base = _sql_simhash().split("SELECT doc_id,")[0]  # reuse the WITH h AS (...) prefix
-    toks = tx.sql_tokens("text")
-    h = f"list_transform({toks}, t -> {sql_hash60('t')})"
-    terms = " + ".join(
-        f"(CASE WHEN 2 * len(list_filter(hs, x -> (x >> {j}) & 1 = 1)) > len(hs) "
-        f"THEN (1::BIGINT << {j}) ELSE 0::BIGINT END)"
-        for j in range(60)
-    )
-    return f"""
-WITH h AS (SELECT doc_id, {h} AS hs FROM documents),
-sig AS (SELECT doc_id, ({terms}) AS simhash FROM h)
+def _sql_simhash_pairs() -> str:
+    return f"""{_sql_simhash_sig()}
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        bit_count(xor(a.simhash, b.simhash)) AS hamming
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 ORDER BY id_a, id_b
 """
 
@@ -1038,60 +1000,13 @@ def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_kmeans_ctes(k: int = 10, iters: int = 3) -> tuple[str, str, str]:
-    """Shared DuckDB replay of the distributed Lloyd iterations:
-    deterministic seeding (k lowest-id vectors, cell ids by lexicographic
-    centroid order), then ``iters`` unrolled rounds (argmin assignment
-    with min-cell tiebreak / per-dimension mean rounded to 9 dp — the
-    same pin the Spark side applies at its collect boundary). Returns
-    ``(cte_body, final_assign_name, final_cents_name)`` for composition
-    into a WITH chain (the chain must start with a ``corpus(vec_id, vec)``
-    CTE)."""
-    dist = (
-        "list_sum(list_transform(generate_series(1, 64), "
-        "i -> (e.vec[i] - c.centroid[i]) * (e.vec[i] - c.centroid[i])))"
-    )
-
-    def assign(n: int, cents: str) -> str:
-        return f"""
-assign{n} AS (
-  SELECT vec_id, vec, cell FROM (
-    SELECT e.vec_id, e.vec, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {dist}, c.cell) AS rn
-    FROM corpus e CROSS JOIN {cents} c
-  ) WHERE rn = 1
-)"""
-
-    steps = [
-        f"seedv AS (SELECT vec FROM corpus ORDER BY vec_id LIMIT {k})",
-        "cents0 AS (SELECT row_number() OVER (ORDER BY vec) - 1 AS cell, vec AS centroid FROM seedv)",
-    ]
-    cents = "cents0"
-    for i in range(iters):
-        steps.append(assign(i, cents))
-        if i < iters - 1:
-            cents = f"cents{i + 1}"
-            steps.append(
-                f"""
-cents{i + 1} AS (
-  SELECT cell, list(cv ORDER BY pos) AS centroid FROM (
-    SELECT cell, pos, round(avg(v), 9) AS cv FROM (
-      SELECT cell, unnest(generate_series(1, 64)) AS pos, unnest(vec) AS v
-      FROM assign{i}
-    ) GROUP BY cell, pos
-  ) GROUP BY cell
-)"""
-            )
-    return ",".join(steps), f"assign{iters - 1}", cents
-
-
 def _sql_kmeans_ivf(k: int = 10, iters: int = 3, n_queries: int = 10, topk: int = 5, nprobe: int = 2) -> str:
     """DuckDB replay of the full learned-IVF search: the shared Lloyd
-    replay (:func:`_sql_kmeans_ctes`), then the nprobe search against the
+    replay (:func:`datapipe.similarity.sql_kmeans_ctes`), then the nprobe search against the
     quantizer's own centroids. Every float the two engines compare is
     either a raw corpus value (float32→double, exact) or rounded at 9 dp,
     so the replay is bit-portable."""
-    body, final_assign, cents = _sql_kmeans_ctes(k=k, iters=iters)
+    body, final_assign, cents = sim.sql_kmeans_ctes(k=k, iters=iters)
     return f"""
 WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 {body},
@@ -1137,7 +1052,7 @@ def similarity_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_clean_corpus(min_quality: float = 0.4) -> str:
     toks = tx.sql_tokens("text")
-    pairs = _sql_minhash_lsh()
+    pairs = dd.sql_minhash_lsh()
     return f"""
 WITH pairs AS ({pairs}),
 meta AS (
@@ -1583,7 +1498,7 @@ def _sql_ivf_pq(
     each query to its nprobe nearest cells (cosine to the quantizer's own
     centroids), the shared PQ replay supplies reconstructions, ADC scores
     raw-query-vs-reconstruction within probed cells only."""
-    kmeans, final_assign, cents = _sql_kmeans_ctes(k=k_cells, iters=iters)
+    kmeans, final_assign, cents = sim.sql_kmeans_ctes(k=k_cells, iters=iters)
     pq = _sql_pq_ctes(k=k_codes, m=m, dims=dims)
     return f"""
 WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),

@@ -12,8 +12,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, demo_guard, register
-from .functions.aggregates import CENTS, NANO, SQL_DAVG, SQL_DSUM, davg, dsum, qlong, sql_qlong
+from .catalog import _SQL_DAILY_REVENUE, _daily_revenue, _t, demo_guard, register
+from .functions.aggregates import (
+    CENTS,
+    NANO,
+    SQL_DAVG,
+    SQL_DSUM,
+    davg,
+    dsum,
+    qlong,
+    sql_qlong,
+    sql_wide_sum,
+    wide_sum,
+)
 from .operators.equidepth import bucket_by_cuts, equi_depth_cut_points, sql_cuts_ctes
 
 
@@ -409,11 +420,7 @@ def finance_rsi_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN = 252.0  # trading-day annualization
 def _sql_sharpe() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
@@ -423,8 +430,8 @@ r AS (
 ),
 s AS (
   SELECT CAST(count(*) AS DOUBLE) AS nr,
-         CAST(sum(CAST(rq AS HUGEINT)) AS DOUBLE) AS sr,
-         CAST(sum(CAST(rq AS HUGEINT) * rq) AS DOUBLE) AS srr,
+         CAST({sql_wide_sum('rq')} AS DOUBLE) AS sr,
+         CAST({sql_wide_sum('rq', 'rq')} AS DOUBLE) AS srr,
          CAST(sum(CASE WHEN rq < 0 THEN CAST(rq AS HUGEINT) * rq
                        ELSE 0 END) AS DOUBLE) AS sdd
   FROM r
@@ -464,28 +471,18 @@ def finance_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined daily aggregate is the only
     data-sized stage; the lag window and moments run over the
     day-grain frame (~years x 365 rows at any corpus size)."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("x"))
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     r = led.filter(F.col("xp").isNotNull()).select(
         qlong(F.log(F.col("x").cast("double") / F.col("xp")), NANO)
         .alias("rq")
     )
-    rd = F.col("rq").cast("decimal(38,0)")
     s = r.agg(
         F.count(F.lit(1)).cast("double").alias("nr"),
-        F.sum(rd).cast("double").alias("sr"),
-        F.sum(rd * F.col("rq")).cast("double").alias("srr"),
-        F.sum(F.when(F.col("rq") < 0, rd * F.col("rq")).otherwise(F.lit(0)))
-        .cast("double")
-        .alias("sdd"),
+        wide_sum("rq").cast("double").alias("sr"),
+        wide_sum("rq", "rq").cast("double").alias("srr"),
+        wide_sum(F.least("rq", F.lit(0)), "rq").cast("double").alias("sdd"),
     )
     mr = F.col("sr") / F.col("nr") / 1e9
     m = s.select(
@@ -509,11 +506,7 @@ def finance_sharpe_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VAR_ALPHA = 0.05  # 95% VaR
 def _sql_var_cvar() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
@@ -558,14 +551,7 @@ def finance_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized stage; ranking and tail algebra run on the day-grain
     frame (~2.4k rows at any corpus size — the Sharpe/theilsen
     discipline)."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("x"))
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     r = led.filter(F.col("xp").isNotNull()).select(
@@ -588,11 +574,7 @@ def finance_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_total").alias("n_returns"), F.col("k").alias("tail_days")
     ).agg(
         F.max(F.when(F.col("rn") == F.col("k"), F.col("rq"))).alias("var_q"),
-        F.sum(
-            F.when(F.col("rn") <= F.col("k"), F.col("rq").cast("decimal(38,0)"))
-        )
-        .cast("double")
-        .alias("tail_sum"),
+        wide_sum(F.when(F.col("rn") <= F.col("k"), F.col("rq"))).cast("double").alias("tail_sum"),
         F.min("rq").alias("min_rq"),
     )
     return agg.select(
@@ -796,11 +778,7 @@ def _sql_macd() -> str:
         "AS DOUBLE) / 1000000000.0"
     )
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 win AS (
   SELECT d, x,
          list(x) OVER (ORDER BY d
@@ -848,16 +826,7 @@ def finance_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     w_macd, w_sig = _macd_weights()
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("x"))
     w = Window.orderBy("d").rowsBetween(-(_MACD_LX - 1), 0)
     win = daily.select("d", "x", F.collect_list("x").over(w).alias("arr"))
 
@@ -912,8 +881,8 @@ exc AS (
 nn AS (SELECT CAST(count(*) AS BIGINT) AS n_loss FROM losses),
 m AS (
   SELECT CAST(count(*) AS BIGINT) AS nu,
-         CAST(sum(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
+         CAST({sql_wide_sum('y')} AS HUGEINT) AS sy,
+         CAST({sql_wide_sum('y', 'y')} AS HUGEINT) AS syy,
          CAST(min(uc) AS BIGINT) AS uc
   FROM exc
 ),
@@ -991,8 +960,8 @@ def finance_evt_pot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("v") - F.lit(uc)).alias("y"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("nu"),
-            F.sum(F.col("y").cast("decimal(38,0)")).alias("sy"),
-            F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("syy"),
+            wide_sum("y").alias("sy"),
+            wide_sum("y", "y").alias("syy"),
         )
     )
     nud = F.col("nu").cast("double")

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from .catalog import _t, register
 from .datapipe.clustering import triangle_stats
-from .functions.aggregates import NANO, SQL_NSUM, nsum, qlong, sql_qlong
+from .functions.aggregates import NANO, SQL_NSUM, nsum, qlong, sql_qlong, sql_wide_sum, wide_sum
 
 
 _PR_ITERS, _PR_D = 5, 0.85
@@ -913,7 +913,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSORT_SQL = """
+_ASSORT_SQL = f"""
 WITH e AS (
   SELECT DISTINCT a.l_partkey AS x, b.l_partkey AS y
   FROM lineitem a JOIN lineitem b
@@ -935,9 +935,9 @@ sym AS (
 ),
 s AS (
   SELECT CAST(count(*) AS BIGINT) AS m2,
-         CAST(sum(CAST(a AS HUGEINT)) AS DOUBLE) AS sa,
-         CAST(sum(CAST(a AS HUGEINT) * a) AS DOUBLE) AS saa,
-         CAST(sum(CAST(a AS HUGEINT) * b) AS DOUBLE) AS sab
+         CAST({sql_wide_sum('a')} AS DOUBLE) AS sa,
+         CAST({sql_wide_sum('a', 'a')} AS DOUBLE) AS saa,
+         CAST({sql_wide_sum('a', 'b')} AS DOUBLE) AS sab
   FROM sym
 )
 SELECT CAST(m2 / 2 AS BIGINT) AS n_edges,
@@ -992,12 +992,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = de.select(F.col("du").alias("a"), F.col("dv").alias("b")).unionAll(
         de.select(F.col("dv").alias("a"), F.col("du").alias("b"))
     )
-    ad = F.col("a").cast("decimal(38,0)")
     s = sym.agg(
         F.count(F.lit(1)).cast("bigint").alias("m2"),
-        F.sum(ad).cast("double").alias("sa"),
-        F.sum(ad * F.col("a")).cast("double").alias("saa"),
-        F.sum(ad * F.col("b")).cast("double").alias("sab"),
+        wide_sum("a").cast("double").alias("sa"),
+        wide_sum("a", "a").cast("double").alias("saa"),
+        wide_sum("a", "b").cast("double").alias("sab"),
     )
     return s.select(
         (F.col("m2") / 2).cast("bigint").alias("n_edges"),

@@ -19,7 +19,7 @@ from .datapipe.hashing import hash60, sql_hash60
 from .datapipe.sampling import RESOLUTION, _gate, sql_gate
 from .datapipe.similarity import cosine, kcenter_select
 from .datapipe.util import fan_out
-from .functions.aggregates import NANO, qlong, sql_qlong
+from .functions.aggregates import NANO, qlong, sql_qlong, sql_wide_sum, wide_sum
 from .functions.zorder import sql_zorder2, zorder2
 from .operators.equidepth import bucket_by_cuts, equi_depth_cut_points, sql_cuts_ctes
 
@@ -850,10 +850,10 @@ def _sql_neyman() -> str:
 WITH s AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS n_h,
          CASE WHEN count(*) < 2 THEN 0.0 ELSE
-         sqrt((CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE)
-               - count(*) * (CAST(sum(CAST(n_chars AS HUGEINT)) AS DOUBLE)
+         sqrt((CAST({sql_wide_sum('n_chars', 'n_chars')} AS DOUBLE)
+               - count(*) * (CAST({sql_wide_sum('n_chars')} AS DOUBLE)
                              / count(*))
-                          * (CAST(sum(CAST(n_chars AS HUGEINT)) AS DOUBLE)
+                          * (CAST({sql_wide_sum('n_chars')} AS DOUBLE)
                              / count(*)))
               / (count(*) - 1)) END AS sigma_h
   FROM documents GROUP BY 1
@@ -908,7 +908,6 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .datapipe.hashing import hash60
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    nd = F.col("n_chars").cast("decimal(38,0)")
     # singleton-stratum guard: count-1 == 0 would make the
     # sample variance NULL in Spark but inf/raise in DuckDB; both
     # engines pin sigma_h = 0 for n_h < 2 (the stratum then draws a
@@ -920,10 +919,10 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(
             F.sqrt(
                 (
-                    F.sum(nd * F.col("n_chars")).cast("double")
+                    wide_sum("n_chars", "n_chars").cast("double")
                     - F.count(F.lit(1))
-                    * (F.sum(nd).cast("double") / F.count(F.lit(1)))
-                    * (F.sum(nd).cast("double") / F.count(F.lit(1)))
+                    * (wide_sum("n_chars").cast("double") / F.count(F.lit(1)))
+                    * (wide_sum("n_chars").cast("double") / F.count(F.lit(1)))
                 )
                 / (F.count(F.lit(1)) - 1)
             )

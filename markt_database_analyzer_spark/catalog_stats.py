@@ -14,7 +14,16 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, demo_guard, register
+from .catalog import (
+    _CAL_BINS,
+    _SQL_DAILY_REVENUE,
+    _daily_revenue,
+    _naive_bayes_langid,
+    _sql_naive_bayes,
+    _t,
+    demo_guard,
+    register,
+)
 from .datapipe import text as tx
 from .datapipe.hashing import hash60, sql_hash60
 from .datapipe.sampling import RESOLUTION
@@ -48,6 +57,8 @@ from .functions.aggregates import (
     nsum,
     qlong,
     sql_qlong,
+    sql_wide_sum,
+    wide_sum,
 )
 from .functions.scalars import SQL_NORM_CDF, norm_cdf
 from .operators.equidepth import (
@@ -1461,141 +1472,11 @@ def stats_boxplot_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NB_LL = "round(ln((COALESCE(c, 0) + 1) / CAST(t_total + vocab AS DOUBLE)), 9)"
-def _sql_naive_bayes() -> str:
-    toks = tx.sql_tokens("text")
-    return f"""
-WITH train AS (
-  SELECT lang, unnest({toks}) AS tok FROM documents WHERE doc_id % 5 <> 0
-),
-counts AS (
-  SELECT lang, tok, CAST(count(*) AS BIGINT) AS c FROM train GROUP BY lang, tok
-),
-totals AS (
-  SELECT lang, CAST(sum(c) AS BIGINT) AS t_total FROM counts GROUP BY lang
-),
-vsz AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vocab FROM train),
-lang_docs AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS d
-  FROM documents WHERE doc_id % 5 <> 0 GROUP BY lang
-),
-priors AS (
-  SELECT lang,
-         round(ln(d / CAST(sum(d) OVER () AS DOUBLE)), 9) AS logprior
-  FROM lang_docs
-),
-test_tok AS (
-  SELECT doc_id, lang AS actual, unnest({toks}) AS tok
-  FROM documents WHERE doc_id % 5 = 0
-),
-scored_tok AS (
-  SELECT t.doc_id, t.actual, p.lang, p.logprior,
-         {_NB_LL} AS ll
-  FROM test_tok t
-  CROSS JOIN priors p
-  CROSS JOIN vsz
-  JOIN totals ON totals.lang = p.lang
-  LEFT JOIN counts ON counts.lang = p.lang AND counts.tok = t.tok
-),
-scores AS (
-  SELECT doc_id, actual, lang,
-         min(logprior)
-           + {SQL_DSUM.format(x='ll')} AS score
-  FROM scored_tok GROUP BY doc_id, actual, lang
-),
-ranked AS (
-  SELECT doc_id, actual, lang AS predicted, score,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang ASC) AS rn
-  FROM scores
-)
-SELECT doc_id, actual, predicted, round(score, 6) AS score,
-       (actual = predicted) AS correct
-FROM ranked WHERE rn = 1 ORDER BY doc_id
-"""
-@register(
+register(
     "classify_naive_bayes_langid",
     oracle=_sql_naive_bayes(),
     tags=("classify", "text", "ml"),
-)
-def classify_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial Naive Bayes language classifier, trained and evaluated
-    in one plan. Training is pure aggregation (token counts per lang,
-    lang totals, vocabulary size); scoring explodes each held-out doc's
-    tokens against the broadcast model grid and argmaxes per doc. Every
-    log-likelihood is rounded at 9 dp before the micro-quantized sum, so
-    scores are bit-identical across engines; argmax tie-breaks on
-    (score desc, lang asc)."""
-    docs = _t(spark, sf_dir, "documents")
-    train = docs.filter(F.col("doc_id") % 5 != 0)
-    test = docs.filter(F.col("doc_id") % 5 == 0)
-
-    tr_tok = train.select("lang", F.explode(tx.tokens("text")).alias("tok"))
-    counts = tr_tok.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c"))
-    totals = counts.groupBy("lang").agg(F.sum("c").alias("t_total"))
-    vsz = tr_tok.agg(F.countDistinct("tok").alias("vocab"))
-    # priors stay a lazy 5-row frame: per-lang doc counts with the grand
-    # total from an unbounded window over those 5 rows (no driver action)
-    priors = (
-        train.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .select(
-            "lang",
-            F.round(
-                F.log(
-                    F.col("d") / F.sum("d").over(Window.partitionBy(F.lit(1))).cast("double")
-                ),
-                9,
-            ).alias("logprior"),
-        )
-    )
-
-    test_tok = test.select(
-        "doc_id", F.col("lang").alias("actual"), F.explode(tx.tokens("text")).alias("tok")
-    )
-    # model grid rides in as broadcast dims: 5 langs x (totals, priors),
-    # vocab as a 1-row scalar, counts as the only sizable dim (vocab x lang)
-    cdim = counts.select(
-        F.col("lang").alias("c_lang"), F.col("tok").alias("c_tok"), "c"
-    )
-    scored_tok = (
-        test_tok.crossJoin(F.broadcast(priors))
-        .crossJoin(F.broadcast(vsz))
-        .join(F.broadcast(totals), "lang")
-        .join(
-            F.broadcast(cdim),
-            (F.col("c_lang") == F.col("lang")) & (F.col("c_tok") == F.col("tok")),
-            "left",
-        )
-        .select(
-            "doc_id",
-            "actual",
-            "lang",
-            "logprior",
-            F.round(
-                F.log(
-                    (F.coalesce(F.col("c"), F.lit(0)) + 1)
-                    / (F.col("t_total") + F.col("vocab")).cast("double")
-                ),
-                9,
-            ).alias("ll"),
-        )
-    )
-    scores = scored_tok.groupBy("doc_id", "actual", "lang").agg(
-        (F.min("logprior") + dsum(F.col("ll"))).alias("score")
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("lang"))
-    return (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "actual",
-            F.col("lang").alias("predicted"),
-            F.round("score", 6).alias("score"),
-            (F.col("actual") == F.col("lang")).alias("correct"),
-        )
-        .orderBy("doc_id")
-    )
+)(_naive_bayes_langid)
 
 
 _SQL_BENFORD = f"""
@@ -1965,7 +1846,6 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(dsum(nll) / F.lit(float(n)), 9).alias("log_loss"),
     )
 
-_CAL_BINS = 10
 def _sql_calibration() -> str:
     toks = tx.sql_tokens("text")
     return f"""
@@ -2721,12 +2601,12 @@ def _sql_spearman_pair(xcol: str, ycol: str) -> str:
     return f"""
   SELECT '{xcol}' AS x_var, '{ycol}' AS y_var,
          CAST(count(*) AS BIGINT) AS n,
-         round((CAST(count(*) AS DOUBLE) * CAST(sum(CAST(rx2 AS HUGEINT) * ry2) AS DOUBLE)
-                - CAST(sum(CAST(rx2 AS HUGEINT)) AS DOUBLE) * CAST(sum(CAST(ry2 AS HUGEINT)) AS DOUBLE))
-               / (sqrt(CAST(count(*) AS DOUBLE) * CAST(sum(CAST(rx2 AS HUGEINT) * rx2) AS DOUBLE)
-                       - CAST(sum(CAST(rx2 AS HUGEINT)) AS DOUBLE) * CAST(sum(CAST(rx2 AS HUGEINT)) AS DOUBLE))
-                  * sqrt(CAST(count(*) AS DOUBLE) * CAST(sum(CAST(ry2 AS HUGEINT) * ry2) AS DOUBLE)
-                         - CAST(sum(CAST(ry2 AS HUGEINT)) AS DOUBLE) * CAST(sum(CAST(ry2 AS HUGEINT)) AS DOUBLE))), 9)
+         round((CAST(count(*) AS DOUBLE) * CAST({sql_wide_sum('rx2', 'ry2')} AS DOUBLE)
+                - CAST({sql_wide_sum('rx2')} AS DOUBLE) * CAST({sql_wide_sum('ry2')} AS DOUBLE))
+               / (sqrt(CAST(count(*) AS DOUBLE) * CAST({sql_wide_sum('rx2', 'rx2')} AS DOUBLE)
+                       - CAST({sql_wide_sum('rx2')} AS DOUBLE) * CAST({sql_wide_sum('rx2')} AS DOUBLE))
+                  * sqrt(CAST(count(*) AS DOUBLE) * CAST({sql_wide_sum('ry2', 'ry2')} AS DOUBLE)
+                         - CAST({sql_wide_sum('ry2')} AS DOUBLE) * CAST({sql_wide_sum('ry2')} AS DOUBLE))), 9)
            AS spearman_rho
   FROM (
     SELECT rx.r2 AS rx2, ry.r2 AS ry2
@@ -2805,20 +2685,17 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(rank2("l_discount", "rd2")), "l_discount")
     )
 
-    def d(c: str):
-        return F.col(c).cast("decimal(38,0)")
-
     s = j.agg(
         F.count(F.lit(1)).cast("bigint").alias("nb"),
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(d("rx2")).cast("double").alias("sx"),
-        F.sum(d("rx2") * d("rx2")).cast("double").alias("sxx"),
-        F.sum(d("rq2")).cast("double").alias("sq"),
-        F.sum(d("rq2") * d("rq2")).cast("double").alias("sqq"),
-        F.sum(d("rx2") * d("rq2")).cast("double").alias("sxq"),
-        F.sum(d("rd2")).cast("double").alias("sd"),
-        F.sum(d("rd2") * d("rd2")).cast("double").alias("sdd"),
-        F.sum(d("rx2") * d("rd2")).cast("double").alias("sxd"),
+        wide_sum("rx2").cast("double").alias("sx"),
+        wide_sum("rx2", "rx2").cast("double").alias("sxx"),
+        wide_sum("rq2").cast("double").alias("sq"),
+        wide_sum("rq2", "rq2").cast("double").alias("sqq"),
+        wide_sum("rx2", "rq2").cast("double").alias("sxq"),
+        wide_sum("rd2").cast("double").alias("sd"),
+        wide_sum("rd2", "rd2").cast("double").alias("sdd"),
+        wide_sum("rx2", "rd2").cast("double").alias("sxd"),
     )
 
     def rho(sy: str, syy: str, sxy: str):
@@ -2939,7 +2816,7 @@ def _sql_kruskal() -> str:
     for i, g in enumerate(_KW_GROUPS):
         cols.append(f"CAST(count(*) FILTER (WHERE grp = '{g}') AS DOUBLE) AS n{i}")
         cols.append(
-            f"CAST(sum(CAST(r2 AS HUGEINT)) FILTER (WHERE grp = '{g}') AS DOUBLE) AS s{i}"
+            f"CAST({sql_wide_sum('r2')} FILTER (WHERE grp = '{g}') AS DOUBLE) AS s{i}"
         )
     k = len(_KW_GROUPS)
     nn = " + ".join(f"n{i}" for i in range(k))
@@ -3011,11 +2888,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, g in enumerate(_KW_GROUPS):
         cc = F.col("grp") == g
         aggs.append(F.count(F.when(cc, F.lit(1))).cast("double").alias(f"n{i}"))
-        aggs.append(
-            F.sum(F.when(cc, F.col("r2").cast("decimal(38,0)")))
-            .cast("double")
-            .alias(f"s{i}")
-        )
+        aggs.append(wide_sum(F.when(cc, F.col("r2"))).cast("double").alias(f"s{i}"))
     s = pts.join(r2map, "v").agg(*aggs).crossJoin(F.broadcast(tie))
     k = len(_KW_GROUPS)
     # explicit left-assoc chains — same fold order as the SQL text
@@ -3125,8 +2998,8 @@ def _sql_brown_forsythe() -> str:
         c = f"grp = '{g}'"
         cols += [
             f"CAST(count(*) FILTER (WHERE {c}) AS DOUBLE) AS n{i}",
-            f"CAST(sum(CAST(z AS HUGEINT)) FILTER (WHERE {c}) AS DOUBLE) AS s{i}",
-            f"CAST(sum(CAST(z AS HUGEINT) * z) FILTER (WHERE {c}) AS DOUBLE) AS ss{i}",
+            f"CAST({sql_wide_sum('z')} FILTER (WHERE {c}) AS DOUBLE) AS s{i}",
+            f"CAST({sql_wide_sum('z', 'z')} FILTER (WHERE {c}) AS DOUBLE) AS ss{i}",
         ]
     k = len(_BF_GROUPS)
     nn = " + ".join(f"n{i}" for i in range(k))
@@ -3208,11 +3081,11 @@ def stats_levene_brownforsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs = []
     for i, g in enumerate(_BF_GROUPS):
         c = F.col("grp") == g
-        zq = F.col("z").cast("decimal(38,0)")
+        zg = F.when(c, F.col("z"))
         aggs += [
             F.count(F.when(c, F.lit(1))).cast("double").alias(f"n{i}"),
-            F.sum(F.when(c, zq)).cast("double").alias(f"s{i}"),
-            F.sum(F.when(c, zq * zq)).cast("double").alias(f"ss{i}"),
+            wide_sum(zg).cast("double").alias(f"s{i}"),
+            wide_sum(zg, zg).cast("double").alias(f"ss{i}"),
         ]
     s = zt.agg(*aggs)
     k = len(_BF_GROUPS)
@@ -3396,27 +3269,39 @@ def _ab_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The six per-arm moments of ``yq`` (count, sum, sum of squares), exact
 # in HUGEINT / decimal(38,0) and cast to DOUBLE once.
-_SQL_AB_MOMENTS = """
+_SQL_AB_MOMENTS = f"""
          CAST(count(*) FILTER (WHERE arm = 0) AS DOUBLE) AS n0,
          CAST(count(*) FILTER (WHERE arm = 1) AS DOUBLE) AS n1,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 0) AS DOUBLE) AS s0,
-         CAST(sum(CAST(yq AS HUGEINT)) FILTER (WHERE arm = 1) AS DOUBLE) AS s1,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 0) AS DOUBLE) AS ss0,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) FILTER (WHERE arm = 1) AS DOUBLE) AS ss1"""
+         CAST({sql_wide_sum('yq')} FILTER (WHERE arm = 0) AS DOUBLE) AS s0,
+         CAST({sql_wide_sum('yq')} FILTER (WHERE arm = 1) AS DOUBLE) AS s1,
+         CAST({sql_wide_sum('yq', 'yq')} FILTER (WHERE arm = 0) AS DOUBLE) AS ss0,
+         CAST({sql_wide_sum('yq', 'yq')} FILTER (WHERE arm = 1) AS DOUBLE) AS ss1"""
 
 
 def _ab_moments() -> list[Column]:
-    yd = F.col("yq").cast("decimal(38,0)")
     a0 = F.col("arm") == 0
     a1 = F.col("arm") == 1
+    y0 = F.when(a0, F.col("yq"))
+    y1 = F.when(a1, F.col("yq"))
     return [
         F.count(F.when(a0, 1)).cast("double").alias("n0"),
         F.count(F.when(a1, 1)).cast("double").alias("n1"),
-        F.sum(F.when(a0, yd)).cast("double").alias("s0"),
-        F.sum(F.when(a1, yd)).cast("double").alias("s1"),
-        F.sum(F.when(a0, yd * F.col("yq"))).cast("double").alias("ss0"),
-        F.sum(F.when(a1, yd * F.col("yq"))).cast("double").alias("ss1"),
+        wide_sum(y0).cast("double").alias("s0"),
+        wide_sum(y1).cast("double").alias("s1"),
+        wide_sum(y0, y0).cast("double").alias("ss0"),
+        wide_sum(y1, y1).cast("double").alias("ss1"),
     ]
+
+
+# The pooled SD of the two arms over (n0 + n1 - 2) df, from the six
+# moments above.
+_SQL_AB_POOLED_SD = """sqrt(((ss0 - s0 * s0 / n0) + (ss1 - s1 * s1 / n1))
+              / (n0 + n1 - 2.0))"""
+
+
+def _ab_pooled_sd() -> Column:
+    n0, n1, s0, s1, ss0, ss1 = map(F.col, ("n0", "n1", "s0", "s1", "ss0", "ss1"))
+    return F.sqrt(((ss0 - s0 * s0 / n0) + (ss1 - s1 * s1 / n1)) / (n0 + n1 - 2.0))
 
 
 def _sql_cuped() -> str:
@@ -3438,11 +3323,11 @@ u AS (
 ),
 g AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(CAST(xq AS HUGEINT)) AS DOUBLE) AS sx,
-         CAST(sum(CAST(yq AS HUGEINT)) AS DOUBLE) AS sy,
-         CAST(sum(CAST(xq AS HUGEINT) * xq) AS DOUBLE) AS sxx,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) AS DOUBLE) AS syy,
-         CAST(sum(CAST(xq AS HUGEINT) * yq) AS DOUBLE) AS sxy
+         CAST({sql_wide_sum('xq')} AS DOUBLE) AS sx,
+         CAST({sql_wide_sum('yq')} AS DOUBLE) AS sy,
+         CAST({sql_wide_sum('xq', 'xq')} AS DOUBLE) AS sxx,
+         CAST({sql_wide_sum('yq', 'yq')} AS DOUBLE) AS syy,
+         CAST({sql_wide_sum('xq', 'yq')} AS DOUBLE) AS sxy
   FROM u
 ),
 t AS (
@@ -3454,8 +3339,8 @@ t AS (
 ),
 a AS (
   SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(CAST(xq AS HUGEINT)) AS DOUBLE) AS ax,
-         CAST(sum(CAST(yq AS HUGEINT)) AS DOUBLE) AS ay
+         CAST({sql_wide_sum('xq')} AS DOUBLE) AS ax,
+         CAST({sql_wide_sum('yq')} AS DOUBLE) AS ay
   FROM u GROUP BY arm
 )
 SELECT CAST(arm AS INT) AS arm, n_users,
@@ -3518,15 +3403,13 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(ab_arm().alias("arm"), "xq", "yq")
         .localCheckpoint(eager=True)
     )
-    xd = F.col("xq").cast("decimal(38,0)")
-    yd = F.col("yq").cast("decimal(38,0)")
     g = u.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(xd).cast("double").alias("sx"),
-        F.sum(yd).cast("double").alias("sy"),
-        F.sum(xd * F.col("xq")).cast("double").alias("sxx"),
-        F.sum(yd * F.col("yq")).cast("double").alias("syy"),
-        F.sum(xd * F.col("yq")).cast("double").alias("sxy"),
+        wide_sum("xq").cast("double").alias("sx"),
+        wide_sum("yq").cast("double").alias("sy"),
+        wide_sum("xq", "xq").cast("double").alias("sxx"),
+        wide_sum("yq", "yq").cast("double").alias("syy"),
+        wide_sum("xq", "yq").cast("double").alias("sxy"),
     )
     cov_n = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     var_x = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -3539,8 +3422,8 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = u.groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum(xd).cast("double").alias("ax"),
-        F.sum(yd).cast("double").alias("ay"),
+        wide_sum("xq").cast("double").alias("ax"),
+        wide_sum("yq").cast("double").alias("ay"),
     )
     return (
         a.crossJoin(F.broadcast(t))
@@ -3684,15 +3567,15 @@ WITH q AS (
 ),
 g AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(CAST(x1 AS HUGEINT)) AS DOUBLE) AS s1,
-         CAST(sum(CAST(x2 AS HUGEINT)) AS DOUBLE) AS s2,
-         CAST(sum(CAST(y AS HUGEINT)) AS DOUBLE) AS sy,
-         CAST(sum(CAST(x1 AS HUGEINT) * x1) AS DOUBLE) AS s11,
-         CAST(sum(CAST(x2 AS HUGEINT) * x2) AS DOUBLE) AS s22,
-         CAST(sum(CAST(x1 AS HUGEINT) * x2) AS DOUBLE) AS s12,
-         CAST(sum(CAST(x1 AS HUGEINT) * y) AS DOUBLE) AS s1y,
-         CAST(sum(CAST(x2 AS HUGEINT) * y) AS DOUBLE) AS s2y,
-         CAST(sum(CAST(y AS HUGEINT) * y) AS DOUBLE) AS syy
+         CAST({sql_wide_sum('x1')} AS DOUBLE) AS s1,
+         CAST({sql_wide_sum('x2')} AS DOUBLE) AS s2,
+         CAST({sql_wide_sum('y')} AS DOUBLE) AS sy,
+         CAST({sql_wide_sum('x1', 'x1')} AS DOUBLE) AS s11,
+         CAST({sql_wide_sum('x2', 'x2')} AS DOUBLE) AS s22,
+         CAST({sql_wide_sum('x1', 'x2')} AS DOUBLE) AS s12,
+         CAST({sql_wide_sum('x1', 'y')} AS DOUBLE) AS s1y,
+         CAST({sql_wide_sum('x2', 'y')} AS DOUBLE) AS s2y,
+         CAST({sql_wide_sum('y', 'y')} AS DOUBLE) AS syy
   FROM q
 ),
 b AS (
@@ -3739,20 +3622,17 @@ def regression_multiple_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         qlong("l_extendedprice", CENTS).alias("y"),
     )
 
-    def dsum2(a: str, b: str):
-        return F.sum(F.col(a).cast("decimal(38,0)") * F.col(b)).cast("double")
-
     g = q.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("x1").cast("decimal(38,0)")).cast("double").alias("s1"),
-        F.sum(F.col("x2").cast("decimal(38,0)")).cast("double").alias("s2"),
-        F.sum(F.col("y").cast("decimal(38,0)")).cast("double").alias("sy"),
-        dsum2("x1", "x1").alias("s11"),
-        dsum2("x2", "x2").alias("s22"),
-        dsum2("x1", "x2").alias("s12"),
-        dsum2("x1", "y").alias("s1y"),
-        dsum2("x2", "y").alias("s2y"),
-        dsum2("y", "y").alias("syy"),
+        wide_sum("x1").cast("double").alias("s1"),
+        wide_sum("x2").cast("double").alias("s2"),
+        wide_sum("y").cast("double").alias("sy"),
+        wide_sum("x1", "x1").cast("double").alias("s11"),
+        wide_sum("x2", "x2").cast("double").alias("s22"),
+        wide_sum("x1", "x2").cast("double").alias("s12"),
+        wide_sum("x1", "y").cast("double").alias("s1y"),
+        wide_sum("x2", "y").cast("double").alias("s2y"),
+        wide_sum("y", "y").cast("double").alias("syy"),
     )
 
     def det(a, b, c, d, e, f_, g_, h, i):
@@ -3802,13 +3682,13 @@ WITH q AS (
 g AS (
   SELECT c_nationkey,
          CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(CAST(a AS HUGEINT)) AS DOUBLE) AS s_g
+         CAST({sql_wide_sum('a')} AS DOUBLE) AS s_g
   FROM q GROUP BY 1
 ),
 tot AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(CAST(a AS HUGEINT)) AS DOUBLE) AS s,
-         CAST(sum(CAST(a AS HUGEINT) * a) AS DOUBLE) AS ss
+         CAST({sql_wide_sum('a')} AS DOUBLE) AS s,
+         CAST({sql_wide_sum('a', 'a')} AS DOUBLE) AS ss
   FROM q
 ),
 z AS (
@@ -3868,15 +3748,14 @@ def stats_fdr_bh_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = cust.select(
         "c_nationkey", qlong("c_acctbal", CENTS).alias("a")
     )
-    ad = F.col("a").cast("decimal(38,0)")
     g = q.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_g"),
-        F.sum(ad).cast("double").alias("s_g"),
+        wide_sum("a").cast("double").alias("s_g"),
     )
     tot = q.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(ad).cast("double").alias("s"),
-        F.sum(ad * F.col("a")).cast("double").alias("ss"),
+        wide_sum("a").cast("double").alias("s"),
+        wide_sum("a", "a").cast("double").alias("ss"),
     )
     zs = (
         F.col("s_g") / F.col("n_g") - F.col("s") / F.col("n")
@@ -3924,8 +3803,8 @@ WITH q AS (
 ),
 g AS (
   SELECT blk,
-         CAST(sum(CAST(a AS HUGEINT)) AS DOUBLE) AS a_g,
-         CAST(sum(CAST(b AS HUGEINT)) AS DOUBLE) AS b_g
+         CAST({sql_wide_sum('a')} AS DOUBLE) AS a_g,
+         CAST({sql_wide_sum('b')} AS DOUBLE) AS b_g
   FROM q GROUP BY 1
 ),
 tot AS (
@@ -3994,8 +3873,8 @@ def stats_jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         qlong("l_quantity", CENTS).alias("b"),
     )
     g = q.groupBy("blk").agg(
-        F.sum(F.col("a").cast("decimal(38,0)")).cast("double").alias("a_g"),
-        F.sum(F.col("b").cast("decimal(38,0)")).cast("double").alias("b_g"),
+        wide_sum("a").cast("double").alias("a_g"),
+        wide_sum("b").cast("double").alias("b_g"),
     )
     tot = g.agg(
         F.count(F.lit(1)).cast("bigint").alias("gg"),
@@ -4054,8 +3933,8 @@ dom AS (
 ),
 s AS (
   SELECT CAST(max(cum) AS BIGINT) AS n,
-         CAST(sum(CAST(v AS HUGEINT) * cnt) AS HUGEINT) AS sx,
-         CAST(sum(CAST(v AS HUGEINT) * cnt * (2 * cum - cnt + 1))
+         CAST({sql_wide_sum('v', 'cnt')} AS HUGEINT) AS sx,
+         CAST({sql_wide_sum('v', 'cnt * (2 * cum - cnt + 1)')}
               AS HUGEINT) AS s1x2
   FROM dom
 )
@@ -4090,13 +3969,12 @@ def stats_gini_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 0)
     pts = cust.select(qlong("c_acctbal", CENTS).alias("v"))
     cum, _n = value_counts_cum(pts, F.col("v"))
-    vd = F.col("v").cast("decimal(38,0)")
     s = cum.agg(
         F.max("cum").cast("bigint").alias("n"),
-        F.sum(vd * F.col("cnt")).alias("sx"),
-        F.sum(
-            vd * F.col("cnt") * (2 * F.col("cum") - F.col("cnt") + 1)
-        ).cast("decimal(38,0)").alias("s1x2"),
+        wide_sum("v", "cnt").alias("sx"),
+        wide_sum(F.col("v") * F.col("cnt"), 2 * F.col("cum") - F.col("cnt") + 1)
+        .cast("decimal(38,0)")
+        .alias("s1x2"),
     )
     return s.select(
         "n",
@@ -4261,8 +4139,8 @@ WITH x AS (
 w AS (SELECT b, vq, CASE {cases} ELSE 7 END AS w FROM x),
 rs AS (
   SELECT b,
-         CAST(sum(CAST(w AS HUGEINT) * vq) AS DOUBLE)
-           / CAST(sum(CAST(w AS HUGEINT)) AS DOUBLE) / 1000000.0 AS mean_b
+         CAST({sql_wide_sum('w', 'vq')} AS DOUBLE)
+           / CAST({sql_wide_sum('w')} AS DOUBLE) / 1000000.0 AS mean_b
   FROM w GROUP BY b
 )
 SELECT CAST(count(*) AS BIGINT) AS n_resamples,
@@ -4315,13 +4193,10 @@ def stats_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     w: F.Column = F.lit(7)
     for k, t in reversed(list(enumerate(_PB_THRESH))):
         w = F.when(F.col("u") < t, F.lit(k)).otherwise(w)
-    wd = w.cast("decimal(38,0)")
     rs = x.groupBy("b").agg(
-        (
-            F.sum(wd * F.col("vq")).cast("double")
-            / F.sum(wd).cast("double")
-            / 1000000.0
-        ).alias("mean_b")
+        (wide_sum(w, "vq").cast("double") / wide_sum(w).cast("double") / 1000000.0).alias(
+            "mean_b"
+        )
     )
     return rs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_resamples"),
@@ -4622,8 +4497,7 @@ g AS (
 d AS (
   SELECT n0, n1,
          s1 / n1 - s0 / n0 AS diff,
-         sqrt(((ss0 - s0 * s0 / n0) + (ss1 - s1 * s1 / n1))
-              / (n0 + n1 - 2.0)) AS sp
+         {_SQL_AB_POOLED_SD} AS sp
   FROM g
 )
 SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
@@ -4659,14 +4533,7 @@ def stats_cohens_d_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver data."""
     g = _ab_totals(spark, sf_dir).agg(*_ab_moments())
     diff = F.col("s1") / F.col("n1") - F.col("s0") / F.col("n0")
-    sp = F.sqrt(
-        (
-            (F.col("ss0") - F.col("s0") * F.col("s0") / F.col("n0"))
-            + (F.col("ss1") - F.col("s1") * F.col("s1") / F.col("n1"))
-        )
-        / (F.col("n0") + F.col("n1") - 2.0)
-    )
-    d = g.select("n0", "n1", diff.alias("diff"), sp.alias("sp"))
+    d = g.select("n0", "n1", diff.alias("diff"), _ab_pooled_sd().alias("sp"))
     j = 1.0 - 3.0 / (4.0 * (F.col("n0") + F.col("n1")) - 9.0)
     return d.select(
         F.col("n0").cast("bigint").alias("n0"),
@@ -4763,14 +4630,14 @@ WITH q AS (
 ),
 g AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(CAST(x1 AS HUGEINT)) AS DOUBLE) AS s1,
-         CAST(sum(CAST(x2 AS HUGEINT)) AS DOUBLE) AS s2,
-         CAST(sum(CAST(y AS HUGEINT)) AS DOUBLE) AS sy,
-         CAST(sum(CAST(x1 AS HUGEINT) * x1) AS DOUBLE) AS s11,
-         CAST(sum(CAST(x2 AS HUGEINT) * x2) AS DOUBLE) AS s22,
-         CAST(sum(CAST(x1 AS HUGEINT) * x2) AS DOUBLE) AS s12,
-         CAST(sum(CAST(x1 AS HUGEINT) * y) AS DOUBLE) AS s1y,
-         CAST(sum(CAST(x2 AS HUGEINT) * y) AS DOUBLE) AS s2y
+         CAST({sql_wide_sum('x1')} AS DOUBLE) AS s1,
+         CAST({sql_wide_sum('x2')} AS DOUBLE) AS s2,
+         CAST({sql_wide_sum('y')} AS DOUBLE) AS sy,
+         CAST({sql_wide_sum('x1', 'x1')} AS DOUBLE) AS s11,
+         CAST({sql_wide_sum('x2', 'x2')} AS DOUBLE) AS s22,
+         CAST({sql_wide_sum('x1', 'x2')} AS DOUBLE) AS s12,
+         CAST({sql_wide_sum('x1', 'y')} AS DOUBLE) AS s1y,
+         CAST({sql_wide_sum('x2', 'y')} AS DOUBLE) AS s2y
   FROM q
 ),
 c AS (
@@ -4825,19 +4692,16 @@ def ml_ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
         qlong("l_discount", BASIS_POINTS).alias("x2"),
         qlong("l_extendedprice", CENTS).alias("y"),
     )
-    d1 = F.col("x1").cast("decimal(38,0)")
-    d2 = F.col("x2").cast("decimal(38,0)")
-    dy = F.col("y").cast("decimal(38,0)")
     g = q.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(d1).cast("double").alias("s1"),
-        F.sum(d2).cast("double").alias("s2"),
-        F.sum(dy).cast("double").alias("sy"),
-        F.sum(d1 * F.col("x1")).cast("double").alias("s11"),
-        F.sum(d2 * F.col("x2")).cast("double").alias("s22"),
-        F.sum(d1 * F.col("x2")).cast("double").alias("s12"),
-        F.sum(d1 * F.col("y")).cast("double").alias("s1y"),
-        F.sum(d2 * F.col("y")).cast("double").alias("s2y"),
+        wide_sum("x1").cast("double").alias("s1"),
+        wide_sum("x2").cast("double").alias("s2"),
+        wide_sum("y").cast("double").alias("sy"),
+        wide_sum("x1", "x1").cast("double").alias("s11"),
+        wide_sum("x2", "x2").cast("double").alias("s22"),
+        wide_sum("x1", "x2").cast("double").alias("s12"),
+        wide_sum("x1", "y").cast("double").alias("s1y"),
+        wide_sum("x2", "y").cast("double").alias("s2y"),
     )
     c = g.select(
         "n",
@@ -4956,8 +4820,8 @@ WITH rev AS (
 m AS (
   SELECT month,
          CAST(count(*) AS BIGINT) AS n_suppliers,
-         CAST(sum(CAST(r AS HUGEINT)) AS DOUBLE) AS tot,
-         CAST(sum(CAST(r AS HUGEINT) * r) AS DOUBLE) AS ssq
+         CAST({sql_wide_sum('r')} AS DOUBLE) AS tot,
+         CAST({sql_wide_sum('r', 'r')} AS DOUBLE) AS ssq
   FROM rev GROUP BY month
 )
 SELECT month, n_suppliers,
@@ -4999,11 +4863,10 @@ def stats_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("r")
     )
-    rd = F.col("r").cast("decimal(38,0)")
     m = rev.groupBy("month").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_suppliers"),
-        F.sum(rd).cast("double").alias("tot"),
-        F.sum(rd * F.col("r")).cast("double").alias("ssq"),
+        wide_sum("r").cast("double").alias("tot"),
+        wide_sum("r", "r").cast("double").alias("ssq"),
     )
     return m.select(
         "month",
@@ -5027,14 +4890,13 @@ WITH u AS ({_SQL_AB_TOTALS}
 ),
 g AS (
   SELECT {_SQL_AB_MOMENTS},
-         CAST(sum(CAST(yq AS HUGEINT)) AS DOUBLE) AS s,
-         CAST(sum(CAST(yq AS HUGEINT) * yq) AS DOUBLE) AS ss
+         CAST({sql_wide_sum('yq')} AS DOUBLE) AS s,
+         CAST({sql_wide_sum('yq', 'yq')} AS DOUBLE) AS ss
   FROM u
 ),
 d AS (
   SELECT n0, n1, s / (n0 + n1) AS mean_y,
-         sqrt(((ss0 - s0 * s0 / n0) + (ss1 - s1 * s1 / n1))
-              / (n0 + n1 - 2.0)) AS sp
+         {_SQL_AB_POOLED_SD} AS sp
   FROM g
 )
 SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
@@ -5075,21 +4937,13 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame."""
     # the pooled s/ss are their own sums: s0 + s1 in double need not
     # equal the exact total
-    yd = F.col("yq").cast("decimal(38,0)")
     g = _ab_totals(spark, sf_dir).agg(
         *_ab_moments(),
-        F.sum(yd).cast("double").alias("s"),
-        F.sum(yd * F.col("yq")).cast("double").alias("ss"),
+        wide_sum("yq").cast("double").alias("s"),
+        wide_sum("yq", "yq").cast("double").alias("ss"),
     )
     mean_y = F.col("s") / (F.col("n0") + F.col("n1"))
-    sp = F.sqrt(
-        (
-            (F.col("ss0") - F.col("s0") * F.col("s0") / F.col("n0"))
-            + (F.col("ss1") - F.col("s1") * F.col("s1") / F.col("n1"))
-        )
-        / (F.col("n0") + F.col("n1") - 2.0)
-    )
-    d = g.select("n0", "n1", mean_y.alias("mean_y"), sp.alias("sp"))
+    d = g.select("n0", "n1", mean_y.alias("mean_y"), _ab_pooled_sd().alias("sp"))
     zsum = F.lit(float(_Z_ALPHA)) + F.lit(float(_Z_BETA))
     mde = zsum * F.col("sp") * F.sqrt(1.0 / F.col("n0") + 1.0 / F.col("n1"))
     delta = F.lit(_MDE_REL_TARGET) * F.col("mean_y")
@@ -5120,12 +4974,12 @@ dom AS (
 ),
 fit AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
-         CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE)
+         CAST({sql_wide_sum('v')} AS DOUBLE)
            / count(*) / 1e9 AS mu,
-         sqrt((CAST(sum(CAST(v AS HUGEINT) * v) AS DOUBLE) / 1e18
-               - count(*) * (CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE)
+         sqrt((CAST({sql_wide_sum('v', 'v')} AS DOUBLE) / 1e18
+               - count(*) * (CAST({sql_wide_sum('v')} AS DOUBLE)
                              / count(*) / 1e9)
-                          * (CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE)
+                          * (CAST({sql_wide_sum('v')} AS DOUBLE)
                              / count(*) / 1e9))
               / (count(*) - 1)) AS sigma
   FROM q
@@ -5173,16 +5027,15 @@ def stats_lognormal_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v")
     ).localCheckpoint(eager=True)  # feeds the domain AND the fit moments
     dom, _n = value_counts_cum(q, F.col("v"))
-    vd = F.col("v").cast("decimal(38,0)")
     fit = q.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(vd).cast("double") / F.count(F.lit(1)) / 1e9).alias("mu"),
+        (wide_sum("v").cast("double") / F.count(F.lit(1)) / 1e9).alias("mu"),
         F.sqrt(
             (
-                F.sum(vd * F.col("v")).cast("double") / 1e18
+                wide_sum("v", "v").cast("double") / 1e18
                 - F.count(F.lit(1))
-                * (F.sum(vd).cast("double") / F.count(F.lit(1)) / 1e9)
-                * (F.sum(vd).cast("double") / F.count(F.lit(1)) / 1e9)
+                * (wide_sum("v").cast("double") / F.count(F.lit(1)) / 1e9)
+                * (wide_sum("v").cast("double") / F.count(F.lit(1)) / 1e9)
             )
             / (F.count(F.lit(1)) - 1)
         ).alias("sigma"),
@@ -5337,11 +5190,7 @@ def stats_bayes_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_runs_test() -> str:
     phi = SQL_NORM_CDF.format(z="abs(z)")
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 led AS (
   SELECT d, x, lag(x) OVER (ORDER BY d) AS xp FROM daily
 ),
@@ -5401,14 +5250,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined daily aggregate; both lag
     windows and the 1-row reduce run on the day-grain frame (the
     Sharpe/VaR discipline)."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("x"))
     w = Window.orderBy("d")
     led = daily.select("d", "x", F.lag("x").over(w).alias("xp"))
     s = led.filter(F.col("xp").isNotNull() & (F.col("x") != F.col("xp"))).select(
@@ -5993,21 +5835,16 @@ def stats_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_anderson_darling() -> str:
     phi_z = SQL_NORM_CDF.format(z="z")
-    rev = sql_qlong("l_extendedprice * (1.0 - l_discount)", CENTS)
-    lnv = sql_qlong(f"ln(CAST(sum({rev}) AS DOUBLE))", NANO)
+    lnv = sql_qlong("ln(CAST(rev AS DOUBLE))", NANO)
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         {lnv} AS v
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, {lnv} AS v FROM ({_SQL_DAILY_REVENUE})),
 m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE) / count(*) / 1e9 AS mu,
-         sqrt((CAST(sum(CAST(v AS HUGEINT) * v) AS DOUBLE) / 1e18
-               - count(*) * (CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE)
+         CAST({sql_wide_sum('v')} AS DOUBLE) / count(*) / 1e9 AS mu,
+         sqrt((CAST({sql_wide_sum('v', 'v')} AS DOUBLE) / 1e18
+               - count(*) * (CAST({sql_wide_sum('v')} AS DOUBLE)
                              / count(*) / 1e9)
-                          * (CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE)
+                          * (CAST({sql_wide_sum('v')} AS DOUBLE)
                              / count(*) / 1e9))
               / (count(*) - 1)) AS sigma
   FROM daily
@@ -6057,29 +5894,18 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the horizon-bounded day frame; one 1-row reduce."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
+    daily = _daily_revenue(spark, sf_dir).select(
+        "d", qlong(F.ln(F.col("rev").cast("double")), NANO).alias("v")
     )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        qlong(
-            F.ln(
-                F.sum(
-                    qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-                ).cast("double")
-            ),
-            NANO,
-        ).alias("v")
-    )
-    vd = F.col("v").cast("decimal(38,0)")
     m = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.sum(vd).cast("double") / F.count(F.lit(1)) / 1e9).alias("mu"),
+        (wide_sum("v").cast("double") / F.count(F.lit(1)) / 1e9).alias("mu"),
         F.sqrt(
             (
-                F.sum(vd * F.col("v")).cast("double") / 1e18
+                wide_sum("v", "v").cast("double") / 1e18
                 - F.count(F.lit(1))
-                * (F.sum(vd).cast("double") / F.count(F.lit(1)) / 1e9)
-                * (F.sum(vd).cast("double") / F.count(F.lit(1)) / 1e9)
+                * (wide_sum("v").cast("double") / F.count(F.lit(1)) / 1e9)
+                * (wide_sum("v").cast("double") / F.count(F.lit(1)) / 1e9)
             )
             / (F.count(F.lit(1)) - 1)
         ).alias("sigma"),
@@ -6109,15 +5935,11 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_grubbs() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 s AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
-         CAST(sum(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx
+         CAST({sql_wide_sum('x')} AS DOUBLE) AS sx,
+         CAST({sql_wide_sum('x', 'x')} AS DOUBLE) AS sxx
   FROM daily
 ),
 m AS (
@@ -6153,21 +5975,11 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined day groupBy (the frame is
     days-sized forever after), a 1-row moment broadcast back onto it
     (scalar idiom), and a TakeOrdered(1). No window anywhere."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("x")
-    )
-    xd = F.col("x").cast("decimal(38,0)")
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("x"))
     s = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(xd).cast("double").alias("sx"),
-        F.sum(xd * F.col("x")).cast("double").alias("sxx"),
+        wide_sum("x").cast("double").alias("sx"),
+        wide_sum("x", "x").cast("double").alias("sxx"),
     )
     m = s.select(
         "n",
@@ -6197,10 +6009,11 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_kendall_tau() -> str:
     return f"""
 WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x,
-         CAST(count(DISTINCT l_orderkey) AS BIGINT) AS y
-  FROM lineitem GROUP BY 1
+  SELECT r.d, r.rev AS x, o.y
+  FROM ({_SQL_DAILY_REVENUE}) r
+  JOIN (SELECT date_trunc('day', l_shipdate) AS d,
+               CAST(count(DISTINCT l_orderkey) AS BIGINT) AS y
+        FROM lineitem GROUP BY 1) o ON r.d = o.d
 ),
 cd AS (
   SELECT
@@ -6245,19 +6058,15 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the right plan (the iso_regression_pav precedent). The raw scan
     reduces map-side to one row per day first. Tie groups and the
     grand count stitch in as 1-row broadcasts (the funnel idiom)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount", "l_orderkey"
+    orders = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
+        .agg(F.count_distinct(F.col("l_orderkey")).cast("bigint").alias("y"))
     )
     daily = (
-        li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
-        .agg(
-            F.sum(
-                qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-            )
-            .cast("bigint")
-            .alias("x"),
-            F.count_distinct(F.col("l_orderkey")).cast("bigint").alias("y"),
-        )
+        _daily_revenue(spark, sf_dir)
+        .join(orders, "d")
+        .select("d", F.col("rev").alias("x"), "y")
         .localCheckpoint(eager=True)  # feeds pairs, ties, and the count
     )
     a = daily.select(F.col("d").alias("da"), F.col("x").alias("xa"), F.col("y").alias("ya"))
@@ -6317,7 +6126,7 @@ WITH x AS (
 ),
 m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(v AS HUGEINT)) AS DOUBLE) / count(*) AS mu
+         CAST({sql_wide_sum('v')} AS DOUBLE) / count(*) AS mu
   FROM x
 ),
 t AS (
@@ -6359,7 +6168,7 @@ def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = c.select(qlong("c_acctbal", CENTS).alias("v"))
     m = x.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.sum(F.col("v").cast("decimal(38,0)")).cast("double") / F.count(F.lit(1))).alias("mu"),
+        (wide_sum("v").cast("double") / F.count(F.lit(1))).alias("mu"),
     )
     r = F.col("v") / F.col("mu")
     t = x.crossJoin(F.broadcast(m)).agg(
@@ -6623,11 +6432,7 @@ def stats_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COOKS_TOP = 5
 def _sql_cooks_distance() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS y
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS y FROM ({_SQL_DAILY_REVENUE})),
 xi AS (
   SELECT d, y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS x
   FROM daily
@@ -6635,13 +6440,13 @@ xi AS (
 m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(x) AS DOUBLE) / count(*) AS xbar,
-         CAST(sum(CAST(y AS HUGEINT)) AS DOUBLE) / count(*) AS ybar,
-         CAST(sum(CAST(x AS HUGEINT) * x) AS DOUBLE)
+         CAST({sql_wide_sum('y')} AS DOUBLE) / count(*) AS ybar,
+         CAST({sql_wide_sum('x', 'x')} AS DOUBLE)
            - count(*) * (CAST(sum(x) AS DOUBLE) / count(*))
                       * (CAST(sum(x) AS DOUBLE) / count(*)) AS sxx,
-         CAST(sum(CAST(x AS HUGEINT) * y) AS DOUBLE)
+         CAST({sql_wide_sum('x', 'y')} AS DOUBLE)
            - count(*) * (CAST(sum(x) AS DOUBLE) / count(*))
-                      * (CAST(sum(CAST(y AS HUGEINT)) AS DOUBLE) / count(*))
+                      * (CAST({sql_wide_sum('y')} AS DOUBLE) / count(*))
            AS sxy
   FROM xi
 ),
@@ -6691,30 +6496,19 @@ def stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered(5)."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("y")
-    )
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("y"))
     xi = daily.select(
         "d", "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("x")
     ).localCheckpoint(eager=True)  # feeds moments AND the residual pass
-    xd = F.col("x").cast("decimal(38,0)")
-    yd = F.col("y").cast("decimal(38,0)")
     cnt = F.count(F.lit(1))
     xbar = F.sum("x").cast("double") / cnt
-    ybar = F.sum(yd).cast("double") / cnt
+    ybar = wide_sum("y").cast("double") / cnt
     m = xi.agg(
         cnt.cast("bigint").alias("n"),
         xbar.alias("xbar"),
         ybar.alias("ybar"),
-        (F.sum(xd * F.col("x")).cast("double") - cnt * xbar * xbar).alias("sxx"),
-        (F.sum(xd * F.col("y")).cast("double") - cnt * xbar * ybar).alias("sxy"),
+        (wide_sum("x", "x").cast("double") - cnt * xbar * xbar).alias("sxx"),
+        (wide_sum("x", "y").cast("double") - cnt * xbar * ybar).alias("sxy"),
     )
     e = xi.crossJoin(F.broadcast(m)).select(
         "d",
@@ -6811,10 +6605,10 @@ pt AS (
 ),
 f AS (
   SELECT CAST(count(*) AS BIGINT) AS np,
-         CAST(sum(CAST(a AS HUGEINT)) AS DOUBLE) / 1e9 AS sa,
-         CAST(sum(CAST(bb AS HUGEINT)) AS DOUBLE) / 1e9 AS sb,
-         CAST(sum(CAST(a AS HUGEINT) * a) AS DOUBLE) / 1e18 AS saa,
-         CAST(sum(CAST(a AS HUGEINT) * bb) AS DOUBLE) / 1e18 AS sab
+         CAST({sql_wide_sum('a')} AS DOUBLE) / 1e9 AS sa,
+         CAST({sql_wide_sum('bb')} AS DOUBLE) / 1e9 AS sb,
+         CAST({sql_wide_sum('a', 'a')} AS DOUBLE) / 1e18 AS saa,
+         CAST({sql_wide_sum('a', 'bb')} AS DOUBLE) / 1e18 AS sab
   FROM pt
 )
 SELECT np AS n_sizes,
@@ -6906,13 +6700,12 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             NANO,
         ).alias("bb"),
     )
-    ad = F.col("a").cast("decimal(38,0)")
     f = pt.agg(
         F.count(F.lit(1)).cast("bigint").alias("np"),
-        (F.sum(ad).cast("double") / 1e9).alias("sa"),
-        (F.sum(F.col("bb").cast("decimal(38,0)")).cast("double") / 1e9).alias("sb"),
-        (F.sum(ad * F.col("a")).cast("double") / 1e18).alias("saa"),
-        (F.sum(ad * F.col("bb")).cast("double") / 1e18).alias("sab"),
+        (wide_sum("a").cast("double") / 1e9).alias("sa"),
+        (wide_sum("bb").cast("double") / 1e9).alias("sb"),
+        (wide_sum("a", "a").cast("double") / 1e18).alias("saa"),
+        (wide_sum("a", "bb").cast("double") / 1e18).alias("sab"),
     )
     slope = (F.col("np") * F.col("sab") - F.col("sa") * F.col("sb")) / (
         F.col("np") * F.col("saa") - F.col("sa") * F.col("sa")
@@ -6925,11 +6718,7 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ESD_K = 5
 def _sql_esd() -> str:
     base = f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-)"""
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE}))"""
     ctes = [base]
     prev_excl = ""
     for r in range(1, _ESD_K + 1):
@@ -6944,8 +6733,8 @@ WITH daily AS (
 rem{r} AS (SELECT d, x FROM daily {excl}),
 m{r} AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
-         CAST(sum(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx
+         CAST({sql_wide_sum('x')} AS DOUBLE) AS sx,
+         CAST({sql_wide_sum('x', 'x')} AS DOUBLE) AS sxx
   FROM rem{r}
 ),
 mm{r} AS (
@@ -6993,28 +6782,18 @@ def stats_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the day frame is exact BIGINT cents; moments are exact
     DECIMAL sums; each argmax orders on the RAW studentized deviation
     (then day) before rounding."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
     daily = (
-        li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
-        .agg(
-            F.sum(
-                qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-            )
-            .cast("bigint")
-            .alias("x")
-        )
+        _daily_revenue(spark, sf_dir)
+        .select("d", F.col("rev").alias("x"))
         .localCheckpoint(eager=True)  # base of all five rounds
     )
     picks: list = []
     rem = daily
     for r in range(1, _ESD_K + 1):
-        xd = F.col("x").cast("decimal(38,0)")
         s = rem.agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(xd).cast("double").alias("sx"),
-            F.sum(xd * F.col("x")).cast("double").alias("sxx"),
+            wide_sum("x").cast("double").alias("sx"),
+            wide_sum("x", "x").cast("double").alias("sxx"),
         )
         mm = s.select(
             "n",
@@ -7054,8 +6833,6 @@ def stats_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in picks[1:]:
         out = out.unionByName(p)
     return out.orderBy("esd_round")
-
-
 
 
 # --------------------------------------------------------------------------
@@ -8312,7 +8089,6 @@ SELECT e.q, e.rank_target,
        e.thr, e.n
 FROM est e ORDER BY e.q
 """
-
 
 
 def _qdigest_result(spark: SparkSession, leaves: DataFrame) -> DataFrame:

@@ -12,17 +12,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .catalog import (
+    _BM25_B,
+    _BM25_K1,
+    _BM25_TERMS,
+    _FUZZY_SN_WINDOW,
+    _SQL_TOKENS,
+    _t,
+    _tokens,
+    fuzzy_block_candidates,
+    register,
+)
 from .datapipe import lm
 from .datapipe import text as tx
 from .datapipe.hashing import hash60, sql_hash60
 from .datapipe.sampling import RESOLUTION, sql_gate, train_eval_split
 from .datapipe.util import fan_out
-from .functions.aggregates import NANO, SQL_DSUM, SQL_NSUM, dsum, nsum, qlong, sql_qlong
+from .functions.aggregates import (
+    NANO,
+    SQL_DSUM,
+    SQL_NSUM,
+    dsum,
+    nsum,
+    qlong,
+    sql_qlong,
+    sql_wide_sum,
+    wide_sum,
+)
 from .operators.equidepth import (
     bucket_by_cuts,
     equi_depth_cut_points,
-    grouped_value_counts_cum,
     sql_cuts_ctes,
 )
 
@@ -72,78 +91,6 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FUZZY_SN_WINDOW = 20  # sorted-neighborhood width: per-row verify work is O(W)
-def fuzzy_block_candidates(
-    p: DataFrame, prefix_sum_ranks_above: int = 100_000
-) -> DataFrame:
-    """Shared capped fuzzy-ER candidate generator (used by
-    ``join_fuzzy_blocked`` and ``er_fuzzy_canonicalize``): blocked on
-    (name-noun, size), sorted-neighborhood rank band W via gap-offset
-    explode so candidate enumeration is a pure equi-join doing O(n*W)
-    work. Input needs columns p_partkey, p_name, p_size, blk (blk
-    non-null and '|'-free — it is a single word from p_name); output is
-    (a_key, b_key, a_name, b_name, dist) with dist in [1, 3].
-
-    Block ranking is two-geared. Below
-    ``prefix_sum_ranks_above`` rows it is a plain ``row_number()``
-    window over (blk, p_size) — one shuffle, fastest at fixture scale.
-    Above it, that window is the last single-task growth pattern in the
-    catalog: the block vocabulary is FIXED (a word list x ~50 sizes),
-    so each hash-partition of the window shuffle carries n/#partitions
-    data rows through one sorting task, linear in the corpus. The scale
-    gear instead derives ranks from the range-partitioned grouped
-    prefix sum (``operators/equidepth.py``): p_partkey is unique within
-    a block, so the cumulative distinct-value count IS the dense
-    1-based rank, every task is bounded by a range slice of the
-    (block, key) domain, and the rank map joins back on the
-    globally-unique p_partkey. Both gears produce identical ranks
-    (pinned by test).
-
-    The gear gate is a LIMIT-capped count — LocalLimit short-circuits
-    every scan task at the threshold, so the probe's cost is bounded by
-    the threshold instead of the corpus (a bare count() is a full-table
-    job). The ranked frame ``pr`` is eagerly pinned: it feeds BOTH sides
-    of the neighborhood self-join plus the rank machinery, and without
-    the pin each side re-runs the window (or prefix-sum) rank pass over
-    the corpus."""
-    if p.limit(prefix_sum_ranks_above + 1).count() <= prefix_sum_ranks_above:
-        w = Window.partitionBy("blk", "p_size").orderBy("p_partkey")
-        pr = p.withColumn("rnk", F.row_number().over(w))
-    else:
-        from .operators.equidepth import grouped_value_counts_cum
-
-        gkey = F.concat_ws("|", F.col("blk"), F.col("p_size").cast("string"))
-        cum, _ = grouped_value_counts_cum(p, gkey, F.col("p_partkey"))
-        ranks = cum.select(
-            F.col("v").alias("p_partkey"), F.col("cum").alias("rnk")
-        )
-        pr = p.join(ranks, "p_partkey")
-    pr = pr.localCheckpoint(eager=True)
-    b = pr.select(
-        F.col("p_partkey").alias("b_key"),
-        F.col("p_name").alias("b_name"),
-        "p_size",
-        "blk",
-        F.explode(
-            F.array(*[F.lit(j) for j in range(1, _FUZZY_SN_WINDOW + 1)])
-        ).alias("gap"),
-        F.col("rnk").alias("b_rnk"),
-    ).withColumn("a_rnk", F.col("b_rnk") - F.col("gap"))
-    dist = F.levenshtein(F.col("p_name"), F.col("b_name"))
-    return (
-        pr.join(
-            b,
-            on=[pr["blk"] == b["blk"], pr["p_size"] == b["p_size"], pr["rnk"] == b["a_rnk"]],
-        )
-        .filter(dist.between(1, 3))
-        .select(
-            F.col("p_partkey").alias("a_key"),
-            "b_key",
-            F.col("p_name").alias("a_name"),
-            "b_name",
-            dist.cast("bigint").alias("dist"),
-        )
-    )
 @register(
     "join_fuzzy_blocked",
     oracle=f"""
@@ -346,20 +293,6 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("pmi"), "w1", "w2").limit(30)
 
 
-_TOKENIZE = "[^a-z]+"
-def _tokens(df: DataFrame) -> DataFrame:
-    """(doc_id, w) token stream — the shared tokenization convention."""
-    return df.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), _TOKENIZE)).alias("w")
-    ).filter(F.length("w") > 0)
-_SQL_TOKENS = """
-  SELECT doc_id, w
-  FROM (SELECT doc_id,
-               unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-        FROM documents)
-  WHERE len(w) > 0"""
-_BM25_TERMS = ("spark", "join", "window")
-_BM25_K1, _BM25_B = 1.2, 0.75
 @register(
     "search_bm25_topk",
     oracle=f"""
@@ -1345,7 +1278,7 @@ per_term AS (
   SELECT t AS term,
          CAST(sum(c) AS BIGINT) AS total_cnt,
          CAST(count(*) AS BIGINT) AS doc_freq,
-         CAST(sum(CAST(c AS HUGEINT) * c) AS BIGINT) AS s2
+         CAST({sql_wide_sum('c', 'c')} AS BIGINT) AS s2
   FROM tc GROUP BY 1
 ),
 nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
@@ -1384,11 +1317,10 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    cq = F.col("c").cast("decimal(38,0)")
     per_term = tc.groupBy(F.col("t").alias("term")).agg(
         F.sum("c").cast("bigint").alias("total_cnt"),
         F.count(F.lit(1)).cast("bigint").alias("doc_freq"),
-        F.sum(cq * cq).cast("bigint").alias("s2"),
+        wide_sum("c", "c").cast("bigint").alias("s2"),
     )
     nd = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     mean = F.col("total_cnt") / F.col("n_docs").cast("double")
@@ -2272,10 +2204,10 @@ pts AS (
 ),
 s AS (
   SELECT CAST(count(*) AS BIGINT) AS np,
-         CAST(sum(CAST(a AS HUGEINT)) AS DOUBLE) / 1e9 AS sa,
-         CAST(sum(CAST(b AS HUGEINT)) AS DOUBLE) / 1e9 AS sb,
-         CAST(sum(CAST(a AS HUGEINT) * a) AS DOUBLE) / 1e18 AS saa,
-         CAST(sum(CAST(a AS HUGEINT) * b) AS DOUBLE) / 1e18 AS sab
+         CAST({sql_wide_sum('a')} AS DOUBLE) / 1e9 AS sa,
+         CAST({sql_wide_sum('b')} AS DOUBLE) / 1e9 AS sb,
+         CAST({sql_wide_sum('a', 'a')} AS DOUBLE) / 1e18 AS saa,
+         CAST({sql_wide_sum('a', 'b')} AS DOUBLE) / 1e18 AS sab
   FROM pts
 )
 SELECT np AS n_points,
@@ -2340,14 +2272,12 @@ def vocab_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         qlong(F.ln("n_tokens"), NANO).alias("a"),
         qlong(F.ln("v_types"), NANO).alias("b"),
     )
-    ad = F.col("a").cast("decimal(38,0)")
-    bd = F.col("b").cast("decimal(38,0)")
     s = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("np"),
-        (F.sum(ad).cast("double") / 1e9).alias("sa"),
-        (F.sum(bd).cast("double") / 1e9).alias("sb"),
-        (F.sum(ad * F.col("a")).cast("double") / 1e18).alias("saa"),
-        (F.sum(ad * F.col("b")).cast("double") / 1e18).alias("sab"),
+        (wide_sum("a").cast("double") / 1e9).alias("sa"),
+        (wide_sum("b").cast("double") / 1e9).alias("sb"),
+        (wide_sum("a", "a").cast("double") / 1e18).alias("saa"),
+        (wide_sum("a", "b").cast("double") / 1e18).alias("sab"),
     )
     slope = (F.col("np") * F.col("sab") - F.col("sa") * F.col("sb")) / (
         F.col("np") * F.col("saa") - F.col("sa") * F.col("sa")

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .catalog import _SQL_DAILY_REVENUE, _daily_revenue, _t, register
 from .functions.aggregates import (
     CENTS,
     MICRO,
@@ -26,6 +26,8 @@ from .functions.aggregates import (
     nsum,
     qlong,
     sql_qlong,
+    sql_wide_sum,
+    wide_sum,
 )
 from .functions.scalars import SQL_NORM_CDF, norm_cdf
 from .operators.rolling import centered_rolling_mean
@@ -759,17 +761,12 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     dur = F.when(F.col("t_next").isNull(), F.lit(0)).otherwise(
         F.col("t_next") - F.col("t")
     )
-    prod = F.when(
-        F.col("t_next").isNull(), F.lit(0).cast("decimal(38,0)")
-    ).otherwise(
-        F.col("vm").cast("decimal(38,0)") * (F.col("t_next") - F.col("t"))
-    )
     return (
         seg.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(prod).cast("double") / F.sum(dur).cast("double") / 1000000.0, 9
+                wide_sum("vm", dur).cast("double") / F.sum(dur).cast("double") / 1000000.0, 9
             ).alias("twa"),
             F.round(davg("value"), 9).alias("arith_avg"),
         )
@@ -851,7 +848,7 @@ w AS (
   SELECT event_type, day, v_cents,
          CAST(count(*) OVER win AS BIGINT) AS n_obs,
          CAST(sum(v_cents) OVER win AS BIGINT) AS ms,
-         CAST(sum(CAST(v_cents AS HUGEINT) * v_cents) OVER win AS HUGEINT) AS mss
+         CAST({sql_wide_sum('v_cents', 'v_cents')} OVER win AS HUGEINT) AS mss
   FROM daily
   WINDOW win AS (PARTITION BY event_type ORDER BY day
                  ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
@@ -903,14 +900,13 @@ def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("day")
         .rowsBetween(-19, Window.currentRow)
     )
-    vq = F.col("v_cents").cast("decimal(38,0)")
     w = daily.select(
         "event_type",
         "day",
         "v_cents",
         F.count(F.lit(1)).over(win).cast("bigint").alias("n_obs"),
         F.sum("v_cents").over(win).cast("bigint").alias("ms"),
-        F.sum(vq * vq).over(win).cast("decimal(38,0)").alias("mss"),
+        wide_sum("v_cents", "v_cents").over(win).cast("decimal(38,0)").alias("mss"),
     )
     m = F.col("ms").cast("double") / F.col("n_obs")
     sd = F.sqrt(
@@ -944,8 +940,8 @@ pairs AS (
 ties AS (
   SELECT event_type,
          CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(c AS HUGEINT) * (c - 1) * (2 * c + 5)) AS BIGINT) AS tv,
-         CAST(sum(CAST(c AS HUGEINT) * (c - 1)) / 2 AS BIGINT) AS t1
+         CAST({sql_wide_sum('c', '(c - 1) * (2 * c + 5)')} AS BIGINT) AS tv,
+         CAST({sql_wide_sum('c', '(c - 1)')} / 2 AS BIGINT) AS t1
   FROM (SELECT event_type, v, CAST(count(*) AS BIGINT) AS c
         FROM daily GROUP BY 1, 2)
   GROUP BY 1
@@ -1012,15 +1008,16 @@ def ts_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s_stat")
         )
     )
-    ch = F.col("c").cast("decimal(38,0)")
     ties = (
         daily.groupBy("event_type", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(ch * (ch - 1) * (2 * ch + 5)).cast("bigint").alias("tv"),
-            (F.sum(ch * (ch - 1)) / 2).cast("bigint").alias("t1"),
+            wide_sum(F.col("c") * (F.col("c") - 1), 2 * F.col("c") + 5)
+            .cast("bigint")
+            .alias("tv"),
+            (wide_sum("c", F.col("c") - 1) / 2).cast("bigint").alias("t1"),
         )
     )
     st = pairs.join(ties, "event_type")
@@ -1044,7 +1041,7 @@ def ts_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_CCF_SQL = """
+_CCF_SQL = f"""
 WITH hourly AS (
   SELECT event_type,
          CAST(epoch(date_trunc('hour', ts)) AS BIGINT) / 3600 AS hour_id,
@@ -1063,9 +1060,9 @@ stats AS (
   SELECT CAST(lag AS BIGINT) AS lag,
          CAST(count(*) AS BIGINT) AS n,
          CAST(sum(xc) AS BIGINT) AS sx, CAST(sum(yc) AS BIGINT) AS sy,
-         CAST(sum(CAST(xc AS HUGEINT) * xc) AS BIGINT) AS sxx,
-         CAST(sum(CAST(yc AS HUGEINT) * yc) AS BIGINT) AS syy,
-         CAST(sum(CAST(xc AS HUGEINT) * yc) AS BIGINT) AS sxy
+         CAST({sql_wide_sum('xc', 'xc')} AS BIGINT) AS sxx,
+         CAST({sql_wide_sum('yc', 'yc')} AS BIGINT) AS syy,
+         CAST({sql_wide_sum('xc', 'yc')} AS BIGINT) AS sxy
   FROM joined GROUP BY 1
 )
 SELECT lag, n AS n_pairs,
@@ -1121,15 +1118,13 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         x.select("hour_id", "xc", lags)
         .join(y, F.col("y_hour") == F.col("hour_id") + F.col("lag"))
     )
-    xq = F.col("xc").cast("decimal(38,0)")
-    yq = F.col("yc").cast("decimal(38,0)")
     stats = joined.groupBy(F.col("lag").cast("bigint").alias("lag")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("xc").cast("bigint").alias("sx"),
         F.sum("yc").cast("bigint").alias("sy"),
-        F.sum(xq * xq).cast("bigint").alias("sxx"),
-        F.sum(yq * yq).cast("bigint").alias("syy"),
-        F.sum(xq * yq).cast("bigint").alias("sxy"),
+        wide_sum("xc", "xc").cast("bigint").alias("sxx"),
+        wide_sum("yc", "yc").cast("bigint").alias("syy"),
+        wide_sum("xc", "yc").cast("bigint").alias("sxy"),
     )
     nd = F.col("n").cast("double")
     num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
@@ -1278,9 +1273,8 @@ _LTOB_BUCKET_DAYS = 40  # ~2400 fixture days -> ~60 plotted points
 def _sql_ltob() -> str:
     return f"""
 WITH daily AS (
-  SELECT CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS y
-  FROM lineitem GROUP BY 1
+  SELECT CAST(CAST(d AS DATE) - DATE '1970-01-01' AS BIGINT) AS x, rev AS y
+  FROM ({_SQL_DAILY_REVENUE})
 ),
 b AS (SELECT CAST(min(x) AS BIGINT) AS x0 FROM daily),
 bucketed AS (
@@ -1291,7 +1285,7 @@ anchors AS (
   SELECT bkt,
          {sql_qlong('CAST(sum(x) AS DOUBLE) / count(*)')}
            AS axq,
-         CAST(round(CAST(sum(CAST(y AS HUGEINT)) AS DOUBLE) / count(*)) AS BIGINT)
+         CAST(round(CAST({sql_wide_sum('y')} AS DOUBLE) / count(*)) AS BIGINT)
            AS ayq,
          CAST(min(x) AS BIGINT) AS first_x, CAST(max(x) AS BIGINT) AS last_x,
          CAST(count(*) AS BIGINT) AS n
@@ -1359,18 +1353,16 @@ def ts_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead context, scoring, and the per-bucket rank all run on the
     day-grain (~2.4k rows) and bucket-grain (~60 rows) frames. The
     rank window partitions by bucket."""
-    li = _t(spark, sf_dir, "lineitem")
-    daily = li.groupBy(
-        F.datediff(F.col("l_shipdate").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("x")
-    ).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
+    daily = (
+        _daily_revenue(spark, sf_dir)
+        .select(
+            F.datediff(F.col("d").cast("date"), F.lit("1970-01-01").cast("date"))
+            .cast("bigint")
+            .alias("x"),
+            F.col("rev").alias("y"),
         )
-        .cast("bigint")
-        .alias("y")
-    ).localCheckpoint(eager=True)  # feeds buckets, both endpoints
+        .localCheckpoint(eager=True)  # feeds buckets, both endpoints
+    )
     b = daily.agg(F.min("x").cast("bigint").alias("x0"))
     bucketed = daily.crossJoin(F.broadcast(b)).select(
         F.floor((F.col("x") - F.col("x0")) / _LTOB_BUCKET_DAYS)
@@ -1383,7 +1375,7 @@ def ts_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
         qlong(F.sum("x").cast("double") / F.count(F.lit(1)))
         .alias("axq"),
         F.round(
-            F.sum(F.col("y").cast("decimal(38,0)")).cast("double")
+            wide_sum("y").cast("double")
             / F.count(F.lit(1))
         )
         .cast("bigint")
@@ -1575,11 +1567,7 @@ _MAD_C = 1.4826  # normal-consistency constant
 def _sql_hampel() -> str:
     # lower median of a sorted integer list: element (n+1)//2, 1-indexed
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 win AS (
   SELECT d, x,
          list(x) OVER (ORDER BY d
@@ -1632,16 +1620,7 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-window sorts."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-        )
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = _daily_revenue(spark, sf_dir).select("d", F.col("rev").alias("x"))
     w = Window.orderBy("d").rowsBetween(-_HAMPEL_HALF, _HAMPEL_HALF)
     arr = F.collect_list("x").over(w)
     win = daily.select("d", "x", arr.alias("arr"))
@@ -1829,11 +1808,7 @@ def events_markov2_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_pettitt() -> str:
     return f"""
-WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS d,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS x
-  FROM lineitem GROUP BY 1
-),
+WITH daily AS (SELECT d, rev AS x FROM ({_SQL_DAILY_REVENUE})),
 nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily),
 mr AS (
   SELECT d,
@@ -1888,18 +1863,9 @@ def ts_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: day-grain only after one map-side-combined groupBy;
     the rank/running-sum windows run over the horizon-bounded day
     frame (the ts_autocorrelation precedent)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
     daily = (
-        li.groupBy(F.date_trunc("day", "l_shipdate").alias("d"))
-        .agg(
-            F.sum(
-                qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
-            )
-            .cast("bigint")
-            .alias("x")
-        )
+        _daily_revenue(spark, sf_dir)
+        .select("d", F.col("rev").alias("x"))
         .localCheckpoint(eager=True)
     )
     from pyspark.sql import Window
@@ -2035,9 +2001,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_seasonal_mk() -> str:
     return f"""
 WITH daily AS (
-  SELECT date_trunc('day', l_shipdate) AS day, isodow(l_shipdate) AS g,
-         CAST(sum({sql_qlong('l_extendedprice * (1.0 - l_discount)', CENTS)}) AS BIGINT) AS v
-  FROM lineitem GROUP BY 1, 2
+  SELECT d AS day, isodow(d) AS g, rev AS v FROM ({_SQL_DAILY_REVENUE})
 ),
 pairs AS (
   SELECT a.g,
@@ -2048,7 +2012,7 @@ pairs AS (
 ),
 ties AS (
   SELECT g, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(CAST(c AS HUGEINT) * (c - 1) * (2 * c + 5)) AS BIGINT) AS tv
+         CAST({sql_wide_sum('c', '(c - 1) * (2 * c + 5)')} AS BIGINT) AS tv
   FROM (SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM daily GROUP BY 1, 2)
   GROUP BY 1
 ),
@@ -2094,20 +2058,17 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-grain pre-aggregate — (days/7)² per season, bounded by the
     horizon, never raw rows; the season frames then reduce to 7 rows
     and one total."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    daily = li.groupBy(
-        F.date_trunc("day", "l_shipdate").alias("day"),
-        F.dayofweek("l_shipdate").alias("g"),  # grouping key only; any
-        # fixed weekday numbering partitions the days identically
-    ).agg(
-        F.sum(
-            qlong(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), CENTS)
+    daily = (
+        _daily_revenue(spark, sf_dir)
+        .select(
+            F.col("d").alias("day"),
+            # a grouping key only: any fixed weekday numbering
+            # partitions the days identically
+            F.dayofweek("d").alias("g"),
+            F.col("rev").alias("v"),
         )
-        .cast("bigint")
-        .alias("v")
-    ).localCheckpoint(eager=True)  # feeds pairs AND ties
+        .localCheckpoint(eager=True)  # feeds pairs AND ties
+    )
     a = daily.alias("a")
     b = daily.alias("b")
     pairs = (
@@ -2123,14 +2084,13 @@ def ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s_g")
         )
     )
-    ch = F.col("c").cast("decimal(38,0)")
     ties = (
         daily.groupBy("g", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .groupBy("g")
         .agg(
             F.sum("c").cast("bigint").alias("n_g"),
-            F.sum(ch * (F.col("c") - 1) * (2 * F.col("c") + 5))
+            wide_sum(F.col("c") * (F.col("c") - 1), 2 * F.col("c") + 5)
             .cast("bigint")
             .alias("tv"),
         )
@@ -2207,15 +2167,15 @@ lagged AS (
 ),
 m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-         CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-         CAST(sum(CAST(z AS HUGEINT)) AS HUGEINT) AS sz,
-         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-         CAST(sum(CAST(z AS HUGEINT) * z) AS HUGEINT) AS szz,
-         CAST(sum(CAST(y AS HUGEINT) * x) AS HUGEINT) AS syx,
-         CAST(sum(CAST(y AS HUGEINT) * z) AS HUGEINT) AS syz,
-         CAST(sum(CAST(x AS HUGEINT) * z) AS HUGEINT) AS sxz
+         CAST({sql_wide_sum('y')} AS HUGEINT) AS sy,
+         CAST({sql_wide_sum('x')} AS HUGEINT) AS sx,
+         CAST({sql_wide_sum('z')} AS HUGEINT) AS sz,
+         CAST({sql_wide_sum('y', 'y')} AS HUGEINT) AS syy,
+         CAST({sql_wide_sum('x', 'x')} AS HUGEINT) AS sxx,
+         CAST({sql_wide_sum('z', 'z')} AS HUGEINT) AS szz,
+         CAST({sql_wide_sum('y', 'x')} AS HUGEINT) AS syx,
+         CAST({sql_wide_sum('y', 'z')} AS HUGEINT) AS syz,
+         CAST({sql_wide_sum('x', 'z')} AS HUGEINT) AS sxz
   FROM lagged WHERE x IS NOT NULL
 ),
 rr AS (
@@ -2288,18 +2248,17 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("v").over(w).alias("x"),
         F.lag("p").over(w).alias("z"),
     ).filter(F.col("x").isNotNull())
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m = lagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(dec("y")).alias("sy"),
-        F.sum(dec("x")).alias("sx"),
-        F.sum(dec("z")).alias("sz"),
-        F.sum(dec("y") * F.col("y")).alias("syy"),
-        F.sum(dec("x") * F.col("x")).alias("sxx"),
-        F.sum(dec("z") * F.col("z")).alias("szz"),
-        F.sum(dec("y") * F.col("x")).alias("syx"),
-        F.sum(dec("y") * F.col("z")).alias("syz"),
-        F.sum(dec("x") * F.col("z")).alias("sxz"),
+        wide_sum("y").alias("sy"),
+        wide_sum("x").alias("sx"),
+        wide_sum("z").alias("sz"),
+        wide_sum("y", "y").alias("syy"),
+        wide_sum("x", "x").alias("sxx"),
+        wide_sum("z", "z").alias("szz"),
+        wide_sum("y", "x").alias("syx"),
+        wide_sum("y", "z").alias("syz"),
+        wide_sum("x", "z").alias("sxz"),
     )
 
     def corr(sab, sa, sb, saa, sbb):

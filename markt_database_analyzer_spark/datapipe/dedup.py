@@ -248,6 +248,47 @@ def minhash_neardup_pairs(
 SIMHASH_VOTE_CHUNK = 4096  # tokens per vote block: a 4096x60 int64 matrix is ~2 MB
 
 
+def sql_minhash_lsh(
+    num_hashes: int = 16,
+    bands: int = 4,
+    shingle_k: int = 3,
+    min_jaccard: float = 0.5,
+    base: str = "documents",
+) -> str:
+    """DuckDB twin of :func:`minhash_neardup_pairs` over ``base``'s
+    ``(doc_id, text)``: the same seeded signatures, band hashes and
+    exact shingle-Jaccard verification, ordered by ``(id_a, id_b)``."""
+    rows = num_hashes // bands
+    sh_expr = sql_shingles("text", k=shingle_k)
+    mins = ",\n    ".join(
+        f"list_min(list_transform(sh, s -> {sql_km_hash('s', i)})) AS m{i}"
+        for i in range(num_hashes)
+    )
+    band_selects = []
+    for b in range(bands):
+        vals = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
+        band_selects.append(
+            f"SELECT doc_id, {b} AS band_id, {sql_hash60(f'({vals})', seed=1000 + b)} AS band_hash FROM sig"
+        )
+    bands_sql = "\nUNION ALL\n".join(band_selects)
+    return f"""
+WITH sh AS (SELECT doc_id, {sh_expr} AS sh FROM {base}),
+sig AS (SELECT doc_id, sh, {mins} FROM sh),
+bands AS ({bands_sql}),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b
+    ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
+)
+SELECT c.id_a AS id_a, c.id_b AS id_b,
+       len(list_intersect(sa.sh, sb.sh))::DOUBLE
+         / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE AS jaccard
+FROM cand c JOIN sh sa ON c.id_a = sa.doc_id JOIN sh sb ON c.id_b = sb.doc_id
+WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
+        / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE >= {min_jaccard}
+ORDER BY id_a, id_b
+"""
+
 def simhash_vote_sums(hs, lengths, chunk: int = SIMHASH_VOTE_CHUNK):
     """Per-document SimHash vote sums: for each document (``lengths[i]``
     consecutive entries of the uint64 token hashes ``hs``) and each bit j

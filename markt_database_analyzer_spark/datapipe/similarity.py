@@ -41,20 +41,19 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column, b: Column, round_dp: int | None = 9) -> Column:
-    """Cosine similarity of two array<double> columns (cast upstream)."""
-    c = F.try_divide(_dot(a, b), _norm(a) * _norm(b))
-    return F.round(c, round_dp) if round_dp is not None else c
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity of two array<double> columns (cast upstream),
+    rounded to 9 dp."""
+    return F.round(F.try_divide(_dot(a, b), _norm(a) * _norm(b)), 9)
 
 
-def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column, round_dp: int | None = 9) -> Column:
+def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """``cosine`` with the two norms precomputed per *row* instead of per
     *pair* — bit-identical result (same expressions, evaluated once), 3×
     less interpreted-HOF fold work on pair-heavy plans. The folds sit
     outside whole-stage codegen, so hoisting them out of the O(pairs) loop
     is the single biggest lever in the similarity paths."""
-    c = F.try_divide(_dot(a, b), na * nb)
-    return F.round(c, round_dp) if round_dp is not None else c
+    return F.round(F.try_divide(_dot(a, b), na * nb), 9)
 
 
 def brute_force_topk(
@@ -335,6 +334,53 @@ def kmeans_model(
 SRP_BITS = 16
 SRP_BANDS = 4
 
+
+def sql_kmeans_ctes(k: int = 10, iters: int = 3) -> tuple[str, str, str]:
+    """Shared DuckDB replay of the distributed Lloyd iterations of
+    :func:`kmeans_model`:
+    deterministic seeding (k lowest-id vectors, cell ids by lexicographic
+    centroid order), then ``iters`` unrolled rounds (argmin assignment
+    with min-cell tiebreak / per-dimension mean rounded to 9 dp — the
+    same pin the Spark side applies at its collect boundary). Returns
+    ``(cte_body, final_assign_name, final_cents_name)`` for composition
+    into a WITH chain (the chain must start with a ``corpus(vec_id, vec)``
+    CTE)."""
+    dist = (
+        "list_sum(list_transform(generate_series(1, 64), "
+        "i -> (e.vec[i] - c.centroid[i]) * (e.vec[i] - c.centroid[i])))"
+    )
+
+    def assign(n: int, cents: str) -> str:
+        return f"""
+assign{n} AS (
+  SELECT vec_id, vec, cell FROM (
+    SELECT e.vec_id, e.vec, c.cell,
+           row_number() OVER (PARTITION BY e.vec_id ORDER BY {dist}, c.cell) AS rn
+    FROM corpus e CROSS JOIN {cents} c
+  ) WHERE rn = 1
+)"""
+
+    steps = [
+        f"seedv AS (SELECT vec FROM corpus ORDER BY vec_id LIMIT {k})",
+        "cents0 AS (SELECT row_number() OVER (ORDER BY vec) - 1 AS cell, vec AS centroid FROM seedv)",
+    ]
+    cents = "cents0"
+    for i in range(iters):
+        steps.append(assign(i, cents))
+        if i < iters - 1:
+            cents = f"cents{i + 1}"
+            steps.append(
+                f"""
+cents{i + 1} AS (
+  SELECT cell, list(cv ORDER BY pos) AS centroid FROM (
+    SELECT cell, pos, round(avg(v), 9) AS cv FROM (
+      SELECT cell, unnest(generate_series(1, 64)) AS pos, unnest(vec) AS v
+      FROM assign{i}
+    ) GROUP BY cell, pos
+  ) GROUP BY cell
+)"""
+            )
+    return ",".join(steps), f"assign{iters - 1}", cents
 
 def srp_matrix(dim: int, bits: int = SRP_BITS) -> list[list[float]]:
     """±1 hyperplane normals derived from md5 — deterministic across runs,

@@ -11,9 +11,9 @@ folds) runs on one core while the rest of the cluster idles.
 ``fan_out(df)`` round-robin-repartitions to the session default
 parallelism *before* such compute. The shuffle moves only the narrow
 input (ids + text/embedding), costs milliseconds at dimension scale, and
-is dwarfed by the compute it parallelizes. For inputs that already arrive
-in >= defaultParallelism splits it is skipped by the caller passing
-``min_partitions`` (we never coalesce — fan_out only ever widens).
+is dwarfed by the compute it parallelizes. An input that already arrives
+in >= defaultParallelism splits is returned as it is (fan_out never
+coalesces, it only widens).
 """
 
 from __future__ import annotations
@@ -36,14 +36,14 @@ _NPART_CACHE: dict[tuple[str, str, int], int] = {}
 _NPART_CACHE_MAX = 1024
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Widen ``df`` to at least the session's default parallelism (or
-    ``min_partitions``) ahead of CPU-bound per-row operators. No-op when
-    the input is already at least that wide. The partition-count probe
+def fan_out(df: DataFrame) -> DataFrame:
+    """Widen ``df`` to at least the session's default parallelism ahead
+    of CPU-bound per-row operators. No-op when the input is already at
+    least that wide. The partition-count probe
     is memoized per (application, schema, semantic plan hash) — one
     physical planning pass per distinct plan shape, not per call."""
     sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = sc.defaultParallelism
     key = (sc.applicationId, df.schema.json(), df.semanticHash())
     n = _NPART_CACHE.get(key)
     if n is None:

@@ -44,13 +44,15 @@ Callers that need raw-float semantics use plain ``F.sum``/``F.avg``.
 Money takes the same step onto coarser grids: integer cents (``CENTS`` =
 1e2) and basis points (``BASIS_POINTS`` = 1e4).
 
-This module is the one place that knows how a value is put on a grid,
-on both engines: :func:`qlong` (Spark) and :func:`sql_qlong` (DuckDB SQL,
-also valid Spark SQL inside ``F.expr``) are the quantize step, and
-``SQL_DSUM``/``SQL_DAVG``/``SQL_NSUM`` below are the DuckDB twins of
-``dsum``/``davg``/``nsum``, built from ``sql_qlong``. Callers keep their
-own accumulator (long sum, :func:`exact_long_sum`, decimal, HUGEINT
-product) and only take the quantize step from here.
+This module is the one place that knows how a value is put on a grid
+and how the grid integers are summed, on both engines: :func:`qlong`
+(Spark) and :func:`sql_qlong` (DuckDB SQL, also valid Spark SQL inside
+``F.expr``) are the quantize step, and ``SQL_DSUM``/``SQL_DAVG``/
+``SQL_NSUM`` below are the DuckDB twins of ``dsum``/``davg``/``nsum``,
+built from ``sql_qlong``. A sum that may pass 2^63 (raw moments Σa and
+Σa·b of grid integers) is :func:`wide_sum`, the exact ``decimal(38,0)``
+total, with its DuckDB twin :func:`sql_wide_sum`, the ``HUGEINT`` total.
+A sum that stays inside a long is a plain ``F.sum`` of longs.
 """
 
 from __future__ import annotations
@@ -154,6 +156,24 @@ def nsum(col: Column | str) -> Column:
     """:func:`dsum`'s construction on the 1e-9 grid, for summed quantities
     of order 1/N where the 1e-6 grid would destroy the signal."""
     return exact_long_sum(qlong(col, NANO)).cast("double") / F.lit(NANO)
+
+
+def wide_sum(a: Column | str, b: Column | str | None = None) -> Column:
+    """Exact ``decimal(38,0)`` total of the integer column ``a``, or of
+    the product ``a · b`` — the raw first and second moments of grid
+    integers, which pass 2^63 long before 10^38. Only ``a`` is cast;
+    ``b`` multiplies the decimal, so the product is exact too.
+    :func:`sql_wide_sum` renders the same sum for DuckDB."""
+    d = (F.col(a) if isinstance(a, str) else a).cast("decimal(38,0)")
+    return F.sum(d if b is None else d * (F.col(b) if isinstance(b, str) else b))
+
+
+def sql_wide_sum(a: str, b: str | None = None) -> str:
+    """SQL twin of :func:`wide_sum`: ``sum(CAST(a AS HUGEINT) * b)``.
+    ``b`` is inserted verbatim, so a product ``x * (y - 1)`` multiplies
+    left to right in HUGEINT; wrapping it in parentheses would compute
+    it in BIGINT first."""
+    return f"sum(CAST({a} AS HUGEINT){'' if b is None else f' * {b}'})"
 
 
 def nano_comoment(a: Column, b: Column, mean: Column) -> Column:

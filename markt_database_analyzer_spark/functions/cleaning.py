@@ -23,13 +23,19 @@ from pyspark.sql import functions as F
 # ``try_cast`` reads numbers with Java's grammar, which takes a float-type
 # suffix ('1d', '1.5F'); pandas rejects those.
 _JAVA_SUFFIX = r"[0-9.][dDfF]\s*$"
+# The only strings pandas reads as ±inf; a number past the double range
+# ('1e400') or a padded ' inf ' is NaN there, where ``try_cast`` gives ±inf.
+_INF = r"(?i)^[+-]?inf(inity)?$"
 
 
-def coerce_numeric(col: Column | str, to: str = "double") -> Column:
+def coerce_numeric(col: Column | str) -> Column:
     """``pd.to_numeric(errors='coerce')`` (F8): malformed → null, never throw.
-    A Java-suffixed number ('1d', '2F') is malformed, as in pandas."""
+    A Java-suffixed number ('1d', '2F') and a number that overflows the
+    double range ('1e400') are malformed, as in pandas."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(~c.rlike(_JAVA_SUFFIX), c.try_cast(to))
+    v = c.try_cast("double")
+    finite = F.abs(v) != F.lit(float("inf"))
+    return F.when(~c.rlike(_JAVA_SUFFIX) & (finite | c.rlike(_INF)), v)
 
 
 def coerce_timestamp(col: Column | str) -> Column:
@@ -38,12 +44,10 @@ def coerce_timestamp(col: Column | str) -> Column:
     return F.try_to_timestamp(c)
 
 
-def blank_to_null(col: Column | str, strip: bool = True) -> Column:
+def blank_to_null(col: Column | str) -> Column:
     """``.str.strip()`` + ``replace('', NaN)`` (F5+F6, analyse.py:390-391)."""
     c = F.col(col) if isinstance(col, str) else col
-    if strip:
-        c = F.trim(c)
-    return F.nullif(c, F.lit(""))
+    return F.nullif(F.trim(c), F.lit(""))
 
 
 def not_null_or_empty(col: Column | str) -> Column:

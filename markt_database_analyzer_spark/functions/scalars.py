@@ -34,12 +34,13 @@ def contains_ci(col: Column | str, needle: str) -> Column:
     return F.coalesce(F.lower(c).contains(needle.lower()), F.lit(False))
 
 
-def categorize_by_contains(col: Column | str, rules: list[tuple[str, str]], otherwise: str = "other") -> Column:
+def categorize_by_contains(col: Column | str, rules: list[tuple[str, str]]) -> Column:
     """Nested CASE from ordered substring rules (F2, analyse.py:49-57).
 
-    ``rules`` is an ordered list of (needle, label); first match wins.
+    ``rules`` is an ordered list of (needle, label); first match wins,
+    and a value no rule matches is ``'other'``.
     """
-    expr = F.lit(otherwise)
+    expr = F.lit("other")
     for needle, label in reversed(rules):
         expr = F.when(contains_ci(col, needle), F.lit(label)).otherwise(expr)
     return expr

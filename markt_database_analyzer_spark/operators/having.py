@@ -15,13 +15,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def qualifying_keys(df: DataFrame, key: str, min_count: int, count_distinct: list[str] | None = None) -> DataFrame:
-    """Keys of ``df`` with at least ``min_count`` rows (or distinct
-    ``count_distinct`` tuples, matching 'unique pushes per city')."""
-    if count_distinct:
-        counted = df.groupBy(key).agg(F.countDistinct(*count_distinct).alias("n"))
-    else:
-        counted = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
+def qualifying_keys(df: DataFrame, key: str, min_count: int) -> DataFrame:
+    """Keys of ``df`` with at least ``min_count`` rows."""
+    counted = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
     return counted.filter(F.col("n") >= min_count).select(key)
 
 
@@ -30,7 +26,6 @@ def restrict_to_groups_with_min_count(
     count_on: DataFrame,
     key: str,
     min_count: int,
-    count_distinct: list[str] | None = None,
 ) -> DataFrame:
     """Keep fact rows whose ``key`` meets the threshold measured on
     ``count_on`` (which may be a different frame than ``fact`` — see module
@@ -39,5 +34,5 @@ def restrict_to_groups_with_min_count(
     threshold — data-dependent, potentially millions at 100 TB — so AQE
     broadcasts it when the runtime size allows and shuffle-semi-joins
     otherwise."""
-    keys = qualifying_keys(count_on, key, min_count, count_distinct)
+    keys = qualifying_keys(count_on, key, min_count)
     return fact.join(keys, on=key, how="left_semi")

@@ -18,9 +18,6 @@ def top_k_per_group(
     group_keys: list[str],
     order: list[Column | str],
     k: int,
-    rank_col: str = "rank",
-    keep_rank: bool = True,
 ) -> DataFrame:
     w = Window.partitionBy(*group_keys).orderBy(*order)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-    return out if keep_rank else out.drop(rank_col)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -316,7 +316,6 @@ def run_foreachbatch_upsert(
     spark: SparkSession,
     sf_dir: str,
     work_dir: str,
-    files_per_trigger: int = 1,
     n_source_files: int = 4,
 ) -> DataFrame:
     """``foreachBatch`` idempotent-upsert sink: maintain a per-event-type
@@ -372,7 +371,7 @@ def run_foreachbatch_upsert(
 
     stream = (
         spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
     q = (

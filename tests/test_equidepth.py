@@ -414,7 +414,7 @@ def test_fuzzy_rank_gears_agree(spark):
     path, forced via threshold 0) must emit the identical candidate
     set."""
     from markt_database_analyzer_spark.catalog import REGISTRY  # noqa: F401 — break circular import
-    from markt_database_analyzer_spark.catalog_text import fuzzy_block_candidates
+    from markt_database_analyzer_spark.catalog import fuzzy_block_candidates
 
     p = spark.read.parquet(f"{SF_DIR}/part.parquet").select(
         "p_partkey",

@@ -122,6 +122,20 @@ def test_coerce_numeric_matches_pandas_on_java_suffixes(spark):
     assert got[:7] == [None] * 7 and np.isnan(got[values.index("nan")])
 
 
+def test_coerce_numeric_matches_pandas_on_overflow(spark):
+    # A number past the double range reads as ±inf in Java's grammar but
+    # as NaN in pandas, as does a padded ' inf '; only the bare spellings
+    # of infinity keep their value.
+    values = ["1e400", "-1e400", "1.8e308", "-1.8e308", " inf ", "infinity ", "inf", "-inf",
+              "+inf", "INF", "Infinity", "-Infinity", "1e308", "-1.7e308", " 7 "]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, s string")
+    got = [r["v"] for r in df.select("i", coerce_numeric("s").alias("v")).orderBy("i").collect()]
+    want = pd.to_numeric(pd.Series(values, dtype=object), errors="coerce").tolist()
+    for v, g, w in zip(values, got, want):
+        assert g is None if np.isnan(w) else g == w, (v, g, w)
+    assert got[:6] == [None] * 6 and got[6:12] == [np.inf, -np.inf, np.inf, np.inf, np.inf, -np.inf]
+
+
 def test_analysis_a_rescrapes_in_two_segments_take_deltas_apart(spark):
     # Two scrapes of one push disagree on age and URL, so its snapshots
     # join into two segments. Each segment takes its own deltas; lag()

@@ -27,6 +27,12 @@ the hashes land:
   ``_ab_pooled_sd`` / ``_SQL_AB_POOLED_SD``, and the lineitem revenue in
   cents per ship day is ``_daily_revenue`` / ``_SQL_DAILY_REVENUE`` below
   (``tests/test_shared_fixtures.py`` fails on a second spelling of any);
+- the banded-LSH candidate stage (distinct ``id_a < id_b`` pairs sharing
+  a band) is ``datapipe.util.banded_pairs`` / ``sql_banded_pairs`` for
+  MinHash, SimHash and SRP alike, and every MinHash oracle renders its
+  signature and band CTEs with ``datapipe.dedup.sql_minhash_ctes``
+  (``tests/test_banded_pairs.py`` fails on a hand-written band join or
+  signature);
 - a piece two catalog modules share lives here or in ``datapipe``, never
   in a sibling catalog module, so each module imports on its own;
 - orderings that feed ``min_by``/``row_number`` are made total with

@@ -72,7 +72,7 @@ def dedup_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop verdict. Reference analog: the keep-first dedup of
     analyse.py:372 generalized to fuzzy keys."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dd.minhash_neardup_pairs(docs, "text", "doc_id", num_hashes=16, bands=4)
+    pairs = dd.minhash_neardup_pairs(docs, "text", "doc_id")
     out = cl.resolve_duplicate_clusters(docs, pairs, id_col="doc_id")
     return out.sortWithinPartitions("doc_id")
 
@@ -383,7 +383,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_srp_lsh_pairs",
-    oracle=sim.sql_srp_neardup_pairs(dim=64, min_cos=0.4),
+    oracle=sim.sql_srp_neardup_pairs(min_cos=0.4),
     tags=("similarity", "lsh", "srp"),
 )
 def similarity_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,7 +406,7 @@ def similarity_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "similarity_srp_lsh_sized",
         cap=20_000,
     )
-    pairs = sim.srp_neardup_pairs(emb, "vec_id", "embedding", dim=64, min_cos=0.4)
+    pairs = sim.srp_neardup_pairs(emb, "vec_id", "embedding", min_cos=0.4)
     return pairs.repartition(1).sortWithinPartitions("id_a", "id_b")
 
 
@@ -1019,7 +1019,7 @@ def pipeline_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(F.broadcast(block), "source", "left_anti"),
         "doc_id", "lang", _STRATA, seed=3,
     )
-    pairs = dd.minhash_neardup_pairs(gated, "text", "doc_id", num_hashes=16, bands=4)
+    pairs = dd.minhash_neardup_pairs(gated, "text", "doc_id")
     resolved = cl.resolve_duplicate_clusters(gated, pairs, id_col="doc_id")
     return (
         gated.select("doc_id", "lang")
@@ -1141,8 +1141,11 @@ _set_lm_oracle()
 # SemDeDup: semantic dedup over learned k-means cells (Abbas et al. 2023)
 # --------------------------------------------------------------------------
 
-def _sql_semdedup(k: int = 10, iters: int = 3, min_cos: float = 0.95) -> str:
-    kmeans, final_assign, _ = sim.sql_kmeans_ctes(k=k, iters=iters)
+_SEMDEDUP_CELLS = 10
+_SEMDEDUP_ITERS = 3
+_SEMDEDUP_MIN_COS = 0.95
+def _sql_semdedup() -> str:
+    kmeans, final_assign, _ = sim.sql_kmeans_ctes(k=_SEMDEDUP_CELLS, iters=_SEMDEDUP_ITERS)
     cos = SQL_COS.format(a="a.vec", b="b.vec")
     return f"""
 WITH RECURSIVE corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
@@ -1152,7 +1155,7 @@ pairs AS (
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos
     FROM {final_assign} a JOIN {final_assign} b
       ON a.cell = b.cell AND a.vec_id < b.vec_id
-  ) WHERE cos >= {min_cos}
+  ) WHERE cos >= {_SEMDEDUP_MIN_COS}
 ),
 edges AS (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
 walk(id, lab) AS (
@@ -1194,9 +1197,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means blocking is exactly what bounds it — and the component walk
     moves 16-byte (id, label) pairs."""
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = sim.kmeans_cells(emb, k=10, iters=3)
+    assigned = sim.kmeans_cells(emb, k=_SEMDEDUP_CELLS, iters=_SEMDEDUP_ITERS)
     pairs = sim.embedding_neardup_pairs(
-        assigned, min_cos=0.95, id_col="vec_id", vec_col="embedding", cell_col="cell"
+        assigned, min_cos=_SEMDEDUP_MIN_COS, id_col="vec_id", vec_col="embedding", cell_col="cell"
     )
     verdicts = cl.resolve_duplicate_clusters(emb, pairs, id_col="vec_id")
     return verdicts.select(

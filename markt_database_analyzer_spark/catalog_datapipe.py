@@ -717,40 +717,18 @@ def embeddings_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_MH_K = 16
-def _sql_minhash_estimate(num_hashes: int = _MH_K, bands: int = 4, shingle_k: int = 3) -> str:
-    rows = num_hashes // bands
-    sh_expr = dd.sql_shingles("text", k=shingle_k)
-    mins = ",\n    ".join(
-        f"list_min(list_transform(sh, s -> {dd.sql_km_hash('s', i)})) AS m{i}"
-        for i in range(num_hashes)
-    )
-    band_selects = []
-    for b in range(bands):
-        vals = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_id, "
-            f"{sql_hash60(f'({vals})', seed=1000 + b)} AS band_hash FROM sig"
-        )
-    bands_sql = "\nUNION ALL\n".join(band_selects)
+def _sql_minhash_estimate() -> str:
     agree = " + ".join(
-        f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
+        f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(dd.MINHASH_HASHES)
     )
     return f"""
-WITH sh AS (SELECT doc_id, {sh_expr} AS sh FROM documents),
-sig AS (SELECT doc_id, sh, {mins} FROM sh),
-bands AS ({bands_sql}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-)
+WITH {dd.sql_minhash_ctes("documents")}
 SELECT c.id_a, c.id_b,
-       ({agree}) / {num_hashes}.0 AS est_jaccard,
+       ({agree}) / {dd.MINHASH_HASHES}.0 AS est_jaccard,
        len(list_intersect(sa.sh, sb.sh))::DOUBLE
          / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE
          AS exact_jaccard,
-       abs(({agree}) / {num_hashes}.0
+       abs(({agree}) / {dd.MINHASH_HASHES}.0
            - len(list_intersect(sa.sh, sb.sh))::DOUBLE
              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE)
          AS abs_err
@@ -776,11 +754,9 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     # the shingle projection feeds THREE consumers (banding, signatures,
     # exact verify) and the signature table TWO joins — materialize both
     # (the dedup.py persist discipline; ints only, constant bytes/doc)
-    sh = dd.shingle_projection(docs, "text", "doc_id", 3).localCheckpoint(eager=True)
-    cand = dd.minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=_MH_K, bands=4, shingled=sh
-    )
-    sig = dd.km_signatures(sh, num_hashes=_MH_K).localCheckpoint(eager=True)
+    sh = dd.shingle_projection(docs, "text", "doc_id").localCheckpoint(eager=True)
+    cand = dd.minhash_lsh_candidates(docs, "text", "doc_id", shingled=sh)
+    sig = dd.km_signatures(sh).localCheckpoint(eager=True)
     est = (
         cand.join(
             sig.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
@@ -795,7 +771,7 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
                     F.zip_with("sig_a", "sig_b", lambda a, b: a == b), lambda v: v
                 )
             )
-            / F.lit(float(_MH_K)),
+            / F.lit(float(dd.MINHASH_HASHES)),
         )
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -968,7 +944,6 @@ _SRP_SIZED_N_SF001 = 500  # embeddings rows at sf0.01 — the oracle's corpus
 @register(
     "similarity_srp_lsh_sized",
     oracle=sim.sql_srp_neardup_pairs(
-        dim=64,
         min_cos=0.4,
         bits=sim.srp_sizing(_SRP_SIZED_N_SF001)[0] * sim.srp_sizing(_SRP_SIZED_N_SF001)[1],
         bands=sim.srp_sizing(_SRP_SIZED_N_SF001)[1],
@@ -1003,7 +978,7 @@ def similarity_srp_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{sim.srp_sizing(_SRP_SIZED_N_SF001)} vs {sim.srp_sizing(n)}); "
             "re-render the oracle against the new fixture count"
         )
-    pairs = sim.srp_neardup_pairs_sized(emb, "vec_id", "embedding", dim=64, min_cos=0.4, n=n)
+    pairs = sim.srp_neardup_pairs_sized(emb, "vec_id", "embedding", min_cos=0.4, n=n)
     return pairs.repartition(1).sortWithinPartitions("id_a", "id_b")
 
 
@@ -1167,34 +1142,10 @@ def embeddings_truncate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_minhash_containment(
-    num_hashes: int = 16, bands: int = 4, shingle_k: int = 3, min_contain: float = 0.5
-) -> str:
-    from .datapipe import dedup as dd
-    from .datapipe.hashing import sql_hash60
-
-    rows = num_hashes // bands
-    sh_expr = dd.sql_shingles("text", k=shingle_k)
-    mins = ",\n    ".join(
-        f"list_min(list_transform(sh, s -> {dd.sql_km_hash('s', i)})) AS m{i}"
-        for i in range(num_hashes)
-    )
-    band_selects = []
-    for b in range(bands):
-        vals = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_id, {sql_hash60(f'({vals})', seed=1000 + b)} AS band_hash FROM sig"
-        )
-    bands_sql = "\nUNION ALL\n".join(band_selects)
+_MC_MIN_CONTAIN = 0.5  # keep a pair when either direction reaches it
+def _sql_minhash_containment() -> str:
     return f"""
-WITH sh AS (SELECT doc_id, {sh_expr} AS sh FROM documents),
-sig AS (SELECT doc_id, sh, {mins} FROM sh),
-bands AS ({bands_sql}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-),
+WITH {dd.sql_minhash_ctes("documents")},
 scored AS (
   SELECT c.id_a, c.id_b,
          round(len(list_intersect(sa.sh, sb.sh)) / CAST(len(sa.sh) AS DOUBLE), 9) AS contain_a,
@@ -1202,7 +1153,7 @@ scored AS (
   FROM cand c JOIN sh sa ON c.id_a = sa.doc_id JOIN sh sb ON c.id_b = sb.doc_id
 )
 SELECT id_a, id_b, contain_a, contain_b
-FROM scored WHERE greatest(contain_a, contain_b) >= {min_contain}
+FROM scored WHERE greatest(contain_a, contain_b) >= {_MC_MIN_CONTAIN}
 ORDER BY id_a, id_b
 """
 @register(
@@ -1222,13 +1173,9 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     for resemblance — production containment recall uses more bands or
     one-sided sketches); verification is exact set intersection on the
     candidate set only. Keeps pairs where either direction >= 0.5."""
-    from .datapipe import dedup as dd
-
     docs = _t(spark, sf_dir, "documents")
     sh = dd.shingle_projection(docs, "text", "doc_id").localCheckpoint(eager=True)
-    cand = dd.minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=16, bands=4, shingled=sh
-    )
+    cand = dd.minhash_lsh_candidates(docs, "text", "doc_id", shingled=sh)
     scored = (
         cand.join(
             sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
@@ -1247,7 +1194,7 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "contain_b"
             ),
         )
-        .filter(F.greatest(F.col("contain_a"), F.col("contain_b")) >= 0.5)
+        .filter(F.greatest(F.col("contain_a"), F.col("contain_b")) >= _MC_MIN_CONTAIN)
     )
     return scored.repartition(1).sortWithinPartitions("id_a", "id_b")
 
@@ -1436,47 +1383,18 @@ def similarity_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> Data
 
 
 _LSHR_SAMPLE = 200  # doc_id < 200: all-pairs truth stays bounded
-_LSHR_THRESHOLD = 0.5  # the dedup_minhash_lsh verification threshold
 def _sql_lsh_recall() -> str:
-    sh_expr = dd.sql_shingles("text", k=3)
-    num_hashes, bands = 16, 4
-    rows = num_hashes // bands
-    mins = ",\n    ".join(
-        f"list_min(list_transform(sh, s -> {dd.sql_km_hash('s', i)})) AS m{i}"
-        for i in range(num_hashes)
-    )
-    from .datapipe.hashing import sql_hash60
-
-    band_selects = []
-    for b in range(bands):
-        vals = " || ',' || ".join(
-            f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_id, "
-            f"{sql_hash60(f'({vals})', seed=1000 + b)} AS band_hash FROM sig"
-        )
-    bands_sql = "\nUNION ALL\n".join(band_selects)
     jac = (
         "len(list_intersect(sa.sh, sb.sh))::DOUBLE"
         " / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE"
     )
     return f"""
-WITH sh AS (
-  SELECT doc_id, {sh_expr} AS sh FROM documents WHERE doc_id < {_LSHR_SAMPLE}
-),
+WITH sample AS (SELECT doc_id, text FROM documents WHERE doc_id < {_LSHR_SAMPLE}),
+{dd.sql_minhash_ctes("sample")},
 truth AS (
   SELECT sa.doc_id AS id_a, sb.doc_id AS id_b
   FROM sh sa JOIN sh sb ON sa.doc_id < sb.doc_id
-  WHERE {jac} >= {_LSHR_THRESHOLD}
-),
-sig AS (SELECT doc_id, sh, {mins} FROM sh),
-bands AS ({bands_sql}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.doc_id < b.doc_id
+  WHERE {jac} >= {dd.MIN_JACCARD}
 ),
 m AS (
   SELECT CAST((SELECT count(*) FROM truth) AS BIGINT) AS true_pairs,
@@ -1519,27 +1437,22 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_minhash_lsh`` (bit-identical cross-engine md5 paths);
     recall/precision are integer ratios."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < _LSHR_SAMPLE)
-    sh = docs.select(
-        "doc_id", dd.shingles("text", k=3).alias("sh")
-    ).localCheckpoint(eager=True)  # feeds truth AND the LSH branch
+    sh = docs.select("doc_id", dd.shingles("text").alias("sh")).localCheckpoint(
+        eager=True
+    )  # feeds truth AND the LSH branch
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sha"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("shb"))
     inter = F.size(F.array_intersect("sha", "shb")).cast("double")
     jac = inter / (F.size("sha") + F.size("shb") - inter)
     truth = (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .filter(jac >= _LSHR_THRESHOLD)
+        .filter(jac >= dd.MIN_JACCARD)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
     cand = (
         dd.minhash_lsh_candidates(
-            docs,
-            "text",
-            "doc_id",
-            num_hashes=16,
-            bands=4,
-            shingled=sh.select(F.col("doc_id").alias("doc"), "sh"),
+            docs, "text", "doc_id", shingled=sh.select(F.col("doc_id").alias("doc"), "sh")
         )
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
@@ -1649,8 +1562,6 @@ _COS_SAMPLE_N = 400  # FIXED panel size (volume-invariant by construction)
 _COS_SEED = 37
 _COS_BINS = 20  # width-0.1 bins over [-1, 1]
 def _sql_cosine_hist() -> str:
-    from .datapipe.hashing import sql_hash60
-
     h = sql_hash60("vec_id::VARCHAR", seed=_COS_SEED)
     return f"""
 WITH ranked AS (
@@ -1713,8 +1624,6 @@ def similarity_cosine_hist_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     partial top-k, no global sort in Spark; the oracle's window is
     the semantic spec); the pair join is 400², constant forever; the
     histogram combine is map-side over a 20-bin domain."""
-    from .datapipe.hashing import hash60
-
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     s = emb.orderBy(
         hash60(F.col("vec_id").cast("string"), seed=_COS_SEED), "vec_id"

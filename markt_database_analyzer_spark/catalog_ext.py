@@ -80,13 +80,13 @@ def dedup_fingerprint_tokenset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)+LSH(4 bands) candidate pairs, verified with exact
     shingle Jaccard >= 0.5. Signature computation is row-local column math;
-    only (band_id, band_hash, doc_id) ever shuffles. The composed operator
+    only (band_id, band_key, doc_id) ever shuffles. The composed operator
     persists the shingle projection so the corpus is tokenized+hashed once,
     not once per self-join branch; the final single-partition sort replaces
     a global orderBy (no range-exchange over the whole pair plan — the
     driver's comparison is order-insensitive, the sort is cosmetic)."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dd.minhash_neardup_pairs(docs, "text", "doc_id", num_hashes=16, bands=4)
+    pairs = dd.minhash_neardup_pairs(docs, "text", "doc_id")
     return pairs.repartition(1).sortWithinPartitions("id_a", "id_b")
 
 
@@ -112,8 +112,8 @@ sig AS (SELECT doc_id, ({terms}) AS simhash FROM h)"""
 )
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 60-bit SimHash signatures (near-dup key; pairs query
-    below consumes them). Uses the explode+aggregate scale path — one md5
-    per token, map-side-combined votes — not the 60-pass expression form."""
+    below consumes them). Uses the Arrow kernel — one md5 per token and
+    the 60 votes summed map-side, with no exchange."""
     docs = _t(spark, sf_dir, "documents")
     return (
         dd.simhash_signatures(docs, "text", "doc_id")
@@ -1000,24 +1000,33 @@ def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_kmeans_ivf(k: int = 10, iters: int = 3, n_queries: int = 10, topk: int = 5, nprobe: int = 2) -> str:
+# One value per ANN search setting, read by the Spark entries and their
+# oracles: the learned IVF quantizer, its probe, and the query panel.
+_IVF_CELLS = 10
+_IVF_ITERS = 3
+_IVF_NPROBE = 2
+_ANN_QUERIES = 10  # queries are vec_id < _ANN_QUERIES
+_ANN_TOPK = 5
+
+
+def _sql_kmeans_ivf() -> str:
     """DuckDB replay of the full learned-IVF search: the shared Lloyd
     replay (:func:`datapipe.similarity.sql_kmeans_ctes`), then the nprobe search against the
     quantizer's own centroids. Every float the two engines compare is
     either a raw corpus value (float32→double, exact) or rounded at 9 dp,
     so the replay is bit-portable."""
-    body, final_assign, cents = sim.sql_kmeans_ctes(k=k, iters=iters)
+    body, final_assign, cents = sim.sql_kmeans_ctes(k=_IVF_CELLS, iters=_IVF_ITERS)
     return f"""
 WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 {body},
-q AS (SELECT vec_id AS query_id, vec AS qvec FROM corpus WHERE vec_id < {n_queries}),
+q AS (SELECT vec_id AS query_id, vec AS qvec FROM corpus WHERE vec_id < {_ANN_QUERIES}),
 probed AS (
   SELECT query_id, qvec, cell FROM (
     SELECT q.query_id, q.qvec, c.cell,
            row_number() OVER (PARTITION BY q.query_id
              ORDER BY {SQL_COS.format(a='q.qvec', b='c.centroid')} DESC, c.cell) AS crank
     FROM q CROSS JOIN {cents} c
-  ) WHERE crank <= {nprobe}
+  ) WHERE crank <= {_IVF_NPROBE}
 ),
 scored AS (
   SELECT p.query_id, e.vec_id AS neighbor_id,
@@ -1028,7 +1037,7 @@ scored AS (
 SELECT query_id, neighbor_id, cos, rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
   FROM scored
-) WHERE rank <= {topk} ORDER BY query_id, rank
+) WHERE rank <= {_ANN_TOPK} ORDER BY query_id, rank
 """
 
 
@@ -1045,12 +1054,15 @@ def similarity_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed re-estimation pass). Recall@10 vs brute force is pinned
     in the test layer (vs 0.30 for the pre-assigned label cells)."""
     emb = _t(spark, sf_dir, "embeddings")
-    learned, cents = sim.kmeans_model(emb, k=10, iters=3)
-    queries = learned.filter(F.col("vec_id") < 10)
-    return sim.ivf_topk(learned, queries, k=5, nprobe=2, cell_col="cell", centroids=cents)
+    learned, cents = sim.kmeans_model(emb, k=_IVF_CELLS, iters=_IVF_ITERS)
+    queries = learned.filter(F.col("vec_id") < _ANN_QUERIES)
+    return sim.ivf_topk(
+        learned, queries, k=_ANN_TOPK, nprobe=_IVF_NPROBE, cell_col="cell", centroids=cents
+    )
 
 
-def _sql_clean_corpus(min_quality: float = 0.4) -> str:
+_CLEAN_MIN_QUALITY = 0.4
+def _sql_clean_corpus() -> str:
     toks = tx.sql_tokens("text")
     pairs = dd.sql_minhash_lsh()
     return f"""
@@ -1069,7 +1081,7 @@ exact AS (
 SELECT doc_id, lang_pred, n_tokens, quality
 FROM exact
 WHERE doc_id = survivor
-  AND quality >= {min_quality}
+  AND quality >= {_CLEAN_MIN_QUALITY}
   AND doc_id NOT IN (SELECT id_b FROM pairs)
 ORDER BY doc_id
 """
@@ -1101,9 +1113,11 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = meta.withColumn(
         "survivor", F.min("doc_id").over(W.partitionBy("content_hash"))
     )
-    kept = exact.filter((F.col("doc_id") == F.col("survivor")) & (F.col("quality") >= 0.4))
+    kept = exact.filter(
+        (F.col("doc_id") == F.col("survivor")) & (F.col("quality") >= _CLEAN_MIN_QUALITY)
+    )
     neardup = (
-        dd.minhash_neardup_pairs(docs, "text", "doc_id", num_hashes=16, bands=4)
+        dd.minhash_neardup_pairs(docs, "text", "doc_id")
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -1258,12 +1272,15 @@ def pack_chunks_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).sortWithinPartitions("shard", "doc_id")
 
 
-def _sql_contamination(eval_ppm: int = 20_000, k: int = 5) -> str:
-    sh = dd.sql_shingles("text", k=k)
+_CONTAM_EVAL_FRACTION = 0.02
+_CONTAM_K = 5  # shingle width of the overlap test
+def _sql_contamination() -> str:
+    sh = dd.sql_shingles("text", k=_CONTAM_K)
     gate = sp.sql_gate("doc_id", seed=1)
+    cut = int(_CONTAM_EVAL_FRACTION * sp.RESOLUTION)
     return f"""
 WITH tagged AS (
-  SELECT doc_id, {sh} AS sh, ({gate} < {eval_ppm}) AS is_eval FROM documents
+  SELECT doc_id, {sh} AS sh, ({gate} < {cut}) AS is_eval FROM documents
 ),
 ev AS (
   SELECT doc_id AS eval_id, {sql_hash60('s')} AS sh_h
@@ -1291,13 +1308,13 @@ def pipeline_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, so the shuffle never carries text; fan-out is bounded by
     true overlap."""
     docs = _t(spark, sf_dir, "documents")
-    split = sp.train_eval_split(docs, "doc_id", eval_fraction=0.02, seed=1)
+    split = sp.train_eval_split(docs, "doc_id", eval_fraction=_CONTAM_EVAL_FRACTION, seed=1)
     pairs = dd.contamination_pairs(
         split.filter(F.col("split") == "train"),
         split.filter(F.col("split") == "eval"),
         "text",
         "doc_id",
-        shingle_k=5,
+        shingle_k=_CONTAM_K,
     )
     return pairs.orderBy("eval_id", "train_id")
 
@@ -1398,13 +1415,16 @@ def embedding_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).sortWithinPartitions("vec_id")
 
 
-def _sql_pq_ctes(k: int = 16, m: int = 8, dims: int = 64) -> str:
+_PQ_CODES = 16
+_PQ_SUBSPACES = 8
+_PQ_DIMS = 64
+def _sql_pq_ctes() -> str:
     """Shared DuckDB replay of PQ encode: codebook = k lowest-id vectors
     (code = id rank), per-subspace argmin with min-code tiebreak,
     reconstruction by code lookup. Yields CTEs ``codebook``, ``pairs``,
     ``codes`` and ``recon(vec_id, rv)``; the chain must already define
     ``corpus(vec_id, vec)``."""
-    sub = dims // m
+    sub = _PQ_DIMS // _PQ_SUBSPACES
 
     def dist(j: int) -> str:
         off = j * sub
@@ -1421,18 +1441,18 @@ def _sql_pq_ctes(k: int = 16, m: int = 8, dims: int = 64) -> str:
     FROM pairs
   ) WHERE rn = 1
 )"""
-        for j in range(m)
+        for j in range(_PQ_SUBSPACES)
     )
     code_join = " JOIN ".join(
-        ["code0"] + [f"code{j} USING (vec_id)" for j in range(1, m)]
+        ["code0"] + [f"code{j} USING (vec_id)" for j in range(1, _PQ_SUBSPACES)]
     )
     recon = "flatten([" + ", ".join(
         f"(SELECT list_slice(c.vec, {j * sub + 1}, {(j + 1) * sub}) FROM codebook c WHERE c.code = codes.code{j})"
-        for j in range(m)
+        for j in range(_PQ_SUBSPACES)
     ) + "])"
     return f"""codebook AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, vec
-  FROM (SELECT vec_id, vec FROM corpus ORDER BY vec_id LIMIT {k})
+  FROM (SELECT vec_id, vec FROM corpus ORDER BY vec_id LIMIT {_PQ_CODES})
 ),
 pairs AS (
   SELECT e.vec_id, c.code, e.vec AS evec, c.vec AS cvec
@@ -1445,16 +1465,16 @@ recon AS (
 )"""
 
 
-def _sql_pq_adc(k: int = 16, m: int = 8, dims: int = 64, n_queries: int = 10, topk: int = 5) -> str:
+def _sql_pq_adc() -> str:
     """ADC top-k over the shared PQ replay: squared-L2 of raw query vs
     reconstruction, rounded at 9 dp."""
     return f"""
 WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-{_sql_pq_ctes(k=k, m=m, dims=dims)},
-q AS (SELECT vec_id AS query_id, vec AS qv FROM corpus WHERE vec_id < {n_queries}),
+{_sql_pq_ctes()},
+q AS (SELECT vec_id AS query_id, vec AS qv FROM corpus WHERE vec_id < {_ANN_QUERIES}),
 scored AS (
   SELECT q.query_id, r.vec_id AS neighbor_id,
-         round(list_sum(list_transform(generate_series(1, {dims}),
+         round(list_sum(list_transform(generate_series(1, {_PQ_DIMS}),
            i -> (q.qv[i] - r.rv[i]) * (q.qv[i] - r.rv[i]))), 9) AS adc_dist
   FROM recon r CROSS JOIN q
   WHERE r.vec_id != q.query_id
@@ -1462,7 +1482,7 @@ scored AS (
 SELECT query_id, neighbor_id, adc_dist, rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, neighbor_id) AS rank
   FROM scored
-) WHERE rank <= {topk}
+) WHERE rank <= {_ANN_TOPK}
 ORDER BY query_id, rank
 """
 
@@ -1481,41 +1501,33 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only (codebook as SQL literals, subvector slices staged so each
     evaluates once); composes with the IVF probe for full IVF-PQ."""
     emb = _t(spark, sf_dir, "embeddings")
-    return sim.pq_adc_topk(emb, n_queries=10, topk=5, k=16, m=8)
+    return sim.pq_adc_topk(
+        emb, n_queries=_ANN_QUERIES, topk=_ANN_TOPK, k=_PQ_CODES, m=_PQ_SUBSPACES
+    )
 
 
-def _sql_ivf_pq(
-    k_cells: int = 10,
-    iters: int = 3,
-    nprobe: int = 2,
-    k_codes: int = 16,
-    m: int = 8,
-    dims: int = 64,
-    n_queries: int = 10,
-    topk: int = 5,
-) -> str:
+def _sql_ivf_pq() -> str:
     """DuckDB replay of full IVF-PQ: the shared Lloyd replay restricts
     each query to its nprobe nearest cells (cosine to the quantizer's own
     centroids), the shared PQ replay supplies reconstructions, ADC scores
     raw-query-vs-reconstruction within probed cells only."""
-    kmeans, final_assign, cents = sim.sql_kmeans_ctes(k=k_cells, iters=iters)
-    pq = _sql_pq_ctes(k=k_codes, m=m, dims=dims)
+    kmeans, final_assign, cents = sim.sql_kmeans_ctes(k=_IVF_CELLS, iters=_IVF_ITERS)
     return f"""
 WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 {kmeans},
-{pq},
-q AS (SELECT vec_id AS query_id, vec AS qv FROM corpus WHERE vec_id < {n_queries}),
+{_sql_pq_ctes()},
+q AS (SELECT vec_id AS query_id, vec AS qv FROM corpus WHERE vec_id < {_ANN_QUERIES}),
 probed AS (
   SELECT query_id, qv, cell FROM (
     SELECT q.query_id, q.qv, c.cell,
            row_number() OVER (PARTITION BY q.query_id
              ORDER BY {SQL_COS.format(a='q.qv', b='c.centroid')} DESC, c.cell) AS crank
     FROM q CROSS JOIN {cents} c
-  ) WHERE crank <= {nprobe}
+  ) WHERE crank <= {_IVF_NPROBE}
 ),
 scored AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         round(list_sum(list_transform(generate_series(1, {dims}),
+         round(list_sum(list_transform(generate_series(1, {_PQ_DIMS}),
            i -> (p.qv[i] - r.rv[i]) * (p.qv[i] - r.rv[i]))), 9) AS adc_dist
   FROM {final_assign} a
   JOIN recon r ON a.vec_id = r.vec_id
@@ -1525,7 +1537,7 @@ scored AS (
 SELECT query_id, neighbor_id, adc_dist, rank FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, neighbor_id) AS rank
   FROM scored
-) WHERE rank <= {topk}
+) WHERE rank <= {_ANN_TOPK}
 ORDER BY query_id, rank
 """
 
@@ -1545,5 +1557,6 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-restricted ADC join."""
     emb = _t(spark, sf_dir, "embeddings")
     return sim.ivf_pq_topk(
-        emb, n_queries=10, topk=5, k_cells=10, iters=3, nprobe=2, k_codes=16, m=8
+        emb, n_queries=_ANN_QUERIES, topk=_ANN_TOPK, k_cells=_IVF_CELLS, iters=_IVF_ITERS,
+        nprobe=_IVF_NPROBE, k_codes=_PQ_CODES, m=_PQ_SUBSPACES,
     )

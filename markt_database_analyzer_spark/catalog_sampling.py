@@ -307,7 +307,7 @@ def sample_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KC_K = 8
-def _sql_kcenter(k: int = _KC_K) -> str:
+def _sql_kcenter() -> str:
     def qdist(v: str, c: str) -> str:
         d = f"(CAST({v}[i] AS DOUBLE) - CAST({c}[i] AS DOUBLE))"
         return (
@@ -321,7 +321,7 @@ def _sql_kcenter(k: int = _KC_K) -> str:
         "c0 AS (SELECT vec AS cv FROM x, s0 WHERE pid = sid)",
         f"m0 AS (SELECT pid, vec, {qdist('vec', 'cv')} AS mind, 0 AS arank FROM x, c0)",
     ]
-    for i in range(1, k):
+    for i in range(1, _KC_K):
         p = f"p{i}"
         parts.append(
             f"{p} AS (SELECT pid AS sid, mind AS chosen FROM m{i-1}"
@@ -336,14 +336,14 @@ def _sql_kcenter(k: int = _KC_K) -> str:
             f" FROM x, c{i}) d USING (pid))"
         )
     sel_rows = ["SELECT 0 AS rank, (SELECT sid FROM s0) AS pid, CAST(0 AS BIGINT) AS chosen_dq"]
-    for i in range(1, k):
+    for i in range(1, _KC_K):
         sel_rows.append(
             f"SELECT {i}, (SELECT sid FROM p{i}), CAST((SELECT chosen FROM p{i}) AS BIGINT)"
         )
     parts.append("sel AS (" + "\nUNION ALL\n".join(sel_rows) + ")")
     parts.append(
         f"st AS (SELECT arank, CAST(count(*) AS BIGINT) AS n_assigned,"
-        f" CAST(max(mind) AS BIGINT) AS max_radius_q FROM m{k-1} GROUP BY arank)"
+        f" CAST(max(mind) AS BIGINT) AS max_radius_q FROM m{_KC_K - 1} GROUP BY arank)"
     )
     body = ",\n".join(parts)
     return f"""

@@ -7,15 +7,23 @@ Scale design (the point of each operator):
   choice is deterministic (min doc id).
 - **MinHash+LSH**: per-row signature computation is embarrassingly
   parallel (array expressions, no shuffle, no UDF); banding turns the
-  O(n²) all-pairs problem into a shuffle on (band_id, band_hash) whose
+  O(n²) all-pairs problem into a shuffle on (band_id, band_key) whose
   buckets only contain plausible near-dups; exact Jaccard verification runs
   per candidate pair. At 100 TB: signatures are ~100 bytes/doc regardless
   of doc size, so the shuffle volume is flat.
-- **SimHash**: 64-bit signature via per-bit majority vote of token hashes;
-  hamming-distance candidate generation via chunk banding (4×16-bit
+- **SimHash**: 60-bit signature via per-bit majority vote of token hashes;
+  hamming-distance candidate generation via chunk banding (4×15-bit
   chunks — two signatures within hamming k<=3 must share a chunk).
 - **n-gram Jaccard**: the exact verifier, also usable standalone on a
   blocked/banded candidate set.
+
+MinHash and SimHash (and SRP in ``similarity``) turn band rows into
+candidate pairs through one kernel, ``util.banded_pairs``, whose DuckDB
+twin ``util.sql_banded_pairs`` is the ``cand`` CTE of every oracle. The
+MinHash oracles share one SQL builder, :func:`sql_minhash_ctes`, and
+both engines read one geometry: :data:`MINHASH_HASHES` hashes in
+:data:`MINHASH_BANDS` bands over :data:`SHINGLE_K`-word shingles,
+verified at Jaccard >= :data:`MIN_JACCARD`.
 
 Everything is column-expression-only (portable + codegen); hash functions
 are the engine-portable md5-60bit family from ``hashing``.
@@ -30,14 +38,19 @@ from pyspark.storagelevel import StorageLevel
 
 from .hashing import hash60, sql_hash60
 from .text import tokens
-from .util import fan_out
+from .util import banded_pairs, fan_out, sql_banded_pairs
+
+MINHASH_HASHES = 16
+MINHASH_BANDS = 4
+SHINGLE_K = 3
+MIN_JACCARD = 0.5
 
 
 # --------------------------------------------------------------------------
 # Shingling
 # --------------------------------------------------------------------------
 
-def shingles(col: Column | str, k: int = 3) -> Column:
+def shingles(col: Column | str, k: int = SHINGLE_K) -> Column:
     """Distinct k-word shingles of a text column (array<string>).
     Documents shorter than k tokens get their full token join as the one
     shingle (so they still participate in dedup)."""
@@ -51,7 +64,7 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def sql_shingles(expr: str, k: int = 3) -> str:
+def sql_shingles(expr: str, k: int = SHINGLE_K) -> str:
     """DuckDB rendering of :func:`shingles` (1-indexed lists)."""
     toks = f"list_filter(regexp_split_to_array(lower(trim({expr})), '\\s+'), t -> t != '')"
     return (
@@ -90,18 +103,18 @@ def sql_km_hash(expr: str, i: int) -> str:
 
 
 def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Band the signature: array of (band_id, band_hash) structs. Two docs
+    """Band the signature: array of (band_id, band_key) structs. Two docs
     collide in a band iff their signature rows in that band are identical."""
     entries = []
     for b in range(bands):
         band_vals = F.slice(sig, b * rows + 1, rows)
         band_hash = hash60(F.concat_ws(",", F.transform(band_vals, lambda v: v.cast("string"))), seed=1000 + b)
-        entries.append(F.struct(F.lit(b).alias("band_id"), band_hash.alias("band_hash")))
+        entries.append(F.struct(F.lit(b).alias("band_id"), band_hash.alias("band_key")))
     return F.array(*entries)
 
 
 def shingle_projection(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int = 3
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int = SHINGLE_K
 ) -> DataFrame:
     """``(doc, sh array<string>)`` — the shared input of signature
     computation and exact-Jaccard verification.
@@ -120,16 +133,16 @@ def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
+    num_hashes: int = MINHASH_HASHES,
+    bands: int = MINHASH_BANDS,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) from LSH banding.
 
     Plan shape: project signatures (no shuffle) → explode bands →
-    self-join on (band_id, band_hash) → distinct pairs. The join key is
-    16 bytes/doc/band; document text never shuffles.
+    :func:`banded_pairs` (self-join on (band_id, band_key) → distinct
+    pairs). The join key is 16 bytes/doc/band; document text never
+    shuffles.
 
     Signatures use the Kirsch-Mitzenmacher family: md5 each shingle ONCE,
     split the digest into two 56-bit bases, derive the k functions as
@@ -143,12 +156,8 @@ def minhash_lsh_candidates(
     shingle pass once (see :func:`minhash_neardup_pairs`).
     """
     rows = num_hashes // bands
-    base = (
-        shingled
-        if shingled is not None
-        else shingle_projection(df, text_col, id_col, shingle_k)
-    )
-    # Pin the banded-signature frame: the self-join below references it
+    base = shingled if shingled is not None else shingle_projection(df, text_col, id_col)
+    # Pin the banded-signature frame: banded_pairs' self-join reads it
     # on BOTH sides, and without the pin each side re-runs the md5 +
     # K-M + banding projection (measured: the whole candidates stage
     # 2.1 s -> 1.2 s at sf0.1; the join strategy is BHJ both before and
@@ -159,21 +168,10 @@ def minhash_lsh_candidates(
     sig = (
         km_signatures(base, num_hashes)
         .withColumn("band", F.explode(lsh_bands(F.col("sig"), bands, rows)))
-        .select("doc", "band.band_id", "band.band_hash")
+        .select(F.col("doc").alias("id"), "band.band_id", "band.band_key")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    a = sig.alias("a")
-    b = sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
+    return banded_pairs(sig)
 
 
 def jaccard_pairs(
@@ -181,16 +179,11 @@ def jaccard_pairs(
     candidates: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_k: int = 3,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for each candidate pair (the verify step
     after LSH). Adds ``jaccard`` double column."""
-    sh = (
-        shingled
-        if shingled is not None
-        else shingle_projection(df, text_col, id_col, shingle_k)
-    )
+    sh = shingled if shingled is not None else shingle_projection(df, text_col, id_col)
     out = (
         candidates.join(sh.withColumnRenamed("doc", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("doc", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -208,13 +201,12 @@ def minhash_neardup_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    min_jaccard: float = 0.5,
+    num_hashes: int = MINHASH_HASHES,
+    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
-    """Verified near-dup pairs: LSH candidates + exact Jaccard ≥ threshold,
-    as ONE composed plan that evaluates the shingle projection once.
+    """Verified near-dup pairs: LSH candidates + exact Jaccard ≥
+    :data:`MIN_JACCARD`, as ONE composed plan that evaluates the shingle
+    projection once.
 
     The naive composition (candidates, then :func:`jaccard_pairs` on the
     raw table) re-derives shingles on every branch of the two self-joins —
@@ -228,17 +220,53 @@ def minhash_neardup_pairs(
     the signature/shingle projection to Parquet between stages instead of
     executor cache — the plan on either side of that barrier is identical.
     """
-    sh = shingle_projection(df, text_col, id_col, shingle_k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = shingle_projection(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
     cand = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_k=shingle_k, shingled=sh,
+        df, text_col, id_col, num_hashes=num_hashes, bands=bands, shingled=sh
     )
-    pairs = jaccard_pairs(
-        df, cand, text_col, id_col, shingle_k=shingle_k, shingled=sh
+    pairs = jaccard_pairs(df, cand, text_col, id_col, shingled=sh)
+    return pairs.filter(F.col("jaccard") >= MIN_JACCARD)
+
+
+def sql_minhash_ctes(base: str) -> str:
+    """The DuckDB MinHash candidate stage over ``base``'s ``(doc_id,
+    text)``, as the CTEs ``sh(doc_id, sh)``, ``sig(doc_id, sh, m0..)``,
+    ``bands(id, band_id, band_key)`` and ``cand(id_a, id_b)`` (no leading
+    ``WITH``): the seeded signatures and band hashes of
+    :func:`minhash_lsh_candidates` at the module geometry. Each oracle
+    adds only its own verify or score tail."""
+    rows = MINHASH_HASHES // MINHASH_BANDS
+    mins = ",\n    ".join(
+        f"list_min(list_transform(sh, s -> {sql_km_hash('s', i)})) AS m{i}"
+        for i in range(MINHASH_HASHES)
     )
-    return pairs.filter(F.col("jaccard") >= min_jaccard)
+    band_selects = []
+    for b in range(MINHASH_BANDS):
+        vals = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
+        band_selects.append(
+            f"SELECT doc_id AS id, {b} AS band_id, {sql_hash60(f'({vals})', seed=1000 + b)} AS band_key FROM sig"
+        )
+    bands_sql = "\nUNION ALL\n".join(band_selects)
+    return f"""sh AS (SELECT doc_id, {sql_shingles("text")} AS sh FROM {base}),
+sig AS (SELECT doc_id, sh, {mins} FROM sh),
+bands AS ({bands_sql}),
+cand AS ({sql_banded_pairs("bands")})"""
+
+
+def sql_minhash_lsh(base: str = "documents") -> str:
+    """DuckDB twin of :func:`minhash_neardup_pairs` over ``base``'s
+    ``(doc_id, text)``: :func:`sql_minhash_ctes` plus the exact
+    shingle-Jaccard verification, ordered by ``(id_a, id_b)``."""
+    return f"""
+WITH {sql_minhash_ctes(base)}
+SELECT c.id_a AS id_a, c.id_b AS id_b,
+       len(list_intersect(sa.sh, sb.sh))::DOUBLE
+         / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE AS jaccard
+FROM cand c JOIN sh sa ON c.id_a = sa.doc_id JOIN sh sb ON c.id_b = sb.doc_id
+WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
+        / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE >= {MIN_JACCARD}
+ORDER BY id_a, id_b
+"""
 
 
 # --------------------------------------------------------------------------
@@ -247,47 +275,6 @@ def minhash_neardup_pairs(
 
 SIMHASH_VOTE_CHUNK = 4096  # tokens per vote block: a 4096x60 int64 matrix is ~2 MB
 
-
-def sql_minhash_lsh(
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    min_jaccard: float = 0.5,
-    base: str = "documents",
-) -> str:
-    """DuckDB twin of :func:`minhash_neardup_pairs` over ``base``'s
-    ``(doc_id, text)``: the same seeded signatures, band hashes and
-    exact shingle-Jaccard verification, ordered by ``(id_a, id_b)``."""
-    rows = num_hashes // bands
-    sh_expr = sql_shingles("text", k=shingle_k)
-    mins = ",\n    ".join(
-        f"list_min(list_transform(sh, s -> {sql_km_hash('s', i)})) AS m{i}"
-        for i in range(num_hashes)
-    )
-    band_selects = []
-    for b in range(bands):
-        vals = " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_id, {sql_hash60(f'({vals})', seed=1000 + b)} AS band_hash FROM sig"
-        )
-    bands_sql = "\nUNION ALL\n".join(band_selects)
-    return f"""
-WITH sh AS (SELECT doc_id, {sh_expr} AS sh FROM {base}),
-sig AS (SELECT doc_id, sh, {mins} FROM sh),
-bands AS ({bands_sql}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-)
-SELECT c.id_a AS id_a, c.id_b AS id_b,
-       len(list_intersect(sa.sh, sb.sh))::DOUBLE
-         / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE AS jaccard
-FROM cand c JOIN sh sa ON c.id_a = sa.doc_id JOIN sh sb ON c.id_b = sb.doc_id
-WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-        / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))::DOUBLE >= {min_jaccard}
-ORDER BY id_a, id_b
-"""
 
 def simhash_vote_sums(hs, lengths, chunk: int = SIMHASH_VOTE_CHUNK):
     """Per-document SimHash vote sums: for each document (``lengths[i]``
@@ -426,36 +413,21 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str, max_hamming: i
     60-vote aggregation runs once, not once per self-join branch."""
     sig = simhash_signatures(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
     chunks = sig.select(
-        "doc",
+        F.col("doc").alias("id"),
         "sig",
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(i).alias("chunk_id"),
-                        F.shiftright("sig", i * 15).bitwiseAND(F.lit((1 << 15) - 1)).alias("chunk"),
+                        F.lit(i).alias("band_id"),
+                        F.shiftright("sig", i * 15).bitwiseAND(F.lit((1 << 15) - 1)).alias("band_key"),
                     )
                     for i in range(4)
                 ]
             )
         ).alias("c"),
-    ).select("doc", "sig", "c.chunk_id", "c.chunk")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .distinct()
-    )
+    ).select("id", "sig", "c.band_id", "c.band_key")
+    cand = banded_pairs(chunks)  # carries sig through as sig_a, sig_b
     return (
         cand.withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
         .filter(F.col("hamming") <= max_hamming)
@@ -704,7 +676,7 @@ ORDER BY d.doc_id
 """
 
 
-def km_signatures(shingled: DataFrame, num_hashes: int = 16) -> DataFrame:
+def km_signatures(shingled: DataFrame, num_hashes: int = MINHASH_HASHES) -> DataFrame:
     """(doc, sig) MinHash signature frame over a
     :func:`shingle_projection`: the K-M family (one md5 per shingle, two
     56-bit bases, members h1 + i*h2) that :func:`minhash_lsh_candidates`

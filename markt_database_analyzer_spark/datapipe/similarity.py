@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.aggregates import NANO, sql_qlong
-from .util import fan_out
+from .util import banded_pairs, fan_out, sql_banded_pairs
 
 
 def _dlit(v: float) -> str:
@@ -333,6 +333,7 @@ def kmeans_model(
 
 SRP_BITS = 16
 SRP_BANDS = 4
+SRP_DIM = 64  # embedding width the SRP oracles render their matrix for
 
 
 def sql_kmeans_ctes(k: int = 10, iters: int = 3) -> tuple[str, str, str]:
@@ -422,7 +423,7 @@ def srp_neardup_pairs(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
+    dim: int = SRP_DIM,
     min_cos: float = 0.9,
     bits: int = SRP_BITS,
     bands: int = SRP_BANDS,
@@ -442,20 +443,12 @@ def srp_neardup_pairs(
     # 12-byte rows, never vectors. Codes come from the vectorized Arrow
     # projector (bit-identical to the per-bit expression fold — pinned by
     # test_srp_sized_agrees_with_expression_codes); the checkpoint keeps
-    # the projection evaluated once for both self-join sides.
+    # the projection evaluated once for both sides of banded_pairs' join.
     codes = srp_codes_arrow(corpus, id_col, vec_col, dim, bits, bands).localCheckpoint(
         eager=True
     )
-    cand = (
-        codes.alias("a")
-        .join(
-            codes.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_code") == F.col("b.band_code"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    cand = banded_pairs(
+        codes.select(F.col("vid").alias("id"), "band_id", F.col("band_code").alias("band_key"))
     )
     scored = (
         fan_out(cand)
@@ -546,7 +539,7 @@ def srp_neardup_pairs_sized(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
+    dim: int = SRP_DIM,
     min_cos: float = 0.9,
     n: int | None = None,
     bands: int = SRP_SIZED_BANDS,
@@ -562,13 +555,13 @@ def srp_neardup_pairs_sized(
 
 
 def sql_srp_neardup_pairs(
-    dim: int = 64,
     min_cos: float = 0.9,
     bits: int = SRP_BITS,
     bands: int = SRP_BANDS,
 ) -> str:
-    """DuckDB rendering of :func:`srp_neardup_pairs` (same md5 matrix)."""
-    mat = srp_matrix(dim, bits)
+    """DuckDB rendering of :func:`srp_neardup_pairs` over
+    :data:`SRP_DIM`-wide embeddings (same md5 matrix)."""
+    mat = srp_matrix(SRP_DIM, bits)
     rows = bits // bands
     bit_exprs = [
         f"(CASE WHEN round(list_inner_product(vec, [{', '.join(repr(v) for v in row)}]), 9) >= 0 "
@@ -580,17 +573,13 @@ def sql_srp_neardup_pairs(
         for b in range(bands)
     )
     band_union = "\nUNION ALL\n".join(
-        f"SELECT vid, {b} AS band_id, b{b} AS band_code FROM codes" for b in range(bands)
+        f"SELECT vid AS id, {b} AS band_id, b{b} AS band_key FROM codes" for b in range(bands)
     )
     return f"""
 WITH corpus AS (SELECT vec_id AS vid, embedding::DOUBLE[] AS vec FROM embeddings),
 codes AS (SELECT vid, vec, {band_cols} FROM corpus),
 bands AS ({band_union}),
-cand AS (
-  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_code = b.band_code AND a.vid < b.vid
-)
+cand AS ({sql_banded_pairs("bands")})
 SELECT c.id_a, c.id_b,
        round(list_cosine_similarity(ca.vec, cb.vec), 9) AS cos
 FROM cand c JOIN corpus ca ON c.id_a = ca.vid JOIN corpus cb ON c.id_b = cb.vid

@@ -516,10 +516,11 @@ def test_vocab_topk_uses_take_ordered(spark):
 
 
 def test_srp_band_join_shuffles_skinny_codes_only(spark):
-    """The SRP band self-join must be an equi-join whose inputs carry only
-    (vid, band_id, band_code) — vectors must NOT flow through the
-    candidate-generation exchange."""
+    """The SRP band self-join (``banded_pairs``) must be an equi-join
+    whose inputs carry only (id, band_id, band_key) — vectors must NOT
+    flow through the candidate-generation exchange."""
     from markt_database_analyzer_spark.datapipe import similarity as sim
+    from markt_database_analyzer_spark.datapipe.util import banded_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     mat = sim.srp_matrix(64)
@@ -527,15 +528,10 @@ def test_srp_band_join_shuffles_skinny_codes_only(spark):
 
     vecd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     codes = emb.select(
-        F.col("vec_id").alias("vid"),
-        F.posexplode(F.array(*sim.srp_band_codes(vecd, mat))).alias("band_id", "band_code"),
+        F.col("vec_id").alias("id"),
+        F.posexplode(F.array(*sim.srp_band_codes(vecd, mat))).alias("band_id", "band_key"),
     )
-    cand = codes.alias("a").join(
-        codes.alias("b"),
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_code") == F.col("b.band_code"))
-        & (F.col("a.vid") < F.col("b.vid")),
-    )
+    cand = banded_pairs(codes)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -9,7 +9,8 @@ from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
 from markt_database_analyzer_spark.catalog import REGISTRY
-from markt_database_analyzer_spark.catalog_datapipe import _LSHR_SAMPLE, _LSHR_THRESHOLD
+from markt_database_analyzer_spark.catalog_datapipe import _LSHR_SAMPLE
+from markt_database_analyzer_spark.datapipe.dedup import MIN_JACCARD
 from markt_database_analyzer_spark.catalog_finance import _VAR_ALPHA
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -97,7 +98,7 @@ def test_lsh_recall_eval_matches_python_ground_truth(spark):
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:
             inter = len(shingles[a] & shingles[b])
-            if inter and inter / (len(shingles[a]) + len(shingles[b]) - inter) >= _LSHR_THRESHOLD:
+            if inter and inter / (len(shingles[a]) + len(shingles[b]) - inter) >= MIN_JACCARD:
                 truth.add((a, b))
     row = REGISTRY["dedup_lsh_recall_eval"].fn(spark, SF_DIR).collect()[0]
     assert row["sample_docs"] == _LSHR_SAMPLE

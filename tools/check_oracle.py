@@ -10,10 +10,17 @@ over the same parquet tables, then compares:
   mismatch is distinguishable from a genuine semantic difference)
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+An argument naming an existing directory is the scale-factor directory
+(default ``DEFAULT_SF``); every other argument is an entry name. The gate exits non-zero, naming the argument, when a requested
+entry is not registered, and when no entry ran at all. The summary
+counts the entries that ran; entries skipped by their ``oracle-sf0.01``
+tag are reported apart.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -21,7 +28,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT_SF = "/root/testdata/sf0.01"
 TABLES = (
@@ -91,16 +98,23 @@ def compare(name: str, got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
 
 def main() -> int:
     argv = sys.argv[1:]
-    sf_dir = argv[0] if argv and argv[0].startswith("/") else DEFAULT_SF
-    only = [a for a in argv if not a.startswith("/")]
+    dirs = [a for a in argv if os.path.isdir(a)]
+    if len(dirs) > 1:
+        print(f"more than one sf dir: {dirs}")
+        return 2
+    sf_dir = os.path.abspath(dirs[0]) if dirs else DEFAULT_SF
+    only = [a for a in argv if not os.path.isdir(a)]
 
     import __spark_entry__ as e
     from markt_database_analyzer_spark.session import get_spark
 
+    qs, oracles = e.queries(), e.oracle_sql()
+    unknown = [a for a in only if a not in qs]
+    if unknown:
+        print(f"not a registered entry (nor an existing sf dir): {', '.join(unknown)}")
+        return 2
     spark = get_spark(app_name="oracle-check", extra_conf={"spark.ui.enabled": "false"})
     con = duck_conn(sf_dir)
-
-    qs, oracles = e.queries(), e.oracle_sql()
     names = [n for n in qs if not only or n in only]
     # Entries whose oracle embeds data-dependent constants rendered for
     # the sf0.01 corpus (the driver's gate SF): the Spark side adapts to
@@ -123,12 +137,13 @@ def main() -> int:
             pass
         spark.catalog.clearCache()
 
-    failures = 0
+    failures = ran = 0
     for name in names:
         if name in sf_pinned and "sf0.01" not in sf_dir:
             print(f"SKIP  {name}: oracle rendered for sf0.01 (tag oracle-sf0.01)")
             continue
         release_blocks()  # untimed: before t0, so cleanup cost never lands in `secs`
+        ran += 1
         t0 = time.time()
         try:
             got = qs[name](spark, sf_dir).toPandas()
@@ -155,7 +170,11 @@ def main() -> int:
             print(f"WARN  {name}: " + " | ".join(problems) + f" [{secs}s]")
         else:
             print(f"MATCH {name}: {len(got)} rows [{secs}s]")
-    print(f"\n{len(names)-failures}/{len(names)} ok")
+    skipped = f", {len(names) - ran} skipped" if ran < len(names) else ""
+    print(f"\n{ran - failures}/{ran} ok{skipped}")
+    if not ran:
+        print(f"no entry ran in {sf_dir}")
+        return 1
     return 1 if failures else 0
 
 

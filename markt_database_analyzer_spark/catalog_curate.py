@@ -31,10 +31,12 @@ def _sql_cluster_resolve() -> str:
     # The MinHash-LSH pair SQL (already differential-green as
     # dedup_minhash_lsh) becomes the edge list of a recursive
     # transitive-closure walk; min reachable id = cluster id = survivor.
+    # ``pairs`` and ``edges`` are MATERIALIZED: inlined, DuckDB re-runs
+    # the LSH at every recursion step (minutes at sf0.1).
     lsh = dd.sql_minhash_lsh()
     return f"""
-WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({lsh}) lsh),
-edges AS (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
+WITH RECURSIVE pairs AS MATERIALIZED (SELECT id_a, id_b FROM ({lsh}) lsh),
+edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
 walk(id, lab) AS (
   SELECT DISTINCT src, src FROM edges
   UNION
@@ -980,8 +982,8 @@ WITH RECURSIVE gated AS (
   SELECT doc_id, text, lang FROM documents
   WHERE source NOT IN ({blocked}) AND {gate}
 ),
-pairs AS (SELECT id_a, id_b FROM ({lsh}) lsh),
-edges AS (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
+pairs AS MATERIALIZED (SELECT id_a, id_b FROM ({lsh}) lsh),
+edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
 walk(id, lab) AS (
   SELECT DISTINCT src, src FROM edges
   UNION

@@ -324,8 +324,8 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     explode + 60-conditional-sum hash aggregation pays one full exchange
     of partial vote buffers plus a 60-buffer aggregate per doc. The
     Arrow kernel computes signatures map-side: ZERO exchanges between
-    scan and output (the explode+aggregate form is kept below as
-    ``simhash_signatures_agg`` — the exactness pin compares the two).
+    scan and output (tests/test_r14_optimization.py keeps the
+    explode+aggregate form as the reference it pins this kernel to).
 
     ``id_col`` must be an integral column: the kernel emits ``doc`` as
     bigint, and a cast would turn any other id into a silent NULL, so
@@ -371,36 +371,6 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             )
 
     return docs.mapInArrow(_sig_batches, "doc bigint, sig bigint")
-
-
-def simhash_signatures_agg(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """The pre-r14 explode + 60-conditional-sum aggregation form of
-    :func:`simhash_signatures` — kept only as the pure-JVM reference the
-    exactness pin (tests/test_r14_optimization.py) compares the Arrow
-    kernel against; nothing else calls it.
-
-    explode tokens → hash each token ONCE → 60 conditional ±1 sums in one
-    hash aggregation → fold votes into the signature. Each token is
-    hashed once, not once per bit, and the shuffle carries just 60 ints
-    per document. (A 21-bit-lane packed variant with 20 buffers was
-    measured SLOWER — the shift/or chains outweigh the buffer savings.)"""
-    docs = fan_out(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))).select(
-        "doc", tokens("_text").alias("toks")
-    )
-    ex = docs.select("doc", F.explode_outer("toks").alias("tok")).withColumn("h", hash60(F.col("tok")))
-    votes = [
-        F.sum(
-            F.when(F.col("h").isNull(), 0)
-            .when(F.col("h").bitwiseAND(F.lit(1 << j)) != 0, 1)
-            .otherwise(-1)
-        ).alias(f"v{j}")
-        for j in range(60)
-    ]
-    agg = ex.groupBy("doc").agg(*votes)
-    sig: Column = F.lit(0).cast("bigint")
-    for j in range(60):
-        sig = sig + F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-    return agg.select("doc", sig.alias("sig"))
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3) -> DataFrame:

@@ -624,14 +624,14 @@ def pq_encode_reconstruct(
     lookup-table trick is an execution detail; the semantics live here.
 
     r14 (guide §4.2): the m·k literal-expression distance folds per row
-    (:func:`pq_encode_reconstruct_exprs`, kept below) are interpreted
-    HOFs; this Arrow kernel does the identical math vectorized —
+    (the reference form tests/test_r14_optimization.py keeps) are
+    interpreted HOFs; this Arrow kernel does the identical math vectorized —
     squared-distance terms accumulated IN SUBVECTOR ORDER (bit-identical
     to the sequential fold, the srp_codes_arrow pattern), argmin =
     ``np.argmin`` (first occurrence — identical to ``array_position`` of
     ``array_min``), and the reconstruction gathers the SAME float64
     codebook values the literal ``element_at`` returned. Bit-equality vs
-    the expression form pinned in tests/test_r14_optimization.py."""
+    the expression form pinned there."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -699,61 +699,6 @@ def pq_encode_reconstruct(
             )
 
     return staged.mapInArrow(encode, schema)
-
-
-def pq_encode_reconstruct_exprs(
-    corpus: DataFrame,
-    codebook: list[list[float]],
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """The pre-r14 literal-expression form of
-    :func:`pq_encode_reconstruct` — kept only as the pure-JVM reference
-    its exactness pin compares against; nothing else calls it.
-    Codebook subvectors render as one SQL literal expression per
-    subspace (``repr`` doubles — exact shortest round-trip, no py4j
-    literal storm); per-row subvector slices are staged as named columns
-    so each slice evaluates once, not per code."""
-    dims = len(codebook[0])
-    if dims % m != 0:
-        raise ValueError(
-            f"PQ requires dims % m == 0 (got dims={dims}, m={m})"
-        )
-    sub = dims // m
-    staged = fan_out(corpus).select(
-        F.col(id_col),
-        *extra_cols,
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    sub_cols = [
-        F.slice("_v", j * sub + 1, sub).alias(f"_s{j}") for j in range(m)
-    ]
-    staged = staged.select(id_col, *extra_cols, "_v", *sub_cols)
-
-    def sq_sql(sub_col: str, cvec: list[float]) -> str:
-        arr = ", ".join(_dlit(v) for v in cvec)
-        return (
-            f"aggregate(zip_with(`{sub_col}`, array({arr}), "
-            "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
-        )
-
-    code_cols, recon_parts = [], []
-    for j in range(m):
-        subvecs = [cv[j * sub : (j + 1) * sub] for cv in codebook]
-        dists = "array(" + ", ".join(sq_sql(f"_s{j}", sv) for sv in subvecs) + ")"
-        code = f"cast(array_position({dists}, array_min({dists})) as int) - 1"
-        code_cols.append(F.expr(code).alias(f"code{j}"))
-        lit_subs = ", ".join(
-            "array(" + ", ".join(_dlit(v) for v in sv) + ")" for sv in subvecs
-        )
-        recon_parts.append(f"element_at(array({lit_subs}), `code{j}` + 1)")
-    encoded = staged.select(id_col, *extra_cols, "_v", *code_cols)
-    recon = F.expr("concat(" + ", ".join(recon_parts) + ")")
-    return encoded.select(
-        id_col, *extra_cols, "_v", *[f"code{j}" for j in range(m)], recon.alias("recon")
-    )
 
 
 def pq_adc_topk(

@@ -19,7 +19,7 @@ import random
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .readers import MONITOR_RECORDS_SCHEMA, PROFILES_SCHEMA
+from .readers import MONITOR_RECORDS_SCHEMA, PROFILES_SCHEMA, frame_from_rows
 
 CITIES = [
     "Berlin",
@@ -112,10 +112,12 @@ def generate_rows(n_ads: int = 120, seed: int = 7) -> tuple[list[tuple], list[tu
 
 
 def fixture_frames(spark: SparkSession, n_ads: int = 120, seed: int = 7) -> tuple[DataFrame, DataFrame]:
+    """The fixture rows as frames, through the Arrow column batches
+    ``read_sqlite`` builds (one batch per table)."""
     monitor, profiles = generate_rows(n_ads=n_ads, seed=seed)
     return (
-        spark.createDataFrame(monitor, MONITOR_RECORDS_SCHEMA),
-        spark.createDataFrame(profiles, PROFILES_SCHEMA),
+        frame_from_rows(spark, [monitor], MONITOR_RECORDS_SCHEMA),
+        frame_from_rows(spark, [profiles], PROFILES_SCHEMA),
     )
 
 

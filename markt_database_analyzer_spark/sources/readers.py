@@ -15,16 +15,23 @@ types and funnelling every possibly-dirty column through
 The reference's SQLite source is ingested by ``read_sqlite``: a
 driver-side stdlib ``sqlite3`` read with an explicit schema (correct for
 the small operational DBs SQLite holds — see its docstring for the scale
-argument); everything downstream is format-agnostic DataFrames.
+argument); everything downstream is format-agnostic DataFrames. Each
+fetched chunk becomes one Arrow record batch (``frame_from_rows``, which
+the fixtures use too), so the rows reach the JVM without a Python worker.
+A STRING column takes ``str()`` of any SQLite value; any other column
+refuses a value its declared type does not hold instead of truncating it.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TESTDATA_TABLES = (
     "region",
@@ -124,6 +131,82 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# The Python types a column accepts from the driver, by its declared Spark
+# type (STRING values are mapped through str() first). A declared type not
+# listed here (boolean, date, timestamp, decimal, ...) accepts only NULL:
+# sqlite3 returns none of their Python types.
+_ACCEPTED_TYPES = {
+    T.ByteType: (int,),
+    T.ShortType: (int,),
+    T.IntegerType: (int,),
+    T.LongType: (int,),
+    T.FloatType: (float,),
+    T.DoubleType: (float,),
+    T.BinaryType: (bytes,),
+    T.StringType: (str,),
+}
+
+
+def _arrow_column(field: T.StructField, arrow_type, values: Sequence) -> pa.Array:
+    """One column of driver values as an Arrow array of its declared type.
+
+    Declared STRING columns take ``str()`` of every non-NULL value. Any
+    other column must hold the Python type its Spark type accepts: Arrow
+    would truncate a float into an integer column or turn a string into a
+    NULL, and both must fail loudly instead."""
+    types = set(map(type, values))
+    if type(None) in types and not field.nullable:
+        raise ValueError(f"column {field.name!r} is not nullable but holds NULL")
+    types.discard(type(None))
+    if isinstance(field.dataType, T.StringType) and types - {str}:
+        values = [None if v is None else str(v) for v in values]
+        types = {str}
+    accepted = _ACCEPTED_TYPES.get(type(field.dataType), ())
+    rejected = sorted(t.__name__ for t in types if t not in accepted)
+    if rejected:
+        bad = next(v for v in values if v is not None and type(v) not in accepted)
+        raise TypeError(
+            f"column {field.name!r} declared {field.dataType.simpleString()} "
+            f"holds {', '.join(rejected)} values, e.g. {bad!r}"
+        )
+    try:
+        return pa.array(values, arrow_type)
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"column {field.name!r} declared {field.dataType.simpleString()}: {e}") from e
+
+
+def frame_from_rows(
+    spark: SparkSession,
+    chunks: Iterable[Sequence[tuple]],
+    schema: T.StructType,
+    order: Sequence[int] | None = None,
+) -> DataFrame:
+    """A DataFrame of driver-held rows, built from Arrow column batches.
+
+    Each chunk of row tuples becomes one ``pyarrow.RecordBatch``, column
+    by column (``_arrow_column``'s type rule); ``order[j]`` is the tuple
+    position of ``schema``'s ``j``-th field (default: the same position).
+    The batches reach the JVM through pyspark's Arrow table path, so no
+    Python worker starts and no list of the whole table's rows is built,
+    unlike ``createDataFrame(list_of_rows)``, which pickles every row
+    through a ``PythonRDD``."""
+    arrow_schema = to_arrow_schema(schema)
+    order = range(len(schema.fields)) if order is None else order
+    batches = []
+    for rows in chunks:
+        cols = list(zip(*rows))
+        batches.append(
+            pa.RecordBatch.from_arrays(
+                [
+                    _arrow_column(field, arrow_schema.field(j).type, cols[order[j]])
+                    for j, field in enumerate(schema.fields)
+                ],
+                schema=arrow_schema,
+            )
+        )
+    return spark.createDataFrame(pa.Table.from_batches(batches, arrow_schema), schema)
+
+
 def read_sqlite(
     spark: SparkSession,
     db_path: str,
@@ -135,10 +218,12 @@ def read_sqlite(
     """Ingest edge for the reference's native format (analyse.py:8,12-15).
 
     The driver reads the table with the standard library's ``sqlite3`` in
-    ``batch_size`` row chunks and builds a DataFrame with the EXPLICIT
-    ``schema``. ``columns`` renders a projected ``SELECT`` so pruning
-    happens inside SQLite, exactly the reference's pushed-projection
-    pattern (analyse.py:158-164, 370-375).
+    ``batch_size`` row chunks; each chunk becomes one Arrow record batch
+    (``frame_from_rows``), so at most one chunk of Python rows is alive at
+    a time, the table is held as Arrow columns, and the frame reaches the
+    JVM without a Python worker. ``columns`` renders a projected
+    ``SELECT`` so pruning happens inside SQLite, exactly the reference's
+    pushed-projection pattern (analyse.py:158-164, 370-375).
 
     The read is driver-side by design, not a limitation to engineer
     around: SQLite is a single-file, single-host operational format — the
@@ -151,9 +236,13 @@ def read_sqlite(
 
     ``schema`` is mandatory (SQLite is dynamically typed; inference would
     reproduce the driver-default-typing bug class the SURVEY calls out).
-    Declared STRING columns keep whatever repr SQLite holds, numeric
-    columns pass through (dirty numerics should be declared STRING and
-    cleaned with ``functions.cleaning``)."""
+    Declared STRING columns keep ``str()`` of whatever SQLite holds
+    (INTEGER 5 → ``'5'``, BLOB → ``"b'...'"``). Any other column must hold
+    the Python type its declared type accepts — integral types ``int``,
+    floating types ``float``, BINARY ``bytes`` — or the read raises a
+    ``TypeError`` naming the column; an integer outside the declared
+    range raises a ``ValueError``. Dirty numerics should be declared
+    STRING and cleaned with ``functions.cleaning``."""
     if schema is None:
         raise RuntimeError(
             "read_sqlite needs an explicit schema; pass schema= (inference "
@@ -162,13 +251,9 @@ def read_sqlite(
     import sqlite3
 
     proj = ", ".join(f'"{c}"' for c in columns) if columns else "*"
-    names = [f.name for f in schema.fields]
     if columns:
         schema = T.StructType([f for f in schema.fields if f.name in set(columns)])
-        names = [f.name for f in schema.fields]
-    str_cols = {
-        f.name for f in schema.fields if isinstance(f.dataType, T.StringType)
-    }
+    names = [f.name for f in schema.fields]
     con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
     try:
         cur = con.execute(f'SELECT {proj} FROM "{table}"')
@@ -177,22 +262,10 @@ def read_sqlite(
             raise ValueError(
                 f"schema/table mismatch: table has {col_idx}, schema declares {names}"
             )
-        order = [col_idx.index(n) for n in names]
-        rows: list[tuple] = []
-        while True:
-            batch = cur.fetchmany(batch_size)
-            if not batch:
-                break
-            for r in batch:
-                rows.append(
-                    tuple(
-                        (str(r[i]) if (r[i] is not None and names[j] in str_cols) else r[i])
-                        for j, i in enumerate(order)
-                    )
-                )
+        chunks = iter(lambda: cur.fetchmany(batch_size), [])
+        return frame_from_rows(spark, chunks, schema, [col_idx.index(n) for n in names])
     finally:
         con.close()
-    return spark.createDataFrame(rows, schema)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

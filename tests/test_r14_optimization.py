@@ -177,6 +177,70 @@ def test_no_single_partition_funnel_on_corpus_outputs(spark):
                 assert s.rstrip().endswith("false"), (name, line)
 
 
+def _simhash_signatures_agg(df, text_col: str, id_col: str):
+    """The pre-r14 explode + 60-conditional-sum aggregation form of
+    ``dedup.simhash_signatures``, the pure-JVM reference its Arrow kernel
+    is pinned to: explode tokens → hash each token ONCE → 60 conditional
+    ±1 sums in one hash aggregation → fold votes into the signature."""
+    from markt_database_analyzer_spark.datapipe.hashing import hash60
+    from markt_database_analyzer_spark.datapipe.text import tokens
+    from markt_database_analyzer_spark.datapipe.util import fan_out
+
+    docs = fan_out(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))).select(
+        "doc", tokens("_text").alias("toks")
+    )
+    ex = docs.select("doc", F.explode_outer("toks").alias("tok")).withColumn("h", hash60(F.col("tok")))
+    votes = [
+        F.sum(
+            F.when(F.col("h").isNull(), 0)
+            .when(F.col("h").bitwiseAND(F.lit(1 << j)) != 0, 1)
+            .otherwise(-1)
+        ).alias(f"v{j}")
+        for j in range(60)
+    ]
+    agg = ex.groupBy("doc").agg(*votes)
+    sig = F.lit(0).cast("bigint")
+    for j in range(60):
+        sig = sig + F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
+    return agg.select("doc", sig.alias("sig"))
+
+
+def _pq_encode_reconstruct_exprs(corpus, codebook: list[list[float]], m: int):
+    """The pre-r14 literal-expression form of
+    ``similarity.pq_encode_reconstruct``, the pure-JVM reference its Arrow
+    kernel is pinned to. Codebook subvectors render as one SQL literal
+    expression per subspace (``repr`` doubles — exact shortest
+    round-trip); per-row subvector slices are staged as named columns so
+    each slice evaluates once, not per code."""
+    from markt_database_analyzer_spark.datapipe.similarity import _dlit
+    from markt_database_analyzer_spark.datapipe.util import fan_out
+
+    dims = len(codebook[0])
+    sub = dims // m
+    staged = fan_out(corpus).select("vec_id", F.col("embedding").cast("array<double>").alias("_v"))
+    sub_cols = [F.slice("_v", j * sub + 1, sub).alias(f"_s{j}") for j in range(m)]
+    staged = staged.select("vec_id", "_v", *sub_cols)
+
+    def sq_sql(sub_col: str, cvec: list[float]) -> str:
+        arr = ", ".join(_dlit(v) for v in cvec)
+        return (
+            f"aggregate(zip_with(`{sub_col}`, array({arr}), "
+            "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
+        )
+
+    code_cols, recon_parts = [], []
+    for j in range(m):
+        subvecs = [cv[j * sub : (j + 1) * sub] for cv in codebook]
+        dists = "array(" + ", ".join(sq_sql(f"_s{j}", sv) for sv in subvecs) + ")"
+        code = f"cast(array_position({dists}, array_min({dists})) as int) - 1"
+        code_cols.append(F.expr(code).alias(f"code{j}"))
+        lit_subs = ", ".join("array(" + ", ".join(_dlit(v) for v in sv) + ")" for sv in subvecs)
+        recon_parts.append(f"element_at(array({lit_subs}), `code{j}` + 1)")
+    encoded = staged.select("vec_id", "_v", *code_cols)
+    recon = F.expr("concat(" + ", ".join(recon_parts) + ")")
+    return encoded.select("vec_id", "_v", *[f"code{j}" for j in range(m)], recon.alias("recon"))
+
+
 def test_simhash_arrow_kernel_matches_agg_form(spark):
     # the r14 Arrow signature kernel must be bit-identical to the JVM
     # explode+aggregate form on fixture data AND on adversarial rows
@@ -186,7 +250,7 @@ def test_simhash_arrow_kernel_matches_agg_form(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     a = {r["doc"]: r["sig"] for r in dd.simhash_signatures(docs, "text", "doc_id").collect()}
-    b = {r["doc"]: r["sig"] for r in dd.simhash_signatures_agg(docs, "text", "doc_id").collect()}
+    b = {r["doc"]: r["sig"] for r in _simhash_signatures_agg(docs, "text", "doc_id").collect()}
     assert a == b
 
     crafted = spark.createDataFrame(
@@ -202,7 +266,7 @@ def test_simhash_arrow_kernel_matches_agg_form(spark):
         "doc_id long, text string",
     )
     a = {r["doc"]: r["sig"] for r in dd.simhash_signatures(crafted, "text", "doc_id").collect()}
-    b = {r["doc"]: r["sig"] for r in dd.simhash_signatures_agg(crafted, "text", "doc_id").collect()}
+    b = {r["doc"]: r["sig"] for r in _simhash_signatures_agg(crafted, "text", "doc_id").collect()}
     assert a == b
     assert a[1] == 0 and a[2] == 0 and a[3] == 0  # empty/ws/null → sig 0
 
@@ -219,7 +283,7 @@ def test_pq_encode_arrow_kernel_matches_exprs(spark):
     }
     b = {
         r["vec_id"]: tuple(r[c] if c != "recon" else tuple(r[c]) for c in cols[1:])
-        for r in sim.pq_encode_reconstruct_exprs(emb, cb, m=8).select(cols).collect()
+        for r in _pq_encode_reconstruct_exprs(emb, cb, m=8).select(cols).collect()
     }
     assert a == b  # exact doubles: reconstruction gathers identical codebook values
 
